@@ -1103,19 +1103,22 @@ def _q_tile_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pdf_rows = pd.DataFrame(rows, columns=["tile_id", "off", "len"],
                             dtype=np.int64)
-    df = spark.createDataFrame(pdf_rows)
+    # explicit schema: an empty archive has no rows to infer types from
+    df = spark.createDataFrame(pdf_rows,
+                               schema="tile_id long, off long, len long")
 
     def dec(batches):
+        import mmap
+
         from gpq_tiles_spark.kernels.hilbert import tile_id_to_zxy_vec
         from gpq_tiles_spark.kernels.mvt import decode_tile
         from gpq_tiles_spark.kernels.pmtiles import Header, HEADER_SIZE, decompress
 
-        with open(out, "rb") as f:
-            hdr = Header.from_bytes(f.read(HEADER_SIZE))
-            f.seek(0)
-            import mmap
-
-            mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+        # the mmap and its file close on every exit, including a decode
+        # error or an abandoned iterator
+        with open(out, "rb") as f, \
+                mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+            hdr = Header.from_bytes(mm[:HEADER_SIZE])
             base = hdr.tile_data_offset
             for pdf in batches:
                 tids = pdf["tile_id"].to_numpy(dtype=np.int64)

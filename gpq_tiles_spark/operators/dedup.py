@@ -395,6 +395,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     exact — dropping common grams only costs recall for pairs whose overlap
     is exclusively ubiquitous grams, which a threshold >= 0.8 filter would
     reject anyway.
+
+    Runs EAGERLY: the call executes Spark jobs and returns a result that is
+    already persisted (so the intermediate gram cache can be released
+    before returning). The caller owns that cache and must call
+    ``unpersist()`` on the returned DataFrame when done with it.
     """
     grams = spread_small_input(df).select(
         F.col(id_col).alias("doc_id"),

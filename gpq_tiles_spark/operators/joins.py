@@ -201,7 +201,11 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     radius r differs from the probe by > (r-1) full cell widths in lng or by
     > (r-1) minimum cell heights in lat, so once the kth candidate distance
     is <= ((r-1) * min_cell_extent)^2 no farther ring can improve the result.
+    The search never widens past ``max_radius`` rings (>= 1); a probe still
+    unresolved there keeps the top-k found within that disk.
     """
+    if max_radius < 1:
+        raise ValueError(f"knn_join: max_radius must be >= 1, got {max_radius}")
     # single early-stopping pass: take(cap+1) bounds driver memory AND
     # detects the over-cap case without a separate count() job re-running
     # the probe lineage
@@ -240,8 +244,9 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     # resolve when the kth distance is exactly 0, and in that case the
     # r=2 top-k is the identical row set (disk(2) contains disk(1) and the
     # ordering tie-breaks on point_id). Starting at 2 removes one full
-    # join+window+collect Spark round from every call.
-    r = 2
+    # join+window+collect Spark round from every call; max_radius=1 still
+    # searches radius 1 only, and no round searches past max_radius.
+    r = min(2, max_radius)
     while True:
         idx, cells = C.grid_disk(p_cell, r, zoom)
         cand_cells = spark.createDataFrame(
@@ -269,7 +274,7 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         # (round 7; guide §1.2). Collecting here also releases the points
         # cache as soon as the last round finishes.
         rows = topk.collect()
-        bound = ((r - 1) * min_cell_h) ** 2 if r > 1 else 0.0
+        bound = ((r - 1) * min_cell_h) ** 2
         cnt: dict = {}
         kth: dict = {}
         for row in rows:
@@ -285,7 +290,7 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         if done or r >= max_radius:
             pts.unpersist()
             return spark.createDataFrame(rows, schema=topk.schema)
-        r *= 2
+        r = min(2 * r, max_radius)
 
 
 def knn_join_distributed(points: DataFrame, probes: DataFrame, k: int,

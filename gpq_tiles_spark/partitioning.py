@@ -1,19 +1,23 @@
 """Input-parallelism guard (spark_optimization_guide §2.5, "input skew").
 
-A single unsplittable input — one parquet row group, one gzip member, a
-driver-built local relation — arrives as ONE scan partition, and every
-downstream narrow operation (Arrow-batched kernels, broadcast-join probes,
-nested-loop join stream sides) then runs serially on one core no matter how
-wide the cluster is. ``spread_small_input`` round-robin repartitions such
-frames to the cluster's default parallelism.
+A small input arrives as fewer scan partitions than the cluster has task
+slots: one parquet row group, one gzip member or a driver-built local
+relation is ONE partition, and Spark never splits a file into pieces
+smaller than ``spark.sql.files.openCostInBytes`` (4 MB), so a 7 MB file
+is two. Every downstream narrow operation (Arrow-batched kernels,
+broadcast-join probes, nested-loop join stream sides) then runs on that
+many cores and leaves the other slots idle, no matter how wide the
+cluster is. ``spread_small_input`` round-robin repartitions such frames
+to the cluster's default parallelism (its task-slot count).
 
-It is deliberately a no-op for well-laid-out input: anything that already
-has at least half the cluster's parallelism (many files, many row groups,
-any post-shuffle frame) passes through untouched, so at real scale the
-extra exchange never fires and nothing is tuned to the local harness. The
-guard is only correct where results are partitioning-invariant, which holds
-for every call site in this repo (tile pipelines re-key by tile_id behind a
-shuffle; join/refine operators re-aggregate by key).
+The rule is one slot count: a frame with fewer partitions than
+``defaultParallelism`` is spread, and anything that already fills every
+slot (many files, many row groups, any post-shuffle frame at the
+default width) passes through untouched — so at real scale the extra
+exchange never fires and nothing is tuned to the local harness. The
+guard is only correct where results are partitioning-invariant, which
+holds for every call site in this repo (tile pipelines re-key by tile_id
+behind a shuffle; join/refine operators re-aggregate by key).
 """
 
 from __future__ import annotations
@@ -23,7 +27,8 @@ from pyspark.sql import DataFrame
 
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the default parallelism when it
-    arrives with materially fewer partitions; otherwise return it as-is.
+    arrives with fewer partitions than there are task slots; otherwise
+    return it as-is.
 
     The partition count probe converts the plan to an RDD (cheap, no job —
     every call site here sits before the first exchange). The explicit
@@ -34,6 +39,6 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         n_in = int(df.rdd.getNumPartitions())
     except Exception:  # pragma: no cover - defensive: never fail the plan
         return df
-    if target < 2 or n_in * 2 >= target:
+    if n_in >= target:
         return df
     return df.repartition(target)

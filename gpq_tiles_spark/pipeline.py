@@ -1153,6 +1153,35 @@ def make_wrap_encoder(config: TilerConfig,
     return _run_carry(wrap_chunk)
 
 
+def _tile_exchange(df: DataFrame, parts: int | None, by_range: bool,
+                   *cols: str) -> DataFrame:
+    """Co-locate every tile on ``cols``: a range exchange when the consumer
+    needs globally tile-ordered partitions, else a hash exchange (no
+    sampling job re-running the fan-out)."""
+    if by_range:
+        return (df.repartitionByRange(parts, *cols) if parts
+                else df.repartitionByRange(*cols))
+    return df.repartition(parts, *cols) if parts else df.repartition(*cols)
+
+
+def _encode(stage: tuple[DataFrame, Callable]) -> DataFrame:
+    """Run a reduce stage's encoder over its sorted, shuffled input."""
+    sorted_in, encoder = stage
+    return sorted_in.mapInPandas(encoder, schema=TILES_SCHEMA)
+
+
+def _premerge_stage(features: DataFrame, config: TilerConfig,
+                    num_partitions: int | None = None, by_range: bool = False,
+                    metrics: PipelineMetrics | None = None):
+    """Premerge reduce stage: (tile-sorted framed messages, wrap encoder)."""
+    msgs = spread_small_input(features).mapInPandas(
+        make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA)
+    parts = num_partitions or config.shuffle_partitions
+    shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
+    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
+            make_wrap_encoder(config, metrics))
+
+
 def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
                           num_partitions: int | None = None,
                           by_range: bool = False,
@@ -1162,22 +1191,10 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
     messages on tile_id (hash by default; ``by_range=True`` when the
     consumer needs globally tile-ordered partitions), reduce-side wrap.
     The single shared constructor for every premerge plan in the repo —
-    bench, contract queries, and the sharded sink all call this."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA)
-    parts = num_partitions or config.shuffle_partitions
-    if by_range:
-        shuffled = (
-            msgs.repartitionByRange(parts, "tile_id")
-            if parts else msgs.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            msgs.repartition(parts, "tile_id")
-            if parts else msgs.repartition("tile_id")
-        )
-    return shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
-        make_wrap_encoder(config, metrics), schema=TILES_SCHEMA)
+    bench, contract queries, and the sharded sink all build on
+    ``_premerge_stage``."""
+    return _encode(_premerge_stage(features, config, num_partitions,
+                                   by_range, metrics))
 
 
 # premerge pays when records are coordinate-dense: the framed message is
@@ -1382,6 +1399,39 @@ def detect_hot_tiles(features: DataFrame, config: TilerConfig,
     return [int(t) for t in H.tile_id_mixed(z_arr, x_arr, y_arr)]
 
 
+def _salted_stage(records: DataFrame, config: TilerConfig,
+                  num_partitions: int | None = None,
+                  hot_tile_ids: list[int] | None = None,
+                  metrics: PipelineMetrics | None = None,
+                  by_range: bool = True):
+    """Salted reduce stage: (tile-sorted phase-A partials, merge encoder);
+    the plain WKB stage when no tile is hot."""
+    parts = num_partitions or config.shuffle_partitions
+    if hot_tile_ids is None:
+        raise ValueError("pass hot_tile_ids from detect_hot_tiles(features, config)")
+    if not hot_tile_ids:
+        return _wkb_stage(records, config, num_partitions, metrics, by_range)
+
+    # single-path: ONE pass over the fan-out; cold tiles carry salt=0 (one
+    # bucket, phase B is a no-op wrap), hot tiles spread over salt_buckets.
+    # Phase B's shuffle moves per-feature message bytes (~ final tile bytes),
+    # never re-clipped geometry.
+    is_hot = F.col("tile_id").isin(hot_tile_ids)
+    salted = records.withColumn(
+        "salt",
+        F.when(is_hot, F.pmod(F.col("feature_id"), F.lit(config.salt_buckets)))
+        .otherwise(F.lit(0)).cast("long"),
+    )
+    partials = (
+        _tile_exchange(salted, parts, by_range, "tile_id", "salt")
+        .sortWithinPartitions("tile_id", "salt", "feature_id")
+        .mapInPandas(make_partial_encoder(config), schema=PARTIAL_SCHEMA)
+    )
+    merged_in = _tile_exchange(partials, parts, by_range, "tile_id")
+    return (merged_in.sortWithinPartitions("tile_id"),
+            make_merge_encoder(config, metrics))
+
+
 def encode_tiles_salted(records: DataFrame, config: TilerConfig,
                         num_partitions: int | None = None,
                         hot_tile_ids: list[int] | None = None,
@@ -1397,47 +1447,8 @@ def encode_tiles_salted(records: DataFrame, config: TilerConfig,
     ``hot_tile_ids`` comes from ``detect_hot_tiles`` (no extra pass over the
     fan-out); when empty this degrades to plain ``encode_tiles``.
     """
-    parts = num_partitions or config.shuffle_partitions
-    if hot_tile_ids is None:
-        raise ValueError("pass hot_tile_ids from detect_hot_tiles(features, config)")
-    if not hot_tile_ids:
-        return encode_tiles(records, config, num_partitions, metrics=metrics,
-                            by_range=by_range)
-
-    # single-path: ONE pass over the fan-out; cold tiles carry salt=0 (one
-    # bucket, phase B is a no-op wrap), hot tiles spread over salt_buckets.
-    # Phase B's shuffle moves per-feature message bytes (~ final tile bytes),
-    # never re-clipped geometry.
-    is_hot = F.col("tile_id").isin(hot_tile_ids)
-    salted = records.withColumn(
-        "salt",
-        F.when(is_hot, F.pmod(F.col("feature_id"), F.lit(config.salt_buckets)))
-        .otherwise(F.lit(0)).cast("long"),
-    )
-    if by_range:
-        shuffled = (
-            salted.repartitionByRange(parts, "tile_id", "salt")
-            if parts else salted.repartitionByRange("tile_id", "salt")
-        )
-    else:
-        shuffled = (
-            salted.repartition(parts, "tile_id", "salt")
-            if parts else salted.repartition("tile_id", "salt")
-        )
-    partials = shuffled.sortWithinPartitions("tile_id", "salt", "feature_id").mapInPandas(
-        make_partial_encoder(config), schema=PARTIAL_SCHEMA
-    )
-    if by_range:
-        merged_in = (
-            partials.repartitionByRange(parts, "tile_id")
-            if parts else partials.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id")
-    else:
-        merged_in = (
-            partials.repartition(parts, "tile_id")
-            if parts else partials.repartition("tile_id")
-        ).sortWithinPartitions("tile_id")
-    return merged_in.mapInPandas(make_merge_encoder(config, metrics), schema=TILES_SCHEMA)
+    return _encode(_salted_stage(records, config, num_partitions,
+                                 hot_tile_ids, metrics, by_range))
 
 
 def fanout_records(features: DataFrame, config: TilerConfig,
@@ -1447,6 +1458,16 @@ def fanout_records(features: DataFrame, config: TilerConfig,
     return features.select(*cols).mapInPandas(
         make_fanout(config, metrics), schema=RECORDS_SCHEMA
     )
+
+
+def _wkb_stage(records: DataFrame, config: TilerConfig,
+               num_partitions: int | None = None,
+               metrics: PipelineMetrics | None = None, by_range: bool = True):
+    """WKB reduce stage: (tile-sorted fan-out records, MVT encoder)."""
+    parts = num_partitions or config.shuffle_partitions
+    shuffled = _tile_exchange(records, parts, by_range, "tile_id")
+    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
+            make_encoder(config, metrics))
 
 
 def encode_tiles(records: DataFrame, config: TilerConfig,
@@ -1464,21 +1485,8 @@ def encode_tiles(records: DataFrame, config: TilerConfig,
     (or force persisting the multi-10-GB fan-out output just to avoid
     that). The sharded sink uses this: its directory assembly re-orders
     the tiny 40-byte entry rows in a separate range shuffle."""
-    parts = num_partitions or config.shuffle_partitions
-    if by_range:
-        shuffled = (
-            records.repartitionByRange(parts, "tile_id")
-            if parts
-            else records.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            records.repartition(parts, "tile_id")
-            if parts
-            else records.repartition("tile_id")
-        )
-    sorted_recs = shuffled.sortWithinPartitions("tile_id", "feature_id")
-    return sorted_recs.mapInPandas(make_encoder(config, metrics), schema=TILES_SCHEMA)
+    return _encode(_wkb_stage(records, config, num_partitions, metrics,
+                              by_range))
 
 
 PROPS_FIELD_SCHEMA = ArrayType(
@@ -2058,17 +2066,12 @@ def make_props_encoder(config: TilerConfig,
     return _run_carry(encode_chunk)
 
 
-def encode_tiles_with_props(records: DataFrame, props: DataFrame,
-                            config: TilerConfig,
-                            num_partitions: int | None = None,
-                            metrics: PipelineMetrics | None = None,
-                            by_range: bool = True) -> DataFrame:
-    """records + (feature_id, props) -> per-tile MVT rows WITH tags.
-
-    The property table joins onto the fan-out records on feature_id —
-    expressed declaratively so Catalyst broadcast-joins small property
-    tables and shuffle-joins big ones (AQE decides at runtime). The tile
-    shuffle and run-carry grouping mirror encode_tiles."""
+def _wkb_props_stage(records: DataFrame, props: DataFrame,
+                     config: TilerConfig, num_partitions: int | None = None,
+                     metrics: PipelineMetrics | None = None,
+                     by_range: bool = True):
+    """WKB+props reduce stage: (tile-sorted records joined to their props,
+    tag-interning encoder)."""
     parts = num_partitions or config.shuffle_partitions
     # one props row per feature_id: duplicate ids (hash-collided or
     # duplicated source ids) must not MULTIPLY fan-out records through the
@@ -2082,19 +2085,24 @@ def encode_tiles_with_props(records: DataFrame, props: DataFrame,
         .groupBy("feature_id").agg(F.min("props").alias("props")),
         "feature_id", "left",
     )
-    if by_range:
-        shuffled = (
-            joined.repartitionByRange(parts, "tile_id")
-            if parts else joined.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            joined.repartition(parts, "tile_id")
-            if parts else joined.repartition("tile_id")
-        )
-    sorted_recs = shuffled.sortWithinPartitions("tile_id", "feature_id")
-    return sorted_recs.mapInPandas(make_props_encoder(config, metrics),
-                                   schema=TILES_SCHEMA)
+    shuffled = _tile_exchange(joined, parts, by_range, "tile_id")
+    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
+            make_props_encoder(config, metrics))
+
+
+def encode_tiles_with_props(records: DataFrame, props: DataFrame,
+                            config: TilerConfig,
+                            num_partitions: int | None = None,
+                            metrics: PipelineMetrics | None = None,
+                            by_range: bool = True) -> DataFrame:
+    """records + (feature_id, props) -> per-tile MVT rows WITH tags.
+
+    The property table joins onto the fan-out records on feature_id —
+    expressed declaratively so Catalyst broadcast-joins small property
+    tables and shuffle-joins big ones (AQE decides at runtime). The tile
+    shuffle and run-carry grouping mirror encode_tiles."""
+    return _encode(_wkb_props_stage(records, props, config, num_partitions,
+                                    metrics, by_range))
 
 
 MSG_PROPS_SCHEMA = StructType(
@@ -2243,6 +2251,20 @@ def make_wrap_props_encoder(config: TilerConfig,
     return _run_carry(wrap_chunk)
 
 
+def _premerge_props_stage(features: DataFrame, config: TilerConfig,
+                          num_partitions: int | None = None,
+                          by_range: bool = False,
+                          metrics: PipelineMetrics | None = None):
+    """Premerge+props reduce stage: (tile-sorted framed messages with their
+    props entries, interning wrap encoder)."""
+    msgs = spread_small_input(features).mapInPandas(
+        make_fanout_encoded_props(config, metrics), schema=MSG_PROPS_SCHEMA)
+    parts = num_partitions or config.shuffle_partitions
+    shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
+    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
+            make_wrap_props_encoder(config, metrics))
+
+
 def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
                                 num_partitions: int | None = None,
                                 by_range: bool = False,
@@ -2254,21 +2276,8 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
     corpora get the same ~2.6x vertex-dense premerge win as the
     propertyless path (round 5; previously write_properties forced the
     WKB-shuffling layout)."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded_props(config, metrics), schema=MSG_PROPS_SCHEMA)
-    parts = num_partitions or config.shuffle_partitions
-    if by_range:
-        shuffled = (
-            msgs.repartitionByRange(parts, "tile_id")
-            if parts else msgs.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            msgs.repartition(parts, "tile_id")
-            if parts else msgs.repartition("tile_id")
-        )
-    return shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
-        make_wrap_props_encoder(config, metrics), schema=TILES_SCHEMA)
+    return _encode(_premerge_props_stage(features, config, num_partitions,
+                                         by_range, metrics))
 
 
 def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int,
@@ -2528,10 +2537,16 @@ def _make_shard_writer(shard_dir: str, codec: int,
     entry rows instead of tile bytes. This is the scale-out form of the
     sink: at 10^8+ tiles all blob bytes no longer cross the driver NIC.
 
+    The writer consumes TILES_SCHEMA frames straight from a reduce-side
+    encoder in the same Python worker (``convert_sharded`` runs
+    ``writer(encoder(batches))`` in one mapInPandas), so tile bytes never
+    make a second JVM round trip. ``pid`` is the task's
+    ``TaskContext.partitionId()`` (0 outside a Spark task).
+
     Retry/speculation safety: each task attempt writes to an
     attempt-unique temp name and atomically renames to the final
     shard_{pid}.bin when its iterator completes. Partition contents are
-    deterministic (range shuffle + in-partition sort upstream), so any
+    deterministic (tile_id shuffle + in-partition sort upstream), so any
     attempt produces byte-identical bytes and last-rename-wins is safe;
     a failed attempt's temp file is simply never renamed."""
     import os
@@ -2563,33 +2578,36 @@ def _make_shard_writer(shard_dir: str, codec: int,
                 if len(pdf) == 0:
                     continue
                 if f is None:
-                    pid = int(pdf["pid"].iloc[0])
                     tc = TaskContext.get()
+                    pid = tc.partitionId() if tc is not None else 0
                     attempt = tc.taskAttemptId() if tc is not None else 0
                     final_path = os.path.join(shard_dir, f"shard_{pid:05d}.bin")
                     tmp_path = f"{final_path}.attempt{attempt}.tmp"
                     f = open(tmp_path, "wb")
-                out = {k: [] for k in (
-                    "tile_id", "z", "content_hash", "raw_len", "local_off",
-                    "blob_len", "n_features", "pid")}
-                for row in pdf.itertuples(index=False):
-                    raw = bytes(row.mvt)
-                    key = (int(row.content_hash), len(raw))
+                hashes = pdf["content_hash"].tolist()
+                raw_lens, offs, blob_lens = [], [], []
+                for h, raw in zip(hashes, pdf["mvt"].tolist()):
+                    key = (h, len(raw))
                     hit = by_hash.get(key)
                     if hit is None:
-                        blob = compress(raw, codec)
+                        blob = compress(bytes(raw), codec)
                         hit = (local_off, len(blob))
                         by_hash[key] = hit
                         f.write(blob)
                         local_off += len(blob)
-                    out["tile_id"].append(int(row.tile_id))
-                    out["z"].append(int(row.z))
-                    out["content_hash"].append(int(row.content_hash))
-                    out["raw_len"].append(len(raw))
-                    out["local_off"].append(hit[0])
-                    out["blob_len"].append(hit[1])
-                    out["n_features"].append(int(row.n_features))
-                    out["pid"].append(pid)
+                    raw_lens.append(key[1])
+                    offs.append(hit[0])
+                    blob_lens.append(hit[1])
+                out = {
+                    "tile_id": pdf["tile_id"].to_numpy(dtype=np.int64),
+                    "z": pdf["z"].to_numpy(dtype=np.int32),
+                    "content_hash": hashes,
+                    "raw_len": raw_lens,
+                    "local_off": offs,
+                    "blob_len": blob_lens,
+                    "n_features": pdf["n_features"].to_numpy(dtype=np.int64),
+                    "pid": np.full(len(pdf), pid, dtype=np.int32),
+                }
                 yield pd.DataFrame(out)
             committed = True
         finally:
@@ -2880,10 +2898,8 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
             .select("tile_id", F.col("final_off").alias("off"),
                     F.col("final_len").alias("len"))
         )
-        ent = (
-            ent.repartitionByRange(parts, "tile_id")
-            if parts else ent.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id")
+        ent = _tile_exchange(ent, parts, True, "tile_id").sortWithinPartitions(
+            "tile_id")
         leaf_tmp = tempfile.TemporaryFile()
         try:
             root_dir_bytes, n_coalesced, leaf_len = \
@@ -2996,10 +3012,8 @@ def convert_sharded(features: DataFrame, output_path: str,
                     config: TilerConfig | None = None,
                     bounds: tuple[float, float, float, float] | None = None,
                     shard_dir: str | None = None,
-                    distributed_directory: bool = True,
                     salted: bool = False,
-                    premerge: bool | str = "auto",
-                    _testing_only: bool = False) -> dict:
+                    premerge: bool | str = "auto") -> dict:
     """Scale-out sink: executors write per-range shard files (compressed
     blobs, in-shard dedup), the driver concatenates live byte ranges and
     writes the directory — output byte-identical to ``convert``'s
@@ -3007,14 +3021,18 @@ def convert_sharded(features: DataFrame, output_path: str,
 
     This removes the two driver bottlenecks of the streaming sink named in
     the round-1 review: per-blob gzip on the driver, and all tile bytes
-    crossing one NIC. With ``distributed_directory=True`` (default) the
-    THIRD obligation goes too: cross-shard blob dedup, final data offsets,
-    and directory varint encoding all run on executors
-    (_finalize_sharded_distributed) — driver state is O(shards+partitions)
-    and the winner-blob copy list streams via toLocalIterator, so 10^8+
-    tile archives never materialize an entry list on the driver.
-    ``distributed_directory=False`` keeps the original collect-everything
-    finalize (same bytes; useful as a differential oracle).
+    crossing one NIC. The reduce stage is ONE Python pass per task: the
+    layout's encoder (premerge, premerge+props, WKB, WKB+props or salted
+    merge) feeds ``_make_shard_writer`` inside the same mapInPandas, so
+    encoded tiles go straight from the encoder to the compressor and the
+    shard file without a second JVM round trip; each task writes the shard
+    named by its ``TaskContext.partitionId()``. Cross-shard blob dedup,
+    final data offsets and directory encoding then run on executors
+    (_finalize_sharded_distributed; driver-side below
+    ``driver_finalize_max_entries``) — driver state is
+    O(shards+partitions) and the winner-blob copy list streams via
+    toLocalIterator, so 10^8+ tile archives never materialize an entry
+    list on the driver.
 
     Cross-shard duplicate blobs: a blob first seen in shard A and again in
     shard B is compressed and written into BOTH shard files (in-shard dedup
@@ -3030,24 +3048,12 @@ def convert_sharded(features: DataFrame, output_path: str,
     master without an explicit shard_dir raises rather than producing an
     archive that silently misses every remote executor's shards.
     """
-    import os
     import shutil
     import tempfile
 
     from .kernels import pmtiles as P
 
     config = (config or TilerConfig()).validate()
-    if not distributed_directory and not _testing_only:
-        # the collect-everything finalize materializes every entry row on
-        # the driver — kept ONLY as a differential oracle for the
-        # distributed assembly (VERDICT r3 item 6); unreachable from user
-        # code without the explicit test flag
-        raise ValueError(
-            "convert_sharded: distributed_directory=False is the legacy "
-            "collect-everything finalize, retained for differential "
-            "testing only. Use the default distributed finalize, or pass "
-            "_testing_only=True in a test."
-        )
     if salted and premerge is True:
         raise ValueError(
             "convert_sharded: salted=True uses the WKB-shuffling two-phase "
@@ -3082,177 +3088,65 @@ def convert_sharded(features: DataFrame, output_path: str,
             premerge = bool(row[4] is not None
                             and row[4] >= PREMERGE_AUTO_WKB_BYTES)
 
-    from pyspark import StorageLevel
-
+    # NO persist and NO range exchange on the heavy data: a hash shuffle on
+    # tile_id co-locates each tile (the encoder's only requirement), so the
+    # fan-out executes exactly once as the shuffle map stage —
+    # repartitionByRange would add a sampling job that re-executes it (or
+    # forces caching the multi-10-GB fan-out output to disk just to sample
+    # it). Global tile order is restored later on the 40-byte entry rows.
+    if config.write_properties:
+        if salted:
+            raise ValueError(
+                "convert_sharded: write_properties=True cannot combine "
+                "with salted=True"
+            )
+        if "props" not in features.columns:
+            raise ValueError(
+                "convert_sharded: write_properties=True requires a "
+                "'props' column — build it with encode_props_column"
+            )
+        if _resolve_premerge(features, premerge):
+            stage = _premerge_props_stage(features, config)
+        else:
+            stage = _wkb_props_stage(
+                fanout_records(features, config),
+                features.select("feature_id", "props"), config,
+                by_range=False)
+    elif not salted and _resolve_premerge(features, premerge):
+        # map-side message encode: the shuffle carries zigzag-varint
+        # feature messages (~5-8x smaller than WKB on vertex-dense input)
+        # and the reduce side only sorts + concatenates — this also makes
+        # hot-tile salting moot (the heavy per-record work is already
+        # spread across the map stage; the reduce task for a mega-tile is a
+        # bytes concat + gzip). 'auto' picks this layout only when the
+        # mean WKB payload is large enough to beat the per-record
+        # message-object overhead (PREMERGE_AUTO_WKB_BYTES).
+        stage = _premerge_stage(features, config)
+    elif salted:
+        stage = _salted_stage(fanout_records(features, config), config,
+                              hot_tile_ids=detect_hot_tiles(features, config),
+                              by_range=False)
+    else:
+        stage = _wkb_stage(fanout_records(features, config), config,
+                           by_range=False)
+    sorted_in, encoder = stage
     codec = P.CODEC_BY_NAME[config.tile_compression]
+    expected_backend = _expected_codec_backend(features, codec)
     own_dir = shard_dir is None
     shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
-    if distributed_directory:
-        # NO persist and NO range exchange on the heavy data: a hash
-        # shuffle on tile_id co-locates each tile (the encoder's only
-        # requirement), so the fan-out executes exactly once as the
-        # shuffle map stage — repartitionByRange would add a sampling job
-        # that re-executes it (or forces caching the multi-10-GB fan-out
-        # output to disk just to sample it). Global tile order is restored
-        # later on the 40-byte entry rows only.
-        parts = config.shuffle_partitions
-        if config.write_properties:
-            if salted:
-                raise ValueError(
-                    "convert_sharded: write_properties=True cannot combine "
-                    "with salted=True"
-                )
-            if "props" not in features.columns:
-                raise ValueError(
-                    "convert_sharded: write_properties=True requires a "
-                    "'props' column — build it with encode_props_column"
-                )
-            if _resolve_premerge(features, premerge):
-                tiles = encode_tiles_premerge_props(features, config)
-            else:
-                records = fanout_records(features, config)
-                tiles = encode_tiles_with_props(
-                    records, features.select("feature_id", "props"), config,
-                    by_range=False)
-        elif not salted and _resolve_premerge(features, premerge):
-            # map-side message encode: the shuffle carries zigzag-varint
-            # feature messages (~5-8x smaller than WKB on vertex-dense
-            # input) and the reduce side only sorts + concatenates — this
-            # also makes hot-tile salting moot (the heavy per-record work
-            # is already spread across the map stage; the reduce task for
-            # a mega-tile is a bytes concat + gzip). 'auto' picks this
-            # layout only when the sampled mean WKB payload is large
-            # enough to beat the per-record message-object overhead
-            # (PREMERGE_AUTO_WKB_BYTES).
-            tiles = encode_tiles_premerge(features, config)
-        elif salted:
-            records = fanout_records(features, config)
-            hot = detect_hot_tiles(features, config)
-            tiles = encode_tiles_salted(records, config, hot_tile_ids=hot,
-                                        by_range=False)
-        else:
-            records = fanout_records(features, config)
-            tiles = encode_tiles(records, config, by_range=False)
-        entries_df = tiles.withColumn(
-            "pid", F.spark_partition_id()
-        ).mapInPandas(_make_shard_writer(shard_dir, codec,
-                                         _expected_codec_backend(features,
-                                                                 codec)),
-                      schema=SHARD_ENTRIES_SCHEMA)
-        result = _finalize_sharded_distributed(
+    writer = _make_shard_writer(shard_dir, codec, expected_backend)
+
+    def encode_and_write(batches):
+        return writer(encoder(batches))
+
+    entries_df = sorted_in.mapInPandas(encode_and_write,
+                                       schema=SHARD_ENTRIES_SCHEMA)
+    try:
+        return _finalize_sharded_distributed(
             entries_df, output_path, shard_dir, bounds, config, codec)
+    finally:
         if own_dir:
             shutil.rmtree(shard_dir, ignore_errors=True)
-        return result
-
-    # legacy collect-everything finalize (differential oracle): range
-    # partitioning + DISK_ONLY persist (the disk store streams the
-    # iterator; a memory-store block must fully unroll on-heap first)
-    if config.write_properties:
-        raise ValueError(
-            "convert_sharded: write_properties is not supported on the "
-            "legacy (distributed_directory=False) finalize"
-        )
-    records = fanout_records(features, config).persist(StorageLevel.DISK_ONLY)
-    if salted:
-        hot = detect_hot_tiles(features, config)
-        tiles = encode_tiles_salted(records, config, hot_tile_ids=hot)
-    else:
-        tiles = encode_tiles(records, config)
-    entries_df = tiles.withColumn("pid", F.spark_partition_id()).mapInPandas(
-        _make_shard_writer(shard_dir, codec,
-                           _expected_codec_backend(features, codec)),
-        schema=SHARD_ENTRIES_SCHEMA,
-    )
-    rows = entries_df.collect()
-    records.unpersist()
-    rows.sort(key=lambda r: r.tile_id)
-
-    # global first-occurrence dedup in tile_id order — EXACT assembler
-    # semantics (hash-keyed map with the raw-length collision guard), so the
-    # output bytes match the single-writer archive
-    final_by_hash: dict[int, tuple[int, int, int]] = {}
-    live_ranges: dict[int, list[tuple[int, int]]] = {}
-    entries: list[P.DirEntry] = []
-    data_len = 0
-    n_blobs = 0
-    total_features = 0
-    features_per_zoom: dict[int, int] = {}
-    zoom_seen: list[int] = []
-    for r in rows:
-        hit = final_by_hash.get(r.content_hash)
-        if hit is not None and hit[2] != r.raw_len:
-            hit = None
-        if hit is None:
-            hit = (data_len, r.blob_len, r.raw_len)
-            final_by_hash[r.content_hash] = hit
-            live_ranges.setdefault(r.pid, []).append((r.local_off, r.blob_len))
-            data_len += r.blob_len
-            n_blobs += 1
-        entries.append(P.DirEntry(r.tile_id, hit[0], hit[1], 1))
-        total_features += r.n_features
-        features_per_zoom[r.z] = features_per_zoom.get(r.z, 0) + r.n_features
-        zoom_seen.append(r.z)
-
-    coalesced = P.coalesce_run_lengths(entries)
-    root_raw, leaf_section, n_ent = P.build_directories(
-        coalesced, leaf_max_entries=config.leaf_max_entries)
-    root_dir = P.compress(root_raw, P.COMPRESSION_GZIP)
-    tilestats = {
-        "total_features": total_features,
-        "features_per_zoom": {str(k): v for k, v in sorted(features_per_zoom.items())},
-    }
-    meta = P.compress(
-        P.metadata_json(config.layer_name, config.min_zoom, config.max_zoom,
-                        config.layer_fields or {}, tilestats),
-        P.COMPRESSION_GZIP,
-    )
-    leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
-    hdr = P.Header(
-        root_dir_offset=P.HEADER_SIZE,
-        root_dir_length=len(root_dir),
-        json_metadata_offset=P.HEADER_SIZE + len(root_dir),
-        json_metadata_length=len(meta),
-        leaf_dirs_offset=leaf_base if leaf_section else 0,
-        leaf_dirs_length=len(leaf_section),
-        tile_data_offset=leaf_base + len(leaf_section),
-        tile_data_length=data_len,
-        addressed_tiles_count=len(entries),
-        tile_entries_count=n_ent,
-        tile_contents_count=n_blobs,
-        clustered=True,
-        internal_compression=P.COMPRESSION_GZIP,
-        tile_compression=codec,
-        tile_type=P.TILETYPE_MVT,
-        min_zoom=min(zoom_seen) if zoom_seen else config.min_zoom,
-        max_zoom=max(zoom_seen) if zoom_seen else config.max_zoom,
-        min_lon=bounds[0] if entries else -180.0,
-        min_lat=bounds[1] if entries else -85.0,
-        max_lon=bounds[2] if entries else 180.0,
-        max_lat=bounds[3] if entries else 85.0,
-    )
-    with open(output_path, "wb") as out_f:
-        out_f.write(hdr.to_bytes())
-        out_f.write(root_dir)
-        out_f.write(meta)
-        if leaf_section:
-            out_f.write(leaf_section)
-        for pid in sorted(live_ranges):
-            shard_path = os.path.join(shard_dir, f"shard_{pid:05d}.bin")
-            with open(shard_path, "rb") as sf:
-                for off, ln in live_ranges[pid]:  # ascending per shard
-                    sf.seek(off)
-                    out_f.write(sf.read(ln))
-    if own_dir:
-        shutil.rmtree(shard_dir, ignore_errors=True)
-    return {
-        "tiles": len(entries),
-        "features": total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": n_blobs,
-        "bounds": bounds,
-    }
 
 
 def convert(features: DataFrame, output_path: str, config: TilerConfig | None = None,
@@ -3333,12 +3227,10 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
                 make_fanout_encoded_props(config, metrics),
                 schema=MSG_PROPS_SCHEMA,
             ).persist(StorageLevel.DISK_ONLY)
-            parts = config.shuffle_partitions
-            shuffled = (
-                records.repartitionByRange(parts, "tile_id")
-                if parts else records.repartitionByRange("tile_id")
-            ).sortWithinPartitions("tile_id", "feature_id")
-            tiles = shuffled.mapInPandas(
+            shuffled = _tile_exchange(records, config.shuffle_partitions,
+                                      True, "tile_id")
+            tiles = shuffled.sortWithinPartitions(
+                "tile_id", "feature_id").mapInPandas(
                 make_wrap_props_encoder(config, metrics), schema=TILES_SCHEMA)
         else:
             records = fanout_records(features, config, metrics).persist(
@@ -3356,12 +3248,9 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
         records = features.mapInPandas(
             make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA
         ).persist(StorageLevel.DISK_ONLY)
-        parts = config.shuffle_partitions
-        shuffled = (
-            records.repartitionByRange(parts, "tile_id")
-            if parts else records.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id", "feature_id")
-        tiles = shuffled.mapInPandas(
+        shuffled = _tile_exchange(records, config.shuffle_partitions, True,
+                                  "tile_id")
+        tiles = shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
             make_wrap_encoder(config, metrics), schema=TILES_SCHEMA)
     else:
         records = fanout_records(features, config, metrics).persist(

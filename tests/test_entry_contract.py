@@ -102,3 +102,18 @@ def test_fmix64_sql_bit_exact_vs_kernel():
     con.close()
     want = fmix64(ids).astype(np.float64) / float(0xFFFFFFFFFFFFFFFF)
     assert np.array_equal(got, want)
+
+
+def test_tile_archive_query_handles_empty_archive(spark, monkeypatch):
+    """An event corpus with no features still yields a valid (empty)
+    archive; the decode pass must return zero rows, not fail on schema
+    inference over an empty row list."""
+    from gpq_tiles_spark.extract import FEATURES_SCHEMA
+
+    monkeypatch.setattr(entry_mod, "_register", lambda *a: None)
+    monkeypatch.setattr(entry_mod, "_event_features",
+                        lambda s, *a, **k: s.createDataFrame(
+                            [], schema=FEATURES_SCHEMA))
+    df = entry_mod._q_tile_archive(spark, SF_DIR)
+    assert df.columns == ["tx", "ty", "n_points"]
+    assert df.collect() == []

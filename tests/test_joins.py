@@ -190,3 +190,51 @@ def test_pip_non_broadcast_matches_broadcast(spark):
     b = {(r.point_id, r.zone_id) for r in point_in_polygon_join(
         pts, zones, broadcast_zones=False).collect()}
     assert a == b and len(a) > 50
+
+
+def test_knn_join_max_radius_one_matches_bruteforce(spark, monkeypatch):
+    """max_radius=1 searches the probe's 1-ring only (never radius 2) and
+    still returns the exact top-k when it lies inside that disk."""
+    rng = np.random.default_rng(11)
+    zoom = 7
+    cell_w = 360.0 / (1 << zoom)
+    # probes at cell centres, each with a tight cluster well inside its own
+    # cell, plus far-away background points
+    p_lng = (np.array([3, 40, 90]) + 0.5) * cell_w - 180.0
+    p_lat = np.array([10.0, 35.0, -20.0])
+    lngs = [rng.uniform(-170, 170, 40)]
+    lats = [rng.uniform(-70, 70, 40)]
+    for x, y in zip(p_lng, p_lat):
+        lngs.append(x + rng.uniform(-0.3, 0.3, 15))
+        lats.append(y + rng.uniform(-0.3, 0.3, 15))
+    lng, lat = np.concatenate(lngs), np.concatenate(lats)
+    pts = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(lng, lat))],
+        schema="point_id long, lng double, lat double",
+    )
+    probes = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(p_lng, p_lat))],
+        schema="probe_id long, lng double, lat double",
+    )
+    radii = []
+    real_disk = C.grid_disk
+
+    def recording_disk(cells, r, z):
+        radii.append(r)
+        return real_disk(cells, r, z)
+
+    monkeypatch.setattr(C, "grid_disk", recording_disk)
+    k = 5
+    got = {}
+    for r in knn_join(pts, probes, k=k, zoom=zoom, max_radius=1).collect():
+        got.setdefault(r.probe_id, []).append((r.rnk, r.point_id, r.dist))
+    assert radii == [1]
+    for pid, (plng, plat) in enumerate(zip(p_lng, p_lat)):
+        d = (lng - plng) ** 2 + (lat - plat) ** 2
+        order = np.lexsort((np.arange(len(d)), d))[:k]
+        rows = sorted(got[pid])
+        assert [(rk, p) for rk, p, _ in rows] == [
+            (i + 1, int(order[i])) for i in range(k)], f"probe {pid}"
+        np.testing.assert_allclose([dd for _, _, dd in rows], d[order])
+    with pytest.raises(ValueError, match="max_radius"):
+        knn_join(pts, probes, k=k, zoom=zoom, max_radius=0)

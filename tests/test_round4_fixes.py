@@ -61,27 +61,6 @@ def test_knn_join_probe_guard(spark, monkeypatch):
     assert out.groupBy("probe_id").count().count() == 3
 
 
-def test_legacy_sharded_finalize_gated(spark, docs_table, tmp_path):
-    """distributed_directory=False (collect-everything finalize) is a
-    differential oracle only: unreachable without _testing_only=True
-    (VERDICT r3 item 6), and still byte-identical with it."""
-    from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.extract import extract_features
-    from gpq_tiles_spark.pipeline import convert_sharded
-
-    feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=4, shuffle_partitions=4)
-    with pytest.raises(ValueError, match="_testing_only"):
-        convert_sharded(feats, str(tmp_path / "x.pmtiles"), cfg,
-                        distributed_directory=False)
-    p1 = str(tmp_path / "dist.pmtiles")
-    p2 = str(tmp_path / "legacy.pmtiles")
-    convert_sharded(feats, p1, cfg)
-    convert_sharded(feats, p2, cfg, distributed_directory=False,
-                    _testing_only=True)
-    assert open(p1, "rb").read() == open(p2, "rb").read()
-
-
 def test_max_tile_bytes_caps_mega_tile(spark, docs_table, tmp_path):
     """VERDICT r3 item 5: an oversized low-zoom tile is deterministically
     thinned to the byte budget, the cap is recorded in metrics, the archive

@@ -1,0 +1,113 @@
+"""The sharded sink's fused reduce stage and the input-spread guard.
+
+``convert_sharded`` runs each layout's reduce-side encoder and the shard
+writer in ONE mapInPandas (``writer(encoder(batches))``), with the shard
+named by the task's partition id. These tests pin the archive bytes of
+every sharded layout against the single-writer ``convert`` on input that
+arrives with fewer partitions than task slots, the single Python map node
+after the tile exchange, and the slot-count rule of
+``spread_small_input``.
+"""
+
+import pytest
+
+from gpq_tiles_spark import pipeline as P
+from gpq_tiles_spark.config import TilerConfig
+from gpq_tiles_spark.extract import extract_features
+from gpq_tiles_spark.partitioning import spread_small_input
+
+# layout -> (write_properties, premerge, salted)
+LAYOUTS = {
+    "premerge": (False, True, False),
+    "premerge_props": (True, True, False),
+    "wkb": (False, False, False),
+    "wkb_props": (True, False, False),
+    "salted": (False, False, True),
+}
+
+
+def _config(write_properties: bool) -> TilerConfig:
+    # hot_tile_threshold/salt_buckets make the salted layout actually salt
+    # (they do not affect any other layout's bytes)
+    return TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
+                       hot_tile_threshold=5, salt_buckets=4,
+                       write_properties=write_properties)
+
+
+@pytest.fixture(scope="module")
+def two_part_features(spark, docs_table):
+    """Extracted features with a props column, on 2 partitions — half the
+    4-slot test session's parallelism."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    feats = P.encode_props_column(feats, ["doc_id", "span_offset"])
+    feats = feats.repartition(2).cache()
+    assert feats.rdd.getNumPartitions() == 2
+    assert spark.sparkContext.defaultParallelism == 4
+    yield feats
+    feats.unpersist()
+
+
+@pytest.fixture(scope="module")
+def reference_archives(two_part_features, tmp_path_factory):
+    """Single-writer ``convert`` archive bytes, with and without props."""
+    out = {}
+    d = tmp_path_factory.mktemp("ref")
+    for props in (False, True):
+        path = str(d / f"ref_{props}.pmtiles")
+        P.convert(two_part_features, path, _config(props))
+        with open(path, "rb") as f:
+            out[props] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_sharded_layout_byte_identical_on_under_split_input(
+        two_part_features, reference_archives, tmp_path, layout):
+    props, premerge, salted = LAYOUTS[layout]
+    path = str(tmp_path / f"{layout}.pmtiles")
+    stats = P.convert_sharded(two_part_features, path, _config(props),
+                              premerge=premerge, salted=salted)
+    assert stats["tiles"] > 0
+    with open(path, "rb") as f:
+        assert f.read() == reference_archives[props], layout
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_sharded_plan_has_one_python_map_after_tile_exchange(
+        two_part_features, tmp_path, monkeypatch, layout):
+    """Encoder and shard writer share one Python map node: nothing between
+    the last tile_id exchange and the entry rows crosses back to the JVM."""
+    captured = {}
+
+    def capture(entries_df, *args, **kwargs):
+        captured["plan"] = (entries_df._jdf.queryExecution()
+                            .executedPlan().toString())
+        return {}
+
+    monkeypatch.setattr(P, "_finalize_sharded_distributed", capture)
+    props, premerge, salted = LAYOUTS[layout]
+    P.convert_sharded(two_part_features, str(tmp_path / "x.pmtiles"),
+                      _config(props), premerge=premerge, salted=salted)
+    plan = captured["plan"]
+    head, sep, exchange = plan.partition("Exchange ")
+    assert sep, plan
+    assert exchange.split("\n", 1)[0].count("tile_id"), plan
+    assert head.count("MapInPandas") == 1, plan
+    assert "spark_partition_id" not in head.lower(), plan
+
+
+def test_spread_small_input_fires_below_slot_count(spark):
+    slots = spark.sparkContext.defaultParallelism
+    assert slots >= 2
+    half = spark.range(1000).repartition(slots // 2)
+    spread = spread_small_input(half)
+    assert spread is not half
+    assert spread.rdd.getNumPartitions() == slots
+    assert sorted(r.id for r in spread.collect()) == list(range(1000))
+
+
+@pytest.mark.parametrize("factor", [1, 2])
+def test_spread_small_input_identity_at_slot_count(spark, factor):
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.range(1000).repartition(slots * factor)
+    assert spread_small_input(df) is df
