@@ -19,9 +19,12 @@ raise at compress time (gated, like the reference's feature flags).
 from __future__ import annotations
 
 import gzip
+import io
 import json
+import shutil
 import struct
 from dataclasses import dataclass, field
+from typing import BinaryIO, Callable
 
 import numpy as np
 
@@ -388,7 +391,6 @@ class PMTilesAssembler:
         self.addressed = 0
         self.total_features = 0
         self.features_per_zoom: dict[int, int] = {}
-        self.zoom_seen: list[int] = []
         self.bounds = [180.0, 90.0, -180.0, -90.0]
         self._last_tile_id = -1
 
@@ -400,7 +402,6 @@ class PMTilesAssembler:
         self.addressed += 1
         self.total_features += n_features
         self.features_per_zoom[z] = self.features_per_zoom.get(z, 0) + n_features
-        self.zoom_seen.append(z)
         if tile_bounds is not None:
             self.bounds[0] = min(self.bounds[0], tile_bounds[0])
             self.bounds[1] = min(self.bounds[1], tile_bounds[1])
@@ -436,60 +437,95 @@ class PMTilesAssembler:
 
     def finalize(self, path: str) -> Header:
         # add_tile coalesces on arrival with coalesce_run_lengths' exact
-        # rule, so self.entries is already the maximal-run form
-        entries = self.entries
-        # past ROOT_MAX_ENTRIES the directory splits into spec leaf
-        # directories (run_length==0 root pointers into the leaf section)
-        # so the root stays ~spec-sized at any tile count; small archives
-        # keep the exact root-only bytes of previous rounds
+        # rule, so self.entries is already the maximal-run form; past
+        # ROOT_MAX_ENTRIES the directory splits into spec leaf directories
+        # (run_length==0 root pointers into the leaf section) so the root
+        # stays ~spec-sized at any tile count; small archives keep the
+        # exact root-only bytes of previous rounds
         root_raw, leaf_section, n_ent = build_directories(
-            entries, leaf_max_entries=self.leaf_max_entries)
-        root_dir = compress(root_raw, COMPRESSION_GZIP)
-        tilestats = {
-            "total_features": self.total_features,
-            "features_per_zoom": {str(k): v for k, v in sorted(self.features_per_zoom.items())},
-        }
-        meta = compress(
-            metadata_json(self.layer_name, self.min_zoom_cfg, self.max_zoom_cfg,
-                          self.fields, tilestats),
-            COMPRESSION_GZIP,
-        )
-        leaf_base = HEADER_SIZE + len(root_dir) + len(meta)
-        hdr = Header(
-            root_dir_offset=HEADER_SIZE,
-            root_dir_length=len(root_dir),
-            json_metadata_offset=HEADER_SIZE + len(root_dir),
-            json_metadata_length=len(meta),
-            leaf_dirs_offset=leaf_base if leaf_section else 0,
-            leaf_dirs_length=len(leaf_section),
-            tile_data_offset=leaf_base + len(leaf_section),
-            tile_data_length=self._data_len,
-            addressed_tiles_count=self.addressed,
-            tile_entries_count=n_ent,
-            tile_contents_count=self._n_blobs,
-            clustered=True,
-            internal_compression=COMPRESSION_GZIP,
-            tile_compression=self.tile_compression,
-            tile_type=TILETYPE_MVT,
-            min_zoom=min(self.zoom_seen) if self.zoom_seen else self.min_zoom_cfg,
-            max_zoom=max(self.zoom_seen) if self.zoom_seen else self.max_zoom_cfg,
-            min_lon=self.bounds[0] if self.addressed else -180.0,
-            min_lat=self.bounds[1] if self.addressed else -85.0,
-            max_lon=self.bounds[2] if self.addressed else 180.0,
-            max_lat=self.bounds[3] if self.addressed else 85.0,
-        )
-        with open(path, "wb") as f:
-            f.write(hdr.to_bytes())
-            f.write(root_dir)
-            f.write(meta)
-            if leaf_section:
-                f.write(leaf_section)
-            self._tmp.seek(0)
-            import shutil
+            self.entries, leaf_max_entries=self.leaf_max_entries)
+        self._tmp.seek(0)
+        try:
+            return write_archive(
+                path, root_raw, leaf_section, n_ent,
+                lambda f: shutil.copyfileobj(self._tmp, f, length=1 << 20),
+                addressed=self.addressed, n_blobs=self._n_blobs,
+                data_len=self._data_len,
+                tile_compression=self.tile_compression,
+                layer_name=self.layer_name, min_zoom=self.min_zoom_cfg,
+                max_zoom=self.max_zoom_cfg, fields=self.fields,
+                features_per_zoom=self.features_per_zoom,
+                bounds=self.bounds)
+        finally:
+            self._tmp.close()
 
-            shutil.copyfileobj(self._tmp, f, length=1 << 20)
-        self._tmp.close()
-        return hdr
+
+def write_archive(path: str, root_raw: bytes, leaves, n_entries: int,
+                  write_data: Callable[[BinaryIO], None], *, addressed: int,
+                  n_blobs: int, data_len: int, tile_compression: int,
+                  layer_name: str, min_zoom: int, max_zoom: int,
+                  fields: dict[str, str] | None,
+                  features_per_zoom: dict[int, int], bounds) -> Header:
+    """The one archive finalize (pmtiles_writer.rs:1028-1143), shared by
+    the single-writer assembler and both sharded finalizes: gzip the root
+    directory and the metadata JSON (tilestats per zoom), build the header,
+    then write header, root, metadata, the leaf-directory section and —
+    through ``write_data(f)`` — the ``data_len`` bytes of tile data.
+
+    ``leaves`` is the leaf section as bytes or as a seekable file (a
+    DirectoryBuilder spill). ``features_per_zoom`` has a key for every zoom
+    that has tiles; its smallest and largest key are the header's zoom
+    range. An archive with no addressed tiles gets world bounds and the
+    configured ``min_zoom``/``max_zoom`` instead."""
+    if isinstance(leaves, (bytes, bytearray)):
+        leaves = io.BytesIO(leaves)
+    leaf_len = leaves.seek(0, io.SEEK_END)
+    root_dir = compress(root_raw, COMPRESSION_GZIP)
+    tilestats = {
+        "total_features": sum(features_per_zoom.values()),
+        "features_per_zoom": {str(k): v
+                              for k, v in sorted(features_per_zoom.items())},
+    }
+    meta = compress(
+        metadata_json(layer_name, min_zoom, max_zoom, fields, tilestats),
+        COMPRESSION_GZIP,
+    )
+    if addressed:
+        zooms = (min(features_per_zoom), max(features_per_zoom))
+    else:
+        bounds, zooms = (-180.0, -85.0, 180.0, 85.0), (min_zoom, max_zoom)
+    leaf_base = HEADER_SIZE + len(root_dir) + len(meta)
+    hdr = Header(
+        root_dir_offset=HEADER_SIZE,
+        root_dir_length=len(root_dir),
+        json_metadata_offset=HEADER_SIZE + len(root_dir),
+        json_metadata_length=len(meta),
+        leaf_dirs_offset=leaf_base if leaf_len else 0,
+        leaf_dirs_length=leaf_len,
+        tile_data_offset=leaf_base + leaf_len,
+        tile_data_length=data_len,
+        addressed_tiles_count=addressed,
+        tile_entries_count=n_entries,
+        tile_contents_count=n_blobs,
+        clustered=True,
+        internal_compression=COMPRESSION_GZIP,
+        tile_compression=tile_compression,
+        tile_type=TILETYPE_MVT,
+        min_zoom=zooms[0],
+        max_zoom=zooms[1],
+        min_lon=bounds[0],
+        min_lat=bounds[1],
+        max_lon=bounds[2],
+        max_lat=bounds[3],
+    )
+    with open(path, "wb") as f:
+        f.write(hdr.to_bytes())
+        f.write(root_dir)
+        f.write(meta)
+        leaves.seek(0)
+        shutil.copyfileobj(leaves, f, length=1 << 20)
+        write_data(f)
+    return hdr
 
 
 class PMTilesReader:
@@ -786,7 +822,7 @@ class DirectoryBuilder:
             self._pend: list[tuple] = []
             self._pend_n = 0
             self._own_spill = spill is None
-            self._spill = spill if spill is not None else _BytesSink()
+            self._spill = spill if spill is not None else io.BytesIO()
             self._leaf_off = 0
             self.root_entries: list[DirEntry] = []
 
@@ -898,17 +934,6 @@ class DirectoryBuilder:
         root = encode_directory(self.root_entries)
         leaf_section = self._spill.getvalue() if self._own_spill else None
         return root, leaf_section, self.n_written
-
-
-class _BytesSink:
-    def __init__(self):
-        self._buf = bytearray()
-
-    def write(self, b: bytes) -> None:
-        self._buf += b
-
-    def getvalue(self) -> bytes:
-        return bytes(self._buf)
 
 
 def build_directories(entries: list[DirEntry],

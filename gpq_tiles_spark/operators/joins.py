@@ -69,15 +69,16 @@ def auto_cover_zoom(zones: DataFrame, zone_wkb: str = "zone_wkb",
     zoom 7 -> 288M candidates for 4M points; at the auto zoom -> ~1 per
     point)."""
     rows = zones.select(zone_wkb).limit(sample).collect()
-    if not rows:
+    return _cover_zoom([G.bbox(G.from_wkb(bytes(r[0]))) for r in rows])
+
+
+def _cover_zoom(bboxes) -> int:
+    """The cover-zoom rule over zone bboxes (x0, y0, x1, y1): cell width
+    ~ the median bbox width; 9 when there are no zones."""
+    if not bboxes:
         return 9
-    widths = []
-    for r in rows:
-        x0, _, x1, _ = G.bbox(G.from_wkb(bytes(r[0])))
-        widths.append(max(x1 - x0, 1e-9))
-    med = float(np.median(widths))
-    z = int(np.clip(np.floor(np.log2(360.0 / med)), 0, 18))
-    return z
+    med = float(np.median([max(b[2] - b[0], 1e-9) for b in bboxes]))
+    return int(np.clip(np.floor(np.log2(360.0 / med)), 0, 18))
 
 
 def point_in_polygon_join(points: DataFrame, zones: DataFrame,
@@ -88,7 +89,7 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           broadcast_zones: bool = True) -> DataFrame:
     """Exact PIP join -> (point_id, lng, lat, zone_id). ``zoom='auto'``
     (default) sizes the cell grid to the zones (see auto_cover_zoom)."""
-    zmap = None
+    geoms = None
     if broadcast_zones:
         # the broadcastable-zones path collects the zone table anyway (the
         # refine kernel needs every polygon on every executor) — so build
@@ -96,17 +97,12 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
         # paying a mapInPandas job for it plus a second collect (round 7;
         # guide §1.2). The cover rows are identical to polygon_cell_cover.
         zrows = zones.select(zone_id, zone_wkb).collect()
-        zmap = {r[0]: bytes(r[1]) for r in zrows}
+        geoms = {r[0]: G.from_wkb(bytes(r[1])) for r in zrows}
+        bboxes = {k: G.bbox(g) for k, g in geoms.items()}
         if zoom == "auto":
-            widths = [
-                max(G.bbox(G.from_wkb(w))[2] - G.bbox(G.from_wkb(w))[0], 1e-9)
-                for w in list(zmap.values())[:512]
-            ]
-            zoom = (int(np.clip(np.floor(np.log2(360.0 / float(np.median(widths)))),
-                                0, 18)) if widths else 9)
+            zoom = _cover_zoom(list(bboxes.values())[:512])
         ids, cells_out = [], []
-        for zid, wkb in zmap.items():
-            x0, y0, x1, y1 = G.bbox(G.from_wkb(wkb))
+        for zid, (x0, y0, x1, y1) in bboxes.items():
             _, cc = C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
             ids.extend([zid] * len(cc))
             cells_out.extend(cc.tolist())
@@ -133,8 +129,7 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
         ]
     )
 
-    if zmap is not None:
-        geoms = {k: G.from_wkb(v) for k, v in zmap.items()}
+    if geoms is not None:
 
         def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:

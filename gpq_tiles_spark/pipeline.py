@@ -134,6 +134,18 @@ class PipelineMetrics:
         }
 
 
+def _count_tiles(metrics: PipelineMetrics | None, n_tiles: int,
+                 cap_stats: list) -> None:
+    """Reduce-side accumulator update for one encoded chunk: tiles out,
+    plus the tiles and records the byte budget capped (``cap_stats``)."""
+    if metrics is None:
+        return
+    metrics.tiles_out.add(n_tiles)
+    if cap_stats[0]:
+        metrics.tiles_capped.add(cap_stats[0])
+        metrics.records_capped.add(cap_stats[1])
+
+
 # ---------------------------------------------------------------------------
 # Phase 1: fan-out
 # ---------------------------------------------------------------------------
@@ -994,12 +1006,11 @@ def make_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
     each tile_id is wholly contained in one partition (range partitioning), so
     grouping consecutive runs — carrying the tail across batch boundaries —
     reproduces the reference's phase-3 streaming group-by
-    (pipeline.rs:1179-1282) with zero extra shuffle.
+    (pipeline.rs:1179-1282) with zero extra shuffle (``_run_carry``).
     """
     layer_name, extent = config.layer_name, config.extent
     buffer_px = config.buffer_pixels
     max_tile_bytes = config.max_tile_bytes
-    acc_tiles = metrics.tiles_out if metrics else None
 
     def encode_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         # production path writes empty properties into every tile
@@ -1015,32 +1026,10 @@ def make_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
             max_tile_bytes=max_tile_bytes,
             cap_stats=cap_stats,
         )
-        if acc_tiles is not None:
-            acc_tiles.add(len(cols["tile_id"]))
-        if metrics is not None and cap_stats[0]:
-            metrics.tiles_capped.add(cap_stats[0])
-            metrics.records_capped.add(cap_stats[1])
+        _count_tiles(metrics, len(cols["tile_id"]), cap_stats)
         return pd.DataFrame(cols)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            tids = pdf["tile_id"].to_numpy()
-            # hold back the last run — it may continue in the next batch
-            cut = int(np.searchsorted(tids, tids[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield encode_chunk(body)
-        if pend is not None and len(pend):
-            yield encode_chunk(pend)
-
-    return encode
+    return _run_carry(encode_chunk)
 
 
 MSG_RECORDS_SCHEMA = StructType(
@@ -1085,26 +1074,30 @@ def make_fanout_encoded(config: TilerConfig,
     return fanout_encoded
 
 
-def _run_carry(chunk_fn):
+def _tile_ids(pdf: pd.DataFrame) -> np.ndarray:
+    return pdf["tile_id"].to_numpy()
+
+
+def _run_carry(chunk_fn, run_key=_tile_ids):
     """Shared tile-run carry for reduce-side encoders: input batches are
-    (tile_id-sorted) within the partition; complete runs go to
-    ``chunk_fn`` as they close, and the trailing (possibly incomplete)
-    run carries across Arrow batches as a LIST of frames — a mega-tile
-    run spanning hundreds of small batches must not pay one
-    quadratically-growing pd.concat per batch."""
+    sorted on ``run_key`` (tile_id by default) within the partition;
+    complete runs go to ``chunk_fn`` as they close, and the trailing
+    (possibly incomplete) run carries across Arrow batches as a LIST of
+    frames — a mega-tile run spanning hundreds of small batches must not
+    pay one quadratically-growing pd.concat per batch."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pend: list[pd.DataFrame] = []
-        pend_last = None  # last tile_id seen (runs are contiguous)
+        pend_last = None  # last run key seen (runs are contiguous)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tids = pdf["tile_id"].to_numpy()
-            if pend and tids[0] != pend_last:
+            keys = run_key(pdf)
+            if pend and keys[0] != pend_last:
                 yield chunk_fn(pd.concat(pend, ignore_index=True)
                                if len(pend) > 1 else pend[0])
                 pend = []
-            cut = int(np.searchsorted(tids, tids[-1], side="left"))
+            cut = int(np.searchsorted(keys, keys[-1], side="left"))
             body = pdf.iloc[:cut]
             if len(body):
                 if pend:
@@ -1114,7 +1107,7 @@ def _run_carry(chunk_fn):
                 else:
                     yield chunk_fn(body)
             pend.append(pdf.iloc[cut:])
-            pend_last = tids[-1]
+            pend_last = keys[-1]
         if pend:
             yield chunk_fn(pd.concat(pend, ignore_index=True)
                            if len(pend) > 1 else pend[0])
@@ -1130,7 +1123,6 @@ def make_wrap_encoder(config: TilerConfig,
     map-side."""
     layer_name, extent = config.layer_name, config.extent
     max_tile_bytes = config.max_tile_bytes
-    acc_tiles = metrics.tiles_out if metrics else None
 
     def wrap_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         cap_stats = [0, 0]
@@ -1143,11 +1135,7 @@ def make_wrap_encoder(config: TilerConfig,
             max_tile_bytes=max_tile_bytes,
             cap_stats=cap_stats,
         )
-        if acc_tiles is not None:
-            acc_tiles.add(len(cols["tile_id"]))
-        if metrics is not None and cap_stats[0]:
-            metrics.tiles_capped.add(cap_stats[0])
-            metrics.records_capped.add(cap_stats[1])
+        _count_tiles(metrics, len(cols["tile_id"]), cap_stats)
         return pd.DataFrame(cols)
 
     return _run_carry(wrap_chunk)
@@ -1170,12 +1158,25 @@ def _encode(stage: tuple[DataFrame, Callable]) -> DataFrame:
     return sorted_in.mapInPandas(encoder, schema=TILES_SCHEMA)
 
 
-def _premerge_stage(features: DataFrame, config: TilerConfig,
+def _premerge_records(features: DataFrame, config: TilerConfig,
+                      metrics: PipelineMetrics | None = None,
+                      props: bool = False) -> DataFrame:
+    """Premerge map side: fan-out + per-record message encode (carrying
+    each record's props entries when ``props``), spread over every task
+    slot when the input arrives under-partitioned."""
+    if props:
+        fanout, schema = make_fanout_encoded_props, MSG_PROPS_SCHEMA
+    else:
+        fanout, schema = make_fanout_encoded, MSG_RECORDS_SCHEMA
+    return spread_small_input(features).mapInPandas(fanout(config, metrics),
+                                                    schema=schema)
+
+
+def _premerge_stage(msgs: DataFrame, config: TilerConfig,
                     num_partitions: int | None = None, by_range: bool = False,
                     metrics: PipelineMetrics | None = None):
-    """Premerge reduce stage: (tile-sorted framed messages, wrap encoder)."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA)
+    """Premerge reduce stage over ``_premerge_records`` output:
+    (tile-sorted framed messages, wrap encoder)."""
     parts = num_partitions or config.shuffle_partitions
     shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
     return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
@@ -1193,8 +1194,8 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
     The single shared constructor for every premerge plan in the repo —
     bench, contract queries, and the sharded sink all build on
     ``_premerge_stage``."""
-    return _encode(_premerge_stage(features, config, num_partitions,
-                                   by_range, metrics))
+    return _encode(_premerge_stage(_premerge_records(features, config, metrics),
+                                   config, num_partitions, by_range, metrics))
 
 
 # premerge pays when records are coordinate-dense: the framed message is
@@ -1209,7 +1210,9 @@ PREMERGE_AUTO_WKB_BYTES = 512
 
 def _resolve_premerge(features: DataFrame, premerge) -> bool:
     """Resolve premerge='auto' from the FIRST 2048 rows in partition order
-    — deterministic for a fixed input layout (a mid-plan limit() gathers
+    (the sinks use this only when the caller passes bounds; otherwise the
+    bounds scan measures the mean over all rows, see ``_tile_stage``) —
+    deterministic for a fixed input layout (a mid-plan limit() gathers
     whichever partitions answer first, so the old auto choice could flip
     between runs on heterogeneous corpora; ADVICE r3). Output bytes are
     identical either way; this only pins WHICH plan runs. take() executes
@@ -1241,43 +1244,23 @@ PARTIAL_SCHEMA = StructType(
 def make_partial_encoder(config: TilerConfig):
     """Phase A of the salted two-phase encode: per (tile_id, salt) run, emit
     unwrapped feature messages (cross-batch carry on (tile_id, salt))."""
-    extent = config.extent
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
+    def run_key(pdf: pd.DataFrame) -> np.ndarray:
+        return (pdf["tile_id"].to_numpy(dtype=np.int64)
+                * np.int64(config.salt_buckets)
+                + pdf["salt"].to_numpy(dtype=np.int64))
 
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-            run_key = tid * np.int64(config.salt_buckets) + pdf["salt"].to_numpy(
-                dtype=np.int64
-            )
-            cols = mvt_fast.encode_partial_runs(
-                run_key,
-                tid,
-                pdf["feature_id"].to_numpy(dtype=np.int64),
-                pdf["wkb"].to_numpy(),
-                extent,
-                config.buffer_pixels,
-            )
-            return pd.DataFrame(cols)
+    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(mvt_fast.encode_partial_runs(
+            run_key(pdf),
+            pdf["tile_id"].to_numpy(dtype=np.int64),
+            pdf["feature_id"].to_numpy(dtype=np.int64),
+            pdf["wkb"].to_numpy(),
+            config.extent,
+            config.buffer_pixels,
+        ))
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            key = (pdf["tile_id"].to_numpy(dtype=np.int64) * config.salt_buckets
-                   + pdf["salt"].to_numpy(dtype=np.int64))
-            cut = int(np.searchsorted(key, key[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield emit(body)
-        if pend is not None and len(pend):
-            yield emit(pend)
-
-    return encode
+    return _run_carry(emit, run_key)
 
 
 def make_merge_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
@@ -1285,78 +1268,57 @@ def make_merge_encoder(config: TilerConfig, metrics: PipelineMetrics | None = No
     layer — byte-identical to the single-phase encoder."""
     head, tail = mvt_fast.layer_head_tail(config.layer_name, config.extent)
     max_tile_bytes = config.max_tile_bytes
-    acc_tiles = metrics.tiles_out if metrics else None
 
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
+    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        tid = pdf["tile_id"].to_numpy(dtype=np.int64)
+        starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
+        ends = np.append(starts[1:], len(tid))
+        rows = {k: [] for k in ("tile_id", "z", "x", "y", "n_features",
+                                "mvt", "content_hash")}
+        cap_stats = [0, 0]
+        for s, e in zip(starts, ends):
+            fids = np.concatenate([
+                np.asarray(v, dtype=np.int64) for v in pdf["fids"].iloc[s:e]
+            ]) if e > s else np.empty(0, dtype=np.int64)
+            msgs: list[bytes] = []
+            for v in pdf["msgs"].iloc[s:e]:
+                msgs.extend(bytes(m) for m in v)
+            order = np.argsort(fids, kind="stable")
+            fids = fids[order]
+            msgs = [msgs[i] for i in order]
+            n_feat = int(pdf["n_records"].iloc[s:e].sum())
+            n_dead = n_feat - len(msgs)  # dead records absent from msgs
+            if max_tile_bytes is not None:
+                # phase-A messages are UNFRAMED; the budget counts the
+                # FRAMED length (0x12 + varint + body) so the mask is
+                # byte-identical to the single-phase/premerge paths
+                flens = np.fromiter(
+                    (1 + len(mvt_fast._varint(len(m))) + len(m)
+                     for m in msgs),
+                    dtype=np.int64, count=len(msgs))
+                if int(flens.sum()) > max_tile_bytes:
+                    from .kernels.drop import tile_budget_keep_mask
 
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-            starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-            ends = np.append(starts[1:], len(tid))
-            rows = {k: [] for k in ("tile_id", "z", "x", "y", "n_features",
-                                    "mvt", "content_hash")}
-            for s, e in zip(starts, ends):
-                fids = np.concatenate([
-                    np.asarray(v, dtype=np.int64) for v in pdf["fids"].iloc[s:e]
-                ]) if e > s else np.empty(0, dtype=np.int64)
-                msgs: list[bytes] = []
-                for v in pdf["msgs"].iloc[s:e]:
-                    msgs.extend(bytes(m) for m in v)
-                order = np.argsort(fids, kind="stable")
-                fids = fids[order]
-                msgs = [msgs[i] for i in order]
-                n_feat = int(pdf["n_records"].iloc[s:e].sum())
-                n_dead = n_feat - len(msgs)  # dead records absent from msgs
-                if max_tile_bytes is not None:
-                    # phase-A messages are UNFRAMED; the budget counts the
-                    # FRAMED length (0x12 + varint + body) so the mask is
-                    # byte-identical to the single-phase/premerge paths
-                    flens = np.fromiter(
-                        (1 + len(mvt_fast._varint(len(m))) + len(m)
-                         for m in msgs),
-                        dtype=np.int64, count=len(msgs))
-                    if int(flens.sum()) > max_tile_bytes:
-                        from .kernels.drop import tile_budget_keep_mask
+                    mask = tile_budget_keep_mask(
+                        fids, flens, int(tid[s]), max_tile_bytes)
+                    msgs = [m for m, k in zip(msgs, mask) if k]
+                    cap_stats[0] += 1
+                    cap_stats[1] += int(len(mask) - mask.sum())
+                    # dead records are always 'kept' by the budget rule
+                    # (they cost 0 bytes), matching encode_sorted_runs
+                    n_feat = int(mask.sum()) + n_dead
+            mvt = mvt_fast.wrap_layer(head, msgs, tail)
+            rows["tile_id"].append(int(tid[s]))
+            rows["z"].append(int(pdf["z"].iloc[s]))
+            rows["x"].append(int(pdf["x"].iloc[s]))
+            rows["y"].append(int(pdf["y"].iloc[s]))
+            rows["n_features"].append(n_feat)
+            rows["mvt"].append(mvt)
+            rows["content_hash"].append(content_hash64(mvt) & 0x7FFF_FFFF_FFFF_FFFF)
+        _count_tiles(metrics, len(rows["tile_id"]), cap_stats)
+        return pd.DataFrame(rows)
 
-                        mask = tile_budget_keep_mask(
-                            fids, flens, int(tid[s]), max_tile_bytes)
-                        msgs = [m for m, k in zip(msgs, mask) if k]
-                        if metrics is not None:
-                            metrics.tiles_capped.add(1)
-                            metrics.records_capped.add(
-                                int(len(mask) - mask.sum()))
-                        # dead records are always 'kept' by the budget rule
-                        # (they cost 0 bytes), matching encode_sorted_runs
-                        n_feat = int(mask.sum()) + n_dead
-                mvt = mvt_fast.wrap_layer(head, msgs, tail)
-                rows["tile_id"].append(int(tid[s]))
-                rows["z"].append(int(pdf["z"].iloc[s]))
-                rows["x"].append(int(pdf["x"].iloc[s]))
-                rows["y"].append(int(pdf["y"].iloc[s]))
-                rows["n_features"].append(n_feat)
-                rows["mvt"].append(mvt)
-                rows["content_hash"].append(content_hash64(mvt) & 0x7FFF_FFFF_FFFF_FFFF)
-            if acc_tiles is not None:
-                acc_tiles.add(len(rows["tile_id"]))
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            tids = pdf["tile_id"].to_numpy()
-            cut = int(np.searchsorted(tids, tids[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield emit(body)
-        if pend is not None and len(pend):
-            yield emit(pend)
-
-    return merge
+    return _run_carry(emit)
 
 
 def detect_hot_tiles(features: DataFrame, config: TilerConfig,
@@ -1706,9 +1668,6 @@ def _intern_tile_tags(items_per_feat, prop_filter):
     LEB128). Flattening runs as list comprehensions over the entry lists;
     per-feature bounds come from one cumsum over the (post-filter)
     lengths."""
-    from .kernels.mvt import _varint
-    from .kernels.mvt_fast import _fill_varints, _varint_nb
-
     n = len(items_per_feat)
     if prop_filter is not None:
         items_per_feat = [
@@ -1748,6 +1707,18 @@ def _intern_tile_tags(items_per_feat, prop_filter):
     inter = np.empty(2 * total, dtype=np.int64)
     inter[0::2] = kcodes
     inter[1::2] = vcodes
+    return _packed_tag_fields(inter, lens), keys, vals
+
+
+def _packed_tag_fields(inter: np.ndarray, lens: np.ndarray) -> list[bytes]:
+    """Per-feature packed tags fields from ONE interleaved (k, v, k, v,
+    ...) code array, ``lens[i]`` entries for feature i: all varints fill
+    one shared buffer in one pass and each feature's field slices out of
+    it (field 2: key byte 0x12, length, payload — the bytes
+    ``_packed_u32(2, ...)`` emits entry by entry); b"" without tags."""
+    from .kernels.mvt import _varint
+    from .kernels.mvt_fast import _fill_varints, _varint_nb
+
     nb = _varint_nb(inter)
     byte_pos = np.concatenate(([0], np.cumsum(nb)))
     buf = np.zeros(int(byte_pos[-1]), dtype=np.uint8)
@@ -1756,16 +1727,8 @@ def _intern_tile_tags(items_per_feat, prop_filter):
     ends = np.cumsum(lens)  # entry index bounds per feature
     feat_b0 = byte_pos[2 * (ends - lens)]
     feat_b1 = byte_pos[2 * ends]
-    tag_bytes: list[bytes] = []
-    for i in range(n):
-        s, e = int(feat_b0[i]), int(feat_b1[i])
-        if s == e:
-            tag_bytes.append(b"")
-        else:
-            # packed tags field 2: key byte 0x12, length, payload — same
-            # bytes _packed_u32(2, ...) emitted entry-by-entry before
-            tag_bytes.append(b"\x12" + _varint(e - s) + payload[s:e])
-    return tag_bytes, keys, vals
+    return [b"" if s == e else b"\x12" + _varint(e - s) + payload[s:e]
+            for s, e in zip(feat_b0.tolist(), feat_b1.tolist())]
 
 
 def _encode_props_tile(tile_id: int, fids, msgs, items_per_feat,
@@ -1915,8 +1878,6 @@ def _encode_props_tiles_chunk(tid, fid, msgs, props_list, starts, ends,
         vals_per_tile: list = [[] for _ in range(n_tiles)]
         kd_lens = vd_lens = None
     else:
-        from .kernels.mvt_fast import _fill_varints, _varint_nb
-
         # props cells arrive as numpy object arrays from Arrow — explicit
         # None/len checks, a bare truthiness test raises on ndarrays
         keys_flat = [e["key"] for it in items_pf
@@ -1941,18 +1902,7 @@ def _encode_props_tiles_chunk(tid, fid, msgs, props_list, starts, ends,
         inter = np.empty(2 * total, dtype=np.int64)
         inter[0::2] = ckc - base_t[tile_of_entry]
         inter[1::2] = cvc - vbase_t[tile_of_entry]
-        nb = _varint_nb(inter)
-        byte_pos = np.concatenate(([0], np.cumsum(nb)))
-        buf = np.zeros(int(byte_pos[-1]), dtype=np.uint8)
-        _fill_varints(buf, byte_pos[:-1], inter, nb)
-        payload = buf.tobytes()
-        ends_e = np.cumsum(lens)
-        feat_b0 = byte_pos[2 * (ends_e - lens)]
-        feat_b1 = byte_pos[2 * ends_e]
-        tag_bytes = [
-            b"" if s == e else b"\x12" + _varint(e - s) + payload[s:e]
-            for s, e in zip(feat_b0.tolist(), feat_b1.tolist())
-        ]
+        tag_bytes = _packed_tag_fields(inter, lens)
         # per-tile dictionaries: unique combined codes are tile-contiguous
         # in first-appearance (code) order
         ku_tile = cku // K
@@ -2024,46 +1974,46 @@ def make_props_encoder(config: TilerConfig,
     interning runs per tile via pd.factorize (first-appearance order) and
     the tags are byte-spliced after the id field — no per-entry dict
     lookups remain in the hot path (VERDICT r4)."""
-    layer_name, extent = config.layer_name, config.extent
-    buffer_px = config.buffer_pixels
+    extent, buffer_px = config.extent, config.buffer_pixels
     prop_filter = _apply_property_filter(config)
-    acc_tiles = metrics.tiles_out if metrics else None
 
     def encode_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .kernels.hashes import content_hash64
-        from .kernels.mvt import _varint
-
         tid = pdf["tile_id"].to_numpy(dtype=np.int64)
         fid = pdf["feature_id"].to_numpy(dtype=np.int64)
         msgs = mvt_fast.encode_record_msgs(
             tid, fid, pdf["wkb"].to_numpy(), extent, buffer_px)
-        starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-        ends = np.append(starts[1:], len(tid))
-        g_z, g_x, g_y = H.tile_id_to_zxy_vec(tid[starts])
-        head = b"\x0a" + _varint(len(layer_name)) + layer_name.encode()
-        tail = b"\x28" + _varint(extent) + b"\x78\x02"
-        props_list = pdf["props"].tolist()
-        cap_stats = [0, 0]
-        mvts, n_feats = _encode_props_tiles_chunk(
-            tid, fid, msgs, props_list, starts, ends, prop_filter,
-            head, tail, config.max_tile_bytes, cap_stats)
-        if acc_tiles is not None:
-            acc_tiles.add(len(starts))
-        if metrics is not None and cap_stats[0]:
-            metrics.tiles_capped.add(cap_stats[0])
-            metrics.records_capped.add(cap_stats[1])
-        return pd.DataFrame({
-            "tile_id": tid[starts],
-            "z": g_z.astype(np.int32),
-            "x": g_x,
-            "y": g_y,
-            "n_features": np.asarray(n_feats, dtype=np.int64),
-            "mvt": mvts,
-            "content_hash": [content_hash64(m) & 0x7FFF_FFFF_FFFF_FFFF
-                             for m in mvts],
-        })
+        return _props_tiles_frame(tid, fid, msgs, pdf["props"].tolist(),
+                                  prop_filter, config, metrics)
 
     return _run_carry(encode_chunk)
+
+
+def _props_tiles_frame(tid: np.ndarray, fid: np.ndarray, msgs, props_list,
+                       prop_filter, config: TilerConfig,
+                       metrics: PipelineMetrics | None) -> pd.DataFrame:
+    """Shared tail of both props encoders: one chunk of (tile_id,
+    feature_id)-sorted geometry messages and props entries -> a
+    TILES_SCHEMA frame (tile z/x/y, tag-interned MVT bytes, content
+    hash)."""
+    starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
+    ends = np.append(starts[1:], len(tid))
+    head, tail = mvt_fast.layer_head_tail(config.layer_name, config.extent)
+    cap_stats = [0, 0]
+    mvts, n_feats = _encode_props_tiles_chunk(
+        tid, fid, msgs, props_list, starts, ends, prop_filter,
+        head, tail, config.max_tile_bytes, cap_stats)
+    _count_tiles(metrics, len(starts), cap_stats)
+    g_z, g_x, g_y = H.tile_id_to_zxy_vec(tid[starts])
+    return pd.DataFrame({
+        "tile_id": tid[starts],
+        "z": g_z.astype(np.int32),
+        "x": g_x,
+        "y": g_y,
+        "n_features": np.asarray(n_feats, dtype=np.int64),
+        "mvt": mvts,
+        "content_hash": [content_hash64(m) & 0x7FFF_FFFF_FFFF_FFFF
+                         for m in mvts],
+    })
 
 
 def _wkb_props_stage(records: DataFrame, props: DataFrame,
@@ -2210,55 +2160,24 @@ def make_wrap_props_encoder(config: TilerConfig,
     upstream) filtered once per feature map-side, so excluded entries
     never crossed the shuffle — re-filtering would be a no-op pass over
     every entry (round 6)."""
-    layer_name, extent = config.layer_name, config.extent
-    prop_filter = None
-    max_tile_bytes = config.max_tile_bytes
-    acc_tiles = metrics.tiles_out if metrics else None
 
     def wrap_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .kernels.hashes import content_hash64
-        from .kernels.mvt import _varint
-
-        tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-        fid = pdf["feature_id"].to_numpy(dtype=np.int64)
-        msgs = pdf["msg"].tolist()
-        props_list = pdf["props"].tolist()
-        starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-        ends = np.append(starts[1:], len(tid))
-        g_z, g_x, g_y = H.tile_id_to_zxy_vec(tid[starts])
-        head = b"\x0a" + _varint(len(layer_name)) + layer_name.encode()
-        tail = b"\x28" + _varint(extent) + b"\x78\x02"
-        cap_stats = [0, 0]
-        mvts, n_feats = _encode_props_tiles_chunk(
-            tid, fid, msgs, props_list, starts, ends, prop_filter,
-            head, tail, max_tile_bytes, cap_stats)
-        if acc_tiles is not None:
-            acc_tiles.add(len(starts))
-        if metrics is not None and cap_stats[0]:
-            metrics.tiles_capped.add(cap_stats[0])
-            metrics.records_capped.add(cap_stats[1])
-        return pd.DataFrame({
-            "tile_id": tid[starts],
-            "z": g_z.astype(np.int32),
-            "x": g_x,
-            "y": g_y,
-            "n_features": np.asarray(n_feats, dtype=np.int64),
-            "mvt": mvts,
-            "content_hash": [content_hash64(m) & 0x7FFF_FFFF_FFFF_FFFF
-                             for m in mvts],
-        })
+        return _props_tiles_frame(
+            pdf["tile_id"].to_numpy(dtype=np.int64),
+            pdf["feature_id"].to_numpy(dtype=np.int64),
+            pdf["msg"].tolist(), pdf["props"].tolist(), None, config,
+            metrics)
 
     return _run_carry(wrap_chunk)
 
 
-def _premerge_props_stage(features: DataFrame, config: TilerConfig,
+def _premerge_props_stage(msgs: DataFrame, config: TilerConfig,
                           num_partitions: int | None = None,
                           by_range: bool = False,
                           metrics: PipelineMetrics | None = None):
-    """Premerge+props reduce stage: (tile-sorted framed messages with their
-    props entries, interning wrap encoder)."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded_props(config, metrics), schema=MSG_PROPS_SCHEMA)
+    """Premerge+props reduce stage over ``_premerge_records(props=True)``
+    output: (tile-sorted framed messages with their props entries,
+    interning wrap encoder)."""
     parts = num_partitions or config.shuffle_partitions
     shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
     return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
@@ -2276,7 +2195,8 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
     corpora get the same ~2.6x vertex-dense premerge win as the
     propertyless path (round 5; previously write_properties forced the
     WKB-shuffling layout)."""
-    return _encode(_premerge_props_stage(features, config, num_partitions,
+    msgs = _premerge_records(features, config, metrics, props=True)
+    return _encode(_premerge_props_stage(msgs, config, num_partitions,
                                          by_range, metrics))
 
 
@@ -2624,31 +2544,66 @@ def _make_shard_writer(shard_dir: str, codec: int,
     return write
 
 
-def driver_finalize_max_entries() -> int:
-    """Addressed-entry count below which the sharded sink assembles the
-    archive driver-side (one Arrow collect + numpy) instead of running the
-    distributed directory/winner choreography. 40-byte entry rows: the
-    2M default is ~130 MB of driver arrays — far under any sane driver
-    heap — while 10^8-tile archives still take the distributed path.
-    Env knob GPQ_DRIVER_FINALIZE_MAX_ENTRIES overrides (0 disables)."""
-    import os
+# Addressed-entry count up to which the sharded sink assembles the archive
+# driver-side (one Arrow collect + numpy) instead of running the
+# distributed directory/winner choreography. 40-byte entry rows: 2M is
+# ~130 MB of driver arrays — far under any sane driver heap — while
+# 10^8-tile archives still take the distributed path.
+DRIVER_FINALIZE_MAX_ENTRIES = 2_000_000
 
-    return int(os.environ.get("GPQ_DRIVER_FINALIZE_MAX_ENTRIES", "2000000"))
+
+def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
+                           directory: tuple, config: TilerConfig,
+                           codec: int, bounds: tuple, **counts):
+    """Write a sharded archive through the shared finalize
+    (``pmtiles.write_archive``). ``directory`` is (root bytes uncompressed,
+    leaf section, coalesced entry count); the data section is copied from
+    the shard files, one (pid, local_off, blob_len) of ``copy_plan`` per
+    winner blob in data order."""
+    import os
+    from collections import OrderedDict
+
+    from .kernels import pmtiles as P
+
+    def copy_blobs(out_f) -> None:
+        # true LRU of at most 64 open shard files: blobs stream in tile
+        # order but live in hash-partitioned shards, so pids interleave —
+        # plain dict.popitem() would evict the handle just opened (LIFO)
+        # and churn open/close per blob beyond the cap
+        handles: OrderedDict[int, object] = OrderedDict()
+        try:
+            for pid, local_off, blob_len in copy_plan:
+                sf = handles.get(pid)
+                if sf is None:
+                    if len(handles) >= 64:
+                        handles.popitem(last=False)[1].close()
+                    sf = handles[pid] = open(os.path.join(
+                        shard_dir, f"shard_{pid:05d}.bin"), "rb")
+                else:
+                    handles.move_to_end(pid)
+                sf.seek(local_off)
+                out_f.write(sf.read(blob_len))
+        finally:
+            for sf in handles.values():
+                sf.close()
+
+    return P.write_archive(
+        output_path, *directory, copy_blobs, tile_compression=codec,
+        layer_name=config.layer_name, min_zoom=config.min_zoom,
+        max_zoom=config.max_zoom, fields=config.layer_fields, bounds=bounds,
+        **counts)
 
 
 def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
                              shard_dir: str, bounds: tuple,
-                             config: TilerConfig, codec: int,
-                             total_features: int, zmin: int,
-                             zmax: int) -> dict:
+                             config: TilerConfig, codec: int):
     """Driver-side sharded-archive finalize over one collected entry frame
-    — byte-identical to ``_finalize_sharded_distributed`` (same winner
-    rule: min-tile_id first occurrence per (content_hash, raw_len); same
-    data order: winners concatenated in winner-tile order; same directory
+    — byte-identical to the distributed finalize (same winner rule:
+    min-tile_id first occurrence per (content_hash, raw_len); same data
+    order: winners concatenated in winner-tile order; same directory
     bytes: one DirectoryBuilder.add over the run-coalesced arrays, which
     equals the chunked adds by test). All set-up work is vectorized numpy;
     no per-entry Python objects beyond the final blob-copy loop."""
-    import os as _os
     import tempfile
 
     from .kernels import pmtiles as P
@@ -2676,102 +2631,29 @@ def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
     win_loff = pdf["local_off"].to_numpy()[order][win_idx]
     win_pid = pdf["pid"].to_numpy()[order][win_idx]
     win_off = np.concatenate(([0], np.cumsum(win_blen[:-1])))
-    data_len = int(win_blen.sum())
 
     rank = win_rank[inverse]
-    ent_off = win_off[rank]
-    ent_len = win_blen[rank]
-    ct, co, cl, cr = coalesce_runs_arrays(tid, ent_off, ent_len)
+    ct, co, cl, cr = coalesce_runs_arrays(tid, win_off[rank], win_blen[rank])
+    # per-zoom feature sums over every zoom that has tiles (the distributed
+    # finalize's groupBy("z") keys)
+    zooms_seen, zinv = np.unique(zs, return_inverse=True)
+    zsums = np.zeros(len(zooms_seen), dtype=np.int64)
+    np.add.at(zsums, zinv, nfeat)
+    features_per_zoom = dict(zip(zooms_seen.tolist(), zsums.tolist()))
 
-    leaf_tmp = tempfile.TemporaryFile()
-    try:
+    with tempfile.TemporaryFile() as leaf_tmp:
         builder = P.DirectoryBuilder(len(ct), P.COMPRESSION_GZIP,
                                      spill=leaf_tmp,
                                      leaf_max_entries=config.leaf_max_entries)
         builder.add(ct, co, cl, cr)
-        root_dir_bytes, _, n_coalesced = builder.finish()
-        leaf_len = builder.leaf_length
-
-        zcounts = np.zeros(int(zs.max()) + 1, dtype=np.int64)
-        np.add.at(zcounts, zs, nfeat)
-        features_per_zoom = {
-            int(z): int(zcounts[z]) for z in np.flatnonzero(zcounts)
-        }
-        root_dir = P.compress(root_dir_bytes, P.COMPRESSION_GZIP)
-        tilestats = {
-            "total_features": total_features,
-            "features_per_zoom": {str(k): v for k, v in
-                                  sorted(features_per_zoom.items())},
-        }
-        meta = P.compress(
-            P.metadata_json(config.layer_name, config.min_zoom,
-                            config.max_zoom, config.layer_fields or {},
-                            tilestats),
-            P.COMPRESSION_GZIP,
-        )
-        leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
-        hdr = P.Header(
-            root_dir_offset=P.HEADER_SIZE,
-            root_dir_length=len(root_dir),
-            json_metadata_offset=P.HEADER_SIZE + len(root_dir),
-            json_metadata_length=len(meta),
-            leaf_dirs_offset=leaf_base if leaf_len else 0,
-            leaf_dirs_length=leaf_len,
-            tile_data_offset=leaf_base + leaf_len,
-            tile_data_length=data_len,
-            addressed_tiles_count=len(tid),
-            tile_entries_count=n_coalesced,
-            tile_contents_count=n_blobs,
-            clustered=True,
-            internal_compression=P.COMPRESSION_GZIP,
-            tile_compression=codec,
-            tile_type=P.TILETYPE_MVT,
-            min_zoom=zmin,
-            max_zoom=zmax,
-            min_lon=bounds[0],
-            min_lat=bounds[1],
-            max_lon=bounds[2],
-            max_lat=bounds[3],
-        )
-        with open(output_path, "wb") as out_f:
-            out_f.write(hdr.to_bytes())
-            out_f.write(root_dir)
-            out_f.write(meta)
-            if leaf_len:
-                import shutil
-
-                leaf_tmp.seek(0)
-                shutil.copyfileobj(leaf_tmp, out_f, length=1 << 20)
-            from collections import OrderedDict
-
-            handles: OrderedDict[int, object] = OrderedDict()
-            try:
-                for i in range(n_blobs):
-                    p = int(win_pid[i])
-                    sf = handles.get(p)
-                    if sf is None:
-                        if len(handles) >= 64:
-                            _, old = handles.popitem(last=False)
-                            old.close()
-                        sf = handles[p] = open(_os.path.join(
-                            shard_dir, f"shard_{p:05d}.bin"), "rb")
-                    else:
-                        handles.move_to_end(p)
-                    sf.seek(int(win_loff[i]))
-                    out_f.write(sf.read(int(win_blen[i])))
-            finally:
-                for sf in handles.values():
-                    sf.close()
-    finally:
-        leaf_tmp.close()
-    return {
-        "tiles": len(tid),
-        "features": total_features,
-        "min_zoom": zmin,
-        "max_zoom": zmax,
-        "unique_blobs": n_blobs,
-        "bounds": bounds,
-    }
+        root_raw, _, n_coalesced = builder.finish()
+        return _write_sharded_archive(
+            output_path, shard_dir,
+            zip(win_pid.tolist(), win_loff.tolist(), win_blen.tolist()),
+            (root_raw, leaf_tmp, n_coalesced), config, codec, bounds,
+            addressed=len(tid), n_blobs=n_blobs,
+            data_len=int(win_blen.sum()),
+            features_per_zoom=features_per_zoom)
 
 
 def _finalize_sharded_distributed(entries_df: DataFrame,
@@ -2789,223 +2671,241 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
     round-4 review's remaining O(tiles) driver obligation. Winner blobs
     stream via toLocalIterator for the sequential file concat.
 
+    Up to ``DRIVER_FINALIZE_MAX_ENTRIES`` addressed entries the archive is
+    assembled driver-side instead (``_finalize_entries_driver``); the two
+    paths are each other's differential oracle.
+
     Byte-identical to the single-writer archive: the winner of a duplicated
     blob is its first occurrence in tile order ((pid, local_off) order —
     pids ascend with the range partitioning), data bytes concatenate in
     that order, and the directory bytes equal encode_directory over the
-    global coalesced entry list (tested)."""
-    import os
+    global coalesced entry list (tested). Every frame persisted here is
+    released on every exit path."""
     import tempfile
 
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    from .kernels import pmtiles as P
-
     spark = entries_df.sparkSession
     entries = entries_df.persist(StorageLevel.DISK_ONLY)
-    agg = entries.agg(
-        F.count("*").alias("n"), F.min("z"), F.max("z"), F.sum("n_features")
-    ).collect()[0]
-    n_addressed = int(agg[0] or 0)
-    total_features = int(agg[3] or 0)
-    zmin = int(agg[1]) if agg[1] is not None else config.min_zoom
-    zmax = int(agg[2]) if agg[2] is not None else config.max_zoom
-
-    if 0 < n_addressed <= driver_finalize_max_entries():
-        # small archive: the distributed assembly's value is bounded driver
-        # memory at 10^8+ tiles, but it costs ~8 extra Spark jobs (winner
-        # groupBy, prefix-sum collect, directory range shuffle + sampling,
-        # chunk persist + stats + toLocalIterator streams). Below the entry
-        # threshold (40-byte rows; the default 2M ≈ 130 MB of driver
-        # arrays) ONE Arrow collect plus vectorized numpy assembly produces
-        # byte-identical output with none of that choreography (guide
-        # §1.2: remove passes outright). Threshold is env-parameterised —
-        # GPQ_DRIVER_FINALIZE_MAX_ENTRIES=0 forces the distributed path.
-        pdf = entries.toPandas()
+    winners = None
+    try:
+        agg = entries.agg(
+            F.count("*").alias("n"), F.sum("n_features")
+        ).collect()[0]
+        n_addressed = int(agg[0] or 0)
+        total_features = int(agg[1] or 0)
+        if n_addressed <= DRIVER_FINALIZE_MAX_ENTRIES:
+            # small (or empty) archive: the distributed assembly's value is
+            # bounded driver memory at 10^8+ tiles, but it costs ~8 extra
+            # Spark jobs (winner groupBy, prefix-sum collect, directory
+            # range shuffle + sampling, chunk persist + stats +
+            # toLocalIterator streams). ONE Arrow collect plus vectorized
+            # numpy assembly produces byte-identical output with none of
+            # that choreography (guide §1.2: remove passes outright).
+            hdr = _finalize_entries_driver(
+                entries.toPandas(), output_path, shard_dir, bounds, config,
+                codec)
+        else:
+            features_per_zoom = {
+                int(r[0]): int(r[1])
+                for r in entries.groupBy("z").agg(F.sum("n_features")).collect()
+            }
+            # winner blob per (content_hash, raw_len): first occurrence in
+            # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
+            # single-writer semantics; tile_ids are unique per entry, so no
+            # tie-break is needed). Partitioning of the heavy shuffle is
+            # hash, so (pid, local_off) carries no global order — tile_id
+            # does.
+            winners = (
+                entries.groupBy("content_hash", "raw_len")
+                .agg(
+                    F.min("tile_id").alias("win_tile"),
+                    F.min_by(F.struct("pid", "local_off", "blob_len"),
+                             F.col("tile_id")).alias("w"),
+                )
+                .select("content_hash", "raw_len", "win_tile",
+                        F.col("w.pid").alias("pid"),
+                        F.col("w.local_off").alias("local_off"),
+                        F.col("w.blob_len").alias("blob_len"))
+                .repartitionByRange(max(config.shuffle_partitions or 8, 8),
+                                    "win_tile")
+                .sortWithinPartitions("win_tile")
+                .withColumn("wpid", F.spark_partition_id())
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            # two-phase prefix sum over win_tile order: per-range-partition
+            # totals to the driver (O(partitions)), cumulative bases back in
+            per_part = winners.groupBy("wpid").agg(
+                F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
+            ).orderBy("wpid").collect()
+            base_rows = []
+            data_len = 0
+            n_blobs = 0
+            for r in per_part:
+                base_rows.append((int(r["wpid"]), data_len))
+                data_len += int(r["bytes"])
+                n_blobs += int(r["cnt"])
+            base_df = spark.createDataFrame(base_rows, "wpid int, base long")
+            wpref = (
+                Window.partitionBy("wpid").orderBy("win_tile")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
+            woffs = (
+                winners
+                .withColumn("prefix",
+                            F.coalesce(F.sum("blob_len").over(wpref),
+                                       F.lit(0)))
+                .join(F.broadcast(base_df), "wpid")
+                .select(
+                    "content_hash", "raw_len",
+                    (F.col("base") + F.col("prefix")).alias("final_off"),
+                    F.col("blob_len").alias("final_len"),
+                )
+            )
+            # final directory entries: one range shuffle of 24-byte rows,
+            # then per-partition coalesce + varint encode on the executors
+            ent = (
+                entries.select("tile_id", "content_hash", "raw_len")
+                .join(woffs, ["content_hash", "raw_len"])
+                .select("tile_id", F.col("final_off").alias("off"),
+                        F.col("final_len").alias("len"))
+            )
+            ent = _tile_exchange(ent, config.shuffle_partitions, True,
+                                 "tile_id").sortWithinPartitions("tile_id")
+            with tempfile.TemporaryFile() as leaf_tmp:
+                root_raw, n_coalesced, _ = _assemble_directory_stream(
+                    ent, leaf_tmp, config.leaf_max_entries)
+                # stream the winner list in win_tile order (== final data
+                # offset order) for the copy loop — O(1) driver memory;
+                # blobs are read from their shard files by (pid, local_off)
+                # seeks. NO orderBy: `winners` is already range-partitioned
+                # AND sorted within partitions by win_tile (persisted that
+                # way above), and toLocalIterator yields partitions in
+                # index order — an orderBy here would re-run a full sort
+                # exchange once PER PARTITION JOB that toLocalIterator
+                # launches.
+                hdr = _write_sharded_archive(
+                    output_path, shard_dir,
+                    winners.select("pid", "local_off", "blob_len")
+                    .toLocalIterator(prefetchPartitions=True),
+                    (root_raw, leaf_tmp, n_coalesced), config, codec,
+                    bounds, addressed=n_addressed, n_blobs=n_blobs,
+                    data_len=data_len, features_per_zoom=features_per_zoom)
+    finally:
+        if winners is not None:
+            winners.unpersist()
         entries.unpersist()
-        return _finalize_entries_driver(
-            pdf, output_path, shard_dir, bounds, config, codec,
-            total_features, zmin, zmax)
-
-    root_dir_bytes = b""
-    n_coalesced = 0
-    n_blobs = 0
-    data_len = 0
-    features_per_zoom: dict[int, int] = {}
-    copy_plan = None
-    if n_addressed:
-        features_per_zoom = {
-            int(r[0]): int(r[1])
-            for r in entries.groupBy("z").agg(F.sum("n_features")).collect()
-        }
-        # winner blob per (content_hash, raw_len): first occurrence in
-        # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
-        # single-writer semantics; tile_ids are unique per entry, so no
-        # tie-break is needed). Partitioning of the heavy shuffle is hash,
-        # so (pid, local_off) carries no global order — tile_id does.
-        winners = (
-            entries.groupBy("content_hash", "raw_len")
-            .agg(
-                F.min("tile_id").alias("win_tile"),
-                F.min_by(F.struct("pid", "local_off", "blob_len"),
-                         F.col("tile_id")).alias("w"),
-            )
-            .select("content_hash", "raw_len", "win_tile",
-                    F.col("w.pid").alias("pid"),
-                    F.col("w.local_off").alias("local_off"),
-                    F.col("w.blob_len").alias("blob_len"))
-            .repartitionByRange(max(config.shuffle_partitions or 8, 8),
-                                "win_tile")
-            .sortWithinPartitions("win_tile")
-            .withColumn("wpid", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # two-phase prefix sum over win_tile order: per-range-partition
-        # totals to the driver (O(partitions)), cumulative bases back in
-        per_part = winners.groupBy("wpid").agg(
-            F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
-        ).orderBy("wpid").collect()
-        base_rows = []
-        acc = 0
-        for r in per_part:
-            base_rows.append((int(r["wpid"]), acc))
-            acc += int(r["bytes"])
-            n_blobs += int(r["cnt"])
-        data_len = acc
-        base_df = spark.createDataFrame(base_rows, "wpid int, base long")
-        wpref = (
-            Window.partitionBy("wpid").orderBy("win_tile")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        woffs = (
-            winners
-            .withColumn("prefix",
-                        F.coalesce(F.sum("blob_len").over(wpref), F.lit(0)))
-            .join(F.broadcast(base_df), "wpid")
-            .select(
-                "content_hash", "raw_len",
-                (F.col("base") + F.col("prefix")).alias("final_off"),
-                F.col("blob_len").alias("final_len"),
-            )
-        )
-        # final directory entries: one range shuffle of 24-byte rows, then
-        # per-partition coalesce + varint encode on the executors
-        parts = config.shuffle_partitions
-        ent = (
-            entries.select("tile_id", "content_hash", "raw_len")
-            .join(woffs, ["content_hash", "raw_len"])
-            .select("tile_id", F.col("final_off").alias("off"),
-                    F.col("final_len").alias("len"))
-        )
-        ent = _tile_exchange(ent, parts, True, "tile_id").sortWithinPartitions(
-            "tile_id")
-        leaf_tmp = tempfile.TemporaryFile()
-        try:
-            root_dir_bytes, n_coalesced, leaf_len = \
-                _assemble_directory_stream(ent, leaf_tmp,
-                                           config.leaf_max_entries)
-        except BaseException:
-            leaf_tmp.close()  # a failed finalize must not leak the spill fd
-            raise
-        # stream the winner list in win_tile order (== final data offset
-        # order) for the copy loop — O(1) driver memory; blobs are read
-        # from their shard files by (pid, local_off) seeks. NO orderBy:
-        # `winners` is already range-partitioned AND sorted within
-        # partitions by win_tile (persisted that way above), and
-        # toLocalIterator yields partitions in index order — an orderBy
-        # here would re-run a full sort exchange once PER PARTITION JOB
-        # that toLocalIterator launches.
-        copy_plan = winners.select("pid", "local_off", "blob_len")
-    else:
-        head = bytearray()
-        P.encode_varint(0, head)
-        root_dir_bytes = bytes(head)
-        leaf_tmp = None
-        leaf_len = 0
-
-    root_dir = P.compress(root_dir_bytes, P.COMPRESSION_GZIP)
-    tilestats = {
-        "total_features": total_features,
-        "features_per_zoom": {str(k): v
-                              for k, v in sorted(features_per_zoom.items())},
-    }
-    meta = P.compress(
-        P.metadata_json(config.layer_name, config.min_zoom, config.max_zoom,
-                        config.layer_fields or {}, tilestats),
-        P.COMPRESSION_GZIP,
-    )
-    leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
-    hdr = P.Header(
-        root_dir_offset=P.HEADER_SIZE,
-        root_dir_length=len(root_dir),
-        json_metadata_offset=P.HEADER_SIZE + len(root_dir),
-        json_metadata_length=len(meta),
-        leaf_dirs_offset=leaf_base if leaf_len else 0,
-        leaf_dirs_length=leaf_len,
-        tile_data_offset=leaf_base + leaf_len,
-        tile_data_length=data_len,
-        addressed_tiles_count=n_addressed,
-        tile_entries_count=n_coalesced,
-        tile_contents_count=n_blobs,
-        clustered=True,
-        internal_compression=P.COMPRESSION_GZIP,
-        tile_compression=codec,
-        tile_type=P.TILETYPE_MVT,
-        min_zoom=zmin,
-        max_zoom=zmax,
-        min_lon=bounds[0] if n_addressed else -180.0,
-        min_lat=bounds[1] if n_addressed else -85.0,
-        max_lon=bounds[2] if n_addressed else 180.0,
-        max_lat=bounds[3] if n_addressed else 85.0,
-    )
-    with open(output_path, "wb") as out_f:
-        out_f.write(hdr.to_bytes())
-        out_f.write(root_dir)
-        out_f.write(meta)
-        if leaf_tmp is not None and leaf_len:
-            import shutil
-
-            leaf_tmp.seek(0)
-            shutil.copyfileobj(leaf_tmp, out_f, length=1 << 20)
-        if leaf_tmp is not None:
-            leaf_tmp.close()
-        if copy_plan is not None:
-            from collections import OrderedDict
-
-            # true LRU of open shard files: blobs stream in tile order but
-            # live in hash-partitioned shards, so pids interleave — plain
-            # dict.popitem() would evict the handle just opened (LIFO) and
-            # churn open/close per blob beyond the cap
-            handles: OrderedDict[int, object] = OrderedDict()
-            try:
-                for r in copy_plan.toLocalIterator(prefetchPartitions=True):
-                    pid = int(r["pid"])
-                    sf = handles.get(pid)
-                    if sf is None:
-                        if len(handles) >= 64:
-                            _, old = handles.popitem(last=False)
-                            old.close()
-                        sf = handles[pid] = open(os.path.join(
-                            shard_dir, f"shard_{pid:05d}.bin"), "rb")
-                    else:
-                        handles.move_to_end(pid)
-                    sf.seek(r["local_off"])
-                    out_f.write(sf.read(r["blob_len"]))
-            finally:
-                for sf in handles.values():
-                    sf.close()
-    if n_addressed:
-        winners.unpersist()
-    entries.unpersist()
     return {
         "tiles": n_addressed,
         "features": total_features,
         "min_zoom": hdr.min_zoom,
         "max_zoom": hdr.max_zoom,
-        "unique_blobs": n_blobs,
+        "unique_blobs": hdr.tile_contents_count,
         "bounds": bounds,
     }
+
+
+WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
+
+
+def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
+                salted: bool, premerge: bool | str, by_range: bool,
+                metrics: PipelineMetrics | None = None,
+                emit: Callable[..., None] | None = None):
+    """The one layout dispatcher behind both sinks -> (bounds, tile-sorted
+    reduce input, reduce-side encoder, persisted map-side frame or None).
+
+    Rejects the layout combinations no encoder serves, then settles
+    ``bounds`` and ``premerge='auto'`` by one rule: when ``bounds`` is None
+    the bounds scan also averages the WKB length of every feature and
+    'auto' picks premerge at >= PREMERGE_AUTO_WKB_BYTES; with caller
+    bounds, 'auto' samples the first 2048 rows (``_resolve_premerge``).
+    Salting keeps the WKB layout. The choice only pins WHICH plan runs —
+    archive bytes are identical on every layout. ``emit(phase, kind,
+    **info)``, when given, receives the 'bounds' start/complete events,
+    which bracket the bounds scan alone (not the option checks, the
+    2048-row sample or hot-tile detection).
+
+    ``by_range`` asks for a range exchange on tile_id (globally
+    tile-ordered partitions, as the single-writer stream needs). Range
+    partitioning samples its input, so the map-side output is then
+    persisted DISK_ONLY to keep the fan-out from running twice; on the
+    premerge layouts that caches the small framed messages, the Spark
+    analog of the reference writing phase-1 runs to disk before its
+    phase-2 external sort (external_sort.rs:99-189). The caller must
+    unpersist the returned frame. A hash exchange (``by_range=False``)
+    needs neither: the fan-out then runs exactly once, as the shuffle's
+    map stage."""
+    from pyspark import StorageLevel
+
+    props = config.write_properties
+    if salted and premerge is True:
+        raise ValueError(
+            "salted=True uses the WKB-shuffling two-phase encode and cannot "
+            "honor premerge=True (premerge makes salting moot — drop "
+            "salted, or leave premerge='auto')."
+        )
+    if props and salted:
+        raise ValueError(
+            "write_properties=True uses the tag-interning encoder and "
+            "cannot combine with salted=True"
+        )
+    if props and "props" not in features.columns:
+        raise ValueError(
+            "write_properties=True requires a 'props' column "
+            "(array<struct<key string, val binary>>) — build it with "
+            "encode_props_column(df, cols)"
+        )
+    if salted:
+        premerge = False
+    if emit is not None:
+        emit("bounds", "start")
+    if bounds is None:
+        agg_cols = [F.min("lng_min"), F.min("lat_min"),
+                    F.max("lng_max"), F.max("lat_max")]
+        if premerge == "auto":
+            agg_cols.append(F.avg(F.length("wkb")))
+        row = features.agg(*agg_cols).collect()[0]
+        bounds = WORLD_BOUNDS if row[0] is None else tuple(row[:4])
+        if premerge == "auto":
+            premerge = row[4] is not None and row[4] >= PREMERGE_AUTO_WKB_BYTES
+    if emit is not None:
+        emit("bounds", "complete", bounds=bounds)
+    premerge = _resolve_premerge(features, premerge)
+
+    if premerge:
+        records = _premerge_records(features, config, metrics, props)
+    else:
+        records = fanout_records(features, config, metrics)
+    cached = None
+    if by_range:
+        records = cached = records.persist(StorageLevel.DISK_ONLY)
+    try:
+        if props and premerge:
+            stage = _premerge_props_stage(records, config, by_range=by_range,
+                                          metrics=metrics)
+        elif props:
+            stage = _wkb_props_stage(records,
+                                     features.select("feature_id", "props"),
+                                     config, metrics=metrics,
+                                     by_range=by_range)
+        elif premerge:
+            stage = _premerge_stage(records, config, by_range=by_range,
+                                    metrics=metrics)
+        elif salted:
+            stage = _salted_stage(records, config,
+                                  hot_tile_ids=detect_hot_tiles(features,
+                                                                config),
+                                  metrics=metrics, by_range=by_range)
+        else:
+            stage = _wkb_stage(records, config, metrics=metrics,
+                               by_range=by_range)
+    except BaseException:
+        if cached is not None:
+            cached.unpersist()
+        raise
+    return (bounds, *stage, cached)
 
 
 def convert_sharded(features: DataFrame, output_path: str,
@@ -3021,15 +2921,21 @@ def convert_sharded(features: DataFrame, output_path: str,
 
     This removes the two driver bottlenecks of the streaming sink named in
     the round-1 review: per-blob gzip on the driver, and all tile bytes
-    crossing one NIC. The reduce stage is ONE Python pass per task: the
-    layout's encoder (premerge, premerge+props, WKB, WKB+props or salted
-    merge) feeds ``_make_shard_writer`` inside the same mapInPandas, so
-    encoded tiles go straight from the encoder to the compressor and the
-    shard file without a second JVM round trip; each task writes the shard
-    named by its ``TaskContext.partitionId()``. Cross-shard blob dedup,
-    final data offsets and directory encoding then run on executors
-    (_finalize_sharded_distributed; driver-side below
-    ``driver_finalize_max_entries``) — driver state is
+    crossing one NIC. The layout (premerge, premerge+props, WKB, WKB+props
+    or salted merge) comes from the dispatcher ``convert`` shares: with
+    ``bounds=None`` the bounds scan also measures the mean WKB length of
+    all features, and ``premerge='auto'`` picks premerge when it is at
+    least PREMERGE_AUTO_WKB_BYTES (caller-passed bounds: the first 2048
+    rows). The exchange is a hash shuffle on tile_id with no persist, so
+    the fan-out runs exactly once; global tile order is restored later on
+    the 40-byte entry rows. The reduce stage is ONE Python pass per task:
+    the layout's encoder feeds ``_make_shard_writer`` inside the same
+    mapInPandas, so encoded tiles go straight from the encoder to the
+    compressor and the shard file without a second JVM round trip; each
+    task writes the shard named by its ``TaskContext.partitionId()``.
+    Cross-shard blob dedup, final data offsets and directory encoding then
+    run on executors (_finalize_sharded_distributed; driver-side up to
+    ``DRIVER_FINALIZE_MAX_ENTRIES``) — driver state is
     O(shards+partitions) and the winner-blob copy list streams via
     toLocalIterator, so 10^8+ tile archives never materialize an entry
     list on the driver.
@@ -3054,12 +2960,6 @@ def convert_sharded(features: DataFrame, output_path: str,
     from .kernels import pmtiles as P
 
     config = (config or TilerConfig()).validate()
-    if salted and premerge is True:
-        raise ValueError(
-            "convert_sharded: salted=True uses the WKB-shuffling two-phase "
-            "encode and cannot honor premerge=True (premerge makes salting "
-            "moot — drop salted, or leave premerge='auto')."
-        )
     master = features.sparkSession.conf.get("spark.master", "")
     if shard_dir is None and not master.startswith("local"):
         raise ValueError(
@@ -3067,69 +2967,8 @@ def convert_sharded(features: DataFrame, output_path: str,
             f"which executors cannot reach under master={master!r}. Pass "
             "shard_dir= on shared storage (visible to executors and driver)."
         )
-    if bounds is None:
-        # the bounds pass already scans every feature — piggyback the
-        # premerge-auto payload statistic on the same job instead of
-        # running _resolve_premerge's separate take(2048) (guide §1.2:
-        # remove whole passes). The global mean replaces the first-2048
-        # mean; the choice only pins WHICH plan runs (bytes are identical
-        # on either layout) and stays deterministic for a fixed input.
-        agg_cols = [F.min("lng_min"), F.min("lat_min"),
-                    F.max("lng_max"), F.max("lat_max")]
-        want_auto = premerge == "auto"
-        if want_auto:
-            agg_cols.append(F.avg(F.length("wkb")))
-        row = features.agg(*agg_cols).collect()[0]
-        if row[0] is None:
-            bounds = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
-        else:
-            bounds = (row[0], row[1], row[2], row[3])
-        if want_auto:
-            premerge = bool(row[4] is not None
-                            and row[4] >= PREMERGE_AUTO_WKB_BYTES)
-
-    # NO persist and NO range exchange on the heavy data: a hash shuffle on
-    # tile_id co-locates each tile (the encoder's only requirement), so the
-    # fan-out executes exactly once as the shuffle map stage —
-    # repartitionByRange would add a sampling job that re-executes it (or
-    # forces caching the multi-10-GB fan-out output to disk just to sample
-    # it). Global tile order is restored later on the 40-byte entry rows.
-    if config.write_properties:
-        if salted:
-            raise ValueError(
-                "convert_sharded: write_properties=True cannot combine "
-                "with salted=True"
-            )
-        if "props" not in features.columns:
-            raise ValueError(
-                "convert_sharded: write_properties=True requires a "
-                "'props' column — build it with encode_props_column"
-            )
-        if _resolve_premerge(features, premerge):
-            stage = _premerge_props_stage(features, config)
-        else:
-            stage = _wkb_props_stage(
-                fanout_records(features, config),
-                features.select("feature_id", "props"), config,
-                by_range=False)
-    elif not salted and _resolve_premerge(features, premerge):
-        # map-side message encode: the shuffle carries zigzag-varint
-        # feature messages (~5-8x smaller than WKB on vertex-dense input)
-        # and the reduce side only sorts + concatenates — this also makes
-        # hot-tile salting moot (the heavy per-record work is already
-        # spread across the map stage; the reduce task for a mega-tile is a
-        # bytes concat + gzip). 'auto' picks this layout only when the
-        # mean WKB payload is large enough to beat the per-record
-        # message-object overhead (PREMERGE_AUTO_WKB_BYTES).
-        stage = _premerge_stage(features, config)
-    elif salted:
-        stage = _salted_stage(fanout_records(features, config), config,
-                              hot_tile_ids=detect_hot_tiles(features, config),
-                              by_range=False)
-    else:
-        stage = _wkb_stage(fanout_records(features, config), config,
-                           by_range=False)
-    sorted_in, encoder = stage
+    bounds, sorted_in, encoder, _ = _tile_stage(
+        features, config, bounds, salted, premerge, by_range=False)
     codec = P.CODEC_BY_NAME[config.tile_compression]
     expected_backend = _expected_codec_backend(features, codec)
     own_dir = shard_dir is None
@@ -3158,8 +2997,16 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     """End-to-end: features DataFrame -> single .pmtiles at output_path.
 
     Returns summary stats (incl. accumulator-backed per-stage row counts).
-    Tiles stream to the driver in tile_id order via toLocalIterator (O(1)
-    driver memory, like the reference's temp-file writer,
+    The layout comes from the dispatcher ``convert_sharded`` shares: with
+    ``bounds=None`` the bounds scan also measures the mean WKB length of
+    all features, and ``premerge='auto'`` picks premerge when it is at
+    least PREMERGE_AUTO_WKB_BYTES (caller-passed bounds: the first 2048
+    rows). The exchange is by range on tile_id, with the map-side output
+    persisted DISK_ONLY so the range sampling does not re-run the fan-out.
+    On the premerge layouts an under-partitioned input is first spread
+    over every task slot, as on every other premerge plan. Tiles stream
+    to the driver in tile_id order via toLocalIterator (O(1) driver
+    memory, like the reference's temp-file writer,
     pmtiles_writer.rs:1000-1019). ``progress`` receives ordered
     ProgressEvents (phase start/progress/complete, pipeline.rs:41-77 analog)
     — tile-stream progress fires every 8192 tiles with live accumulator
@@ -3177,130 +3024,56 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
             progress(ProgressEvent(phase, kind, info))
 
     config = (config or TilerConfig()).validate()
-    if salted and premerge is True:
-        raise ValueError(
-            "convert: salted=True uses the WKB-shuffling two-phase encode "
-            "and cannot honor premerge=True (premerge makes salting moot — "
-            "drop salted, or leave premerge='auto')."
-        )
     metrics = PipelineMetrics.create(features.sparkSession)
-    emit("bounds", "start")
-    if bounds is None:
-        row = features.agg(
-            F.min("lng_min"), F.min("lat_min"), F.max("lng_max"), F.max("lat_max")
-        ).collect()[0]
-        if row[0] is None:  # empty input: valid world-bounds archive, no crash
-            bounds = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
-        else:
-            bounds = (row[0], row[1], row[2], row[3])
-    emit("bounds", "complete", bounds=bounds)
-
-    from pyspark import StorageLevel
-
-    # Premerge + persist: the single-writer stream needs GLOBAL tile order
-    # (repartitionByRange), and range partitioning launches a SAMPLING job
-    # that would otherwise re-execute the whole fan-out. Persist therefore
-    # stays — but on the round-3 premerge layout it caches the small framed
-    # MESSAGES instead of the f64 WKB records (~5-8x less disk on
-    # vertex-dense input), and the expensive per-record geometry encode
-    # happens exactly once, map-side. This is the Spark analog of the
-    # reference writing phase-1 runs to disk before its phase-2 external
-    # sort (external_sort.rs:99-189).
-    if config.write_properties:
-        if salted:
-            raise ValueError(
-                "convert: write_properties=True uses the tag-interning "
-                "encoder and cannot combine with salted=True"
-            )
-        if "props" not in features.columns:
-            raise ValueError(
-                "convert: write_properties=True requires a 'props' column "
-                "(array<struct<key string, val binary>>) — build it with "
-                "encode_props_column(df, cols)"
-            )
-        if _resolve_premerge(features, premerge):
-            # premerge WITH tags (round 5): the shuffle carries framed
-            # geometry messages + props entries; the reduce side interns
-            # per-tile dictionaries vectorized — byte-identical to the
-            # WKB-layout props path below
-            records = features.mapInPandas(
-                make_fanout_encoded_props(config, metrics),
-                schema=MSG_PROPS_SCHEMA,
-            ).persist(StorageLevel.DISK_ONLY)
-            shuffled = _tile_exchange(records, config.shuffle_partitions,
-                                      True, "tile_id")
-            tiles = shuffled.sortWithinPartitions(
-                "tile_id", "feature_id").mapInPandas(
-                make_wrap_props_encoder(config, metrics), schema=TILES_SCHEMA)
-        else:
-            records = fanout_records(features, config, metrics).persist(
-                StorageLevel.DISK_ONLY)
-            tiles = encode_tiles_with_props(
-                records, features.select("feature_id", "props"), config,
-                metrics=metrics)
-    elif salted:
-        records = fanout_records(features, config, metrics).persist(
-            StorageLevel.DISK_ONLY)
-        hot = detect_hot_tiles(features, config)
-        tiles = encode_tiles_salted(records, config, hot_tile_ids=hot,
-                                    metrics=metrics)
-    elif _resolve_premerge(features, premerge):
-        records = features.mapInPandas(
-            make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA
-        ).persist(StorageLevel.DISK_ONLY)
-        shuffled = _tile_exchange(records, config.shuffle_partitions, True,
-                                  "tile_id")
-        tiles = shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
-            make_wrap_encoder(config, metrics), schema=TILES_SCHEMA)
-    else:
-        records = fanout_records(features, config, metrics).persist(
-            StorageLevel.DISK_ONLY)
-        tiles = encode_tiles(records, config, metrics=metrics)
-
-    codec = P.CODEC_BY_NAME[config.tile_compression]
-    asm = P.PMTilesAssembler(
-        tile_compression=codec,
-        layer_name=config.layer_name,
-        min_zoom=config.min_zoom,
-        max_zoom=config.max_zoom,
-        fields=config.layer_fields,
-        leaf_max_entries=config.leaf_max_entries,
-    )
-    # fan-out phase progress: the fan-out executes lazily while the tile
-    # stream below drains, so poll the accumulators from a driver thread
-    # and emit a 'fanout' progress event whenever features_in advances
+    bounds, sorted_in, encoder, cached = _tile_stage(
+        features, config, bounds, salted, premerge, by_range=True,
+        metrics=metrics, emit=emit)
     stop_poll = threading.Event()
     poller = None
-    if progress is not None:
-        emit("fanout", "start")
-
-        def _poll() -> None:
-            last = -1
-            while not stop_poll.wait(progress_poll_sec):
-                cur = int(metrics.features_in.value)
-                if cur != last:
-                    last = cur
-                    emit("fanout", "progress", **metrics.as_dict())
-
-        poller = threading.Thread(target=_poll, daemon=True)
-        poller.start()
-
-    emit("tiles", "start")
-    n_tiles = 0
     try:
+        tiles = sorted_in.mapInPandas(encoder, schema=TILES_SCHEMA)
+        asm = P.PMTilesAssembler(
+            tile_compression=P.CODEC_BY_NAME[config.tile_compression],
+            layer_name=config.layer_name,
+            min_zoom=config.min_zoom,
+            max_zoom=config.max_zoom,
+            fields=config.layer_fields,
+            leaf_max_entries=config.leaf_max_entries,
+        )
+        # fan-out phase progress: the fan-out executes lazily while the
+        # tile stream below drains, so poll the accumulators from a driver
+        # thread and emit a 'fanout' progress event whenever features_in
+        # advances
+        if progress is not None:
+            emit("fanout", "start")
+
+            def _poll() -> None:
+                last = -1
+                while not stop_poll.wait(progress_poll_sec):
+                    cur = int(metrics.features_in.value)
+                    if cur != last:
+                        last = cur
+                        emit("fanout", "progress", **metrics.as_dict())
+
+            poller = threading.Thread(target=_poll, daemon=True)
+            poller.start()
+
+        emit("tiles", "start")
+        n_tiles = 0
         for row in tiles.toLocalIterator(prefetchPartitions=True):
             asm.add_tile(row.tile_id, row.z, bytes(row.mvt), row.content_hash, row.n_features)
             n_tiles += 1
             if progress is not None and n_tiles % 8192 == 0:
                 emit("tiles", "progress", tiles=n_tiles, **metrics.as_dict())
     finally:
-        # an exception mid-stream must not leave the daemon poller polling
-        # a dead accumulator or the fan-out cache pinned for the session
-        # (ADVICE r3)
+        # an exception anywhere after the persist must not leave the daemon
+        # poller polling a dead accumulator or the fan-out cache pinned for
+        # the session (ADVICE r3)
         if poller is not None:
             stop_poll.set()
             poller.join()
-        records.unpersist()
+        if cached is not None:
+            cached.unpersist()
     if poller is not None:
         emit("fanout", "complete", **metrics.as_dict())
     emit("tiles", "complete", tiles=n_tiles, **metrics.as_dict())

@@ -275,15 +275,19 @@ def test_convert_sharded_empty_input(spark, tmp_path):
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import FEATURES_SCHEMA
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
-    from gpq_tiles_spark.pipeline import convert_sharded
+    from gpq_tiles_spark.pipeline import convert, convert_sharded
 
     feats = spark.createDataFrame([], schema=FEATURES_SCHEMA)
+    cfg = TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=2)
     out = str(tmp_path / "empty_sharded.pmtiles")
-    stats = convert_sharded(feats, out, TilerConfig(min_zoom=0, max_zoom=3,
-                                                    shuffle_partitions=2))
+    stats = convert_sharded(feats, out, cfg)
     assert stats["tiles"] == 0
     rd = PMTilesReader(out)
     assert rd.header.addressed_tiles_count == 0
+    single = str(tmp_path / "empty_single.pmtiles")
+    convert(feats, single, cfg)
+    with open(out, "rb") as a, open(single, "rb") as b:
+        assert a.read() == b.read()
 
 
 def test_grid_regime_holed_multipolygon_matches_oracle(spark):

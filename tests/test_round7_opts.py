@@ -11,8 +11,6 @@ tests pin the risky ones differentially:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -20,7 +18,8 @@ import pytest
 from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.fixtures import write_fixture
 from gpq_tiles_spark.extract import extract_features
-from gpq_tiles_spark.pipeline import convert_sharded, driver_finalize_max_entries
+from gpq_tiles_spark import pipeline
+from gpq_tiles_spark.pipeline import convert_sharded
 
 
 @pytest.fixture(scope="module")
@@ -30,34 +29,37 @@ def fixture_features(spark, tmp_path_factory):
     return extract_features(spark.read.parquet(path))
 
 
-def _convert_both(feats, tmp_path, cfg, tag):
+def _convert_both(feats, tmp_path, cfg, tag, monkeypatch):
     out_drv = str(tmp_path / f"drv_{tag}.pmtiles")
     out_dist = str(tmp_path / f"dist_{tag}.pmtiles")
-    assert driver_finalize_max_entries() > 0
+    assert pipeline.DRIVER_FINALIZE_MAX_ENTRIES > 0
     convert_sharded(feats, out_drv, cfg)
-    os.environ["GPQ_DRIVER_FINALIZE_MAX_ENTRIES"] = "0"
-    try:
+    with monkeypatch.context() as m:
+        # force the distributed finalize
+        m.setattr(pipeline, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
         convert_sharded(feats, out_dist, cfg)
-    finally:
-        del os.environ["GPQ_DRIVER_FINALIZE_MAX_ENTRIES"]
     with open(out_drv, "rb") as a, open(out_dist, "rb") as b:
         return a.read(), b.read()
 
 
-def test_driver_finalize_matches_distributed(fixture_features, tmp_path):
+def test_driver_finalize_matches_distributed(fixture_features, tmp_path,
+                                             monkeypatch):
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4)
-    a, b = _convert_both(fixture_features, tmp_path, cfg, "plain")
+    a, b = _convert_both(fixture_features, tmp_path, cfg, "plain",
+                         monkeypatch)
     assert a == b
 
 
 def test_driver_finalize_matches_distributed_with_leaves(fixture_features,
-                                                         tmp_path):
+                                                         tmp_path,
+                                                         monkeypatch):
     # leaf_max_entries small enough to force a two-level directory, so the
     # driver finalize's single DirectoryBuilder.add covers the leaf-spill
     # path too
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
                       leaf_max_entries=16)
-    a, b = _convert_both(fixture_features, tmp_path, cfg, "leaves")
+    a, b = _convert_both(fixture_features, tmp_path, cfg, "leaves",
+                         monkeypatch)
     assert a == b
 
 

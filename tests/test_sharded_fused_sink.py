@@ -1,11 +1,13 @@
-"""The sharded sink's fused reduce stage and the input-spread guard.
+"""The sharded sink's fused reduce stage, the shared layout dispatcher and
+the input-spread guard.
 
 ``convert_sharded`` runs each layout's reduce-side encoder and the shard
 writer in ONE mapInPandas (``writer(encoder(batches))``), with the shard
 named by the task's partition id. These tests pin the archive bytes of
-every sharded layout against the single-writer ``convert`` on input that
-arrives with fewer partitions than task slots, the single Python map node
-after the tile exchange, and the slot-count rule of
+every layout on both sinks against one single-writer ``convert``
+reference on input that arrives with fewer partitions than task slots,
+the single Python map node after the tile exchange, the release of every
+persisted frame when a sink fails, and the slot-count rule of
 ``spread_small_input``.
 """
 
@@ -60,13 +62,17 @@ def reference_archives(two_part_features, tmp_path_factory):
     return out
 
 
-@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+@pytest.mark.parametrize("sink, layout", [
+    pytest.param(sink, layout,
+                 id=layout if sink == "convert_sharded" else f"{sink}-{layout}")
+    for sink in ("convert_sharded", "convert") for layout in sorted(LAYOUTS)
+])
 def test_sharded_layout_byte_identical_on_under_split_input(
-        two_part_features, reference_archives, tmp_path, layout):
+        two_part_features, reference_archives, tmp_path, sink, layout):
     props, premerge, salted = LAYOUTS[layout]
     path = str(tmp_path / f"{layout}.pmtiles")
-    stats = P.convert_sharded(two_part_features, path, _config(props),
-                              premerge=premerge, salted=salted)
+    stats = getattr(P, sink)(two_part_features, path, _config(props),
+                             premerge=premerge, salted=salted)
     assert stats["tiles"] > 0
     with open(path, "rb") as f:
         assert f.read() == reference_archives[props], layout
@@ -94,6 +100,64 @@ def test_sharded_plan_has_one_python_map_after_tile_exchange(
     assert exchange.split("\n", 1)[0].count("tile_id"), plan
     assert head.count("MapInPandas") == 1, plan
     assert "spark_partition_id" not in head.lower(), plan
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("finalize", ["driver", "distributed"])
+def test_sharded_finalize_releases_persisted_frames_on_error(
+        spark, two_part_features, tmp_path, monkeypatch, finalize):
+    """A failing finalize must unpersist the entry rows (and the winner
+    table of the distributed path) on its way out."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected finalize failure")
+
+    if finalize == "driver":
+        monkeypatch.setattr(P, "_finalize_entries_driver", boom)
+    else:
+        monkeypatch.setattr(P, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
+        monkeypatch.setattr(P, "_assemble_directory_stream", boom)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        P.convert_sharded(two_part_features, str(tmp_path / "x.pmtiles"),
+                          _config(False))
+    assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("fail_in", ["progress", "add_tile"])
+def test_convert_releases_map_side_cache_on_error(
+        two_part_features, tmp_path, monkeypatch, fail_in):
+    """Every frame ``convert`` persists is unpersisted when the run fails,
+    before the tile stream starts (a progress callback raising on the
+    first 'fanout' event) or during it."""
+    from gpq_tiles_spark.kernels.pmtiles import PMTilesAssembler
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected failure")
+
+    def progress(ev):
+        if ev.phase == "fanout":
+            boom()
+
+    persisted = []
+    frame_cls = type(two_part_features)
+    persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(persist(self, *args, **kwargs))
+        return persisted[-1]
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    if fail_in == "add_tile":
+        monkeypatch.setattr(PMTilesAssembler, "add_tile", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        P.convert(two_part_features, str(tmp_path / "x.pmtiles"),
+                  _config(False), premerge=True,
+                  progress=progress if fail_in == "progress" else None)
+    assert persisted
+    assert not any(df.is_cached for df in persisted)
 
 
 def test_spread_small_input_fires_below_slot_count(spark):

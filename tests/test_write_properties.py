@@ -111,10 +111,22 @@ def test_props_sharded_byte_identical(spark, prop_features, tmp_path):
 def test_props_requires_column_and_rejects_salted(spark, prop_features, tmp_path):
     cfg = TilerConfig(write_properties=True)
     bare = prop_features.drop("props")
+    for sink in (convert, convert_sharded):
+        with pytest.raises(ValueError, match="props"):
+            sink(bare, str(tmp_path / "x.pmtiles"), cfg)
+        with pytest.raises(ValueError, match="salted"):
+            sink(prop_features, str(tmp_path / "y.pmtiles"), cfg, salted=True)
+
+
+def test_option_errors_raise_before_bounds_progress(spark, prop_features,
+                                                    tmp_path):
+    """Bad option combinations are rejected before any progress event: the
+    'bounds' phase brackets the bounds scan, not the option checks."""
+    events = []
     with pytest.raises(ValueError, match="props"):
-        convert(bare, str(tmp_path / "x.pmtiles"), cfg)
-    with pytest.raises(ValueError, match="salted"):
-        convert(prop_features, str(tmp_path / "y.pmtiles"), cfg, salted=True)
+        convert(prop_features.drop("props"), str(tmp_path / "x.pmtiles"),
+                TilerConfig(write_properties=True), progress=events.append)
+    assert events == []
 
 
 def test_geoparquet_properties_end_to_end(spark, tmp_path):
