@@ -23,7 +23,7 @@ from .config import TilerConfig  # noqa: F401
 
 
 def __getattr__(name):  # lazy: keep kernel-only imports Spark-free
-    if name in ("convert", "convert_sharded", "fanout_records", "encode_tiles",
+    if name in ("convert", "convert_sharded", "fanout_records",
                 "encode_tiles_salted", "encode_tiles_premerge",
                 "encode_tiles_premerge_props", "encode_props_column",
                 "detect_hot_tiles", "encode_single_tile",

@@ -125,13 +125,14 @@ class CheckpointedRun:
 
 def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: str,
                              work_dir: str, config=None) -> dict:
-    """Checkpointed end-to-end conversion: extract -> records -> tiles ->
-    archive, resumable after any completed stage."""
+    """Checkpointed end-to-end conversion: extract -> message records ->
+    tiles -> archive, resumable after any completed stage. The records
+    are the premerge map side (framed messages per (tile, feature)) and
+    the tiles its wrap stage, the layout ``pipeline.convert`` runs."""
     from .config import TilerConfig
     from .extract import extract_features
-    from .pipeline import encode_tiles, fanout_records
-
-    from .pipeline import PipelineMetrics
+    from .pipeline import (PipelineMetrics, _encode, _premerge_records,
+                           _premerge_stage)
 
     config = config or TilerConfig()
     run = CheckpointedRun(spark, work_dir, snapshot_fingerprint(spark, docs_path))
@@ -140,8 +141,10 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
     feats = run.run_stage(
         "extract", lambda: extract_features(spark.read.parquet(docs_path))
     )
-    records = run.run_stage("records", lambda: fanout_records(feats, config, metrics))
-    tiles = run.run_stage("tiles", lambda: encode_tiles(records, config, metrics=metrics))
+    records = run.run_stage(
+        "records", lambda: _premerge_records(feats, config, metrics))
+    tiles = run.run_stage("tiles", lambda: _encode(
+        _premerge_stage(records, config, metrics=metrics)))
     acc = metrics.as_dict()
     if any(acc.values()):  # only meaningful when the stages actually ran
         run.manifest["metrics"]["accumulators"] = acc

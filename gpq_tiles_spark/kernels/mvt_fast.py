@@ -87,7 +87,7 @@ def _canonical_rect_msg_tail(lng0: float, lat0: float, lng1: float,
 
 
 def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
-                       extent: int, buffer_px: float = 8.0) -> list[bytes]:
+                       extent: int, buffer_px: float = 8.0):
     """Per-RECORD framed feature messages (premerge map-side encode).
 
     Input records may be in ANY order (fan-out output frames, pre-shuffle).
@@ -97,11 +97,19 @@ def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     the MVT cursor resets per feature and message bytes depend only on
     (fid, geometry, tile bounds). Dead records (nothing encodable) return
     ``b""`` and still occupy a row, so downstream per-tile record counts
-    match the single-phase encoder exactly. Returns a list of length n.
+    match the single-phase encoder exactly.
+
+    Returns an Arrow ``binary`` array of length n wrapped in
+    ``pd.arrays.ArrowExtensionArray``: the assembled message buffer and
+    its record offsets become the Arrow data and offsets buffers as they
+    are, so a fan-out frame reaches the JVM without one Python ``bytes``
+    object per record. Raises OverflowError when the buffer outgrows the
+    int32 offsets of ``binary``.
     """
     n = len(tid)
     if n == 0:
-        return []
+        return _binary_array(np.zeros(1, dtype=np.int64),
+                             np.empty(0, dtype=np.uint8))
     uniq_tid, gidx = np.unique(tid, return_inverse=True)
     g_z, g_x, g_y = Hc.tile_id_to_zxy_vec(uniq_tid)
     lng0, lat0, lng1, lat1 = T.tile_bounds_mixed(g_x, g_y, g_z)
@@ -140,9 +148,23 @@ def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
         is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
         is_ls, ls_idx, ls_buf, ls_boff, ls_blen,
     )
-    bb = buf.tobytes()
-    ro = rec_off
-    return [bb[ro[i]:ro[i + 1]] for i in range(n)]
+    return _binary_array(rec_off, buf)
+
+
+def _binary_array(offsets: np.ndarray, data: np.ndarray):
+    """Arrow ``binary`` column over (n+1 offsets, uint8 data), zero-copy
+    for the data buffer."""
+    import pandas as pd
+    import pyarrow as pa
+
+    if int(offsets[-1]) > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(offsets[-1])} message bytes exceed the int32 offsets of "
+            "an Arrow binary column")
+    arr = pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
+    return pd.arrays.ArrowExtensionArray(arr)
 
 
 def wrap_sorted_msgs(tid: np.ndarray, msgs, layer_name: str, extent: int,

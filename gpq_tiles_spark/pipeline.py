@@ -4,27 +4,29 @@ Spark-first formulation of the reference's 3-phase engine
 (/root/reference/crates/core/src/pipeline.rs:738-1305):
 
     features (feature_id, wkb, bbox)
-      | fanout_records:  mapInPandas — per zoom: tiles_for_bbox ->
-      |   buffered-bbox prefilter -> clip -> validate -> drop rules -> wkb
+      | _premerge_records:  mapInPandas — per zoom: tiles_for_bbox ->
+      |   buffered-bbox prefilter -> clip -> validate -> drop rules, then
+      |   each record's framed MVT feature message in the same pass
       |   (pre-simplify ONCE at max_zoom, pipeline.rs:860-863)
       v
-    records (tile_id, z, x, y, feature_id, wkb)
-      | repartitionByRange(tile_id).sortWithinPartitions(tile_id, feature_id)
+    records (tile_id, feature_id, msg)
+      | exchange on tile_id + sortWithinPartitions(tile_id, feature_id)
       |   == reference phase 2 external merge sort (external_sort.rs:99-189);
       |   Spark's sort-based shuffle IS that operator, distributed
       v
     tiles (tile_id, z, x, y, n_features, mvt, content_hash)
-      | mapInPandas over consecutive tile_id runs (no second shuffle: range
-      |   partitioning guarantees each tile_id lives in exactly one partition)
+      | mapInPandas over consecutive tile_id runs: concatenate the messages
+      |   and wrap the layer (no second shuffle: each tile_id lives in
+      |   exactly one partition)
       v
-    driver: toLocalIterator in tile_id order -> PMTilesAssembler (dedup,
-      run-length, directory, header) -> single .pmtiles
+    sink: the single-writer stream (range exchange, toLocalIterator ->
+      PMTilesAssembler) or executor-written shards (convert_sharded)
 
 Scale notes (10^12 docs):
-* exactly ONE wide shuffle (the range partition by tile_id); everything else
-  is narrow. Skewed hot tiles are split by a salt column and re-merged in
-  tile_id order inside the encode stage (two-phase encode) when a tile
-  exceeds ``hot_tile_threshold``.
+* exactly ONE wide shuffle (tile_id); everything else is narrow. Skewed
+  hot tiles are split by a salt column and re-merged in tile_id order
+  inside the encode stage (two-phase encode) when a tile exceeds
+  ``hot_tile_threshold``.
 * the fully-inside fast path (clip.rs:196-203) is fully vectorized: features
   whose bbox sits inside the buffered tile reuse one WKB + one drop-hash per
   feature across every tile they land in; only boundary-crossing pairs take
@@ -603,6 +605,10 @@ def _clip_pair(cache: dict, z: int, max_zoom: int, extent: int,
     return _finish_clip(clipped, z, max_zoom, extent, lng0, lat0, lng1, lat1, fid)
 
 
+# the feature columns the fan-out reads
+FANOUT_COLS = ("feature_id", "wkb", "geom_type", "lng_min", "lat_min",
+               "lng_max", "lat_max")
+
 # Fan-out output flush thresholds: each yielded frame becomes one Arrow
 # record batch JVM-side, so bound both payload bytes and row count.
 FANOUT_FLUSH_BYTES = 32 << 20
@@ -999,39 +1005,6 @@ def _drop_fully_inside(c: dict, z: int, base_zoom: int, extent: int,
 # Phase 2+3: shuffle + encode
 # ---------------------------------------------------------------------------
 
-def make_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
-    """Encode consecutive (tile_id-sorted) runs into MVT bytes.
-
-    Input batches are sorted by (tile_id, feature_id) within the partition and
-    each tile_id is wholly contained in one partition (range partitioning), so
-    grouping consecutive runs — carrying the tail across batch boundaries —
-    reproduces the reference's phase-3 streaming group-by
-    (pipeline.rs:1179-1282) with zero extra shuffle (``_run_carry``).
-    """
-    layer_name, extent = config.layer_name, config.extent
-    buffer_px = config.buffer_pixels
-    max_tile_bytes = config.max_tile_bytes
-
-    def encode_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # production path writes empty properties into every tile
-        # (pipeline.rs:949, :1215); features carry id + geometry only.
-        cap_stats = [0, 0]
-        cols = mvt_fast.encode_sorted_runs(
-            pdf["tile_id"].to_numpy(dtype=np.int64),
-            pdf["feature_id"].to_numpy(dtype=np.int64),
-            pdf["wkb"].to_numpy(),
-            layer_name,
-            extent,
-            buffer_px,
-            max_tile_bytes=max_tile_bytes,
-            cap_stats=cap_stats,
-        )
-        _count_tiles(metrics, len(cols["tile_id"]), cap_stats)
-        return pd.DataFrame(cols)
-
-    return _run_carry(encode_chunk)
-
-
 MSG_RECORDS_SCHEMA = StructType(
     [
         StructField("tile_id", LongType(), False),
@@ -1041,35 +1014,41 @@ MSG_RECORDS_SCHEMA = StructType(
 )
 
 
-def make_fanout_encoded(config: TilerConfig,
-                        metrics: PipelineMetrics | None = None):
-    """Fused fan-out + per-record message encode (premerge map side).
-
-    Runs the normal fan-out, then converts each drained frame's
-    (tile_id, feature_id, wkb) records into framed MVT feature messages
-    IN THE SAME PASS — so the wide shuffle carries zigzag-varint messages
-    (~5-8x smaller than the f64 WKB payload on vertex-dense input) and the
-    reduce side only concatenates. Message bytes are independent of
-    grouping (the MVT cursor resets per feature), so the final archive is
-    byte-identical to the WKB-shuffling path."""
-    fan = make_fanout(config, metrics)
+def make_msg_encoder(config: TilerConfig):
+    """Per-record message encode over (tile_id, feature_id, wkb) frames ->
+    (tile_id, feature_id, msg) frames. Message bytes depend only on the
+    record's feature id, geometry and tile (the MVT cursor resets per
+    feature), so encoding before the shuffle gives the bytes the reference
+    encodes per tile after its sort. The ``msg`` column is the Arrow
+    binary array ``mvt_fast.encode_record_msgs`` builds over its one
+    message buffer."""
     extent, buffer_px = config.extent, config.buffer_pixels
 
-    def fanout_encoded(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for frame in fan(batches):
+    def encode_msgs(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for frame in frames:
             tid = frame["tile_id"].to_numpy(dtype=np.int64)
-            msgs = mvt_fast.encode_record_msgs(
-                tid,
-                frame["feature_id"].to_numpy(dtype=np.int64),
-                frame["wkb"].to_numpy(),
-                extent,
-                buffer_px,
-            )
+            fid = frame["feature_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame({
                 "tile_id": tid,
-                "feature_id": frame["feature_id"].to_numpy(dtype=np.int64),
-                "msg": msgs,
+                "feature_id": fid,
+                "msg": mvt_fast.encode_record_msgs(
+                    tid, fid, frame["wkb"].to_numpy(), extent, buffer_px),
             })
+
+    return encode_msgs
+
+
+def make_fanout_encoded(config: TilerConfig,
+                        metrics: PipelineMetrics | None = None):
+    """Fused fan-out + per-record message encode (the map side of every
+    non-salted layout): the wide shuffle carries zigzag-varint messages
+    (~5-8x smaller than the f64 WKB payload on vertex-dense input) and the
+    reduce side only concatenates."""
+    fan = make_fanout(config, metrics)
+    encode_msgs = make_msg_encoder(config)
+
+    def fanout_encoded(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return encode_msgs(fan(batches))
 
     return fanout_encoded
 
@@ -1118,9 +1097,11 @@ def _run_carry(chunk_fn, run_key=_tile_ids):
 def make_wrap_encoder(config: TilerConfig,
                       metrics: PipelineMetrics | None = None):
     """Premerge reduce side: concatenate each tile's (feature_id-sorted)
-    framed messages and wrap the layer — same run-carry pattern as
-    ``make_encoder``, but the per-record geometry work already happened
-    map-side."""
+    framed messages and wrap the layer. Input batches are sorted by
+    (tile_id, feature_id) within the partition and each tile_id lives in
+    one partition, so grouping consecutive runs (``_run_carry``) is the
+    reference's phase-3 streaming group-by (pipeline.rs:1179-1282) with no
+    extra shuffle; the per-record geometry work already happened map-side."""
     layer_name, extent = config.layer_name, config.extent
     max_tile_bytes = config.max_tile_bytes
 
@@ -1159,17 +1140,12 @@ def _encode(stage: tuple[DataFrame, Callable]) -> DataFrame:
 
 
 def _premerge_records(features: DataFrame, config: TilerConfig,
-                      metrics: PipelineMetrics | None = None,
-                      props: bool = False) -> DataFrame:
-    """Premerge map side: fan-out + per-record message encode (carrying
-    each record's props entries when ``props``), spread over every task
-    slot when the input arrives under-partitioned."""
-    if props:
-        fanout, schema = make_fanout_encoded_props, MSG_PROPS_SCHEMA
-    else:
-        fanout, schema = make_fanout_encoded, MSG_RECORDS_SCHEMA
-    return spread_small_input(features).mapInPandas(fanout(config, metrics),
-                                                    schema=schema)
+                      metrics: PipelineMetrics | None = None) -> DataFrame:
+    """Premerge map side: fan-out + per-record message encode over the
+    fan-out columns alone (props join back after it), spread over every
+    task slot when the input arrives under-partitioned."""
+    return spread_small_input(features.select(*FANOUT_COLS)).mapInPandas(
+        make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA)
 
 
 def _premerge_stage(msgs: DataFrame, config: TilerConfig,
@@ -1196,36 +1172,6 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
     ``_premerge_stage``."""
     return _encode(_premerge_stage(_premerge_records(features, config, metrics),
                                    config, num_partitions, by_range, metrics))
-
-
-# premerge pays when records are coordinate-dense: the framed message is
-# ~0.15-0.25x the f64 WKB then, so the shuffle shrinks 5-8x. For tiny
-# geometries (points 21 B, building quads 93 B) the message is no smaller
-# and the per-record Python bytes object materialized on BOTH sides of the
-# shuffle dominates — measured 2.4x SLOWER than the WKB layout on a 220M-
-# record z0-14 point/quad pyramid, vs 2.6x faster on the 550-vertex ADM4
-# anchor. 512 B splits those regimes with margin on each side.
-PREMERGE_AUTO_WKB_BYTES = 512
-
-
-def _resolve_premerge(features: DataFrame, premerge) -> bool:
-    """Resolve premerge='auto' from the FIRST 2048 rows in partition order
-    (the sinks use this only when the caller passes bounds; otherwise the
-    bounds scan measures the mean over all rows, see ``_tile_stage``) —
-    deterministic for a fixed input layout (a mid-plan limit() gathers
-    whichever partitions answer first, so the old auto choice could flip
-    between runs on heterogeneous corpora; ADVICE r3). Output bytes are
-    identical either way; this only pins WHICH plan runs. take() executes
-    via driver-side CollectLimit: partition 0 runs first and later
-    partitions are opened only if it held fewer than 2048 rows — so the
-    sample is both early-stopping (no full scan) and empty-partition-safe."""
-    if premerge != "auto":
-        return bool(premerge)
-    vals = features.select(F.length("wkb").alias("l")).take(2048)
-    if not vals:
-        return False
-    mean_wkb = sum(r["l"] for r in vals) / len(vals)
-    return mean_wkb >= PREMERGE_AUTO_WKB_BYTES
 
 
 PARTIAL_SCHEMA = StructType(
@@ -1366,13 +1312,10 @@ def _salted_stage(records: DataFrame, config: TilerConfig,
                   hot_tile_ids: list[int] | None = None,
                   metrics: PipelineMetrics | None = None,
                   by_range: bool = True):
-    """Salted reduce stage: (tile-sorted phase-A partials, merge encoder);
-    the plain WKB stage when no tile is hot."""
+    """Salted reduce stage: (tile-sorted phase-A partials, merge encoder)."""
     parts = num_partitions or config.shuffle_partitions
     if hot_tile_ids is None:
         raise ValueError("pass hot_tile_ids from detect_hot_tiles(features, config)")
-    if not hot_tile_ids:
-        return _wkb_stage(records, config, num_partitions, metrics, by_range)
 
     # single-path: ONE pass over the fan-out; cold tiles carry salt=0 (one
     # bucket, phase B is a no-op wrap), hot tiles spread over salt_buckets.
@@ -1403,11 +1346,12 @@ def encode_tiles_salted(records: DataFrame, config: TilerConfig,
     on hot tiles]. Hot tiles get their features split across salt_buckets
     sub-partitions for phase A, so no single reduce task ever owns a dense
     urban tile alone; phase B merges the buckets in feature_id order —
-    output bytes identical to the single-phase path. Cold tiles take the
-    normal single-phase encode; the two outputs are unioned.
+    output bytes identical to the premerge layout. Cold tiles carry salt 0,
+    one bucket each, so phase B only wraps them.
 
     ``hot_tile_ids`` comes from ``detect_hot_tiles`` (no extra pass over the
-    fan-out); when empty this degrades to plain ``encode_tiles``.
+    fan-out); when it is empty every tile takes salt 0 and the bytes stay
+    the same (the sinks take the premerge layout instead).
     """
     return _encode(_salted_stage(records, config, num_partitions,
                                  hot_tile_ids, metrics, by_range))
@@ -1415,40 +1359,11 @@ def encode_tiles_salted(records: DataFrame, config: TilerConfig,
 
 def fanout_records(features: DataFrame, config: TilerConfig,
                    metrics: PipelineMetrics | None = None) -> DataFrame:
-    """features -> (tile_id, z, x, y, feature_id, wkb) records."""
-    cols = ["feature_id", "wkb", "geom_type", "lng_min", "lat_min", "lng_max", "lat_max"]
-    return features.select(*cols).mapInPandas(
+    """features -> (tile_id, feature_id, wkb) records: the fan-out before
+    message encode, as the salted layout and the raster operator take it."""
+    return features.select(*FANOUT_COLS).mapInPandas(
         make_fanout(config, metrics), schema=RECORDS_SCHEMA
     )
-
-
-def _wkb_stage(records: DataFrame, config: TilerConfig,
-               num_partitions: int | None = None,
-               metrics: PipelineMetrics | None = None, by_range: bool = True):
-    """WKB reduce stage: (tile-sorted fan-out records, MVT encoder)."""
-    parts = num_partitions or config.shuffle_partitions
-    shuffled = _tile_exchange(records, parts, by_range, "tile_id")
-    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
-            make_encoder(config, metrics))
-
-
-def encode_tiles(records: DataFrame, config: TilerConfig,
-                 num_partitions: int | None = None,
-                 metrics: PipelineMetrics | None = None,
-                 by_range: bool = True) -> DataFrame:
-    """records -> per-tile MVT rows, via ONE shuffle + in-partition sort.
-
-    ``by_range=True`` (default) range-partitions on tile_id: output
-    partitions are globally tile-ordered — required by the single-writer
-    sink's toLocalIterator stream. ``by_range=False`` hash-partitions
-    instead: the encoder only needs co-location + the in-partition sort,
-    and skipping the range exchange removes repartitionByRange's SAMPLING
-    JOB — which would otherwise execute the entire fan-out a second time
-    (or force persisting the multi-10-GB fan-out output just to avoid
-    that). The sharded sink uses this: its directory assembly re-orders
-    the tiny 40-byte entry rows in a separate range shuffle."""
-    return _encode(_wkb_stage(records, config, num_partitions, metrics,
-                              by_range))
 
 
 PROPS_FIELD_SCHEMA = ArrayType(
@@ -1735,9 +1650,10 @@ def _encode_props_tile(tile_id: int, fids, msgs, items_per_feat,
                        prop_filter, head: bytes, tail: bytes,
                        max_tile_bytes: int | None,
                        cap_stats: list | None = None) -> tuple[bytes, int]:
-    """ONE tile's MVT bytes with real per-feature tags — shared by the
-    WKB-layout and premerge-layout property encoders, so both stay
-    byte-identical. Dead records (empty msg) cost 0 bytes and still count.
+    """ONE tile's MVT bytes with real per-feature tags — the exact
+    per-tile path behind ``_encode_props_tiles_chunk`` (it takes every
+    tile over the byte budget). Dead records (empty msg) cost 0 bytes and
+    still count.
 
     ``max_tile_bytes`` charges the layer key/value DICTIONARY bytes
     against the budget (ADVICE r4): the keep-mask competes over the
@@ -1965,36 +1881,12 @@ def _encode_props_tiles_chunk(tid, fid, msgs, props_list, starts, ends,
     return mvts, n_feats
 
 
-def make_props_encoder(config: TilerConfig,
-                       metrics: PipelineMetrics | None = None):
-    """Tile encoder that writes REAL per-feature MVT tags with layer-level
-    key/value dictionaries [extension beyond the reference — its writer
-    emits empty properties, pipeline.rs:949]. Geometry messages come from
-    the SAME vectorized kernel as the propertyless production path; tag
-    interning runs per tile via pd.factorize (first-appearance order) and
-    the tags are byte-spliced after the id field — no per-entry dict
-    lookups remain in the hot path (VERDICT r4)."""
-    extent, buffer_px = config.extent, config.buffer_pixels
-    prop_filter = _apply_property_filter(config)
-
-    def encode_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-        fid = pdf["feature_id"].to_numpy(dtype=np.int64)
-        msgs = mvt_fast.encode_record_msgs(
-            tid, fid, pdf["wkb"].to_numpy(), extent, buffer_px)
-        return _props_tiles_frame(tid, fid, msgs, pdf["props"].tolist(),
-                                  prop_filter, config, metrics)
-
-    return _run_carry(encode_chunk)
-
-
 def _props_tiles_frame(tid: np.ndarray, fid: np.ndarray, msgs, props_list,
                        prop_filter, config: TilerConfig,
                        metrics: PipelineMetrics | None) -> pd.DataFrame:
-    """Shared tail of both props encoders: one chunk of (tile_id,
-    feature_id)-sorted geometry messages and props entries -> a
-    TILES_SCHEMA frame (tile z/x/y, tag-interned MVT bytes, content
-    hash)."""
+    """One chunk of (tile_id, feature_id)-sorted geometry messages and
+    props entries -> a TILES_SCHEMA frame (tile z/x/y, tag-interned MVT
+    bytes, content hash)."""
     starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
     ends = np.append(starts[1:], len(tid))
     head, tail = mvt_fast.layer_head_tail(config.layer_name, config.extent)
@@ -2016,170 +1908,51 @@ def _props_tiles_frame(tid: np.ndarray, fid: np.ndarray, msgs, props_list,
     })
 
 
-def _wkb_props_stage(records: DataFrame, props: DataFrame,
-                     config: TilerConfig, num_partitions: int | None = None,
-                     metrics: PipelineMetrics | None = None,
-                     by_range: bool = True):
-    """WKB+props reduce stage: (tile-sorted records joined to their props,
-    tag-interning encoder)."""
-    parts = num_partitions or config.shuffle_partitions
-    # one props row per feature_id: duplicate ids (hash-collided or
-    # duplicated source ids) must not MULTIPLY fan-out records through the
-    # join. The winner is the ORDERING-MINIMUM props value (not
-    # dropDuplicates, whose survivor is partition-order dependent and
-    # would break run-to-run byte determinism; ADVICE r4) — arrays of
-    # structs of (string, binary) are orderable in Spark, so min() is a
-    # stable, partitioning-independent choice.
-    joined = records.join(
-        props.select("feature_id", "props")
-        .groupBy("feature_id").agg(F.min("props").alias("props")),
-        "feature_id", "left",
-    )
-    shuffled = _tile_exchange(joined, parts, by_range, "tile_id")
-    return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
-            make_props_encoder(config, metrics))
-
-
-def encode_tiles_with_props(records: DataFrame, props: DataFrame,
-                            config: TilerConfig,
-                            num_partitions: int | None = None,
-                            metrics: PipelineMetrics | None = None,
-                            by_range: bool = True) -> DataFrame:
-    """records + (feature_id, props) -> per-tile MVT rows WITH tags.
-
-    The property table joins onto the fan-out records on feature_id —
-    expressed declaratively so Catalyst broadcast-joins small property
-    tables and shuffle-joins big ones (AQE decides at runtime). The tile
-    shuffle and run-carry grouping mirror encode_tiles."""
-    return _encode(_wkb_props_stage(records, props, config, num_partitions,
-                                    metrics, by_range))
-
-
-MSG_PROPS_SCHEMA = StructType(
-    [
-        StructField("tile_id", LongType(), False),
-        StructField("feature_id", LongType(), False),
-        StructField("msg", BinaryType(), False),
-        StructField("props", PROPS_FIELD_SCHEMA, True),
-    ]
-)
-
-
-_MISSING = object()  # pmap sentinel: distinguishes "unseen id" from
-# "seen with null props" so duplicate resolution can mimic F.min's
-# null-ignoring semantics
-
-
-def _props_ordering_key(p) -> tuple:
-    """Sort key reproducing Spark's ordering over array<struct<key string,
-    val binary>> — element-wise struct comparison (string then binary,
-    both byte-lexicographic; Python str comparison is code-point order,
-    which equals UTF-8 byte order), shorter-prefix-first. Used to resolve
-    duplicate feature_ids to the SAME winner F.min(props) picks on the
-    WKB-layout join path."""
-    return tuple((it["key"], bytes(it["val"])) for it in p)
-
-
-def make_fanout_encoded_props(config: TilerConfig,
-                              metrics: PipelineMetrics | None = None):
-    """Premerge map side WITH properties: fused fan-out + per-record
-    geometry message encode, each record carrying its source row's props
-    entries through the shuffle. The heavy per-record geometry work rides
-    the map stage exactly like the propertyless premerge layout — only
-    the per-tile tag interning (which needs the whole tile) remains
-    reduce-side (VERDICT r5 item 2).
-
-    Round 6: the -y/-x/-X property filter applies HERE, once per source
-    feature, before tile replication — excluded tag entries never cross
-    the shuffle multiplied by the pyramid fan-out (VERDICT r5 item 2 of
-    round-6 plan). The reduce side (make_wrap_props_encoder) skips the
-    filter; bytes are unchanged because the filter is per-feature and
-    idempotent.
-
-    Duplicate feature_ids (hash-collided source ids) resolve to the
-    ORDERING-MINIMUM props within the batch — the same rule as the
-    WKB-layout join's F.min(props) (nulls lose to non-null values), so
-    the two layouts stay deterministic and byte-identical even on
-    colliding ids (ADVICE r5). The key computation only runs when a
-    duplicate actually appears — the common unique-id case pays one dict
-    insert per row."""
-    fan = make_fanout(config, metrics)
-    extent, buffer_px = config.extent, config.buffer_pixels
-    prop_filter = _apply_property_filter(config)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # the fan-out is stateless across batches, so frames drained
-            # from a single-batch iterator reference only THIS batch's
-            # feature_ids — the props lookup is a local dict.
-            # Duplicate resolution runs over the RAW props (the WKB
-            # layout's F.min sits BEFORE its reduce-side filter, and a
-            # filter can flip the ordering between two colliding rows);
-            # the -y/-x/-X filter then applies once per UNIQUE feature
-            # below — still before tile replication, so excluded tags
-            # still never cross the shuffle
-            pmap: dict = {}
-            for f, p in zip(pdf["feature_id"].tolist(),
-                            pdf["props"].tolist()):
-                cur = pmap.get(f, _MISSING)
-                if cur is _MISSING:
-                    pmap[f] = p
-                elif cur is None:
-                    pmap[f] = p  # min() ignores nulls: non-null wins
-                elif p is not None and (
-                        _props_ordering_key(p) < _props_ordering_key(cur)):
-                    pmap[f] = p
-            if prop_filter is not None:
-                for f, p in pmap.items():
-                    if p is not None:
-                        pmap[f] = prop_filter(p)
-            for frame in fan(iter([pdf])):
-                tid = frame["tile_id"].to_numpy(dtype=np.int64)
-                fids = frame["feature_id"].to_numpy(dtype=np.int64)
-                msgs = mvt_fast.encode_record_msgs(
-                    tid, fids, frame["wkb"].to_numpy(), extent, buffer_px)
-                yield pd.DataFrame({
-                    "tile_id": tid,
-                    "feature_id": fids,
-                    "msg": msgs,
-                    "props": [pmap.get(f) for f in fids.tolist()],
-                })
-
-    return gen
-
-
 def make_wrap_props_encoder(config: TilerConfig,
                             metrics: PipelineMetrics | None = None):
-    """Premerge reduce side WITH properties: per tile, vectorized
-    key/value interning (pd.factorize) + tag byte-splice into the
-    map-encoded geometry messages — byte-identical to the WKB-layout
-    props encoder (shared _encode_props_tile). The -y/-x/-X filter is NOT
-    re-applied here: make_fanout_encoded_props (this encoder's only
-    upstream) filtered once per feature map-side, so excluded entries
-    never crossed the shuffle — re-filtering would be a no-op pass over
-    every entry (round 6)."""
+    """Premerge reduce side WITH properties [extension beyond the
+    reference — its writer emits empty properties, pipeline.rs:949]: per
+    tile, vectorized key/value interning (pd.factorize, first-appearance
+    order) into layer-level dictionaries, the -y/-x/-X filter, and the tag
+    byte-splice after the id field of each map-encoded geometry message."""
+    prop_filter = _apply_property_filter(config)
 
     def wrap_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         return _props_tiles_frame(
             pdf["tile_id"].to_numpy(dtype=np.int64),
             pdf["feature_id"].to_numpy(dtype=np.int64),
-            pdf["msg"].tolist(), pdf["props"].tolist(), None, config,
+            pdf["msg"].tolist(), pdf["props"].tolist(), prop_filter, config,
             metrics)
 
     return _run_carry(wrap_chunk)
 
 
-def _premerge_props_stage(msgs: DataFrame, config: TilerConfig,
+def _premerge_props_stage(msgs: DataFrame, props: DataFrame,
+                          config: TilerConfig,
                           num_partitions: int | None = None,
                           by_range: bool = False,
                           metrics: PipelineMetrics | None = None):
-    """Premerge+props reduce stage over ``_premerge_records(props=True)``
-    output: (tile-sorted framed messages with their props entries,
-    interning wrap encoder)."""
+    """Premerge+props reduce stage over message records: (tile-sorted
+    framed messages joined to their props entries, interning wrap
+    encoder).
+
+    The property table joins onto the message records on feature_id —
+    expressed declaratively so Catalyst broadcast-joins small property
+    tables and shuffle-joins big ones. One props row per feature_id:
+    duplicate ids (hash-collided or duplicated source ids) must not
+    MULTIPLY records through the join. The winner is the ORDERING-MINIMUM
+    props value (not dropDuplicates, whose survivor is partition-order
+    dependent and would break run-to-run byte determinism; ADVICE r4) —
+    arrays of structs of (string, binary) are orderable in Spark, so min()
+    is a stable, partitioning-independent choice. The -y/-x/-X filter runs
+    after it, in the encoder."""
     parts = num_partitions or config.shuffle_partitions
-    shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
+    joined = msgs.join(
+        props.select("feature_id", "props")
+        .groupBy("feature_id").agg(F.min("props").alias("props")),
+        "feature_id", "left",
+    )
+    shuffled = _tile_exchange(joined, parts, by_range, "tile_id")
     return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
             make_wrap_props_encoder(config, metrics))
 
@@ -2189,14 +1962,26 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
                                 by_range: bool = False,
                                 metrics: PipelineMetrics | None = None
                                 ) -> DataFrame:
-    """features (with a ``props`` column) -> per-tile MVT rows with tags
-    on the premerge layout: ONE shuffle of framed geometry messages +
-    props entries, reduce-side vectorized interning + splice. Property
-    corpora get the same ~2.6x vertex-dense premerge win as the
-    propertyless path (round 5; previously write_properties forced the
-    WKB-shuffling layout)."""
-    msgs = _premerge_records(features, config, metrics, props=True)
-    return _encode(_premerge_props_stage(msgs, config, num_partitions,
+    """features (with a ``props`` column) -> per-tile MVT rows with tags:
+    the premerge map side, the props join on feature_id, ONE shuffle of
+    the framed messages + props entries on tile_id, reduce-side vectorized
+    interning + splice."""
+    return _encode(_premerge_props_stage(
+        _premerge_records(features, config, metrics), features, config,
+        num_partitions, by_range, metrics))
+
+
+def encode_tiles_with_props(records: DataFrame, props: DataFrame,
+                            config: TilerConfig,
+                            num_partitions: int | None = None,
+                            metrics: PipelineMetrics | None = None,
+                            by_range: bool = True) -> DataFrame:
+    """Fan-out records (tile_id, feature_id, wkb) + (feature_id, props) ->
+    per-tile MVT rows WITH tags: message-encode the records, then the
+    premerge+props stage (props join, tile shuffle, interning wrap)."""
+    msgs = records.mapInPandas(make_msg_encoder(config),
+                               schema=MSG_RECORDS_SCHEMA)
+    return _encode(_premerge_props_stage(msgs, props, config, num_partitions,
                                          by_range, metrics))
 
 
@@ -2810,22 +2595,20 @@ WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
 
 
 def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
-                salted: bool, premerge: bool | str, by_range: bool,
+                salted: bool, by_range: bool,
                 metrics: PipelineMetrics | None = None,
                 emit: Callable[..., None] | None = None):
     """The one layout dispatcher behind both sinks -> (bounds, tile-sorted
     reduce input, reduce-side encoder, persisted map-side frame or None).
 
-    Rejects the layout combinations no encoder serves, then settles
-    ``bounds`` and ``premerge='auto'`` by one rule: when ``bounds`` is None
-    the bounds scan also averages the WKB length of every feature and
-    'auto' picks premerge at >= PREMERGE_AUTO_WKB_BYTES; with caller
-    bounds, 'auto' samples the first 2048 rows (``_resolve_premerge``).
-    Salting keeps the WKB layout. The choice only pins WHICH plan runs —
-    archive bytes are identical on every layout. ``emit(phase, kind,
-    **info)``, when given, receives the 'bounds' start/complete events,
-    which bracket the bounds scan alone (not the option checks, the
-    2048-row sample or hot-tile detection).
+    Rejects the option combinations no encoder serves, settles ``bounds``
+    (one scan when None) and picks the layout: premerge, premerge+props
+    with ``config.write_properties``, or the salted two-phase encode when
+    ``salted`` and ``detect_hot_tiles`` finds a hot tile (without one,
+    salting would only re-wrap every tile, so premerge runs). Archive
+    bytes are identical on every layout. ``emit(phase, kind, **info)``,
+    when given, receives the 'bounds' start/complete events, which bracket
+    the bounds scan alone (not the option checks or hot-tile detection).
 
     ``by_range`` asks for a range exchange on tile_id (globally
     tile-ordered partitions, as the single-writer stream needs). Range
@@ -2840,12 +2623,6 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
     from pyspark import StorageLevel
 
     props = config.write_properties
-    if salted and premerge is True:
-        raise ValueError(
-            "salted=True uses the WKB-shuffling two-phase encode and cannot "
-            "honor premerge=True (premerge makes salting moot — drop "
-            "salted, or leave premerge='auto')."
-        )
     if props and salted:
         raise ValueError(
             "write_properties=True uses the tag-interning encoder and "
@@ -2857,50 +2634,33 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
             "(array<struct<key string, val binary>>) — build it with "
             "encode_props_column(df, cols)"
         )
-    if salted:
-        premerge = False
     if emit is not None:
         emit("bounds", "start")
     if bounds is None:
-        agg_cols = [F.min("lng_min"), F.min("lat_min"),
-                    F.max("lng_max"), F.max("lat_max")]
-        if premerge == "auto":
-            agg_cols.append(F.avg(F.length("wkb")))
-        row = features.agg(*agg_cols).collect()[0]
-        bounds = WORLD_BOUNDS if row[0] is None else tuple(row[:4])
-        if premerge == "auto":
-            premerge = row[4] is not None and row[4] >= PREMERGE_AUTO_WKB_BYTES
+        row = features.agg(F.min("lng_min"), F.min("lat_min"),
+                           F.max("lng_max"), F.max("lat_max")).collect()[0]
+        bounds = WORLD_BOUNDS if row[0] is None else tuple(row)
     if emit is not None:
         emit("bounds", "complete", bounds=bounds)
-    premerge = _resolve_premerge(features, premerge)
 
-    if premerge:
-        records = _premerge_records(features, config, metrics, props)
-    else:
+    hot = detect_hot_tiles(features, config) if salted else []
+    if hot:
         records = fanout_records(features, config, metrics)
+    else:
+        records = _premerge_records(features, config, metrics)
     cached = None
     if by_range:
         records = cached = records.persist(StorageLevel.DISK_ONLY)
     try:
-        if props and premerge:
-            stage = _premerge_props_stage(records, config, by_range=by_range,
-                                          metrics=metrics)
+        if hot:
+            stage = _salted_stage(records, config, hot_tile_ids=hot,
+                                  metrics=metrics, by_range=by_range)
         elif props:
-            stage = _wkb_props_stage(records,
-                                     features.select("feature_id", "props"),
-                                     config, metrics=metrics,
-                                     by_range=by_range)
-        elif premerge:
+            stage = _premerge_props_stage(records, features, config,
+                                          by_range=by_range, metrics=metrics)
+        else:
             stage = _premerge_stage(records, config, by_range=by_range,
                                     metrics=metrics)
-        elif salted:
-            stage = _salted_stage(records, config,
-                                  hot_tile_ids=detect_hot_tiles(features,
-                                                                config),
-                                  metrics=metrics, by_range=by_range)
-        else:
-            stage = _wkb_stage(records, config, metrics=metrics,
-                               by_range=by_range)
     except BaseException:
         if cached is not None:
             cached.unpersist()
@@ -2912,8 +2672,7 @@ def convert_sharded(features: DataFrame, output_path: str,
                     config: TilerConfig | None = None,
                     bounds: tuple[float, float, float, float] | None = None,
                     shard_dir: str | None = None,
-                    salted: bool = False,
-                    premerge: bool | str = "auto") -> dict:
+                    salted: bool = False) -> dict:
     """Scale-out sink: executors write per-range shard files (compressed
     blobs, in-shard dedup), the driver concatenates live byte ranges and
     writes the directory — output byte-identical to ``convert``'s
@@ -2921,12 +2680,10 @@ def convert_sharded(features: DataFrame, output_path: str,
 
     This removes the two driver bottlenecks of the streaming sink named in
     the round-1 review: per-blob gzip on the driver, and all tile bytes
-    crossing one NIC. The layout (premerge, premerge+props, WKB, WKB+props
-    or salted merge) comes from the dispatcher ``convert`` shares: with
-    ``bounds=None`` the bounds scan also measures the mean WKB length of
-    all features, and ``premerge='auto'`` picks premerge when it is at
-    least PREMERGE_AUTO_WKB_BYTES (caller-passed bounds: the first 2048
-    rows). The exchange is a hash shuffle on tile_id with no persist, so
+    crossing one NIC. The layout (premerge, premerge+props or, with
+    ``salted`` and a hot tile, the salted merge) comes from the dispatcher
+    ``convert`` shares. The exchange is a hash shuffle on tile_id with no
+    persist, so
     the fan-out runs exactly once; global tile order is restored later on
     the 40-byte entry rows. The reduce stage is ONE Python pass per task:
     the layout's encoder feeds ``_make_shard_writer`` inside the same
@@ -2968,7 +2725,7 @@ def convert_sharded(features: DataFrame, output_path: str,
             "shard_dir= on shared storage (visible to executors and driver)."
         )
     bounds, sorted_in, encoder, _ = _tile_stage(
-        features, config, bounds, salted, premerge, by_range=False)
+        features, config, bounds, salted, by_range=False)
     codec = P.CODEC_BY_NAME[config.tile_compression]
     expected_backend = _expected_codec_backend(features, codec)
     own_dir = shard_dir is None
@@ -2992,16 +2749,13 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
              bounds: tuple[float, float, float, float] | None = None,
              salted: bool = False,
              progress: Callable[[ProgressEvent], None] | None = None,
-             progress_poll_sec: float = 1.0,
-             premerge: bool | str = "auto") -> dict:
+             progress_poll_sec: float = 1.0) -> dict:
     """End-to-end: features DataFrame -> single .pmtiles at output_path.
 
     Returns summary stats (incl. accumulator-backed per-stage row counts).
-    The layout comes from the dispatcher ``convert_sharded`` shares: with
-    ``bounds=None`` the bounds scan also measures the mean WKB length of
-    all features, and ``premerge='auto'`` picks premerge when it is at
-    least PREMERGE_AUTO_WKB_BYTES (caller-passed bounds: the first 2048
-    rows). The exchange is by range on tile_id, with the map-side output
+    The layout (premerge, premerge+props or, with ``salted`` and a hot
+    tile, the salted merge) comes from the dispatcher ``convert_sharded``
+    shares. The exchange is by range on tile_id, with the map-side output
     persisted DISK_ONLY so the range sampling does not re-run the fan-out.
     On the premerge layouts an under-partitioned input is first spread
     over every task slot, as on every other premerge plan. Tiles stream
@@ -3026,7 +2780,7 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     config = (config or TilerConfig()).validate()
     metrics = PipelineMetrics.create(features.sparkSession)
     bounds, sorted_in, encoder, cached = _tile_stage(
-        features, config, bounds, salted, premerge, by_range=True,
+        features, config, bounds, salted, by_range=True,
         metrics=metrics, emit=emit)
     stop_poll = threading.Event()
     poller = None

@@ -121,7 +121,7 @@ def test_fanout_e2e_with_collection_input(spark, tmp_path):
     import pandas as pd
 
     from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.pipeline import encode_tiles, fanout_records
+    from gpq_tiles_spark.pipeline import encode_tiles_premerge
     from gpq_tiles_spark.sources.geoparquet import read_geoparquet
 
     gc = (G.GEOMETRYCOLLECTION, [
@@ -134,6 +134,6 @@ def test_fanout_e2e_with_collection_input(spark, tmp_path):
     rows.to_parquet(path)
     feats = read_geoparquet(spark, path)
     cfg = TilerConfig(min_zoom=4, max_zoom=4, shuffle_partitions=2)
-    tiles = encode_tiles(fanout_records(feats, cfg), cfg).collect()
+    tiles = encode_tiles_premerge(feats, cfg).collect()
     assert len(tiles) >= 2  # point tile + polygon tile(s)
     assert all(t.n_features >= 1 for t in tiles)

@@ -130,3 +130,27 @@ def test_vectorized_assembly_matches_reference_layout():
     ref_pt_msg = MF._point_feature_bytes(7, zzx, zzy)
     framed = b"\x12" + MF._varint(len(ref_pt_msg)) + ref_pt_msg
     assert framed in mvt
+
+
+def test_record_msgs_arrow_binary_column():
+    """encode_record_msgs returns one Arrow binary array over its message
+    buffer (record i = buffer[off[i]:off[i+1]]), empty input included, and
+    refuses offsets past int32 instead of wrapping them."""
+    import pyarrow as pa
+    import pytest
+
+    tid = np.full(3, int(H.tile_id(3, np.array([1]), np.array([2]))[0]),
+                  dtype=np.int64)
+    fid = np.arange(3, dtype=np.int64)
+    wkbs = np.array([G.to_wkb((G.POINT, (-130.0 + i, 40.0)))
+                     for i in range(3)], dtype=object)
+    msgs = mvt_fast.encode_record_msgs(tid, fid, wkbs, 4096)
+    arr = pa.array(msgs)
+    assert arr.type == pa.binary() and len(arr) == 3
+    body = mvt_fast.encode_sorted_runs(tid, fid, wkbs, "features", 4096)
+    assert b"".join(msgs.tolist()) in body["mvt"][0]
+    empty = mvt_fast.encode_record_msgs(tid[:0], fid[:0], wkbs[:0], 4096)
+    assert pa.array(empty).type == pa.binary() and len(empty) == 0
+    with pytest.raises(OverflowError):
+        mvt_fast._binary_array(np.array([0, 2**31], dtype=np.int64),
+                               np.empty(0, dtype=np.uint8))

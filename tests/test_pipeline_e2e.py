@@ -21,7 +21,9 @@ from gpq_tiles_spark.kernels import pmtiles as P
 from gpq_tiles_spark.kernels import simplify as SK
 from gpq_tiles_spark.kernels import tile_math as T
 from gpq_tiles_spark.kernels import validate as VK
-from gpq_tiles_spark.pipeline import convert, encode_tiles, fanout_records
+from gpq_tiles_spark.pipeline import convert, encode_tiles_premerge, fanout_records
+
+from tests.reference_tiles import reference_archive
 
 
 def scalar_phase1(features, config: TilerConfig):
@@ -136,7 +138,7 @@ def test_encode_tiles_grouping(spark, docs_table, small_config):
     feats_df = extract_features(spark.read.parquet(docs_table))
     records = fanout_records(feats_df, small_config)
     n_records = records.count()
-    tiles = encode_tiles(records, small_config).collect()
+    tiles = encode_tiles_premerge(feats_df, small_config).collect()
     assert sum(t.n_features for t in tiles) == n_records
     tids = [t.tile_id for t in tiles]
     assert len(tids) == len(set(tids))
@@ -259,9 +261,7 @@ def test_encode_single_tile_matches_pipeline(spark, docs_table, small_config):
     from gpq_tiles_spark.pipeline import encode_single_tile
 
     feats_df = extract_features(spark.read.parquet(docs_table))
-    tiles = encode_tiles(
-        fanout_records(feats_df, small_config), small_config
-    ).collect()
+    tiles = encode_tiles_premerge(feats_df, small_config).collect()
     # pick a mid-zoom tile with several features
     cand = [t for t in tiles if t.z == 6 and t.n_features >= 2]
     target = cand[0] if cand else tiles[len(tiles) // 2]
@@ -387,10 +387,10 @@ def test_antimeridian_and_polar_parity(spark):
 
 def test_premerge_paths_byte_identical(spark, docs_table, tmp_path):
     """Round-3 premerge encode: map-side per-record message encode +
-    reduce-side wrap must equal the single-writer archive byte-for-byte,
-    on BOTH the premerge default and the legacy WKB-shuffling fallback,
-    including under tiny Arrow batches (cross-batch run carries through
-    the list-pend wrap path)."""
+    reduce-side wrap on the sharded sink must equal the single-writer
+    archive byte-for-byte, including under tiny Arrow batches (cross-batch
+    run carries through the list-pend wrap path), and both must equal the
+    driver-side WKB encode of the same records."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert, convert_sharded
 
@@ -409,16 +409,13 @@ def test_premerge_paths_byte_identical(spark, docs_table, tmp_path):
                     "spark.sql.execution.arrow.maxRecordsPerBatch",
                     str(batch_rows))
             p = str(tmp_path / f"premerge_{batch_rows}.pmtiles")
-            convert_sharded(feats, p, cfg, premerge=True)
+            convert_sharded(feats, p, cfg)
             with open(p, "rb") as f:
                 assert f.read() == ref, f"premerge batch={batch_rows}"
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
-    p_wkb = str(tmp_path / "wkbpath.pmtiles")
-    convert_sharded(feats, p_wkb, cfg, premerge=False)
-    with open(p_wkb, "rb") as f:
-        assert f.read() == ref
+    assert reference_archive(feats, cfg, str(tmp_path / "ref.pmtiles")) == ref
 
 
 def test_encode_record_msgs_matches_sorted_runs_slices():
@@ -472,47 +469,17 @@ def test_encode_record_msgs_matches_sorted_runs_slices():
     assert list(wrapped["n_features"]) == list(cols["n_features"])
 
 
-def test_premerge_auto_resolution(spark, docs_table):
-    """'auto' picks the WKB-shuffling layout for tiny-geometry corpora and
-    the premerge layout for coordinate-dense ones (512 B sampled mean)."""
-    import numpy as np
-    import pandas as pd
-
-    from gpq_tiles_spark.kernels import geom as G
-    from gpq_tiles_spark.pipeline import _resolve_premerge
-
-    feats = extract_features(spark.read.parquet(docs_table))
-    assert _resolve_premerge(feats, "auto") is False  # quads/points corpus
-    assert _resolve_premerge(feats, True) is True
-    assert _resolve_premerge(feats, False) is False
-
-    ring = np.column_stack([
-        np.cos(np.linspace(0, 2 * np.pi, 600)),
-        np.sin(np.linspace(0, 2 * np.pi, 600)),
-    ])
-    big = G.to_wkb((G.POLYGON, [ring]))
-    pdf = pd.DataFrame({
-        "feature_id": [1, 2], "doc_id": ["a", "b"], "span_offset": [0, 0],
-        "wkb": [big, big], "geom_type": [G.POLYGON] * 2,
-        "lng_min": [-1.0, -1.0], "lat_min": [-1.0, -1.0],
-        "lng_max": [1.0, 1.0], "lat_max": [1.0, 1.0],
-    })
-    dense = spark.createDataFrame(pdf)
-    assert _resolve_premerge(dense, "auto") is True
-
-
 def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
-    """A corpus that RESOLVES to premerge under 'auto' (600-vertex rings)
-    must produce identical bytes through convert (range-partitioned
-    premerge + persist), convert_sharded (hash premerge + distributed
-    finalize), and the forced WKB layout."""
+    """A vertex-dense corpus (400-700-vertex rings) must produce identical
+    bytes through convert (range-partitioned premerge + persist),
+    convert_sharded (hash premerge + distributed finalize), and the
+    driver-side WKB encode."""
     import numpy as np
     import pandas as pd
 
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels import geom as G
-    from gpq_tiles_spark.pipeline import (_resolve_premerge, convert,
-                                          convert_sharded)
+    from gpq_tiles_spark.pipeline import convert, convert_sharded
 
     rng = np.random.default_rng(77)
     rows = []
@@ -534,17 +501,14 @@ def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
             "lat_max": float(ring[:, 1].max()),
         })
     feats = spark.createDataFrame(pd.DataFrame(rows))
-    assert _resolve_premerge(feats, "auto") is True
     cfg = TilerConfig(min_zoom=0, max_zoom=8, shuffle_partitions=4)
 
     p1 = str(tmp_path / "single.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
-    p3 = str(tmp_path / "wkb.pmtiles")
-    s1 = convert(feats, p1, cfg)                      # auto -> premerge+range
-    s2 = convert_sharded(feats, p2, cfg)              # auto -> premerge+hash
-    convert_sharded(feats, p3, cfg, premerge=False)   # forced WKB layout
+    s1 = convert(feats, p1, cfg)                      # premerge + range
+    s2 = convert_sharded(feats, p2, cfg)              # premerge + hash
     assert s1["tiles"] == s2["tiles"] > 0
-    with open(p1, "rb") as f1, open(p2, "rb") as f2, open(p3, "rb") as f3:
+    with open(p1, "rb") as f1, open(p2, "rb") as f2:
         b1 = f1.read()
         assert b1 == f2.read()
-        assert b1 == f3.read()
+    assert b1 == reference_archive(feats, cfg, str(tmp_path / "ref.pmtiles"))

@@ -51,13 +51,14 @@ def test_pip_join_broadcasts_small_side(spark):
 def test_pipeline_has_single_wide_shuffle(spark, docs_table):
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
-    from gpq_tiles_spark.pipeline import encode_tiles, fanout_records
+    from gpq_tiles_spark.pipeline import encode_tiles_premerge
 
     cfg = TilerConfig(min_zoom=0, max_zoom=4, shuffle_partitions=4)
-    tiles = encode_tiles(fanout_records(
-        extract_features(spark.read.parquet(docs_table)), cfg), cfg)
+    tiles = encode_tiles_premerge(
+        extract_features(spark.read.parquet(docs_table)), cfg, by_range=True)
     plan = _plan(tiles)
-    # exactly one exchange: the range partition by tile_id
+    # exactly one keyed exchange: the range partition by tile_id (the
+    # under-partitioned input may add a round-robin spread before the map)
     assert plan.count("Exchange rangepartitioning") == 1
     assert plan.count("Exchange hashpartitioning") == 0
     # the in-partition sort for (tile_id, feature_id)
@@ -117,10 +118,11 @@ def test_knn_distributed_no_cartesian(spark):
 
 
 def test_premerge_props_single_wide_shuffle(spark, docs_table):
-    """Round 5: the premerge property layout must keep the propertyless
-    premerge plan shape — ONE hash exchange on tile_id carrying the framed
-    messages + props, no join, no extra sort exchange (the props travel on
-    the feature row, so there is nothing to join back)."""
+    """The premerge property layout keeps the propertyless premerge plan
+    shape on the message records: the fan-out reads no props, the props
+    join back on feature_id without shuffling the messages (the one
+    feature_id exchange is the props table's min() aggregation), and ONE
+    hash exchange on tile_id carries messages + props to the encoder."""
     from pyspark.sql import functions as F
 
     from gpq_tiles_spark.config import TilerConfig
@@ -137,7 +139,10 @@ def test_premerge_props_single_wide_shuffle(spark, docs_table):
                       write_properties=True)
     tiles = encode_tiles_premerge_props(featp, cfg)
     plan = _plan(tiles)
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("Exchange hashpartitioning(tile_id") == 1
+    assert plan.count("Exchange hashpartitioning(feature_id") == 1
     assert plan.count("Exchange rangepartitioning") == 0
-    assert "Join" not in plan
+    assert "Join" in plan
+    fanout = [ln for ln in plan.splitlines() if "fanout_encoded(" in ln]
+    assert len(fanout) == 1 and "props" not in fanout[0]
     assert "Sort [tile_id" in plan and "feature_id" in plan

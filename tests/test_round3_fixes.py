@@ -367,21 +367,6 @@ def test_convert_sharded_salted_byte_identical(spark, docs_table, tmp_path):
         assert f1.read() == f2.read()
 
 
-def test_salted_premerge_conflict_raises(spark, docs_table, tmp_path):
-    from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.extract import extract_features
-    from gpq_tiles_spark.pipeline import convert, convert_sharded
-
-    feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=4)
-    with pytest.raises(ValueError, match="premerge"):
-        convert_sharded(feats, str(tmp_path / "x.pmtiles"), cfg,
-                        salted=True, premerge=True)
-    with pytest.raises(ValueError, match="premerge"):
-        convert(feats, str(tmp_path / "y.pmtiles"), cfg,
-                salted=True, premerge=True)
-
-
 def test_siphash_pad_bucketing_parity(monkeypatch):
     """Force the chunked lockstep path with a tiny budget: results must be
     bit-identical to the scalar hash for every lane."""

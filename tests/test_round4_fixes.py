@@ -64,13 +64,14 @@ def test_knn_join_probe_guard(spark, monkeypatch):
 def test_max_tile_bytes_caps_mega_tile(spark, docs_table, tmp_path):
     """VERDICT r3 item 5: an oversized low-zoom tile is deterministically
     thinned to the byte budget, the cap is recorded in metrics, the archive
-    still decodes, and all four encode layouts (WKB, premerge, sharded,
-    salted phase-B) produce byte-identical capped archives."""
+    still decodes, and the single-writer, sharded and salted phase-B
+    archives equal the driver-side WKB encode byte for byte."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.kernels.mvt import decode_tile
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader, read_tile
     from gpq_tiles_spark.pipeline import convert, convert_sharded
+    from tests.reference_tiles import reference_archive
 
     feats = extract_features(spark.read.parquet(docs_table)).cache()
     budget = 2048
@@ -87,45 +88,28 @@ def test_max_tile_bytes_caps_mega_tile(spark, docs_table, tmp_path):
     assert len(raw_unc) > budget  # non-vacuous: z0 really is over budget
     assert stats_unc["metrics"]["tiles_capped"] == 0
 
-    p_wkb = str(tmp_path / "wkb.pmtiles")
     p_pm = str(tmp_path / "pm.pmtiles")
     p_sh = str(tmp_path / "sh.pmtiles")
     p_sa = str(tmp_path / "sa.pmtiles")
-    stats = convert(feats, p_wkb, cfg(), premerge=False)
-    convert(feats, p_pm, cfg(), premerge=True)
+    stats = convert(feats, p_pm, cfg())
     convert_sharded(feats, p_sh, cfg())
     convert(feats, p_sa, cfg(hot_tile_threshold=1, salt_buckets=4),
             salted=True)
 
     assert stats["metrics"]["tiles_capped"] >= 1
     assert stats["metrics"]["records_capped"] >= 1
-    b = open(p_wkb, "rb").read()
+    b = reference_archive(feats, cfg(), str(tmp_path / "wkb.pmtiles"))
     assert b == open(p_pm, "rb").read()
     assert b == open(p_sh, "rb").read()
     assert b == open(p_sa, "rb").read()
 
-    raw = read_tile(p_wkb, 0, 0, 0)
+    raw = read_tile(p_pm, 0, 0, 0)
     # layer head/tail overhead on top of the record-body budget is ~30 B
     assert len(raw) <= budget + 64
-    r = PMTilesReader(p_wkb)
+    r = PMTilesReader(p_pm)
     n_feats = 0
     for tid in r.tile_ids():
         lay = decode_tile(r.get_tile_bytes(tid))[0]
         n_feats += len(lay["features"])
     assert n_feats > 0
     feats.unpersist()
-
-
-def test_resolve_premerge_deterministic(spark):
-    """Partition-0 sampling: same input layout -> same auto choice on
-    repeated calls (ADVICE r3 item 5)."""
-    from gpq_tiles_spark.pipeline import _resolve_premerge
-
-    df = spark.createDataFrame(
-        [(i, bytearray(b"x" * (2000 if i % 7 == 0 else 10))) for i in range(500)],
-        "feature_id long, wkb binary",
-    ).repartition(4, "feature_id")
-    choices = {_resolve_premerge(df, "auto") for _ in range(3)}
-    assert len(choices) == 1
-    assert _resolve_premerge(df, True) is True
-    assert _resolve_premerge(df, False) is False

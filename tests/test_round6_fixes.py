@@ -1,11 +1,9 @@
 """Round-6 regression tests for the ADVICE r5 findings and VERDICT r5
 prescriptions on the property path.
 
-Covers: nullable-Float64 property packing (ADVICE 4), ordering-minimum
-duplicate-id resolution on the premerge layout (ADVICE 2), the
-post-remap budget re-check on capped property tiles (ADVICE 1), the
-map-side -y/-x/-X filter (VERDICT item 2: excluded tags never cross the
-shuffle), and byte parity of the vectorized tag interning.
+Covers: nullable-Float64 property packing (ADVICE 4), the post-remap
+budget re-check on capped property tiles (ADVICE 1), the -y/-x/-X filter
+end to end, and byte parity of the vectorized tag interning.
 """
 
 import numpy as np
@@ -19,8 +17,9 @@ from gpq_tiles_spark.pipeline import (
     _encode_props_tile,
     _pack_props_batch,
     encode_props_column,
-    make_fanout_encoded_props,
 )
+
+from tests.reference_tiles import reference_archive
 
 
 def _entries(rows):
@@ -44,71 +43,76 @@ def test_pack_props_batch_nullable_float64():
     assert rows[2] != rows[3]
 
 
-def _feature_pdf(rows):
-    """rows: (feature_id, lng, lat, props). Point-feature batch in the
-    fan-out's input shape."""
-    recs = {k: [] for k in ("feature_id", "doc_id", "span_offset", "wkb",
-                            "geom_type", "lng_min", "lat_min", "lng_max",
-                            "lat_max", "props")}
-    for fid, lng, lat, props in rows:
-        recs["feature_id"].append(fid)
-        recs["doc_id"].append(str(fid))
-        recs["span_offset"].append(0)
-        recs["wkb"].append(G.to_wkb((G.POINT, (lng, lat))))
-        recs["geom_type"].append(G.POINT)
-        recs["lng_min"].append(lng)
-        recs["lat_min"].append(lat)
-        recs["lng_max"].append(lng)
-        recs["lat_max"].append(lat)
-        recs["props"].append(props)
-    return pd.DataFrame(recs)
-
-
 def _props(*kv):
     return [{"key": k, "val": encode_value(v)} for k, v in kv]
 
 
-def test_premerge_duplicate_ids_take_ordering_minimum():
-    """Duplicate feature_ids in one batch must resolve to the ORDERING-
-    MINIMUM props (the WKB-layout join's F.min rule) regardless of row
-    order, with null props losing to non-null (ADVICE r5)."""
-    cfg = TilerConfig(min_zoom=2, max_zoom=2, write_properties=True)
-    gen = make_fanout_encoded_props(cfg)
+def _dup_id_props(spark, tmp_path, cases, **cfg_kw):
+    """Convert point features whose ids each come twice, one case per id:
+    ``cases[i]`` is the (first row, second row) props of id 7+i. Returns
+    {feature_id: set of decoded props tuples} over every tile."""
+    from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
+    from gpq_tiles_spark.pipeline import convert
+
+    rows = []
+    for i, pair in enumerate(cases):
+        lng, lat = 10.0 + 5.0 * i, 40.0
+        wkb = bytearray(G.to_wkb((G.POINT, (lng, lat))))
+        for p in pair:
+            rows.append((7 + i, str(i), 0, wkb, G.POINT, lng, lat, lng, lat,
+                         p))
+    feats = spark.createDataFrame(
+        rows,
+        "feature_id long, doc_id string, span_offset int, wkb binary, "
+        "geom_type int, lng_min double, lat_min double, lng_max double, "
+        "lat_max double, props array<struct<key:string,val:binary>>",
+    ).repartition(4)
+    out = str(tmp_path / "dup.pmtiles")
+    convert(feats, out, TilerConfig(min_zoom=2, max_zoom=2,
+                                    shuffle_partitions=4,
+                                    write_properties=True, **cfg_kw))
+    got: dict = {}
+    r = PMTilesReader(out)
+    for tid in r.tile_ids():
+        lay = decode_tile(r.get_tile_bytes(tid))[0]
+        for f in lay["features"]:
+            p = feature_properties(f, lay["keys"], lay["values"])
+            got.setdefault(f["id"], set()).add(tuple(sorted(p.items())))
+    r.close()
+    return got
+
+
+def test_premerge_duplicate_ids_take_ordering_minimum(spark, tmp_path):
+    """Duplicate feature_ids must resolve to the ORDERING-MINIMUM props
+    (the props join's F.min rule) regardless of row order, with null props
+    losing to non-null (ADVICE r5)."""
     pa = _props(("name", "aa"))
     pb = _props(("name", "bb"))
-    for order in ([pb, pa], [pa, pb], [None, pa], [pa, None]):
-        pdf = _feature_pdf([(7, 10.0, 40.0, order[0]),
-                            (7, 10.0, 40.0, order[1])])
-        frames = list(gen(iter([pdf])))
-        got = {tuple((e["key"], bytes(e["val"])) for e in p)
-               for f in frames for p in f["props"].tolist()}
-        want = tuple((e["key"], bytes(e["val"])) for e in pa)
-        assert got == {want}, f"order {order} picked {got}"
+    got = _dup_id_props(spark, tmp_path,
+                        [(pb, pa), (pa, pb), (None, pa), (pa, None)])
+    assert got == {7 + i: {(("name", "aa"),)} for i in range(4)}, got
 
 
-def test_premerge_filter_applied_before_shuffle():
-    """-y/-x/-X runs once per FEATURE on the map side: the frames that
-    would cross the shuffle must already exclude the filtered keys
-    (VERDICT r5 round-6 item 2)."""
-    cfg = TilerConfig(min_zoom=0, max_zoom=4, write_properties=True,
-                      exclude_properties=["fat"])
-    gen = make_fanout_encoded_props(cfg)
-    pdf = _feature_pdf([
-        (1, 10.0, 40.0, _props(("name", "a"), ("fat", "x" * 64))),
-        (2, 12.0, 41.0, _props(("fat", "y" * 64))),
-    ])
-    frames = list(gen(iter([pdf])))
-    assert frames, "fan-out emitted nothing"
-    keys = {e["key"] for f in frames for p in f["props"].tolist()
-            if p is not None for e in p}
-    assert keys == {"name"}
+def test_premerge_duplicate_resolution_on_raw_props_under_filter(
+        spark, tmp_path):
+    """The duplicate-id winner must be chosen on the RAW props (F.min runs
+    in the join, before the encoder's filter) even when the -y/-x/-X
+    filter would FLIP the ordering between the colliding rows — then the
+    filter applies to the winner. Raw: pa < pb (key 'a' value '1' < '2');
+    filtered (drop 'a'): filter(pb)=[(b,1)] < filter(pa)=[(z,9)].
+    Filtering first would pick pb; the winner must be filter(pa)."""
+    pa = _props(("a", "1"), ("z", "9"))
+    pb = _props(("a", "2"), ("b", "1"))
+    got = _dup_id_props(spark, tmp_path, [(pa, pb), (pb, pa)],
+                        exclude_properties=["a"])
+    assert got == {7: {(("z", "9"),)}, 8: {(("z", "9"),)}}, got
 
 
 def test_premerge_props_byte_identical_with_filters(spark, tmp_path):
-    """End-to-end: with a property filter configured, the premerge layout
-    (filter map-side) and the WKB layout (filter at encode) must still
-    produce byte-identical archives — the filter is per-feature and
-    idempotent, so moving it across the shuffle cannot change bytes."""
+    """End-to-end: with a property filter configured, ``convert`` (props
+    join, filter in the reduce-side encoder) must produce the archive of
+    the driver-side WKB props encode byte for byte, and the filtered keys
+    must be gone from every tile."""
     from gpq_tiles_spark.pipeline import convert
 
     rows = []
@@ -128,11 +132,9 @@ def test_premerge_props_byte_identical_with_filters(spark, tmp_path):
     cfg = TilerConfig(min_zoom=2, max_zoom=4, shuffle_partitions=4,
                       write_properties=True,
                       exclude_properties=["height"])
-    p_wkb = str(tmp_path / "wkb.pmtiles")
     p_pre = str(tmp_path / "pre.pmtiles")
-    convert(feats, p_wkb, cfg, premerge=False)
-    convert(feats, p_pre, cfg, premerge=True)
-    a = open(p_wkb, "rb").read()
+    convert(feats, p_pre, cfg)
+    a = reference_archive(feats, cfg, str(tmp_path / "wkb.pmtiles"))
     assert a == open(p_pre, "rb").read()
     # and the filter actually did something
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
@@ -289,29 +291,6 @@ def test_intern_vectorized_matches_packed_u32():
             for it in f:
                 want += [kidx[it["key"]], vidx[bytes(it["val"])]]
             assert tb == _packed_u32(2, want)
-
-
-def test_premerge_duplicate_resolution_on_raw_props_under_filter():
-    """The duplicate-id winner must be chosen on the RAW props (the WKB
-    layout's F.min runs before its reduce-side filter) even when the
-    -y/-x/-X filter would FLIP the ordering between the colliding rows —
-    then the filter applies to the winner. Raw: pa < pb (key 'a' value
-    '1' < '2'); filtered (drop 'a'): filter(pb)=[(b,1)] < filter(pa)=
-    [(z,9)]. Filtering first would pick pb and diverge from the WKB
-    layout; the winner must be filter(pa)."""
-    cfg = TilerConfig(min_zoom=2, max_zoom=2, write_properties=True,
-                      exclude_properties=["a"])
-    gen = make_fanout_encoded_props(cfg)
-    pa = _props(("a", "1"), ("z", "9"))
-    pb = _props(("a", "2"), ("b", "1"))
-    want = tuple((e["key"], bytes(e["val"])) for e in _props(("z", "9")))
-    for order in ([pa, pb], [pb, pa]):
-        pdf = _feature_pdf([(7, 10.0, 40.0, order[0]),
-                            (7, 10.0, 40.0, order[1])])
-        frames = list(gen(iter([pdf])))
-        got = {tuple((e["key"], bytes(e["val"])) for e in p)
-               for f in frames for p in f["props"].tolist()}
-        assert got == {want}, f"order picked {got}"
 
 
 def test_capped_props_tile_with_dead_records_terminates():

@@ -7,11 +7,18 @@ from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.extract import extract_features
 from gpq_tiles_spark.kernels import simplify as SK
 from gpq_tiles_spark.pipeline import (
+    convert,
     detect_hot_tiles,
-    encode_tiles,
+    encode_tiles_premerge,
     encode_tiles_salted,
     fanout_records,
 )
+
+from tests.reference_tiles import reference_tiles
+
+
+def _tile_bytes(tiles) -> dict:
+    return {int(t.tile_id): (bytes(t.mvt), int(t.n_features)) for t in tiles}
 
 
 def test_salted_matches_single_phase(spark, docs_table):
@@ -23,15 +30,36 @@ def test_salted_matches_single_phase(spark, docs_table):
     hot = detect_hot_tiles(feats, cfg)
     assert hot, "low threshold must flag hot tiles"
 
-    plain = {r.tile_id: (bytes(r.mvt), r.n_features)
-             for r in encode_tiles(records, cfg).collect()}
-    salted = {r.tile_id: (bytes(r.mvt), r.n_features)
-              for r in encode_tiles_salted(records, cfg, hot_tile_ids=hot).collect()}
+    plain = _tile_bytes(reference_tiles(feats, cfg).itertuples())
+    salted = _tile_bytes(
+        encode_tiles_salted(records, cfg, hot_tile_ids=hot).collect())
 
     assert set(plain) == set(salted)
     diff = [t for t in plain if plain[t] != salted[t]]
     assert diff == [], f"byte mismatch for tiles {diff[:5]}"
     records.unpersist()
+
+
+def test_salted_without_hot_tiles_matches_unsalted(spark, docs_table,
+                                                   tmp_path):
+    """With no hot tile, ``salted=True`` writes the unsalted archive, and
+    the salted encode over an empty hot list (every tile salt 0) gives
+    the premerge tiles."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
+                      hot_tile_threshold=10**9)
+    assert detect_hot_tiles(feats, cfg) == []
+
+    p_plain = str(tmp_path / "plain.pmtiles")
+    p_salted = str(tmp_path / "salted.pmtiles")
+    convert(feats, p_plain, cfg)
+    convert(feats, p_salted, cfg, salted=True)
+    with open(p_plain, "rb") as a, open(p_salted, "rb") as b:
+        assert a.read() == b.read()
+
+    cold = _tile_bytes(encode_tiles_salted(fanout_records(feats, cfg), cfg,
+                                           hot_tile_ids=[]).collect())
+    assert cold == _tile_bytes(encode_tiles_premerge(feats, cfg).collect())
 
 
 def test_simplify_in_tile_coords():
@@ -74,24 +102,27 @@ def _mega_tile_records(n: int = 400):
                            ignore_index=True)
 
 
-@pytest.mark.parametrize("encoder", ["wkb", "salted_merge"])
+@pytest.mark.parametrize("encoder", ["premerge", "salted_merge"])
 def test_run_carry_one_row_batches_match_one_batch(encoder):
     """A multi-hundred-record tile arriving as 1-row Arrow batches encodes
-    to the same bytes as the whole tile in one batch, on the WKB encoder
-    and on the salted merge encoder (whose input rows are the per-salt
-    partials of phase A)."""
+    to the same bytes as the whole tile in one batch, on the premerge wrap
+    encoder (whose input rows are the map-side messages) and on the salted
+    merge encoder (whose input rows are the per-salt partials of phase A)."""
     import pandas as pd
 
     from gpq_tiles_spark.pipeline import (
-        make_encoder,
         make_merge_encoder,
+        make_msg_encoder,
         make_partial_encoder,
+        make_wrap_encoder,
     )
 
     cfg = TilerConfig(min_zoom=0, max_zoom=6, salt_buckets=512)
     pdf = _mega_tile_records()
-    if encoder == "wkb":
-        encode = make_encoder(cfg)
+    if encoder == "premerge":
+        pdf = pd.concat(list(make_msg_encoder(cfg)(iter([pdf]))),
+                        ignore_index=True)
+        encode = make_wrap_encoder(cfg)
     else:
         # one salt bucket per feature: the mega tile reaches phase B as
         # hundreds of single-record partials

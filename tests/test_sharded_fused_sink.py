@@ -5,10 +5,10 @@ the input-spread guard.
 writer in ONE mapInPandas (``writer(encoder(batches))``), with the shard
 named by the task's partition id. These tests pin the archive bytes of
 every layout on both sinks against one single-writer ``convert``
-reference on input that arrives with fewer partitions than task slots,
-the single Python map node after the tile exchange, the release of every
-persisted frame when a sink fails, and the slot-count rule of
-``spread_small_input``.
+reference and against the driver-side WKB encode, on input that arrives
+with fewer partitions than task slots; the single Python map node after
+the tile exchange, the release of every persisted frame when a sink
+fails, and the slot-count rule of ``spread_small_input``.
 """
 
 import pytest
@@ -18,14 +18,17 @@ from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.extract import extract_features
 from gpq_tiles_spark.partitioning import spread_small_input
 
-# layout -> (write_properties, premerge, salted)
+from tests.reference_tiles import reference_archive
+
+# layout -> (write_properties, salted)
 LAYOUTS = {
-    "premerge": (False, True, False),
-    "premerge_props": (True, True, False),
-    "wkb": (False, False, False),
-    "wkb_props": (True, False, False),
-    "salted": (False, False, True),
+    "premerge": (False, False),
+    "premerge_props": (True, False),
+    "salted": (False, True),
 }
+# the sink's non-salted archive against the driver-side WKB encode
+# (``reference_archive``) -> write_properties
+WKB_REFERENCE = {"wkb": False, "wkb_props": True}
 
 
 def _config(write_properties: bool) -> TilerConfig:
@@ -62,20 +65,36 @@ def reference_archives(two_part_features, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def wkb_reference_archives(two_part_features, tmp_path_factory):
+    """Driver-side WKB encode archive bytes, with and without props."""
+    d = tmp_path_factory.mktemp("wkb_ref")
+    return {props: reference_archive(two_part_features, _config(props),
+                                     str(d / f"wkb_{props}.pmtiles"))
+            for props in (False, True)}
+
+
 @pytest.mark.parametrize("sink, layout", [
     pytest.param(sink, layout,
                  id=layout if sink == "convert_sharded" else f"{sink}-{layout}")
-    for sink in ("convert_sharded", "convert") for layout in sorted(LAYOUTS)
+    for sink in ("convert_sharded", "convert")
+    for layout in sorted([*LAYOUTS, *WKB_REFERENCE])
 ])
 def test_sharded_layout_byte_identical_on_under_split_input(
-        two_part_features, reference_archives, tmp_path, sink, layout):
-    props, premerge, salted = LAYOUTS[layout]
+        two_part_features, reference_archives, wkb_reference_archives,
+        tmp_path, sink, layout):
+    if layout in WKB_REFERENCE:
+        props, salted = WKB_REFERENCE[layout], False
+        expected = wkb_reference_archives[props]
+    else:
+        props, salted = LAYOUTS[layout]
+        expected = reference_archives[props]
     path = str(tmp_path / f"{layout}.pmtiles")
     stats = getattr(P, sink)(two_part_features, path, _config(props),
-                             premerge=premerge, salted=salted)
+                             salted=salted)
     assert stats["tiles"] > 0
     with open(path, "rb") as f:
-        assert f.read() == reference_archives[props], layout
+        assert f.read() == expected, layout
 
 
 @pytest.mark.parametrize("layout", sorted(LAYOUTS))
@@ -91,9 +110,9 @@ def test_sharded_plan_has_one_python_map_after_tile_exchange(
         return {}
 
     monkeypatch.setattr(P, "_finalize_sharded_distributed", capture)
-    props, premerge, salted = LAYOUTS[layout]
+    props, salted = LAYOUTS[layout]
     P.convert_sharded(two_part_features, str(tmp_path / "x.pmtiles"),
-                      _config(props), premerge=premerge, salted=salted)
+                      _config(props), salted=salted)
     plan = captured["plan"]
     head, sep, exchange = plan.partition("Exchange ")
     assert sep, plan
@@ -154,7 +173,7 @@ def test_convert_releases_map_side_cache_on_error(
         monkeypatch.setattr(PMTilesAssembler, "add_tile", boom)
     with pytest.raises(RuntimeError, match="injected"):
         P.convert(two_part_features, str(tmp_path / "x.pmtiles"),
-                  _config(False), premerge=True,
+                  _config(False),
                   progress=progress if fail_in == "progress" else None)
     assert persisted
     assert not any(df.is_cached for df in persisted)

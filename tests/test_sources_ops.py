@@ -199,6 +199,14 @@ def test_checkpoint_resume(spark, docs_table, tmp_path):
     assert os.path.exists(out)
     # stage outputs were reused (same row counts, marked done)
     assert m3["stages"]["records"]["rows"] == m1["stages"]["records"]["rows"]
+    # the archive rebuilt from the checkpointed tiles is convert's
+    from gpq_tiles_spark.extract import extract_features
+    from gpq_tiles_spark.pipeline import convert
+
+    plain = str(tmp_path / "plain.pmtiles")
+    convert(extract_features(spark.read.parquet(docs_table)), plain, cfg)
+    with open(out, "rb") as f1, open(plain, "rb") as f2:
+        assert f1.read() == f2.read()
 
 
 def test_checkpointed_equals_plain_convert(spark, docs_table, tmp_path):

@@ -23,6 +23,8 @@ from gpq_tiles_spark.pipeline import (
     encode_props_column,
 )
 
+from tests.reference_tiles import reference_archive
+
 
 @pytest.fixture(scope="module")
 def prop_features(spark):
@@ -345,18 +347,17 @@ def test_default_path_unchanged_with_props_column(spark, prop_features, tmp_path
 
 
 def test_premerge_props_byte_identical(spark, prop_features, tmp_path):
-    """Round 5: the premerge property layout (map-side geometry encode +
-    reduce-side vectorized interning) must produce the byte-identical
-    archive to the WKB-layout props path — single-writer AND sharded."""
+    """Round 5: the premerge property layout (map-side geometry encode,
+    props join, reduce-side vectorized interning) must produce the archive
+    of the driver-side WKB props encode byte for byte — single-writer AND
+    sharded."""
     cfg = TilerConfig(min_zoom=2, max_zoom=4, shuffle_partitions=4,
                       write_properties=True)
-    p_wkb = str(tmp_path / "wkb.pmtiles")
     p_pre = str(tmp_path / "pre.pmtiles")
     p_pre_sh = str(tmp_path / "pre_sharded.pmtiles")
-    convert(prop_features, p_wkb, cfg, premerge=False)
-    convert(prop_features, p_pre, cfg, premerge=True)
-    convert_sharded(prop_features, p_pre_sh, cfg, premerge=True)
-    a = open(p_wkb, "rb").read()
+    convert(prop_features, p_pre, cfg)
+    convert_sharded(prop_features, p_pre_sh, cfg)
+    a = reference_archive(prop_features, cfg, str(tmp_path / "ref.pmtiles"))
     assert a == open(p_pre, "rb").read()
     assert a == open(p_pre_sh, "rb").read()
 
@@ -381,13 +382,13 @@ def test_props_budget_counts_dictionary(spark, tmp_path):
     feats = encode_props_column(
         spark.createDataFrame(rows, schema), ["blurb"])
     budget = 1500
-    for pm in (False, True):
-        out = str(tmp_path / f"budget_{pm}.pmtiles")
-        cfg = TilerConfig(min_zoom=2, max_zoom=2, shuffle_partitions=4,
-                          write_properties=True, max_tile_bytes=budget)
-        stats = convert(feats, out, cfg, premerge=pm)
-        assert stats["tiles"] >= 1
-        r = PMTilesReader(out)
+    cfg = TilerConfig(min_zoom=2, max_zoom=2, shuffle_partitions=4,
+                      write_properties=True, max_tile_bytes=budget)
+    stats = convert(feats, str(tmp_path / "budget_convert.pmtiles"), cfg)
+    assert stats["tiles"] >= 1
+    reference_archive(feats, cfg, str(tmp_path / "budget_reference.pmtiles"))
+    for name in ("convert", "reference"):
+        r = PMTilesReader(str(tmp_path / f"budget_{name}.pmtiles"))
         for tid in r.tile_ids():
             raw = r.get_tile_bytes(tid)
             lay = decode_tile(raw)[0]
@@ -404,6 +405,31 @@ def test_props_budget_counts_dictionary(spark, tmp_path):
                 used_v.update(t[1::2])
             assert used_k == set(range(len(lay["keys"])))
             assert used_v == set(range(len(lay["values"])))
-    # both layouts agree byte-for-byte on the capped tile too
-    assert (open(str(tmp_path / "budget_False.pmtiles"), "rb").read()
-            == open(str(tmp_path / "budget_True.pmtiles"), "rb").read())
+    # convert and the driver-side encode agree byte-for-byte on the
+    # capped tile too
+    assert (open(str(tmp_path / "budget_convert.pmtiles"), "rb").read()
+            == open(str(tmp_path / "budget_reference.pmtiles"), "rb").read())
+
+
+def test_encode_tiles_with_props_matches_premerge_props(spark, prop_features):
+    """The fan-out-records entry point (message-encode the records, then
+    the premerge+props stage) yields the tiles of
+    ``encode_tiles_premerge_props`` over the same features."""
+    from gpq_tiles_spark.pipeline import (
+        encode_tiles_premerge_props,
+        encode_tiles_with_props,
+        fanout_records,
+    )
+
+    cfg = TilerConfig(min_zoom=2, max_zoom=4, shuffle_partitions=4,
+                      write_properties=True, exclude_properties=["height"])
+
+    def tiles(df):
+        return sorted((r.tile_id, bytes(r.mvt), r.n_features)
+                      for r in df.collect())
+
+    got = tiles(encode_tiles_with_props(
+        fanout_records(prop_features, cfg),
+        prop_features.select("feature_id", "props"), cfg, by_range=False))
+    assert got and got == tiles(encode_tiles_premerge_props(prop_features,
+                                                            cfg))
