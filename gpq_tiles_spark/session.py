@@ -31,7 +31,8 @@ def _default_driver_mem() -> str:
 
 
 def _daemon_module() -> str | None:
-    """Resolve the pre-importing worker daemon (worker_daemon.py). The
+    """Resolve the worker daemon (worker_daemon.py: pre-imports, plus
+    stamp-guarded zip invalidation). The
     daemon subprocess must be able to import this package, so the package
     parent dir is pushed onto PYTHONPATH (inherited by the JVM and thus by
     the daemon it spawns). Returns None — keeping the stock daemon — only
@@ -77,9 +78,16 @@ def get_spark(app: str = "gpq-tiles-spark", cores: int | None = None,
         .config("spark.rdd.compress", "true")
         .config("spark.ui.enabled", "false")
     )
-    # pre-importing worker daemon: forked Python workers inherit warm
-    # numpy/pandas/pyarrow + kernel modules via copy-on-write instead of
-    # each paying the import on its first task (guide §4.5)
+    # worker daemon (worker_daemon.py) with two jobs. Pre-import: forked
+    # Python workers inherit warm numpy/pandas/pyarrow + kernel modules
+    # via copy-on-write instead of each paying the import on its first
+    # task. Stamp-guarded invalidation: pyspark 4.1.2's worker calls
+    # importlib.invalidate_caches() on every task, and on CPython 3.11 that
+    # re-reads the directory of each of the 16 zip importers on the worker
+    # path (pyspark.zip, py4j, the spark-core jar), 0.1-0.15 s per task; the
+    # daemon re-reads an archive only when its os.stat stamp changed.
+    # SPARK_GRAFT_NO_DAEMON_PRELOAD=1 keeps Spark's stock daemon, which
+    # turns both off.
     daemon = _daemon_module()
     if daemon:
         b = b.config("spark.python.daemon.module", daemon)

@@ -8,6 +8,13 @@
 
 INPUT is a parquet path of interleaved documents (doc_id, spans) or — with
 --geoparquet — a GeoParquet file with a WKB geometry column.
+
+This entry builds its session with a plain ``SparkSession.builder``, not
+``gpq_tiles_spark.session.get_spark``, so it keeps Spark's stock Python
+worker daemon. That daemon neither pre-imports the stack nor skips the
+per-task zip directory re-reads (``gpq_tiles_spark/worker_daemon.py``),
+so each Python task pays that fixed cost (0.1-0.15 s measured with
+pyspark 4.1.2 on CPython 3.11).
 """
 
 from __future__ import annotations
