@@ -59,7 +59,9 @@ class TilerConfig:
     # value, so single-writer/distributed byte parity holds at any setting.
     leaf_max_entries: int | None = None
     shuffle_partitions: int | None = None  # None -> leave session conf alone
-    hot_tile_threshold: int = 200_000  # features per tile before salted two-phase encode
+    # salted=True splits a tile with more than hot_tile_threshold feature
+    # centers into salt_buckets feature_id ranges (two-phase encode)
+    hot_tile_threshold: int = 200_000
     salt_buckets: int = 16
 
     def validate(self) -> "TilerConfig":
@@ -75,4 +77,8 @@ class TilerConfig:
             raise ValueError("max_tile_bytes must be positive or None")
         if self.leaf_max_entries is not None and self.leaf_max_entries < 16:
             raise ValueError("leaf_max_entries must be >= 16 or None")
+        if self.salt_buckets < 1:
+            raise ValueError("salt_buckets must be >= 1")
+        if self.hot_tile_threshold < 0:
+            raise ValueError("hot_tile_threshold must be >= 0")
         return self

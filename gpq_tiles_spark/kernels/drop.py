@@ -145,8 +145,8 @@ def tile_budget_keep_mask(fids: np.ndarray, framed_lens: np.ndarray,
 
     * order-independent: the mask depends only on the (fid, framed_len) SET
       of the tile, so the premerge wrap (both sinks), the salted phase-B
-      merge and the driver-side ``mvt_fast.encode_sorted_runs`` all compute
-      the SAME mask -> archives stay byte-identical;
+      bucket merge and the driver-side ``mvt_fast.encode_sorted_runs`` all
+      compute the SAME mask -> archives stay byte-identical;
     * deterministic: no RNG, stable across runs/partitionings (hash ties
       broken by fid, which is unique within a tile);
     * never empties a tile: the first record in hash order is always kept.
@@ -157,10 +157,9 @@ def tile_budget_keep_mask(fids: np.ndarray, framed_lens: np.ndarray,
     n = len(framed_lens)
     if n == 0 or int(framed_lens.sum()) <= budget:
         return np.ones(n, dtype=bool)
-    # zero-length (dead) records cost nothing and are always kept — the
-    # salted phase-A layout drops them from its message lists, so the
-    # budget competition must run over the LIVE records only for the kept
-    # byte set to be identical across layouts
+    # zero-length (dead) records cost nothing and are always kept: every
+    # layout carries them as zero-length entries and counts them in
+    # n_features, so only the LIVE records compete for the budget
     fids = np.asarray(fids, dtype=np.int64)
     nz = np.flatnonzero(framed_lens > 0)
     h = fmix64(fids[nz].astype(np.uint64) ^ fmix64(np.uint64(tile_id)))

@@ -41,9 +41,6 @@ def _varint(v: int) -> bytes:
     return bytes(out)
 
 
-_MOVETO1 = 9  # command_encode(MOVE_TO, 1)
-
-
 def _point_feature_bytes(fid: int, zzx: int, zzy: int) -> bytes:
     """Feature{id, type=POINT, geometry=[9, zzx, zzy]} message bytes.
     Field layout identical to kernels.mvt.encode_feature with empty tags."""
@@ -114,40 +111,8 @@ def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     g_z, g_x, g_y = Hc.tile_id_to_zxy_vec(uniq_tid)
     lng0, lat0, lng1, lat1 = T.tile_bounds_mixed(g_x, g_y, g_z)
 
-    lens = np.fromiter((len(w) for w in wkbs), dtype=np.int64, count=n)
-    buf8, woffs, wkb_cat = _concat_wkbs(wkbs, lens)
-    is_pt, px, py = _bulk_points(buf8, woffs, lens, gidx,
-                                 lng0, lat0, lng1, lat1, extent, wkb_cat)
-    is_p1, p1_start, p1_npts, p1_inter = _bulk_poly1(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    is_ls, ls_start, ls_npts, ls_inter = _bulk_lines(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    p1_idx = np.full(n, -1, dtype=np.int64)
-    p1_buf = b""
-    p1_boff = p1_blen = None
-    if is_p1.any():
-        p1_rows = np.flatnonzero(is_p1)
-        p1_idx[p1_rows] = np.arange(len(p1_rows))
-        p1_buf, p1_boff, p1_blen = _batch_geom_fields(
-            p1_start, p1_npts, p1_rows, p1_inter, "poly")
-    ls_idx = np.full(n, -1, dtype=np.int64)
-    ls_buf = b""
-    ls_boff = ls_blen = None
-    if is_ls.any():
-        ls_rows = np.flatnonzero(is_ls)
-        ls_idx[ls_rows] = np.arange(len(ls_rows))
-        ls_buf, ls_boff, ls_blen = _batch_geom_fields(
-            ls_start, ls_npts, ls_rows, ls_inter, "line")
-
-    zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-    zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-
-    buf, rec_off, _ms, _ml, _lv = _assemble_feature_messages(
-        n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
-        is_pt, zzx, zzy,
-        is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
-        is_ls, ls_idx, ls_buf, ls_boff, ls_blen,
-    )
+    buf, rec_off = _assemble_feature_messages(
+        fid, wkbs, gidx, lng0, lat0, lng1, lat1, extent, buffer_px)
     return _binary_array(rec_off, buf)
 
 
@@ -170,13 +135,20 @@ def _binary_array(offsets: np.ndarray, data: np.ndarray):
 def wrap_sorted_msgs(tid: np.ndarray, msgs, layer_name: str, extent: int,
                      fids: np.ndarray | None = None,
                      max_tile_bytes: int | None = None,
-                     cap_stats: list | None = None):
-    """Reduce-side premerge wrap: consecutive (tile_id-sorted) runs of
-    framed messages -> per-tile MVT rows. ``n_features`` counts ALL records
-    of the run (dead records ship as b"" rows), matching
-    ``encode_sorted_runs``. ``max_tile_bytes`` applies the same per-tile
-    byte budget as encode_sorted_runs (requires ``fids``) so both layouts
-    stay byte-identical. Returns the TILES_SCHEMA column dict."""
+                     cap_stats: list | None = None,
+                     n_records: np.ndarray | None = None,
+                     lens: np.ndarray | None = None):
+    """Reduce-side wrap: consecutive (tile_id-sorted) runs of framed
+    messages -> per-tile MVT rows, each tile's body its run's items joined
+    in order. An item is one record's framed message or, with
+    ``n_records``, that many records' framed messages already concatenated
+    (a salted bucket body, ``concat_runs``). ``n_features`` counts ALL
+    records of the run (dead records ship as zero-length messages),
+    matching ``encode_sorted_runs``. ``max_tile_bytes`` applies the same
+    per-tile byte budget as encode_sorted_runs over the per-record ``fids``
+    and framed ``lens`` (by default the item lengths, one record per item)
+    so every layout stays byte-identical. Returns the TILES_SCHEMA column
+    dict."""
     if max_tile_bytes is not None and fids is None:
         raise ValueError(
             "wrap_sorted_msgs: max_tile_bytes requires fids (the budget "
@@ -187,29 +159,33 @@ def wrap_sorted_msgs(tid: np.ndarray, msgs, layer_name: str, extent: int,
     ends = np.append(starts[1:], n)
     g_tid = tid[starts]
     g_z, g_x, g_y = Hc.tile_id_to_zxy_vec(g_tid)
-    head = b"\x0a" + _varint(len(layer_name)) + layer_name.encode()
-    tail = b"\x28" + _varint(extent) + b"\x78\x02"
+    head, tail = layer_head_tail(layer_name, extent)
+    if n_records is None:
+        rec_off = np.arange(n + 1, dtype=np.int64)
+    else:
+        rec_off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(n_records, out=rec_off[1:])
+    if max_tile_bytes is not None and lens is None:
+        lens = np.fromiter(map(len, msgs), dtype=np.int64, count=n)
     out_mvt: list[bytes] = []
     out_hash: list[int] = []
-    out_nf = (ends - starts).astype(np.int64)
+    out_nf = rec_off[ends] - rec_off[starts]
     for gi in range(len(starts)):
-        s, e = starts[gi], ends[gi]
-        run = msgs[s:e]
-        if max_tile_bytes is not None:
-            flens = np.fromiter((len(m) for m in run), dtype=np.int64,
-                                count=e - s)
-            if int(flens.sum()) > max_tile_bytes:
-                from .drop import tile_budget_keep_mask
+        body = b"".join(msgs[starts[gi]:ends[gi]])
+        if max_tile_bytes is not None and len(body) > max_tile_bytes:
+            from .drop import tile_budget_keep_mask
 
-                mask = tile_budget_keep_mask(
-                    np.asarray(fids[s:e], dtype=np.int64), flens,
-                    int(g_tid[gi]), max_tile_bytes)
-                run = [m for m, k in zip(run, mask) if k]
-                out_nf[gi] = int(mask.sum())
-                if cap_stats is not None:
-                    cap_stats[0] += 1
-                    cap_stats[1] += int((e - s) - out_nf[gi])
-        body = b"".join(run)
+            r0, r1 = rec_off[starts[gi]], rec_off[ends[gi]]
+            mask = tile_budget_keep_mask(
+                np.asarray(fids[r0:r1], dtype=np.int64), lens[r0:r1],
+                int(g_tid[gi]), max_tile_bytes)
+            off = np.concatenate(([0], np.cumsum(lens[r0:r1]))).tolist()
+            keep = np.flatnonzero(mask).tolist()
+            body = b"".join(body[off[i]:off[i + 1]] for i in keep)
+            out_nf[gi] = len(keep)
+            if cap_stats is not None:
+                cap_stats[0] += 1
+                cap_stats[1] += int(r1 - r0) - len(keep)
         layer = head + body + tail
         mvt = b"\x1a" + _varint(len(layer)) + layer
         out_mvt.append(mvt)
@@ -225,82 +201,25 @@ def wrap_sorted_msgs(tid: np.ndarray, msgs, layer_name: str, extent: int,
     }
 
 
-def encode_partial_runs(run_key: np.ndarray, tid: np.ndarray,
-                        fid: np.ndarray, wkbs: np.ndarray,
-                        extent: int, buffer_px: float = 8.0):
-    """Phase A of the salted two-phase encode: per consecutive
-    (tile_id[, salt]) run, produce the per-feature protobuf messages WITHOUT
-    wrapping them in a layer. Feature messages are independent byte segments
-    (the MVT cursor resets per feature), so buckets can be merged later in
-    feature_id order for byte-identical output.
-
-    Returns dict with per-run: tile_id, z, x, y, n_records, fids, msgs.
-    """
-    n = len(tid)
-    starts = np.flatnonzero(np.concatenate(([True], run_key[1:] != run_key[:-1])))
-    ends = np.append(starts[1:], n)
-    g_z, g_x, g_y = Hc.tile_id_to_zxy_vec(tid[starts])
-    lng0, lat0, lng1, lat1 = T.tile_bounds_mixed(g_x, g_y, g_z)
-    sizes = ends - starts
-    gidx = np.repeat(np.arange(len(starts)), sizes)
-    lens = np.fromiter((len(w) for w in wkbs), dtype=np.int64, count=n)
-    buf8, woffs, wkb_cat = _concat_wkbs(wkbs, lens)
-    is_pt, px, py = _bulk_points(buf8, woffs, lens, gidx,
-                                 lng0, lat0, lng1, lat1, extent, wkb_cat)
-    is_p1, p1_start, p1_npts, p1_inter = _bulk_poly1(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    is_ls, ls_start, ls_npts, ls_inter = _bulk_lines(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    p1_idx = np.full(n, -1, dtype=np.int64)
-    p1_buf = b""
-    p1_boff = p1_blen = None
-    if is_p1.any():
-        p1_rows = np.flatnonzero(is_p1)
-        p1_idx[p1_rows] = np.arange(len(p1_rows))
-        p1_buf, p1_boff, p1_blen = _batch_geom_fields(
-            p1_start, p1_npts, p1_rows, p1_inter, "poly")
-    ls_idx = np.full(n, -1, dtype=np.int64)
-    ls_buf = b""
-    ls_boff = ls_blen = None
-    if is_ls.any():
-        ls_rows = np.flatnonzero(is_ls)
-        ls_idx[ls_rows] = np.arange(len(ls_rows))
-        ls_buf, ls_boff, ls_blen = _batch_geom_fields(
-            ls_start, ls_npts, ls_rows, ls_inter, "line")
-    zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-    zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-
-    # shared vectorized assembly; phase A stores UNFRAMED messages (the
-    # phase-B merge adds the 0x12 frames), so slice [msg_start : +msg_len]
-    buf, _rec_off, msg_start, msg_len, live = _assemble_feature_messages(
-        n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
-        is_pt, zzx, zzy,
-        is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
-        is_ls, ls_idx, ls_buf, ls_boff, ls_blen,
-    )
-    buf_bytes = buf.tobytes()
-    fid_l = fid.tolist()
-    out_fids: list[list[int]] = []
-    out_msgs: list[list[bytes]] = []
-    for gi in range(len(starts)):
-        s, e = starts[gi], ends[gi]
-        fids_g: list[int] = []
-        msgs_g: list[bytes] = []
-        for i in range(s, e):
-            if not live[i]:
-                continue
-            fids_g.append(fid_l[i])
-            msgs_g.append(buf_bytes[msg_start[i]:msg_start[i] + msg_len[i]])
-        out_fids.append(fids_g)
-        out_msgs.append(msgs_g)
+def concat_runs(starts: np.ndarray, fid: np.ndarray, msgs: list) -> dict:
+    """Per run of framed messages (rows ``starts[i]`` up to the next
+    start; one salted (tile_id, salt) bucket each): the record count, the
+    records' feature ids and framed lengths as packed little-endian int64,
+    and the run's messages concatenated. Each column is an Arrow binary
+    array over one buffer, so no Python object is built per record;
+    ``wrap_sorted_msgs(n_records=...)`` joins a tile's bodies."""
+    n = len(fid)
+    lens = np.fromiter(map(len, msgs), dtype=np.int64, count=n)
+    rec_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lens, out=rec_off[1:])
+    bounds = np.append(starts, n).astype(np.int64)
     return {
-        "tile_id": tid[starts],
-        "z": g_z.astype(np.int32),
-        "x": g_x,
-        "y": g_y,
-        "n_records": sizes.astype(np.int64),
-        "fids": out_fids,
-        "msgs": out_msgs,
+        "n_records": np.diff(bounds),
+        "fids": _binary_array(
+            bounds * 8, np.ascontiguousarray(fid, dtype="<i8").view(np.uint8)),
+        "lens": _binary_array(bounds * 8, lens.view(np.uint8)),
+        "body": _binary_array(rec_off[bounds],
+                              np.frombuffer(b"".join(msgs), dtype=np.uint8)),
     }
 
 
@@ -452,14 +371,6 @@ def _bulk_lines(buf8: np.ndarray, woffs: np.ndarray, wkb_cat: bytes,
     return is_ls, row_start, row_npts, inter
 
 
-def _line_cmds(start: int, npts: int, inter: np.ndarray) -> list[int]:
-    s2 = 2 * start
-    out = [9, int(inter[s2]), int(inter[s2 + 1]),
-           (2 & 0x7) | ((npts - 1) << 3)]
-    out.extend(inter[s2 + 2 : s2 + 2 * npts].tolist())
-    return out
-
-
 _P1_HDR = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00"
 
 
@@ -537,7 +448,7 @@ def _batch_geom_fields(row_start: np.ndarray, row_npts: np.ndarray,
     at [2*start, 2*start+2*npts)), varint-encodes everything in ONE numpy
     pass, and returns (buffer, byte_offsets, byte_lengths) so each row's
     field-4 payload is a cheap slice. Byte-identical to the per-row
-    _poly1_cmds/_line_cmds + varint path.
+    ``kernels.mvt`` encode_polygon/encode_linestring + varint path.
     """
     n_rows = len(rows)
     s = row_start[rows]
@@ -641,17 +552,6 @@ def _fill_varints(out: np.ndarray, pos: np.ndarray, vals: np.ndarray,
         out[pos[m] + k] = byte | cont
 
 
-def _poly1_cmds(start: int, npts: int, inter: np.ndarray) -> list[int]:
-    # ring encode: MoveTo(pt0), LineTo(npts-2, skipping the closing dup),
-    # ClosePath (mvt.rs:273-317)
-    s2 = 2 * start
-    out = [9, int(inter[s2]), int(inter[s2 + 1]),
-           (2 & 0x7) | ((npts - 2) << 3)]
-    out.extend(inter[s2 + 2 : s2 + 2 * (npts - 1)].tolist())
-    out.append(15)
-    return out
-
-
 def encode_sorted_runs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
                        layer_name: str, extent: int, buffer_px: float = 8.0,
                        max_tile_bytes: int | None = None,
@@ -676,44 +576,9 @@ def encode_sorted_runs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     sizes = ends - starts
     gidx = np.repeat(np.arange(n_groups), sizes)
 
-    # ---- bulk fast paths: points + 5-pt single-ring polygons ----
-    lens = np.fromiter((len(w) for w in wkbs), dtype=np.int64, count=n)
-    buf8, woffs, wkb_cat = _concat_wkbs(wkbs, lens)
-    is_pt, px, py = _bulk_points(buf8, woffs, lens, gidx,
-                                 lng0, lat0, lng1, lat1, extent, wkb_cat)
-    is_p1, p1_start, p1_npts, p1_inter = _bulk_poly1(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    is_ls, ls_start, ls_npts, ls_inter = _bulk_lines(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    p1_idx = np.full(n, -1, dtype=np.int64)
-    if is_p1.any():
-        p1_rows = np.flatnonzero(is_p1)
-        p1_idx[p1_rows] = np.arange(len(p1_rows))
-        p1_buf, p1_boff, p1_blen = _batch_geom_fields(
-            p1_start, p1_npts, p1_rows, p1_inter, "poly")
-    ls_idx = np.full(n, -1, dtype=np.int64)
-    if is_ls.any():
-        ls_rows = np.flatnonzero(is_ls)
-        ls_idx[ls_rows] = np.arange(len(ls_rows))
-        ls_buf, ls_boff, ls_blen = _batch_geom_fields(
-            ls_start, ls_npts, ls_rows, ls_inter, "line")
-
-    zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-    zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-
-    layer_head = b"\x0a" + _varint(len(layer_name)) + layer_name.encode()
-    layer_tail = b"\x28" + _varint(extent) + b"\x78\x02"  # extent(5), version(15)=2
-
-    buf, rec_off, msg_start, msg_len, live = _assemble_feature_messages(
-        n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
-        is_pt, zzx, zzy,
-        is_p1, p1_idx,
-        p1_buf if is_p1.any() else b"", p1_boff if is_p1.any() else None,
-        p1_blen if is_p1.any() else None,
-        is_ls, ls_idx,
-        ls_buf if is_ls.any() else b"", ls_boff if is_ls.any() else None,
-        ls_blen if is_ls.any() else None,
-    )
+    buf, rec_off = _assemble_feature_messages(
+        fid, wkbs, gidx, lng0, lat0, lng1, lat1, extent, buffer_px)
+    layer_head, layer_tail = layer_head_tail(layer_name, extent)
 
     # ---- per-tile layer wrap: head + contiguous record bytes + tail
     out_mvt: list[bytes] = []
@@ -754,21 +619,43 @@ def encode_sorted_runs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     }
 
 
-def _assemble_feature_messages(n, fid, wkbs, lens, gidx,
-                               lng0, lat0, lng1, lat1, extent, buffer_px,
-                               is_pt, zzx, zzy,
-                               is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
-                               is_ls, ls_idx, ls_buf, ls_boff, ls_blen):
+def _assemble_feature_messages(fid, wkbs, gidx, lng0, lat0, lng1, lat1,
+                               extent, buffer_px):
     """Fully vectorized message assembly: every record's FRAMED feature
-    message ([0x12][varint(len)][0x08][varint(fid)][type+geometry]) laid out
-    into ONE uint8 buffer with computed offsets — zero per-record Python in
-    the hot path; byte-identical to the per-record concat. Shared by the
-    single-phase encoder (slices whole-tile record ranges) and the salted
-    phase-A encoder (slices per-record UNFRAMED messages at
-    [msg_start : msg_start+msg_len]).
+    message ([0x12][varint(len)][0x08][varint(fid)][type+geometry]), each
+    against the tile window ``gidx`` names, laid out into ONE uint8 buffer
+    with computed offsets — bulk decoders for points, single-ring polygons
+    and linestrings, zero per-record Python in the hot path; byte-identical
+    to the per-record concat. Shared by the per-record message encoder and
+    the single-phase encoder (which slices whole-tile record ranges). Dead
+    records get zero bytes.
 
-    Returns (buf uint8, rec_off (n+1,), msg_start (n,), msg_len (n,), live).
+    Returns (buf uint8, rec_off (n+1,)).
     """
+    n = len(fid)
+    lens = np.fromiter((len(w) for w in wkbs), dtype=np.int64, count=n)
+    buf8, woffs, wkb_cat = _concat_wkbs(wkbs, lens)
+    is_pt, px, py = _bulk_points(buf8, woffs, lens, gidx,
+                                 lng0, lat0, lng1, lat1, extent, wkb_cat)
+    is_p1, p1_start, p1_npts, p1_inter = _bulk_poly1(
+        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
+    is_ls, ls_start, ls_npts, ls_inter = _bulk_lines(
+        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
+    p1_idx = np.full(n, -1, dtype=np.int64)
+    if is_p1.any():
+        p1_rows = np.flatnonzero(is_p1)
+        p1_idx[p1_rows] = np.arange(len(p1_rows))
+        p1_buf, p1_boff, p1_blen = _batch_geom_fields(
+            p1_start, p1_npts, p1_rows, p1_inter, "poly")
+    ls_idx = np.full(n, -1, dtype=np.int64)
+    if is_ls.any():
+        ls_rows = np.flatnonzero(is_ls)
+        ls_idx[ls_rows] = np.arange(len(ls_rows))
+        ls_buf, ls_boff, ls_blen = _batch_geom_fields(
+            ls_start, ls_npts, ls_rows, ls_inter, "line")
+    zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
+    zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
+
     CAT_RECT, CAT_PT, CAT_P1, CAT_LS, CAT_EXACT = 0, 1, 2, 3, 4
     cat = np.full(n, CAT_EXACT, dtype=np.int64)
     cat[is_ls] = CAT_LS
@@ -914,4 +801,4 @@ def _assemble_feature_messages(n, fid, wkbs, lens, gidx,
     for i, fm in exact_msgs.items():
         buf[msg_start[i]:msg_start[i] + len(fm)] = np.frombuffer(fm, dtype=np.uint8)
 
-    return buf, rec_off, msg_start, msg_len, live
+    return buf, rec_off

@@ -23,10 +23,12 @@ Spark-first formulation of the reference's 3-phase engine
       PMTilesAssembler) or executor-written shards (convert_sharded)
 
 Scale notes (10^12 docs):
-* exactly ONE wide shuffle (tile_id); everything else is narrow. Skewed
-  hot tiles are split by a salt column and re-merged in tile_id order
-  inside the encode stage (two-phase encode) when a tile exceeds
-  ``hot_tile_threshold``.
+* exactly ONE wide shuffle (tile_id) of the small message rows; everything
+  else is narrow. With ``salted=True``, a tile with more than
+  ``hot_tile_threshold`` feature centers is split into ``salt_buckets``
+  feature_id ranges: an exchange on (tile_id, salt) concatenates each
+  bucket's messages, and the tile_id exchange after it joins a tile's
+  bucket bodies in salt order, which is feature_id order.
 * the fully-inside fast path (clip.rs:196-203) is fully vectorized: features
   whose bbox sits inside the buffered tile reuse one WKB + one drop-hash per
   feature across every tile they land in; only boundary-crossing pairs take
@@ -69,9 +71,8 @@ from .kernels import hashes as HK
 from .kernels.hashes import content_hash64, siphash13_coords
 from .partitioning import spread_small_input
 
-# narrow shuffle rows: (z, x, y) are derivable from tile_id (the cumulative
-# Hilbert id is self-describing), so the one wide shuffle carries 24 fewer
-# bytes per record — at 10^12-record scale that is the dominant byte stream
+# fan-out rows (``fanout_records``): (z, x, y) are derivable from tile_id
+# (the cumulative Hilbert id is self-describing), so no record carries them
 RECORDS_SCHEMA = StructType(
     [
         StructField("tile_id", LongType(), False),
@@ -1053,30 +1054,30 @@ def make_fanout_encoded(config: TilerConfig,
     return fanout_encoded
 
 
-def _tile_ids(pdf: pd.DataFrame) -> np.ndarray:
-    return pdf["tile_id"].to_numpy()
-
-
-def _run_carry(chunk_fn, run_key=_tile_ids):
-    """Shared tile-run carry for reduce-side encoders: input batches are
-    sorted on ``run_key`` (tile_id by default) within the partition;
-    complete runs go to ``chunk_fn`` as they close, and the trailing
-    (possibly incomplete) run carries across Arrow batches as a LIST of
-    frames — a mega-tile run spanning hundreds of small batches must not
-    pay one quadratically-growing pd.concat per batch."""
+def _run_carry(chunk_fn, run_cols: tuple[str, ...] = ("tile_id",)):
+    """Shared run carry for reduce-side encoders: input batches are sorted
+    on ``run_cols`` (tile_id by default) within the partition; complete
+    runs go to ``chunk_fn`` as they close, and the trailing (possibly
+    incomplete) run carries across Arrow batches as a LIST of frames — a
+    mega-tile run spanning hundreds of small batches must not pay one
+    quadratically-growing pd.concat per batch."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pend: list[pd.DataFrame] = []
-        pend_last = None  # last run key seen (runs are contiguous)
+        pend_last = None  # run key of the pending rows (runs are contiguous)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            keys = run_key(pdf)
-            if pend and keys[0] != pend_last:
+            keys = [pdf[c].to_numpy() for c in run_cols]
+            if pend and tuple(k[0] for k in keys) != pend_last:
                 yield chunk_fn(pd.concat(pend, ignore_index=True)
                                if len(pend) > 1 else pend[0])
                 pend = []
-            cut = int(np.searchsorted(keys, keys[-1], side="left"))
+            new_run = np.zeros(len(pdf), dtype=bool)
+            for k in keys:
+                new_run[1:] |= k[1:] != k[:-1]
+            run_starts = np.flatnonzero(new_run)
+            cut = int(run_starts[-1]) if len(run_starts) else 0
             body = pdf.iloc[:cut]
             if len(body):
                 if pend:
@@ -1086,12 +1087,34 @@ def _run_carry(chunk_fn, run_key=_tile_ids):
                 else:
                     yield chunk_fn(body)
             pend.append(pdf.iloc[cut:])
-            pend_last = keys[-1]
+            pend_last = tuple(k[-1] for k in keys)
         if pend:
             yield chunk_fn(pd.concat(pend, ignore_index=True)
                            if len(pend) > 1 else pend[0])
 
     return run
+
+
+def _wrap_encoder(config: TilerConfig, metrics: PipelineMetrics | None,
+                  wrap_args: Callable[[pd.DataFrame], dict]):
+    """Reduce-side encoder over tile_id runs: ``mvt_fast.wrap_sorted_msgs``
+    on the items ``wrap_args`` reads off each chunk, with the byte budget
+    and the tile counters."""
+
+    def wrap_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+        cap_stats = [0, 0]
+        cols = mvt_fast.wrap_sorted_msgs(
+            pdf["tile_id"].to_numpy(dtype=np.int64),
+            layer_name=config.layer_name,
+            extent=config.extent,
+            max_tile_bytes=config.max_tile_bytes,
+            cap_stats=cap_stats,
+            **wrap_args(pdf),
+        )
+        _count_tiles(metrics, len(cols["tile_id"]), cap_stats)
+        return pd.DataFrame(cols)
+
+    return _run_carry(wrap_chunk)
 
 
 def make_wrap_encoder(config: TilerConfig,
@@ -1102,24 +1125,10 @@ def make_wrap_encoder(config: TilerConfig,
     one partition, so grouping consecutive runs (``_run_carry``) is the
     reference's phase-3 streaming group-by (pipeline.rs:1179-1282) with no
     extra shuffle; the per-record geometry work already happened map-side."""
-    layer_name, extent = config.layer_name, config.extent
-    max_tile_bytes = config.max_tile_bytes
-
-    def wrap_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        cap_stats = [0, 0]
-        cols = mvt_fast.wrap_sorted_msgs(
-            pdf["tile_id"].to_numpy(dtype=np.int64),
-            pdf["msg"].to_numpy(),
-            layer_name,
-            extent,
-            fids=pdf["feature_id"].to_numpy(dtype=np.int64),
-            max_tile_bytes=max_tile_bytes,
-            cap_stats=cap_stats,
-        )
-        _count_tiles(metrics, len(cols["tile_id"]), cap_stats)
-        return pd.DataFrame(cols)
-
-    return _run_carry(wrap_chunk)
+    return _wrap_encoder(config, metrics, lambda pdf: {
+        "msgs": pdf["msg"].to_numpy(),
+        "fids": pdf["feature_id"].to_numpy(dtype=np.int64),
+    })
 
 
 def _tile_exchange(df: DataFrame, parts: int | None, by_range: bool,
@@ -1174,112 +1183,73 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
                                    config, num_partitions, by_range, metrics))
 
 
-PARTIAL_SCHEMA = StructType(
+BUCKETS_SCHEMA = StructType(
     [
         StructField("tile_id", LongType(), False),
-        StructField("z", IntegerType(), False),
-        StructField("x", LongType(), False),
-        StructField("y", LongType(), False),
+        StructField("salt", IntegerType(), False),
         StructField("n_records", LongType(), False),
-        StructField("fids", ArrayType(LongType()), False),
-        StructField("msgs", ArrayType(BinaryType()), False),
+        StructField("fids", BinaryType(), False),  # packed little-endian int64
+        StructField("lens", BinaryType(), False),  # packed little-endian int64
+        StructField("body", BinaryType(), False),
     ]
 )
 
 
-def make_partial_encoder(config: TilerConfig):
-    """Phase A of the salted two-phase encode: per (tile_id, salt) run, emit
-    unwrapped feature messages (cross-batch carry on (tile_id, salt))."""
-
-    def run_key(pdf: pd.DataFrame) -> np.ndarray:
-        return (pdf["tile_id"].to_numpy(dtype=np.int64)
-                * np.int64(config.salt_buckets)
-                + pdf["salt"].to_numpy(dtype=np.int64))
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(mvt_fast.encode_partial_runs(
-            run_key(pdf),
-            pdf["tile_id"].to_numpy(dtype=np.int64),
-            pdf["feature_id"].to_numpy(dtype=np.int64),
-            pdf["wkb"].to_numpy(),
-            config.extent,
-            config.buffer_pixels,
-        ))
-
-    return _run_carry(emit, run_key)
-
-
-def make_merge_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
-    """Phase B: merge salt buckets of a tile in feature_id order and wrap the
-    layer — byte-identical to the single-phase encoder."""
-    head, tail = mvt_fast.layer_head_tail(config.layer_name, config.extent)
-    max_tile_bytes = config.max_tile_bytes
+def make_bucket_encoder():
+    """Salted phase A: per (tile_id, salt) bucket of feature_id-sorted
+    framed messages, one row holding the bucket's record count, packed
+    feature ids and framed lengths, and its concatenated messages
+    (``mvt_fast.concat_runs``; cross-batch carry on (tile_id, salt))."""
 
     def emit(pdf: pd.DataFrame) -> pd.DataFrame:
         tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-        starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-        ends = np.append(starts[1:], len(tid))
-        rows = {k: [] for k in ("tile_id", "z", "x", "y", "n_features",
-                                "mvt", "content_hash")}
-        cap_stats = [0, 0]
-        for s, e in zip(starts, ends):
-            fids = np.concatenate([
-                np.asarray(v, dtype=np.int64) for v in pdf["fids"].iloc[s:e]
-            ]) if e > s else np.empty(0, dtype=np.int64)
-            msgs: list[bytes] = []
-            for v in pdf["msgs"].iloc[s:e]:
-                msgs.extend(bytes(m) for m in v)
-            order = np.argsort(fids, kind="stable")
-            fids = fids[order]
-            msgs = [msgs[i] for i in order]
-            n_feat = int(pdf["n_records"].iloc[s:e].sum())
-            n_dead = n_feat - len(msgs)  # dead records absent from msgs
-            if max_tile_bytes is not None:
-                # phase-A messages are UNFRAMED; the budget counts the
-                # FRAMED length (0x12 + varint + body) so the mask is
-                # byte-identical to the single-phase/premerge paths
-                flens = np.fromiter(
-                    (1 + len(mvt_fast._varint(len(m))) + len(m)
-                     for m in msgs),
-                    dtype=np.int64, count=len(msgs))
-                if int(flens.sum()) > max_tile_bytes:
-                    from .kernels.drop import tile_budget_keep_mask
+        salt = pdf["salt"].to_numpy(dtype=np.int32)
+        starts = np.flatnonzero(np.concatenate(
+            ([True], (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1]))))
+        return pd.DataFrame({
+            "tile_id": tid[starts],
+            "salt": salt[starts],
+            **mvt_fast.concat_runs(
+                starts, pdf["feature_id"].to_numpy(dtype=np.int64),
+                pdf["msg"].tolist()),
+        })
 
-                    mask = tile_budget_keep_mask(
-                        fids, flens, int(tid[s]), max_tile_bytes)
-                    msgs = [m for m, k in zip(msgs, mask) if k]
-                    cap_stats[0] += 1
-                    cap_stats[1] += int(len(mask) - mask.sum())
-                    # dead records are always 'kept' by the budget rule
-                    # (they cost 0 bytes), matching encode_sorted_runs
-                    n_feat = int(mask.sum()) + n_dead
-            mvt = mvt_fast.wrap_layer(head, msgs, tail)
-            rows["tile_id"].append(int(tid[s]))
-            rows["z"].append(int(pdf["z"].iloc[s]))
-            rows["x"].append(int(pdf["x"].iloc[s]))
-            rows["y"].append(int(pdf["y"].iloc[s]))
-            rows["n_features"].append(n_feat)
-            rows["mvt"].append(mvt)
-            rows["content_hash"].append(content_hash64(mvt) & 0x7FFF_FFFF_FFFF_FFFF)
-        _count_tiles(metrics, len(rows["tile_id"]), cap_stats)
-        return pd.DataFrame(rows)
-
-    return _run_carry(emit)
+    return _run_carry(emit, ("tile_id", "salt"))
 
 
-def detect_hot_tiles(features: DataFrame, config: TilerConfig,
-                     threshold: int | None = None) -> list[int]:
+def _packed_int64s(col: pd.Series) -> np.ndarray:
+    return np.frombuffer(b"".join(col.tolist()), dtype="<i8")
+
+
+def make_bucket_merge_encoder(config: TilerConfig,
+                              metrics: PipelineMetrics | None = None):
+    """Salted phase B: a tile's bucket rows arrive in salt order, which is
+    feature_id order, so its body is their bodies joined — the premerge
+    tile bytes. The packed ids and lengths are read only under
+    ``max_tile_bytes``."""
+    budget = config.max_tile_bytes is not None
+    return _wrap_encoder(config, metrics, lambda pdf: {
+        "msgs": pdf["body"].tolist(),
+        "n_records": pdf["n_records"].to_numpy(dtype=np.int64),
+        "fids": _packed_int64s(pdf["fids"]) if budget else None,
+        "lens": _packed_int64s(pdf["lens"]) if budget else None,
+    })
+
+
+def _hot_tile_ranges(features: DataFrame, config: TilerConfig,
+                     threshold: int | None = None) -> list[tuple[int, int, int]]:
     """Estimate hot tiles WITHOUT materializing the fan-out: count feature
     bbox-centers per tile at every zoom (pure Catalyst — the dominant class
     in a hot tile is fully-inside features, whose center tile IS their
-    tile), then keep tiles above threshold.
+    tile), then keep tiles above threshold, each with the min and max
+    feature_id of the features centered in it.
 
-    Returns the tile_id list (small by construction: only tiles with more
-    than `threshold` co-located features).
-    """
+    Returns (tile_id, lo, hi) triples (few by construction: only tiles with
+    more than `threshold` co-located features)."""
     from .functions.spatial_sql import tile_x_sql, tile_y_sql
 
-    threshold = threshold or config.hot_tile_threshold
+    if threshold is None:
+        threshold = config.hot_tile_threshold
     cx = "((lng_min + lng_max) / 2.0)"
     cy = "((lat_min + lat_max) / 2.0)"
     # ONE scan: per-row array of (z, x, y) structs exploded, instead of a
@@ -1292,75 +1262,97 @@ def detect_hot_tiles(features: DataFrame, config: TilerConfig,
         ys = f"greatest(least({tile_y_sql(cy, z)}, {n_max}), 0)"
         structs.append(f"struct({z} AS z, {xs} AS x, {ys} AS y)")
     exploded = features.selectExpr(
-        f"explode(array({', '.join(structs)})) AS c"
-    ).select("c.z", "c.x", "c.y")
+        "feature_id", f"explode(array({', '.join(structs)})) AS c"
+    ).select("feature_id", "c.z", "c.x", "c.y")
     hot = (
-        exploded.groupBy("z", "x", "y").count()
+        exploded.groupBy("z", "x", "y")
+        .agg(F.count("*").alias("count"), F.min("feature_id").alias("lo"),
+             F.max("feature_id").alias("hi"))
         .where(F.col("count") > threshold)
         .collect()
     )
     if not hot:
         return []
-    z_arr = np.array([r["z"] for r in hot])
-    x_arr = np.array([r["x"] for r in hot])
-    y_arr = np.array([r["y"] for r in hot])
-    return [int(t) for t in H.tile_id_mixed(z_arr, x_arr, y_arr)]
+    tids = H.tile_id_mixed(np.array([r["z"] for r in hot]),
+                           np.array([r["x"] for r in hot]),
+                           np.array([r["y"] for r in hot]))
+    return [(int(t), int(r["lo"]), int(r["hi"])) for t, r in zip(tids, hot)]
 
 
-def _salted_stage(records: DataFrame, config: TilerConfig,
-                  num_partitions: int | None = None,
-                  hot_tile_ids: list[int] | None = None,
-                  metrics: PipelineMetrics | None = None,
-                  by_range: bool = True):
-    """Salted reduce stage: (tile-sorted phase-A partials, merge encoder)."""
+def detect_hot_tiles(features: DataFrame, config: TilerConfig,
+                     threshold: int | None = None) -> list[int]:
+    """Tile ids with more than ``threshold`` (default
+    ``config.hot_tile_threshold``) feature bbox-centers, from one Catalyst
+    job over the features (``_hot_tile_ranges``)."""
+    return [t for t, _, _ in _hot_tile_ranges(features, config, threshold)]
+
+
+def _salt_records(msgs: DataFrame, config: TilerConfig,
+                  ranges: list[tuple[int, int, int]]) -> DataFrame:
+    """Premerge records + a ``salt`` column: 0 on cold tiles; on a hot tile
+    (tile_id, lo, hi) the feature_id's bucket among ``salt_buckets`` equal
+    slices of [lo, hi], clamped to the first/last bucket. The rule is
+    non-decreasing in feature_id whatever lo/hi are, so a tile's buckets
+    in salt order hold its records in feature_id order (equal ids share a
+    bucket); the ranges only steer the balance."""
+    import pyarrow as pa
+
+    k = config.salt_buckets
+    # built from Arrow, the ranges are a LocalRelation the JVM broadcasts
+    # as it is; a frame from a Python list is an RDD of pickled rows,
+    # ~0.2 s slower to broadcast under local[4] on 4 CPUs
+    cols = list(zip(*ranges)) or [(), (), ()]
+    hot = msgs.sparkSession.createDataFrame(pa.table({
+        c: pa.array(v, pa.int64()) for c, v in zip(("tile_id", "lo", "hi"), cols)}))
+    fid, lo, hi = (F.col(c).cast("double") for c in ("feature_id", "lo", "hi"))
+    bucket = F.floor((fid - lo) * k / (hi - lo + 1))
+    salt = (F.when(lo.isNull(), 0)
+            .otherwise(F.greatest(F.lit(0), F.least(F.lit(k - 1), bucket))))
+    return msgs.join(F.broadcast(hot), "tile_id", "left").select(
+        "tile_id", "feature_id", "msg", salt.cast("int").alias("salt"))
+
+
+def _salted_stage(msgs: DataFrame, config: TilerConfig,
+                  ranges: list[tuple[int, int, int]],
+                  num_partitions: int | None = None, by_range: bool = False,
+                  metrics: PipelineMetrics | None = None):
+    """Salted reduce stage over ``_premerge_records`` output: (tile-sorted
+    bucket rows, phase-B merge encoder). Phase A hashes on (tile_id, salt)
+    and concatenates each bucket; only the final exchange on tile_id
+    follows ``by_range``."""
     parts = num_partitions or config.shuffle_partitions
-    if hot_tile_ids is None:
-        raise ValueError("pass hot_tile_ids from detect_hot_tiles(features, config)")
-
-    # single-path: ONE pass over the fan-out; cold tiles carry salt=0 (one
-    # bucket, phase B is a no-op wrap), hot tiles spread over salt_buckets.
-    # Phase B's shuffle moves per-feature message bytes (~ final tile bytes),
-    # never re-clipped geometry.
-    is_hot = F.col("tile_id").isin(hot_tile_ids)
-    salted = records.withColumn(
-        "salt",
-        F.when(is_hot, F.pmod(F.col("feature_id"), F.lit(config.salt_buckets)))
-        .otherwise(F.lit(0)).cast("long"),
-    )
-    partials = (
-        _tile_exchange(salted, parts, by_range, "tile_id", "salt")
+    buckets = (
+        _tile_exchange(_salt_records(msgs, config, ranges), parts, False,
+                       "tile_id", "salt")
         .sortWithinPartitions("tile_id", "salt", "feature_id")
-        .mapInPandas(make_partial_encoder(config), schema=PARTIAL_SCHEMA)
+        .mapInPandas(make_bucket_encoder(), schema=BUCKETS_SCHEMA)
     )
-    merged_in = _tile_exchange(partials, parts, by_range, "tile_id")
-    return (merged_in.sortWithinPartitions("tile_id"),
-            make_merge_encoder(config, metrics))
+    merged_in = _tile_exchange(buckets, parts, by_range, "tile_id")
+    return (merged_in.sortWithinPartitions("tile_id", "salt"),
+            make_bucket_merge_encoder(config, metrics))
 
 
-def encode_tiles_salted(records: DataFrame, config: TilerConfig,
+def encode_tiles_salted(features: DataFrame, config: TilerConfig,
                         num_partitions: int | None = None,
-                        hot_tile_ids: list[int] | None = None,
                         metrics: PipelineMetrics | None = None,
                         by_range: bool = True) -> DataFrame:
     """Skew-safe two-phase encode [north-star: explicit salted repartitioning
-    on hot tiles]. Hot tiles get their features split across salt_buckets
-    sub-partitions for phase A, so no single reduce task ever owns a dense
-    urban tile alone; phase B merges the buckets in feature_id order —
-    output bytes identical to the premerge layout. Cold tiles carry salt 0,
-    one bucket each, so phase B only wraps them.
-
-    ``hot_tile_ids`` comes from ``detect_hot_tiles`` (no extra pass over the
-    fan-out); when it is empty every tile takes salt 0 and the bytes stay
-    the same (the sinks take the premerge layout instead).
-    """
-    return _encode(_salted_stage(records, config, num_partitions,
-                                 hot_tile_ids, metrics, by_range))
+    on hot tiles]. ``_hot_tile_ranges`` finds the hot tiles; the premerge
+    message records of each are split across ``salt_buckets`` feature_id
+    ranges for phase A, so no single task concatenates a dense urban tile
+    alone; phase B joins the bucket bodies in salt order — output bytes
+    identical to the premerge layout. Cold tiles (every tile, when none is
+    hot) carry salt 0, one bucket each."""
+    return _encode(_salted_stage(
+        _premerge_records(features, config, metrics), config,
+        _hot_tile_ranges(features, config), num_partitions, by_range, metrics))
 
 
 def fanout_records(features: DataFrame, config: TilerConfig,
                    metrics: PipelineMetrics | None = None) -> DataFrame:
     """features -> (tile_id, feature_id, wkb) records: the fan-out before
-    message encode, as the salted layout and the raster operator take it."""
+    message encode, as the raster operator, ``bench.py`` and the
+    driver-side reference encode take it (no tiling sink shuffles WKB)."""
     return features.select(*FANOUT_COLS).mapInPandas(
         make_fanout(config, metrics), schema=RECORDS_SCHEMA
     )
@@ -2604,19 +2596,20 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
     Rejects the option combinations no encoder serves, settles ``bounds``
     (one scan when None) and picks the layout: premerge, premerge+props
     with ``config.write_properties``, or the salted two-phase encode when
-    ``salted`` and ``detect_hot_tiles`` finds a hot tile (without one,
-    salting would only re-wrap every tile, so premerge runs). Archive
-    bytes are identical on every layout. ``emit(phase, kind, **info)``,
-    when given, receives the 'bounds' start/complete events, which bracket
-    the bounds scan alone (not the option checks or hot-tile detection).
+    ``salted`` and ``_hot_tile_ranges`` finds a hot tile (without one,
+    salting would only re-wrap every tile, so premerge runs); every layout
+    starts from the same ``_premerge_records``. Archive bytes are
+    identical on every layout. ``emit(phase, kind, **info)``, when given,
+    receives the 'bounds' start/complete events, which bracket the bounds
+    scan alone (not the option checks or hot-tile detection).
 
     ``by_range`` asks for a range exchange on tile_id (globally
     tile-ordered partitions, as the single-writer stream needs). Range
     partitioning samples its input, so the map-side output is then
-    persisted DISK_ONLY to keep the fan-out from running twice; on the
-    premerge layouts that caches the small framed messages, the Spark
-    analog of the reference writing phase-1 runs to disk before its
-    phase-2 external sort (external_sort.rs:99-189). The caller must
+    persisted DISK_ONLY to keep the fan-out from running twice; that
+    caches the small framed messages, the Spark analog of the reference
+    writing phase-1 runs to disk before its phase-2 external sort
+    (external_sort.rs:99-189). The caller must
     unpersist the returned frame. A hash exchange (``by_range=False``)
     needs neither: the fan-out then runs exactly once, as the shuffle's
     map stage."""
@@ -2643,18 +2636,15 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
     if emit is not None:
         emit("bounds", "complete", bounds=bounds)
 
-    hot = detect_hot_tiles(features, config) if salted else []
-    if hot:
-        records = fanout_records(features, config, metrics)
-    else:
-        records = _premerge_records(features, config, metrics)
+    hot = _hot_tile_ranges(features, config) if salted else []
+    records = _premerge_records(features, config, metrics)
     cached = None
     if by_range:
         records = cached = records.persist(StorageLevel.DISK_ONLY)
     try:
         if hot:
-            stage = _salted_stage(records, config, hot_tile_ids=hot,
-                                  metrics=metrics, by_range=by_range)
+            stage = _salted_stage(records, config, hot, by_range=by_range,
+                                  metrics=metrics)
         elif props:
             stage = _premerge_props_stage(records, features, config,
                                           by_range=by_range, metrics=metrics)
@@ -2757,8 +2747,8 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     tile, the salted merge) comes from the dispatcher ``convert_sharded``
     shares. The exchange is by range on tile_id, with the map-side output
     persisted DISK_ONLY so the range sampling does not re-run the fan-out.
-    On the premerge layouts an under-partitioned input is first spread
-    over every task slot, as on every other premerge plan. Tiles stream
+    An under-partitioned input is first spread over every task slot, as
+    on every other premerge plan. Tiles stream
     to the driver in tile_id order via toLocalIterator (O(1) driver
     memory, like the reference's temp-file writer,
     pmtiles_writer.rs:1000-1019). ``progress`` receives ordered

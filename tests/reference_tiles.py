@@ -1,8 +1,9 @@
 """Driver-side reference encode for archive byte-parity tests.
 
 Every tiling sink runs the premerge layout (messages encoded map-side,
-wrapped per tile after the shuffle) or the salted two-phase merge. The
-reference here shares neither: it collects ``fanout_records``, sorts the
+wrapped per tile after the shuffle), or with ``salted=True`` and a hot
+tile the salted two-phase concat of those same messages. The reference
+here shares neither: it collects ``fanout_records``, sorts the
 records on (tile_id, feature_id) and encodes all tiles in one call of the
 kernel-level encoders — ``mvt_fast.encode_sorted_runs`` (WKB straight to
 tile bytes) or, with ``write_properties``, ``encode_record_msgs`` +

@@ -1,8 +1,11 @@
 """Salted two-phase encode must be byte-identical to the single-phase path."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from gpq_tiles_spark import pipeline as P
 from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.extract import extract_features
 from gpq_tiles_spark.kernels import simplify as SK
@@ -11,7 +14,6 @@ from gpq_tiles_spark.pipeline import (
     detect_hot_tiles,
     encode_tiles_premerge,
     encode_tiles_salted,
-    fanout_records,
 )
 
 from tests.reference_tiles import reference_tiles
@@ -21,30 +23,32 @@ def _tile_bytes(tiles) -> dict:
     return {int(t.tile_id): (bytes(t.mvt), int(t.n_features)) for t in tiles}
 
 
+def _salted_config(**kw) -> TilerConfig:
+    # a low threshold and few buckets make the 400-doc fixture salt
+    return TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
+                       hot_tile_threshold=5, salt_buckets=4, **kw)
+
+
 def test_salted_matches_single_phase(spark, docs_table):
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=7, shuffle_partitions=8,
                       hot_tile_threshold=5, salt_buckets=4)  # force salting
-    records = fanout_records(feats, cfg).cache()
 
     hot = detect_hot_tiles(feats, cfg)
     assert hot, "low threshold must flag hot tiles"
 
     plain = _tile_bytes(reference_tiles(feats, cfg).itertuples())
-    salted = _tile_bytes(
-        encode_tiles_salted(records, cfg, hot_tile_ids=hot).collect())
+    salted = _tile_bytes(encode_tiles_salted(feats, cfg).collect())
 
     assert set(plain) == set(salted)
     diff = [t for t in plain if plain[t] != salted[t]]
     assert diff == [], f"byte mismatch for tiles {diff[:5]}"
-    records.unpersist()
 
 
 def test_salted_without_hot_tiles_matches_unsalted(spark, docs_table,
                                                    tmp_path):
     """With no hot tile, ``salted=True`` writes the unsalted archive, and
-    the salted encode over an empty hot list (every tile salt 0) gives
-    the premerge tiles."""
+    the salted encode (every tile salt 0) gives the premerge tiles."""
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
                       hot_tile_threshold=10**9)
@@ -57,9 +61,125 @@ def test_salted_without_hot_tiles_matches_unsalted(spark, docs_table,
     with open(p_plain, "rb") as a, open(p_salted, "rb") as b:
         assert a.read() == b.read()
 
-    cold = _tile_bytes(encode_tiles_salted(fanout_records(feats, cfg), cfg,
-                                           hot_tile_ids=[]).collect())
+    cold = _tile_bytes(encode_tiles_salted(feats, cfg).collect())
     assert cold == _tile_bytes(encode_tiles_premerge(feats, cfg).collect())
+
+
+def test_detect_hot_tiles_explicit_zero_threshold(spark, docs_table):
+    """``threshold=0`` flags every tile holding a feature center; it is not
+    replaced by the config default."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    cfg = TilerConfig(min_zoom=0, max_zoom=3)  # default threshold 200,000
+    assert detect_hot_tiles(feats, cfg) == []
+    hot = detect_hot_tiles(feats, cfg, threshold=0)
+    assert 0 in hot  # the z0 tile
+    assert len(hot) >= 4  # at least one tile per zoom
+
+
+@pytest.mark.parametrize("field, value",
+                         [("salt_buckets", 0), ("hot_tile_threshold", -1)])
+def test_salting_fields_rejected_before_any_job(spark, docs_table, tmp_path,
+                                                field, value):
+    feats = extract_features(spark.read.parquet(docs_table))
+    events = []
+    with pytest.raises(ValueError, match=field):
+        convert(feats, str(tmp_path / "x.pmtiles"),
+                TilerConfig(min_zoom=0, max_zoom=4, **{field: value}),
+                salted=True, progress=events.append)
+    assert events == []
+
+
+@pytest.mark.parametrize("mode", ["hash", "rownum"])
+def test_hot_tile_records_reach_several_buckets(spark, docs_table, mode):
+    """A hot tile's records spread over more than one salt bucket on hash
+    ids and on dense row-number ids; cold tiles stay in bucket 0."""
+    feats = extract_features(spark.read.parquet(docs_table),
+                             feature_id_mode=mode)
+    cfg = _salted_config()
+    ranges = P._hot_tile_ranges(feats, cfg)
+    assert ranges
+    assert all(lo <= hi for _, lo, hi in ranges)
+    salted = P._salt_records(P._premerge_records(feats, cfg), cfg, ranges)
+    buckets = {
+        r["tile_id"]: (r["lo"], r["hi"])
+        for r in salted.groupBy("tile_id")
+        .agg(F.min("salt").alias("lo"), F.max("salt").alias("hi")).collect()
+    }
+    hot = {t for t, _, _ in ranges}
+    assert all(buckets[t][0] < buckets[t][1] for t in hot), mode
+    assert all(buckets[t] == (0, 0) for t in buckets if t not in hot)
+
+
+def _narrow(ranges, case):
+    """Rewrite detected (tile_id, lo, hi) ranges so ids fall on or outside
+    the range edges."""
+    if case == "lo_eq_hi":
+        return [(t, lo, lo) for t, lo, _ in ranges]
+    # the middle quarter of each range: ids on both sides fall outside it
+    return [(t, lo + (hi - lo) * 3 // 8, lo + (hi - lo) * 5 // 8)
+            for t, lo, hi in ranges]
+
+
+@pytest.mark.parametrize("case", ["lo_eq_hi", "ids_outside", "negative_ids"])
+def test_salted_bytes_under_degenerate_ranges(spark, docs_table, case):
+    """The bucket rule is monotone in feature_id for any range, so the
+    salted tiles equal the premerge tiles when lo == hi, when ids lie
+    outside [lo, hi] (clamped to the first/last bucket), and on negative
+    ids such as an ``id_col`` can carry."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    if case == "negative_ids":
+        feats = feats.withColumn("feature_id", -F.col("feature_id") - 1)
+    cfg = _salted_config()
+    ranges = P._hot_tile_ranges(feats, cfg)
+    assert ranges
+    if case == "negative_ids":
+        assert all(hi < 0 for _, _, hi in ranges)
+    else:
+        ranges = _narrow(ranges, case)
+    msgs = P._premerge_records(feats, cfg)
+    salts = {r["salt"] for r in P._salt_records(msgs, cfg, ranges)
+             .select("salt").distinct().collect()}
+    assert salts >= {0, cfg.salt_buckets - 1}, salts
+
+    salted = _tile_bytes(
+        P._encode(P._salted_stage(msgs, cfg, ranges)).collect())
+    assert salted == _tile_bytes(encode_tiles_premerge(feats, cfg).collect())
+
+
+def _tile_exchanges(df) -> list[tuple[str, list[str]]]:
+    """(partitioning, output columns) of every shuffle exchange of ``df``'s
+    physical plan that partitions on tile_id."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange":
+            part = node.outputPartitioning().toString()
+            out = node.output()
+            if "tile_id" in part:
+                found.append((part, [out.apply(i).name()
+                                     for i in range(out.size())]))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.mark.parametrize("by_range", [False, True])
+def test_salted_exchanges_carry_no_wkb(spark, docs_table, by_range):
+    """Both exchanges of the salted plan move message bytes: the records'
+    framed messages, then the bucket bodies — never WKB."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    exchanges = _tile_exchanges(
+        encode_tiles_salted(feats, _salted_config(), by_range=by_range))
+    assert len(exchanges) == 2, exchanges
+    cols = sorted(tuple(sorted(c)) for _, c in exchanges)
+    assert cols == sorted([
+        ("feature_id", "msg", "salt", "tile_id"),
+        ("body", "fids", "lens", "n_records", "salt", "tile_id"),
+    ]), exchanges
+    assert all("wkb" not in c for _, c in exchanges)
 
 
 def test_simplify_in_tile_coords():
@@ -83,8 +203,6 @@ def test_simplify_in_tile_coords():
 def _mega_tile_records(n: int = 400):
     """One tile of ``n`` point records plus two small neighbor tiles,
     tile_id/feature_id sorted, as the reduce side receives them."""
-    import pandas as pd
-
     from gpq_tiles_spark.kernels import geom as G
     from gpq_tiles_spark.kernels import tile_math as T
     from gpq_tiles_spark.kernels.hilbert import tile_id
@@ -102,43 +220,48 @@ def _mega_tile_records(n: int = 400):
                            ignore_index=True)
 
 
+def _one_row_batches(pdf):
+    return (pdf.iloc[i:i + 1] for i in range(len(pdf)))
+
+
+def _encoded_tiles(encode, batches):
+    out = pd.concat(list(encode(batches)), ignore_index=True)
+    return [(int(t), bytes(m), int(n)) for t, m, n in
+            zip(out["tile_id"], out["mvt"], out["n_features"])]
+
+
 @pytest.mark.parametrize("encoder", ["premerge", "salted_merge"])
 def test_run_carry_one_row_batches_match_one_batch(encoder):
     """A multi-hundred-record tile arriving as 1-row Arrow batches encodes
-    to the same bytes as the whole tile in one batch, on the premerge wrap
-    encoder (whose input rows are the map-side messages) and on the salted
-    merge encoder (whose input rows are the per-salt partials of phase A)."""
-    import pandas as pd
-
+    to the premerge bytes of the whole tile in one batch, on the premerge
+    wrap encoder (whose input rows are the map-side messages) and through
+    the salted phase-A bucket encoder and phase-B merge encoder, with and
+    without a byte budget that caps the mega tile."""
     from gpq_tiles_spark.pipeline import (
-        make_merge_encoder,
+        make_bucket_encoder,
+        make_bucket_merge_encoder,
         make_msg_encoder,
-        make_partial_encoder,
         make_wrap_encoder,
     )
 
-    cfg = TilerConfig(min_zoom=0, max_zoom=6, salt_buckets=512)
-    pdf = _mega_tile_records()
-    if encoder == "premerge":
-        pdf = pd.concat(list(make_msg_encoder(cfg)(iter([pdf]))),
-                        ignore_index=True)
-        encode = make_wrap_encoder(cfg)
-    else:
-        # one salt bucket per feature: the mega tile reaches phase B as
-        # hundreds of single-record partials
-        pdf["salt"] = pdf["feature_id"] % cfg.salt_buckets
-        pdf = pdf.sort_values(["tile_id", "salt", "feature_id"],
-                              kind="stable", ignore_index=True)
-        pdf = pd.concat(list(make_partial_encoder(cfg)(iter([pdf]))),
-                        ignore_index=True)
-        assert len(pdf) > 300
-        encode = make_merge_encoder(cfg)
-
-    def tiles(batches):
-        out = pd.concat(list(encode(batches)), ignore_index=True)
-        return [(int(t), bytes(m), int(n)) for t, m, n in
-                zip(out["tile_id"], out["mvt"], out["n_features"])]
-
-    whole = tiles(iter([pdf]))
-    assert len(whole) == 3
-    assert tiles(pdf.iloc[i:i + 1] for i in range(len(pdf))) == whole
+    for budget in (None, 2048):
+        cfg = TilerConfig(min_zoom=0, max_zoom=6, max_tile_bytes=budget)
+        msgs = pd.concat(
+            list(make_msg_encoder(cfg)(iter([_mega_tile_records()]))),
+            ignore_index=True)
+        whole = _encoded_tiles(make_wrap_encoder(cfg), iter([msgs]))
+        assert len(whole) == 3
+        assert (max(n for *_, n in whole) < 400) == (budget is not None)
+        if encoder == "premerge":
+            pdf, encode = msgs, make_wrap_encoder(cfg)
+        else:
+            # buckets of 7 records: bucket runs span several 1-row batches
+            msgs["salt"] = (msgs.groupby("tile_id").cumcount() // 7
+                            ).astype(np.int32)
+            pdf = pd.concat(list(make_bucket_encoder()(
+                _one_row_batches(msgs))), ignore_index=True)
+            assert len(pdf) == msgs.groupby(["tile_id", "salt"]).ngroups
+            assert int(pdf["n_records"].sum()) == len(msgs)
+            encode = make_bucket_merge_encoder(cfg)
+            assert _encoded_tiles(encode, iter([pdf])) == whole
+        assert _encoded_tiles(encode, _one_row_batches(pdf)) == whole
