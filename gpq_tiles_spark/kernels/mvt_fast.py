@@ -67,22 +67,6 @@ def wrap_layer(head: bytes, feature_msgs: list[bytes], tail: bytes) -> bytes:
     return b"\x1a" + _varint(len(layer)) + layer
 
 
-def _canonical_rect_msg_tail(lng0: float, lat0: float, lng1: float,
-                             lat1: float, extent: int,
-                             buffer_px: float) -> bytes:
-    """Feature-message tail (type + packed geometry) for the canonical
-    buffered-rect polygon of one tile — shared by every empty-wkb record in
-    the tile's run. Byte-identical to encoding gridclip.rect_wkb geometry."""
-    from .mvt import _packed_u32, _tag
-
-    buf = (lng1 - lng0) * buffer_px / extent
-    bx0, by0, bx1, by1 = lng0 - buf, lat0 - buf, lng1 + buf, lat1 + buf
-    ring = np.array(
-        [[bx0, by0], [bx1, by0], [bx1, by1], [bx0, by1], [bx0, by0]])
-    cmds, gtype = M.encode_geometry((G.POLYGON, [ring]), lng0, lat0, lng1, lat1, extent)
-    return _tag(3, 0) + _varint(gtype) + _packed_u32(4, cmds)
-
-
 def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
                        extent: int, buffer_px: float = 8.0):
     """Per-RECORD framed feature messages (premerge map-side encode).
@@ -530,6 +514,56 @@ def _batch_geom_fields(row_start: np.ndarray, row_npts: np.ndarray,
     return out.tobytes(), byte_off, byte_end - byte_off
 
 
+def _rect_msg_tails(lng0, lat0, lng1, lat1, extent: int, buffer_px: float):
+    """Feature-message tails (type + packed geometry) of the canonical
+    buffered-rect polygon of each tile window, all in one batch: the
+    93-byte rect rings (``gridclip.rect_wkb``) run through ``_bulk_poly1``
+    and ``_batch_geom_fields``. Byte-identical to ``kernels.mvt``'s
+    encode_geometry of that rect, tagged as a POLYGON field pair.
+
+    Returns (buffer uint8, tail offsets, tail lengths), one tail per window.
+    """
+    m = len(lng0)
+    buf = (lng1 - lng0) * buffer_px / extent
+    bx0, by0, bx1, by1 = lng0 - buf, lat0 - buf, lng1 + buf, lat1 + buf
+    ring = np.stack([bx0, by0, bx1, by0, bx1, by1, bx0, by1, bx0, by0],
+                    axis=1).astype("<f8")
+    wkb = np.empty((m, 93), dtype=np.uint8)
+    wkb[:, :13] = np.frombuffer(_P1_HDR + b"\x05\x00\x00\x00", dtype=np.uint8)
+    wkb[:, 13:] = ring.view(np.uint8)
+    rows = np.arange(m, dtype=np.int64)
+    lens = np.full(m, 93, dtype=np.int64)
+    _, start, npts, inter = _bulk_poly1(
+        wkb.reshape(-1), rows * 93, wkb.tobytes(), rows, lens,
+        lng0, lat0, lng1, lat1, extent)
+    payload, p_off, p_len = _batch_geom_fields(start, npts, rows, inter, "poly")
+    # tail = 18 03 22 <varint(len)> <payload>
+    nb = _varint_nb(p_len)
+    t_len = 3 + nb + p_len
+    t_off = np.zeros(m, dtype=np.int64)
+    np.cumsum(t_len[:-1], out=t_off[1:])
+    out = np.empty(int(t_len.sum()), dtype=np.uint8)
+    out[t_off] = 0x18
+    out[t_off + 1] = 0x03
+    out[t_off + 2] = 0x22
+    _fill_varints(out, t_off + 3, p_len, nb)
+    _scatter_segments(out, t_off + 3 + nb,
+                      np.frombuffer(payload, dtype=np.uint8), p_off, p_len)
+    return out, t_off, t_len
+
+
+def _scatter_segments(dst: np.ndarray, dst_off: np.ndarray, src: np.ndarray,
+                      src_off: np.ndarray, lens: np.ndarray) -> None:
+    """dst[dst_off[i] : dst_off[i]+lens[i]] = src[src_off[i] : ...] for
+    all i, as one gather."""
+    total = int(lens.sum())
+    if total == 0:
+        return
+    seg = np.repeat(np.arange(len(lens)), lens)
+    local = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
+    dst[dst_off[seg] + local] = src[src_off[seg] + local]
+
+
 def _varint_nb(vals: np.ndarray) -> np.ndarray:
     """Byte length of each value's varint encoding (vectorized)."""
     v = vals.astype(np.uint64)
@@ -667,16 +701,14 @@ def _assemble_feature_messages(fid, wkbs, gidx, lng0, lat0, lng1, lat1,
     nb_fid = _varint_nb(fid_u)
 
     # rect tails, one per tile that has interior-rect records
-    rect_tiles = np.unique(gidx[cat == CAT_RECT])
-    rect_tails: dict[int, bytes] = {}
-    for gi in rect_tiles:
-        rect_tails[int(gi)] = _canonical_rect_msg_tail(
-            lng0[gi], lat0[gi], lng1[gi], lat1[gi], extent, buffer_px)
-    rect_tail_len = np.zeros(n, dtype=np.int64)
     r_rows = np.flatnonzero(cat == CAT_RECT)
+    rect_tiles, r_tile = np.unique(gidx[r_rows], return_inverse=True)
+    rect_tail_len = np.zeros(n, dtype=np.int64)
     if len(r_rows):
-        rect_tail_len[r_rows] = np.array(
-            [len(rect_tails[int(gidx[i])]) for i in r_rows], dtype=np.int64)
+        tails, tail_off, tail_len = _rect_msg_tails(
+            lng0[rect_tiles], lat0[rect_tiles], lng1[rect_tiles],
+            lat1[rect_tiles], extent, buffer_px)
+        rect_tail_len[r_rows] = tail_len[r_tile]
 
     # exact-path records (multipolygons etc.): per-record python, rare
     exact_msgs: dict[int, bytes] = {}
@@ -769,11 +801,7 @@ def _assemble_feature_messages(fid, wkbs, gidx, lng0, lat0, lng1, lat1,
             dmask = np.cumsum(d[:-1], dtype=np.int8).view(bool)
             buf[dmask] = src
         else:
-            grp = np.repeat(np.arange(len(rows_i)), ln)
-            grp_start = np.zeros(len(rows_i), dtype=np.int64)
-            np.cumsum(ln[:-1], out=grp_start[1:])
-            local = np.arange(int(ln.sum()), dtype=np.int64) - grp_start[grp]
-            buf[dst0[grp] + local] = src[src_off_row[rows_i][grp] + local]
+            _scatter_segments(buf, dst0, src, so, ln)
 
     rows_p1 = np.flatnonzero(cat == CAT_P1)
     if len(rows_p1):
@@ -786,17 +814,10 @@ def _assemble_feature_messages(fid, wkbs, gidx, lng0, lat0, lng1, lat1,
         src_off[ls_idx >= 0] = ls_boff[ls_idx[ls_idx >= 0]]
         _fill_payload(rows_ls, 0x02, blen_ls, ls_buf, src_off)
 
-    # rect tails: group records per tile (records are tile-sorted already),
-    # write each tile's shared tail bytes to all its rect records at once
+    # rect tails: every rect record gets its tile's shared tail bytes
     if len(r_rows):
-        gs = gidx[r_rows]
-        g_start = np.flatnonzero(np.concatenate(([True], gs[1:] != gs[:-1])))
-        g_end = np.append(g_start[1:], len(r_rows))
-        for s0, e0 in zip(g_start, g_end):
-            tail = np.frombuffer(rect_tails[int(gs[s0])], dtype=np.uint8)
-            rr = r_rows[s0:e0]
-            idx = mid[rr][:, None] + np.arange(len(tail), dtype=np.int64)[None, :]
-            buf[idx.reshape(-1)] = np.tile(tail, len(rr))
+        _scatter_segments(buf, mid[r_rows], tails, tail_off[r_tile],
+                          tail_len[r_tile])
 
     for i, fm in exact_msgs.items():
         buf[msg_start[i]:msg_start[i] + len(fm)] = np.frombuffer(fm, dtype=np.uint8)

@@ -2,28 +2,34 @@
 
 [north-star extensions — cite: BASELINE.json north_star "point-in-polygon
 joins, kNN via cell-ring expansion"]. Both are cell-index prefilter +
-exact-refine patterns:
+exact-refine patterns, with no Python loop per key or per row:
 
-* PIP: polygons are covered with grid cells (one row per (cell, zone)),
-  points carry their cell as a Catalyst expression column; the equi-join on
-  the int64 cell column prunes the candidate space, then a vectorized
-  ray-casting kernel refines each (zone, [points]) group. Small polygon
-  sides are broadcast — no shuffle of the point table beyond the cell join.
-* kNN: probes expand grid disks r=0,1,... joining the indexed points per
-  round until the kth neighbor distance is provably within the ring bound;
-  final top-k by window.
+* PIP: polygons are covered with grid cells (one row per (cell, zone), one
+  vectorized cover call over every zone bbox), points carry their cell as a
+  Catalyst expression column; the equi-join on the int64 cell column prunes
+  the candidate space, then each Arrow batch is grouped by zone once
+  (factorize + stable argsort) and a vectorized ray-casting kernel refines
+  each zone's contiguous slice. Small polygon sides are broadcast — no
+  shuffle of the point table beyond the cell join.
+* kNN (``knn_join``): probes expand grid disks r=2,4,... over the cached,
+  cell-indexed points until the kth neighbor distance is provably within
+  the ring bound. A round is one narrow Arrow pass: the cell-sorted
+  (probe, cell) disk pairs ride in the ``mapInPandas`` closure, each point
+  batch finds its probes by ``searchsorted`` on its cell, computes the
+  squared distances and keeps, per probe, the rows within its batch-local
+  kth distance (ties included); a window top-k over those few rows orders
+  (d, point_id) exactly, and its n_probes x k rows come back over Arrow.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -33,8 +39,22 @@ from pyspark.sql.types import (
 
 from ..kernels import geom as G
 from ..kernels import pip as PIPK
+from ..kernels import tile_math as T
 from ..partitioning import spread_small_input
 from . import cells as C
+
+
+def _cover_rows(zone_ids, bboxes, zoom: int) -> tuple[np.ndarray, np.ndarray]:
+    """(zone_id, cell) cover rows of zones with bboxes (x0, y0, x1, y1):
+    one vectorized ``cover_bbox_cells`` call, stably ordered by zone, so the
+    rows come out zone by zone exactly as one call per zone gives them."""
+    ids = np.asarray(zone_ids, dtype=object)
+    if len(ids) == 0:
+        return ids, np.empty(0, dtype=np.int64)
+    b = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
+    ridx, cells = C.cover_bbox_cells(b[:, 0], b[:, 1], b[:, 2], b[:, 3], zoom)
+    order = np.argsort(ridx, kind="stable")
+    return ids[ridx[order]], cells[order]
 
 
 def polygon_cell_cover(zones: DataFrame, wkb_col: str = "zone_wkb",
@@ -48,14 +68,10 @@ def polygon_cell_cover(zones: DataFrame, wkb_col: str = "zone_wkb",
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, cells_out = [], []
-            for zid, wkb in zip(pdf[id_col], pdf[wkb_col]):
-                g = G.from_wkb(bytes(wkb))
-                x0, y0, x1, y1 = G.bbox(g)
-                _, cc = C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
-                ids.extend([zid] * len(cc))
-                cells_out.extend(cc.tolist())
-            yield pd.DataFrame({"zone_id": ids, "cell": cells_out})
+            ids, cells = _cover_rows(
+                pdf[id_col].to_numpy(),
+                [G.bbox(G.from_wkb(bytes(w))) for w in pdf[wkb_col]], zoom)
+            yield pd.DataFrame({"zone_id": ids, "cell": cells})
 
     return zones.select(id_col, wkb_col).mapInPandas(cover, schema=schema)
 
@@ -81,6 +97,32 @@ def _cover_zoom(bboxes) -> int:
     return int(np.clip(np.floor(np.log2(360.0 / med)), 0, 18))
 
 
+_PIP_COLS = ["point_id", "lng", "lat", "zone_id"]
+
+
+def _refine_by_zone(pdf: pd.DataFrame,
+                    geom_at: Callable[[object, int], tuple]) -> pd.DataFrame:
+    """The exact PIP refine of one candidate batch: group the rows by
+    ``zone_id`` once (factorize + stable argsort), run the ray-casting
+    kernel on each zone's contiguous slice, keep the hits in batch order.
+    ``geom_at(zone_id, row)`` gives the zone's geometry, ``row`` being the
+    position of the zone's first candidate in the batch."""
+    codes, uniq = pd.factorize(pdf["zone_id"], use_na_sentinel=False)
+    order = np.argsort(codes, kind="stable")
+    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+    ends = np.append(starts[1:], len(order))
+    px = pdf["lng"].to_numpy(dtype=np.float64)[order]
+    py = pdf["lat"].to_numpy(dtype=np.float64)[order]
+    hit = np.empty(len(order), dtype=bool)
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        first = int(order[s])
+        hit[s:e] = PIPK.points_in_geom(
+            px[s:e], py[s:e], geom_at(uniq[codes[first]], first))
+    keep = np.empty(len(order), dtype=bool)
+    keep[order] = hit
+    return pdf[keep][_PIP_COLS]
+
+
 def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           point_id: str = "point_id", lng: str = "lng",
                           lat: str = "lat", zone_id: str = "zone_id",
@@ -88,7 +130,13 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           zoom: int | str = "auto",
                           broadcast_zones: bool = True) -> DataFrame:
     """Exact PIP join -> (point_id, lng, lat, zone_id). ``zoom='auto'``
-    (default) sizes the cell grid to the zones (see auto_cover_zoom)."""
+    (default) sizes the cell grid to the zones (see auto_cover_zoom).
+
+    Not fully lazy: with ``broadcast_zones`` (the default) the call
+    collects the zone table (one Spark job) to build the cell cover and the
+    refine's geometries; with ``broadcast_zones=False`` and
+    ``zoom='auto'`` it collects a sample of the zones to pick the zoom.
+    The point side stays lazy until the returned frame runs."""
     geoms = None
     if broadcast_zones:
         # the broadcastable-zones path collects the zone table anyway (the
@@ -98,17 +146,13 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
         # guide §1.2). The cover rows are identical to polygon_cell_cover.
         zrows = zones.select(zone_id, zone_wkb).collect()
         geoms = {r[0]: G.from_wkb(bytes(r[1])) for r in zrows}
-        bboxes = {k: G.bbox(g) for k, g in geoms.items()}
+        bboxes = [G.bbox(g) for g in geoms.values()]
         if zoom == "auto":
-            zoom = _cover_zoom(list(bboxes.values())[:512])
-        ids, cells_out = [], []
-        for zid, (x0, y0, x1, y1) in bboxes.items():
-            _, cc = C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
-            ids.extend([zid] * len(cc))
-            cells_out.extend(cc.tolist())
+            zoom = _cover_zoom(bboxes[:512])
+        ids, cells = _cover_rows(list(geoms), bboxes, zoom)
         cover = F.broadcast(points.sparkSession.createDataFrame(
             pd.DataFrame({"zone_id": pd.Series(ids, dtype=object),
-                          "cell": pd.Series(cells_out, dtype=np.int64)}),
+                          "cell": pd.Series(cells, dtype=np.int64)}),
             schema="zone_id string, cell long"))
     else:
         if zoom == "auto":
@@ -133,15 +177,7 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
 
         def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                keep = np.zeros(len(pdf), dtype=bool)
-                px = pdf["lng"].to_numpy(dtype=np.float64)
-                py = pdf["lat"].to_numpy(dtype=np.float64)
-                zarr = pdf["zone_id"].to_numpy()
-                for zid in pd.unique(zarr):
-                    m = zarr == zid
-                    keep[m] = PIPK.points_in_geom(px[m], py[m], geoms[zid])
-                out = pdf[keep]
-                yield out[["point_id", "lng", "lat", "zone_id"]]
+                yield _refine_by_zone(pdf, lambda zid, _row: geoms[zid])
 
         cand = cand.select(
             F.col(point_id).alias("point_id").cast("long"),
@@ -156,20 +192,17 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
     cand2 = cand.join(zones.select(zone_id, zone_wkb), "zone_id")
 
     def refine2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, tuple] = {}
+        cache: dict = {}
         for pdf in batches:
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf["lng"].to_numpy(dtype=np.float64)
-            py = pdf["lat"].to_numpy(dtype=np.float64)
-            zarr = pdf["zone_id"].to_numpy()
-            for zid in pd.unique(zarr):
-                m = zarr == zid
+            wkbs = pdf[zone_wkb]
+
+            def geom_at(zid, row):
                 g = cache.get(zid)
                 if g is None:
-                    g = cache[zid] = G.from_wkb(bytes(pdf[zone_wkb][m].iloc[0]))
-                keep[m] = PIPK.points_in_geom(px[m], py[m], g)
-            out = pdf[keep]
-            yield out[["point_id", "lng", "lat", "zone_id"]]
+                    g = cache[zid] = G.from_wkb(bytes(wkbs.iloc[row]))
+                return g
+
+            yield _refine_by_zone(pdf, geom_at)
 
     cand2 = cand2.select(
         F.col(point_id).alias("point_id").cast("long"),
@@ -183,6 +216,62 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
 KNN_DRIVER_MAX_PROBES = 10_000
 
 
+def _disk_pairs(p_cell: np.ndarray, r: int,
+                zoom: int) -> tuple[np.ndarray, np.ndarray]:
+    """(probe index, cell) pairs of every probe's radius-r grid disk, sorted
+    by cell. Pole clamping and antimeridian wrap can alias disk cells, so
+    the pairs are deduplicated or a point would match its probe twice."""
+    idx, cells = C.grid_disk(p_cell, r, zoom)
+    order = np.lexsort((idx, cells))
+    idx, cells = idx[order], cells[order]
+    keep = np.ones(len(idx), dtype=bool)
+    keep[1:] = (idx[1:] != idx[:-1]) | (cells[1:] != cells[:-1])
+    return idx[keep], cells[keep]
+
+
+def _ring_candidates(pair_probe: np.ndarray, pair_cell: np.ndarray,
+                     p_ids: np.ndarray, p_lng: np.ndarray, p_lat: np.ndarray,
+                     k: int):
+    """mapInPandas body of one kNN round over (point_id, lng, lat, cell)
+    batches -> (probe_id, point_id, d) rows. Each point meets the probes
+    whose disk holds its cell (``searchsorted`` over the cell-sorted
+    pairs); ``d`` is ``dx*dx + dy*dy``, the same IEEE operations as the
+    Catalyst expression it replaces. Per probe, a batch keeps the rows
+    with ``d`` up to its own kth smallest ``d`` (ties included), a
+    superset of that batch's share of the global (d, point_id) top-k, so
+    the exact tie-break on point_id stays with Spark for any id type."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cell = pdf["cell"].to_numpy(dtype=np.int64)
+            lo = np.searchsorted(pair_cell, cell, "left")
+            cnt = np.searchsorted(pair_cell, cell, "right") - lo
+            total = int(cnt.sum())
+            if total == 0:
+                continue
+            row = np.repeat(np.arange(len(cell)), cnt)
+            pair = (np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+                    + np.repeat(lo, cnt))
+            probe = pair_probe[pair]
+            dx = pdf["lng"].to_numpy(dtype=np.float64)[row] - p_lng[probe]
+            dy = pdf["lat"].to_numpy(dtype=np.float64)[row] - p_lat[probe]
+            d = dx * dx + dy * dy
+            order = np.lexsort((d, probe))
+            grp = probe[order]
+            starts = np.flatnonzero(np.diff(grp, prepend=-1))
+            sizes = np.diff(np.append(starts, total))
+            kth = d[order][starts + np.minimum(sizes, k) - 1]
+            # "not above" rather than "<=": a NaN distance stays a candidate
+            sel = order[~(d[order] > np.repeat(kth, sizes))]
+            yield pd.DataFrame({
+                "probe_id": p_ids[probe[sel]],
+                "point_id": pdf["point_id"].to_numpy()[row[sel]],
+                "d": d[sel],
+            })
+
+    return run
+
+
 def knn_join(points: DataFrame, probes: DataFrame, k: int,
              point_id: str = "point_id", probe_id: str = "probe_id",
              zoom: int = 7, max_radius: int = 64) -> DataFrame:
@@ -191,6 +280,12 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     points: (point_id, lng, lat); probes: (probe_id, lng, lat).
     Returns (probe_id, rnk, point_id, dist). Distance is squared-degree
     euclidean (matching the brute-force oracle).
+
+    Not lazy: the call collects the probes (at most
+    ``KNN_DRIVER_MAX_PROBES``) and runs every round as Spark jobs before
+    it returns — a pass over the cached, cell-indexed points, a window
+    top-k and an Arrow collect of its n_probes x k rows; the result is a
+    local frame over the last round's rows.
 
     Correctness bound: a point whose cell is outside the Chebyshev disk of
     radius r differs from the probe by > (r-1) full cell widths in lng or by
@@ -213,79 +308,64 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
             "for small probe sets — use knn_join_distributed, which keeps "
             "probes a DataFrame end-to-end."
         )
-    pts = C.with_cell_column(
-        spread_small_input(
-            points.select(F.col(point_id).alias("point_id"), "lng", "lat")),
-        "lng", "lat", zoom,
-    ).cache()
-    p_ids = [r[0] for r in probe_rows]
-    p_lng = np.array([r[1] for r in probe_rows])
-    p_lat = np.array([r[2] for r in probe_rows])
+    p_ids = np.array([int(r[0]) for r in probe_rows], dtype=np.int64)
+    p_lng = np.array([r[1] for r in probe_rows], dtype=np.float64)
+    p_lat = np.array([r[2] for r in probe_rows], dtype=np.float64)
     p_cell = C.latlng_to_cell(p_lng, p_lat, zoom)
 
     cell_w = 360.0 / (1 << zoom)
     # min cell height across the probe latitudes' neighborhood (conservative)
-    import numpy as _np
-
-    from ..kernels import tile_math as T
-
     _, py = T.lng_lat_to_tile_xy(p_lng, p_lat, zoom)
-    _, lat_min_c, _, lat_max_c = T.tile_bounds(_np.zeros_like(py), py, zoom)
-    min_cell_h = float(np.minimum(np.abs(lat_max_c - lat_min_c), cell_w).min())
+    _, lat_min_c, _, lat_max_c = T.tile_bounds(np.zeros_like(py), py, zoom)
+    min_cell_h = float(np.minimum(np.abs(lat_max_c - lat_min_c), cell_w).min(
+        initial=cell_w))
 
     spark = points.sparkSession
+    pts = C.with_cell_column(
+        spread_small_input(
+            points.select(F.col(point_id).alias("point_id"), "lng", "lat")),
+        "lng", "lat", zoom,
+    ).where(F.col("cell").isNotNull()).cache()
+    cand_schema = StructType([
+        StructField("probe_id", LongType()),
+        StructField("point_id", pts.schema["point_id"].dataType),
+        StructField("d", DoubleType()),
+    ])
+    w = Window.partitionBy("probe_id").orderBy(F.asc("d"), F.asc("point_id"))
     # r starts at 2, not 1 (round 7): the done-bound at radius r is
     # ((r-1)*min_cell_h)^2, which is 0.0 at r=1 — that round can only
     # resolve when the kth distance is exactly 0, and in that case the
     # r=2 top-k is the identical row set (disk(2) contains disk(1) and the
     # ordering tie-breaks on point_id). Starting at 2 removes one full
-    # join+window+collect Spark round from every call; max_radius=1 still
-    # searches radius 1 only, and no round searches past max_radius.
+    # Spark round from every call; max_radius=1 still searches radius 1
+    # only, and no round searches past max_radius.
     r = min(2, max_radius)
-    while True:
-        idx, cells = C.grid_disk(p_cell, r, zoom)
-        cand_cells = spark.createDataFrame(
-            [(int(p_ids[i]) if isinstance(p_ids[i], (int, np.integer)) else p_ids[i],
-              float(p_lng[i]), float(p_lat[i]), int(c))
-             for i, c in zip(idx.tolist(), cells.tolist())],
-            schema="probe_id long, probe_lng double, probe_lat double, cell long",
-        ).dropDuplicates(["probe_id", "cell"])
-        joined = F.broadcast(cand_cells).join(pts, "cell")
-        dist = (
-            (F.col("lng") - F.col("probe_lng")) * (F.col("lng") - F.col("probe_lng"))
-            + (F.col("lat") - F.col("probe_lat")) * (F.col("lat") - F.col("probe_lat"))
-        )
-        w = Window.partitionBy("probe_id").orderBy(F.asc("d"), F.asc("point_id"))
-        topk = (
-            joined.withColumn("d", dist)
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("probe_id", "rnk", "point_id", F.col("d").alias("dist"))
-        )
-        # ONE collect per round: the top-k rows themselves are the
-        # (n_probes x k)-bounded driver payload this variant already
-        # accepts, and the resolve stats (count, kth distance) fold out of
-        # them driver-side — the separate stats aggregation job is gone
-        # (round 7; guide §1.2). Collecting here also releases the points
-        # cache as soon as the last round finishes.
-        rows = topk.collect()
-        bound = ((r - 1) * min_cell_h) ** 2
-        cnt: dict = {}
-        kth: dict = {}
-        for row in rows:
-            p = row["probe_id"]
-            cnt[p] = cnt.get(p, 0) + 1
-            d = row["dist"]
-            if p not in kth or d > kth[p]:
-                kth[p] = d
-        done = all(
-            cnt.get(pid, 0) >= k and kth[pid] <= bound
-            for pid in (int(p) if isinstance(p, np.integer) else p for p in p_ids)
-        )
-        if done or r >= max_radius:
-            pts.unpersist()
-            return spark.createDataFrame(rows, schema=topk.schema)
-        r = min(2 * r, max_radius)
+    try:
+        while True:
+            pair_probe, pair_cell = _disk_pairs(p_cell, r, zoom)
+            topk = (
+                pts.mapInPandas(_ring_candidates(pair_probe, pair_cell, p_ids,
+                                                 p_lng, p_lat, k),
+                                schema=cand_schema)
+                .withColumn("rnk", F.row_number().over(w))
+                .where(F.col("rnk") <= k)
+                .select("probe_id", "rnk", "point_id", F.col("d").alias("dist"))
+            )
+            # ONE Arrow collect per round: the top-k rows themselves are the
+            # (n_probes x k)-bounded driver payload this variant accepts, and
+            # the resolve stats (count, kth distance) fold out of them
+            rows = topk.toPandas()
+            bound = ((r - 1) * min_cell_h) ** 2
+            stats = rows.groupby("probe_id")["dist"].agg(["size", "max"])
+            stats = stats.reindex(p_ids)
+            done = bool(((stats["size"] >= k) & (stats["max"] <= bound)).all())
+            if done or r >= max_radius:
+                # built from pandas over Arrow: a LocalRelation, not an RDD
+                # of pickled rows
+                return spark.createDataFrame(rows, schema=topk.schema)
+            r = min(2 * r, max_radius)
+    finally:
+        pts.unpersist()
 
 
 def knn_join_distributed(points: DataFrame, probes: DataFrame, k: int,
@@ -341,15 +421,7 @@ def knn_join_distributed(points: DataFrame, probes: DataFrame, k: int,
                 lngs = pdf["probe_lng"].to_numpy(dtype=np.float64)
                 lats = pdf["probe_lat"].to_numpy(dtype=np.float64)
                 cell = C.latlng_to_cell(lngs, lats, zoom)
-                idx, cells = C.grid_disk(cell, r, zoom)
-                # pole clamping / antimeridian wrap can alias disk cells:
-                # dedupe (probe, cell) pairs or the join would duplicate points
-                order = np.lexsort((cells, idx))
-                idx, cells = idx[order], cells[order]
-                keep = np.empty(len(idx), dtype=bool)
-                keep[0] = True
-                keep[1:] = (idx[1:] != idx[:-1]) | (cells[1:] != cells[:-1])
-                idx, cells = idx[keep], cells[keep]
+                idx, cells = _disk_pairs(cell, r, zoom)
                 # per-probe ring bound: ((r-1) * min cell extent in disk)^2;
                 # cell heights shrink poleward, so the min is at an extreme row
                 _, cy = C.unpack_cell(cell)

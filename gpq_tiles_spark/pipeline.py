@@ -1312,24 +1312,42 @@ def _salt_records(msgs: DataFrame, config: TilerConfig,
         "tile_id", "feature_id", "msg", salt.cast("int").alias("salt"))
 
 
-def _salted_stage(msgs: DataFrame, config: TilerConfig,
-                  ranges: list[tuple[int, int, int]],
-                  num_partitions: int | None = None, by_range: bool = False,
-                  metrics: PipelineMetrics | None = None):
-    """Salted reduce stage over ``_premerge_records`` output: (tile-sorted
-    bucket rows, phase-B merge encoder). Phase A hashes on (tile_id, salt)
-    and concatenates each bucket; only the final exchange on tile_id
-    follows ``by_range``."""
+def _bucket_rows(msgs: DataFrame, config: TilerConfig,
+                 ranges: list[tuple[int, int, int]],
+                 num_partitions: int | None = None) -> DataFrame:
+    """Salted phase A over ``_premerge_records`` output: hash exchange on
+    (tile_id, salt), then one row per (tile, bucket) concatenating the
+    bucket's feature_id-sorted messages."""
     parts = num_partitions or config.shuffle_partitions
-    buckets = (
+    return (
         _tile_exchange(_salt_records(msgs, config, ranges), parts, False,
                        "tile_id", "salt")
         .sortWithinPartitions("tile_id", "salt", "feature_id")
         .mapInPandas(make_bucket_encoder(), schema=BUCKETS_SCHEMA)
     )
+
+
+def _bucket_merge_stage(buckets: DataFrame, config: TilerConfig,
+                        num_partitions: int | None = None,
+                        by_range: bool = False,
+                        metrics: PipelineMetrics | None = None):
+    """Salted phase B over ``_bucket_rows``: (tile-sorted bucket rows,
+    merge encoder); the exchange on tile_id follows ``by_range``."""
+    parts = num_partitions or config.shuffle_partitions
     merged_in = _tile_exchange(buckets, parts, by_range, "tile_id")
     return (merged_in.sortWithinPartitions("tile_id", "salt"),
             make_bucket_merge_encoder(config, metrics))
+
+
+def _salted_stage(msgs: DataFrame, config: TilerConfig,
+                  ranges: list[tuple[int, int, int]],
+                  num_partitions: int | None = None, by_range: bool = False,
+                  metrics: PipelineMetrics | None = None):
+    """Salted reduce stage over ``_premerge_records`` output: phase A
+    (``_bucket_rows``) feeding phase B (``_bucket_merge_stage``)."""
+    return _bucket_merge_stage(
+        _bucket_rows(msgs, config, ranges, num_partitions), config,
+        num_partitions, by_range, metrics)
 
 
 def encode_tiles_salted(features: DataFrame, config: TilerConfig,
@@ -2460,6 +2478,7 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
     released on every exit path."""
     import tempfile
 
+    import pyarrow as pa
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
@@ -2516,14 +2535,16 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
             per_part = winners.groupBy("wpid").agg(
                 F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
             ).orderBy("wpid").collect()
-            base_rows = []
-            data_len = 0
-            n_blobs = 0
-            for r in per_part:
-                base_rows.append((int(r["wpid"]), data_len))
-                data_len += int(r["bytes"])
-                n_blobs += int(r["cnt"])
-            base_df = spark.createDataFrame(base_rows, "wpid int, base long")
+            sizes = np.array([int(r["bytes"]) for r in per_part],
+                             dtype=np.int64)
+            data_len = int(sizes.sum())
+            n_blobs = sum(int(r["cnt"]) for r in per_part)
+            # built from Arrow: a LocalRelation, not an RDD of pickled rows
+            base_df = spark.createDataFrame(pa.table({
+                "wpid": pa.array([int(r["wpid"]) for r in per_part],
+                                 pa.int32()),
+                "base": pa.array(np.cumsum(sizes) - sizes, pa.int64()),
+            }))
             wpref = (
                 Window.partitionBy("wpid").orderBy("win_tile")
                 .rowsBetween(Window.unboundedPreceding, -1)
@@ -2605,9 +2626,10 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
 
     ``by_range`` asks for a range exchange on tile_id (globally
     tile-ordered partitions, as the single-writer stream needs). Range
-    partitioning samples its input, so the map-side output is then
-    persisted DISK_ONLY to keep the fan-out from running twice; that
-    caches the small framed messages, the Spark analog of the reference
+    partitioning samples its input, so the frame feeding that exchange
+    is then persisted DISK_ONLY to keep the fan-out (and, salted, the
+    phase-A bucket encoder) from running twice; that caches the small
+    framed messages or bucket rows, the Spark analog of the reference
     writing phase-1 runs to disk before its phase-2 external sort
     (external_sort.rs:99-189). The caller must
     unpersist the returned frame. A hash exchange (``by_range=False``)
@@ -2638,13 +2660,17 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
 
     hot = _hot_tile_ranges(features, config) if salted else []
     records = _premerge_records(features, config, metrics)
+    if hot:
+        records = _bucket_rows(records, config, hot)
     cached = None
     if by_range:
+        # the frame the range exchange samples: the message records, or
+        # on the salted path the bucket rows (phase A would run twice)
         records = cached = records.persist(StorageLevel.DISK_ONLY)
     try:
         if hot:
-            stage = _salted_stage(records, config, hot, by_range=by_range,
-                                  metrics=metrics)
+            stage = _bucket_merge_stage(records, config, by_range=by_range,
+                                        metrics=metrics)
         elif props:
             stage = _premerge_props_stage(records, features, config,
                                           by_range=by_range, metrics=metrics)

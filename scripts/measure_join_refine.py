@@ -1,0 +1,180 @@
+#!/usr/bin/env python
+"""Spark-free timing of the join refine, the zone cover and the rect tails.
+
+    PYTHONPATH=. python scripts/measure_join_refine.py [--seed 2] [--reps 5]
+
+Builds the benchmark's seeded inputs (``perfbench/inputs.py``, full sizes)
+and times, each as the median of ``--reps`` runs:
+
+* ``refine``: the PIP refine over the ``spatial_joins`` candidates (the
+  cell join done in numpy, cut into Arrow-sized batches of 65,536 rows),
+  grouped once per batch (``joins._refine_by_zone``), next to the
+  per-zone loop over the whole batch it replaced; both hit counts print.
+* ``cover``: the cell cover of the 300 zones, one vectorized call
+  (``joins._cover_rows``) next to one ``cover_bbox_cells`` call per zone.
+* ``rect_tails``: the interior-rect message tails of the
+  ``docs_props_stream`` fan-out (documents extracted and fanned out
+  without Spark), one batch (``mvt_fast._rect_msg_tails``) next to one
+  scalar ``kernels.mvt.encode_geometry`` per tile, and the whole
+  per-record message encode of that fan-out.
+
+Prints one JSON line of seconds and counts.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import sys
+import time
+
+import numpy as np
+import pandas as pd
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+
+BATCH_ROWS = 65_536
+
+
+def _median_s(fn, reps: int):
+    walls, out = [], None
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        out = fn()
+        walls.append(time.perf_counter() - t0)
+    return round(statistics.median(walls), 4), out
+
+
+def _join_inputs(seed: int, sz: dict):
+    import inputs
+
+    from gpq_tiles_spark.kernels import geom as G
+    from gpq_tiles_spark.operators import cells as C
+    from gpq_tiles_spark.operators import joins as J
+
+    pts = inputs.clustered_points(sz["points"], seed)
+    zt = inputs.zones(sz["zones"])
+    geoms = {z: G.from_wkb(w) for z, w in zip(
+        zt.column("zone_id").to_pylist(), zt.column("zone_wkb").to_pylist())}
+    bboxes = [G.bbox(g) for g in geoms.values()]
+    zoom = J._cover_zoom(bboxes[:512])
+    ids, cells = J._cover_rows(list(geoms), bboxes, zoom)
+    lng = pts.column("lng").to_numpy()
+    lat = pts.column("lat").to_numpy()
+    points = pd.DataFrame({"point_id": pts.column("point_id").to_numpy(),
+                           "lng": lng, "lat": lat,
+                           "cell": C.latlng_to_cell(lng, lat, zoom)})
+    cand = points.merge(pd.DataFrame({"zone_id": ids, "cell": cells}), on="cell")
+    cand = cand[["point_id", "lng", "lat", "zone_id"]]
+    batches = [cand.iloc[s:s + BATCH_ROWS].reset_index(drop=True)
+               for s in range(0, len(cand), BATCH_ROWS)]
+    return geoms, bboxes, zoom, batches
+
+
+def _per_zone_loop_hits(batches, geoms) -> int:
+    from gpq_tiles_spark.kernels import pip as PIPK
+
+    hits = 0
+    for pdf in batches:
+        keep = np.zeros(len(pdf), dtype=bool)
+        px = pdf["lng"].to_numpy(dtype=np.float64)
+        py = pdf["lat"].to_numpy(dtype=np.float64)
+        zarr = pdf["zone_id"].to_numpy()
+        for zid in pd.unique(zarr):
+            m = zarr == zid
+            keep[m] = PIPK.points_in_geom(px[m], py[m], geoms[zid])
+        hits += int(keep.sum())
+    return hits
+
+
+def _docs_rect_records(seed: int, sz: dict):
+    """The docs fan-out's record frames and its interior-rect tile windows."""
+    import inputs
+
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.extract import _extract_batches
+    from gpq_tiles_spark.kernels import hilbert as H
+    from gpq_tiles_spark.kernels import tile_math as T
+    from gpq_tiles_spark.pipeline import FANOUT_COLS, make_fanout
+
+    docs = inputs.documents(sz["docs"], seed).to_pandas()
+    feats = pd.concat(list(_extract_batches([docs])), ignore_index=True)
+    cfg = TilerConfig(min_zoom=0, max_zoom=sz["docs_max_zoom"])
+    frames = list(make_fanout(cfg)([feats[list(FANOUT_COLS)]]))
+    rect_tids = np.unique(np.concatenate([
+        f["tile_id"].to_numpy(dtype=np.int64)[
+            np.fromiter((len(w) == 0 for w in f["wkb"]), bool, len(f))]
+        for f in frames]))
+    z, x, y = H.tile_id_to_zxy_vec(rect_tids)
+    return cfg, frames, T.tile_bounds_mixed(x, y, z)
+
+
+def _scalar_rect_tails(bounds, extent: int, buffer_px: float) -> int:
+    from gpq_tiles_spark.kernels import geom as G
+    from gpq_tiles_spark.kernels import mvt as M
+
+    total = 0
+    for lng0, lat0, lng1, lat1 in zip(*bounds):
+        buf = (lng1 - lng0) * buffer_px / extent
+        bx0, by0, bx1, by1 = lng0 - buf, lat0 - buf, lng1 + buf, lat1 + buf
+        ring = np.array([[bx0, by0], [bx1, by0], [bx1, by1], [bx0, by1],
+                         [bx0, by0]])
+        cmds, gtype = M.encode_geometry((G.POLYGON, [ring]), lng0, lat0,
+                                        lng1, lat1, extent)
+        total += len(M._tag(3, 0) + M._varint(gtype) + M._packed_u32(4, cmds))
+    return total
+
+
+def main() -> None:
+    p = argparse.ArgumentParser()
+    p.add_argument("--seed", type=int, default=2)
+    p.add_argument("--reps", type=int, default=5)
+    args = p.parse_args()
+
+    from workloads import SIZES
+
+    from gpq_tiles_spark.kernels import mvt_fast
+    from gpq_tiles_spark.operators import cells as C
+    from gpq_tiles_spark.operators import joins as J
+    from gpq_tiles_spark.pipeline import make_msg_encoder
+
+    sz = SIZES["full"]
+    out: dict = {"seed": args.seed}
+    geoms, bboxes, zoom, batches = _join_inputs(args.seed, sz)
+    out["candidates"] = sum(len(b) for b in batches)
+    out["batches"] = len(batches)
+    out["zones"] = len(geoms)
+    out["refine_s"], hits = _median_s(lambda: sum(
+        len(J._refine_by_zone(b, lambda zid, _row: geoms[zid]))
+        for b in batches), args.reps)
+    out["refine_per_zone_loop_s"], loop_hits = _median_s(
+        lambda: _per_zone_loop_hits(batches, geoms), args.reps)
+    out["refine_hits"], out["per_zone_loop_hits"] = hits, loop_hits
+
+    def cover_loop():
+        for x0, y0, x1, y1 in bboxes:
+            C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
+
+    out["cover_s"], _ = _median_s(
+        lambda: J._cover_rows(list(geoms), bboxes, zoom), args.reps)
+    out["cover_per_zone_loop_s"], _ = _median_s(cover_loop, args.reps)
+
+    cfg, frames, bounds = _docs_rect_records(args.seed, sz)
+    ext, buf = cfg.extent, cfg.buffer_pixels
+    out["rect_tiles"] = len(bounds[0])
+    out["rect_tails_s"], (tails, _, _) = _median_s(
+        lambda: mvt_fast._rect_msg_tails(*bounds, ext, buf), args.reps)
+    out["rect_tails_scalar_s"], scalar_bytes = _median_s(
+        lambda: _scalar_rect_tails(bounds, ext, buf), args.reps)
+    out["rect_tail_bytes"], out["rect_tail_bytes_scalar"] = len(tails), scalar_bytes
+    encode = make_msg_encoder(cfg)
+    out["records"] = sum(len(f) for f in frames)
+    out["record_encode_s"], _ = _median_s(
+        lambda: list(encode(iter(frames))), args.reps)
+    print(json.dumps(out))
+
+
+if __name__ == "__main__":
+    main()

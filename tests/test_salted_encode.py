@@ -182,6 +182,45 @@ def test_salted_exchanges_carry_no_wkb(spark, docs_table, by_range):
     assert all("wkb" not in c for _, c in exchanges)
 
 
+def test_salted_convert_runs_bucket_encoder_once(spark, docs_table, tmp_path,
+                                                 monkeypatch):
+    """``convert(salted=True)`` range-exchanges the bucket rows, and the
+    range sampling reads them: the phase-A encoder must still see each
+    salted record exactly once (its rows are what gets persisted), and the
+    archive must stay the unsalted one."""
+    feats = extract_features(spark.read.parquet(docs_table))
+    cfg = _salted_config()
+    assert detect_hot_tiles(feats, cfg)
+    seen = spark.sparkContext.accumulator(0)
+    real = P.make_bucket_encoder
+
+    def counting_bucket_encoder():
+        enc = real()
+
+        def run(batches):
+            def counted():
+                for pdf in batches:
+                    seen.add(len(pdf))
+                    yield pdf
+
+            return enc(counted())
+
+        return run
+
+    monkeypatch.setattr(P, "make_bucket_encoder", counting_bucket_encoder)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    p_salted = str(tmp_path / "salted.pmtiles")
+    p_plain = str(tmp_path / "plain.pmtiles")
+    convert(feats, p_salted, cfg, salted=True)
+    n_records = P._premerge_records(feats, cfg).count()
+    assert n_records > 0
+    assert seen.value == n_records
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
+    convert(feats, p_plain, cfg)
+    with open(p_plain, "rb") as a, open(p_salted, "rb") as b:
+        assert a.read() == b.read()
+
+
 def test_simplify_in_tile_coords():
     import numpy as np
 
