@@ -277,7 +277,8 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
              zoom: int = 7, max_radius: int = 64) -> DataFrame:
     """k nearest points per probe via iterative grid-disk expansion.
 
-    points: (point_id, lng, lat); probes: (probe_id, lng, lat).
+    points: (point_id, lng, lat); probes: (probe_id, lng, lat), probe
+    ids unique (a duplicated id raises ``ValueError`` before any round).
     Returns (probe_id, rnk, point_id, dist). Distance is squared-degree
     euclidean (matching the brute-force oracle).
 
@@ -309,6 +310,14 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
             "probes a DataFrame end-to-end."
         )
     p_ids = np.array([int(r[0]) for r in probe_rows], dtype=np.int64)
+    uniq, counts = np.unique(p_ids, return_counts=True)
+    dup = np.flatnonzero(counts > 1)
+    if len(dup):
+        # the round's window ranks per probe_id: probes sharing an id
+        # would share one set of k rows
+        raise ValueError(
+            f"knn_join: probe_id {int(uniq[dup[0]])} appears "
+            f"{int(counts[dup[0]])} times; probe ids must be unique")
     p_lng = np.array([r[1] for r in probe_rows], dtype=np.float64)
     p_lat = np.array([r[2] for r in probe_rows], dtype=np.float64)
     p_cell = C.latlng_to_cell(p_lng, p_lat, zoom)

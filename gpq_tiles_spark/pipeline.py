@@ -37,10 +37,12 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -107,12 +109,44 @@ class ProgressEvent:
     info: dict = dc_field(default_factory=dict)
 
 
+WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
+
+# (lng_min, lat_min, lng_max, lat_max) before any feature is seen
+_NO_BOUNDS = (np.inf, np.inf, -np.inf, -np.inf)
+
+
+class _BoundsParam(AccumulatorParam):
+    """Element-wise min/max of (lng_min, lat_min, lng_max, lat_max)
+    tuples. Min and max are idempotent, so a retried or speculative task
+    adding its batches twice leaves the value unchanged."""
+
+    def zero(self, value):
+        return _NO_BOUNDS
+
+    def addInPlace(self, value1, value2):
+        return (min(value1[0], value2[0]), min(value1[1], value2[1]),
+                max(value1[2], value2[2]), max(value1[3], value2[3]))
+
+
+def _batch_bounds(gx0, gy0, gx1, gy1) -> tuple[float, float, float, float]:
+    """One batch's bbox extremes. NaN (a null bbox arrives as NaN) is
+    skipped, as Spark's ``min``/``max`` skip null."""
+    return (float(np.fmin.reduce(gx0, initial=np.inf)),
+            float(np.fmin.reduce(gy0, initial=np.inf)),
+            float(np.fmax.reduce(gx1, initial=-np.inf)),
+            float(np.fmax.reduce(gy1, initial=-np.inf)))
+
+
 @dataclass
 class PipelineMetrics:
     """Accumulator-backed per-stage row counters, filled by the executors
     while the job runs (A6; the reference's MemoryTracker/progress analog,
     memory.rs:78-195). Read on the driver any time — including DURING the
-    tile stream — for live rows-in/out."""
+    tile stream — for live rows-in/out.
+
+    ``bounds`` collects the input's feature bbox extremes as the fan-out
+    reads each batch, so a sink learns the archive bounds from its main
+    job instead of a scan of its own (``feature_bounds``)."""
     features_in: object = None
     records_out: object = None
     tiles_out: object = None
@@ -120,12 +154,21 @@ class PipelineMetrics:
     # were capped and how many records the cap dropped
     tiles_capped: object = None
     records_capped: object = None
+    bounds: object = None
 
     @classmethod
     def create(cls, spark) -> "PipelineMetrics":
         sc = spark.sparkContext
         return cls(sc.accumulator(0), sc.accumulator(0), sc.accumulator(0),
-                   sc.accumulator(0), sc.accumulator(0))
+                   sc.accumulator(0), sc.accumulator(0),
+                   sc.accumulator(_NO_BOUNDS, _BoundsParam()))
+
+    def feature_bounds(self) -> tuple[float, float, float, float]:
+        """The fan-out's (lng_min, lat_min, lng_max, lat_max) over every
+        feature it read, or ``WORLD_BOUNDS`` when no feature had a bbox.
+        Complete once the job that ran the fan-out has finished."""
+        b = self.bounds.value
+        return WORLD_BOUNDS if b[0] == np.inf else b
 
     def as_dict(self) -> dict[str, int]:
         return {
@@ -635,6 +678,7 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
     simplification = config.simplification
     acc_in = metrics.features_in if metrics else None
     acc_out = metrics.records_out if metrics else None
+    acc_bounds = metrics.bounds if metrics else None
 
     def fanout(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -650,6 +694,8 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
             gy1 = pdf["lat_max"].to_numpy(dtype=np.float64)
             gtype = pdf["geom_type"].to_numpy(dtype=np.int64)
             wkbs = pdf["wkb"].to_numpy()
+            if acc_bounds is not None:
+                acc_bounds.add(_batch_bounds(gx0, gy0, gx1, gy1))
 
             caches: list[dict | None] = [None] * n  # lazy per-feature prep
             is_point = gtype == G.POINT
@@ -2244,29 +2290,61 @@ def _expected_codec_backend(features: DataFrame, codec: int) -> str | None:
     return None if (got is None or got.endswith(":unavailable")) else got
 
 
+def _shard_path(shard_dir: str, pid: int) -> str:
+    return os.path.join(shard_dir, f"shard_{pid:05d}.bin")
+
+
+def _entries_path(shard_dir: str, pid: int) -> str:
+    return os.path.join(shard_dir, f"entries_{pid:05d}.parquet")
+
+
+def _entries_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(SHARD_ENTRIES_SCHEMA)
+
+
+# one row per reduce task that wrote a shard: its partition id, entry
+# rows and summed feature count
+SHARD_SUMMARY_SCHEMA = StructType(
+    [
+        StructField("pid", IntegerType(), False),
+        StructField("entries", LongType(), False),
+        StructField("features", LongType(), False),
+    ]
+)
+
+
 def _make_shard_writer(shard_dir: str, codec: int,
                        expected_backend: str | None = None):
     """Per-partition shard writer: compresses tile blobs ON THE EXECUTORS
     (the single-writer convert() compresses every blob on the driver) and
-    appends them to shard_{pid}.bin with in-shard dedup; emits 40-byte
-    entry rows instead of tile bytes. This is the scale-out form of the
-    sink: at 10^8+ tiles all blob bytes no longer cross the driver NIC.
+    appends them to shard_{pid}.bin with in-shard dedup; streams the
+    partition's 40-byte entry rows (``SHARD_ENTRIES_SCHEMA``) to
+    entries_{pid}.parquet beside it (``pq.ParquetWriter``, one row group
+    per batch) and returns one ``SHARD_SUMMARY_SCHEMA`` row, so neither
+    tile bytes nor entry rows travel back through Spark. This is the
+    scale-out form of the sink: at 10^8+ tiles all blob bytes no longer
+    cross the driver NIC.
 
     The writer consumes TILES_SCHEMA frames straight from a reduce-side
     encoder in the same Python worker (``convert_sharded`` runs
     ``writer(encoder(batches))`` in one mapInPandas), so tile bytes never
     make a second JVM round trip. ``pid`` is the task's
-    ``TaskContext.partitionId()`` (0 outside a Spark task).
+    ``TaskContext.partitionId()`` (0 outside a Spark task). A partition
+    with no tiles writes no file and returns no row.
 
-    Retry/speculation safety: each task attempt writes to an
-    attempt-unique temp name and atomically renames to the final
-    shard_{pid}.bin when its iterator completes. Partition contents are
-    deterministic (tile_id shuffle + in-partition sort upstream), so any
-    attempt produces byte-identical bytes and last-rename-wins is safe;
-    a failed attempt's temp file is simply never renamed."""
-    import os
+    Retry/speculation safety: each task attempt writes both files under
+    attempt-unique temp names and atomically renames them to their final
+    names when its iterator completes, before the summary row is
+    returned. Partition contents are deterministic (tile_id shuffle +
+    in-partition sort upstream), so any attempt produces byte-identical
+    shard bytes and entry rows and last-rename-wins is safe; a failed
+    attempt's temp files are removed, never renamed."""
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         from .kernels.pmtiles import codec_backend, compress
@@ -2281,24 +2359,23 @@ def _make_shard_writer(shard_dir: str, codec: int,
                     "cluster — align the image (same zstd/zlib library and "
                     "version on every node) and rerun"
                 )
-        f = None
-        pid = None
-        tmp_path = None
-        final_path = None
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else 0
+        attempt = tc.taskAttemptId() if tc is not None else 0
+        finals = (_shard_path(shard_dir, pid), _entries_path(shard_dir, pid))
+        tmps = [f"{p}.attempt{attempt}.tmp" for p in finals]
+        schema = _entries_arrow_schema()
+        f = ent = None
         committed = False
-        local_off = 0
+        local_off = n_entries = n_features = 0
         by_hash: dict[tuple[int, int], tuple[int, int]] = {}
         try:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 if f is None:
-                    tc = TaskContext.get()
-                    pid = tc.partitionId() if tc is not None else 0
-                    attempt = tc.taskAttemptId() if tc is not None else 0
-                    final_path = os.path.join(shard_dir, f"shard_{pid:05d}.bin")
-                    tmp_path = f"{final_path}.attempt{attempt}.tmp"
-                    f = open(tmp_path, "wb")
+                    f = open(tmps[0], "wb")
+                    ent = pq.ParquetWriter(tmps[1], schema)
                 hashes = pdf["content_hash"].tolist()
                 raw_lens, offs, blob_lens = [], [], []
                 for h, raw in zip(hashes, pdf["mvt"].tolist()):
@@ -2313,37 +2390,45 @@ def _make_shard_writer(shard_dir: str, codec: int,
                     raw_lens.append(key[1])
                     offs.append(hit[0])
                     blob_lens.append(hit[1])
-                out = {
+                nfeat = pdf["n_features"].to_numpy(dtype=np.int64)
+                ent.write_table(pa.table({
                     "tile_id": pdf["tile_id"].to_numpy(dtype=np.int64),
                     "z": pdf["z"].to_numpy(dtype=np.int32),
-                    "content_hash": hashes,
-                    "raw_len": raw_lens,
-                    "local_off": offs,
-                    "blob_len": blob_lens,
-                    "n_features": pdf["n_features"].to_numpy(dtype=np.int64),
+                    "content_hash": np.asarray(hashes, dtype=np.int64),
+                    "raw_len": np.asarray(raw_lens, dtype=np.int64),
+                    "local_off": np.asarray(offs, dtype=np.int64),
+                    "blob_len": np.asarray(blob_lens, dtype=np.int64),
+                    "n_features": nfeat,
                     "pid": np.full(len(pdf), pid, dtype=np.int32),
-                }
-                yield pd.DataFrame(out)
+                }, schema=schema))
+                n_entries += len(pdf)
+                n_features += int(nfeat.sum())
             committed = True
         finally:
+            for h in (f, ent):
+                if h is not None:
+                    h.close()
             if f is not None:
-                f.close()
-                if committed:
-                    os.replace(tmp_path, final_path)  # atomic commit
-                else:
-                    try:
-                        os.remove(tmp_path)
-                    except OSError:
-                        pass
+                for tmp, final in zip(tmps, finals):
+                    if committed:
+                        os.replace(tmp, final)  # atomic commit
+                    else:
+                        try:
+                            os.remove(tmp)
+                        except OSError:
+                            pass
+        if f is not None:
+            yield pd.DataFrame({"pid": [pid], "entries": [n_entries],
+                                "features": [n_features]})
 
     return write
 
 
 # Addressed-entry count up to which the sharded sink assembles the archive
-# driver-side (one Arrow collect + numpy) instead of running the
-# distributed directory/winner choreography. 40-byte entry rows: 2M is
-# ~130 MB of driver arrays — far under any sane driver heap — while
-# 10^8-tile archives still take the distributed path.
+# driver-side (a pyarrow read of the shards' entry files + numpy) instead
+# of running the distributed directory/winner choreography. 40-byte entry
+# rows: 2M is ~130 MB of driver arrays — far under any sane driver heap —
+# while 10^8-tile archives still take the distributed path.
 DRIVER_FINALIZE_MAX_ENTRIES = 2_000_000
 
 
@@ -2355,7 +2440,6 @@ def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
     leaf section, coalesced entry count); the data section is copied from
     the shard files, one (pid, local_off, blob_len) of ``copy_plan`` per
     winner blob in data order."""
-    import os
     from collections import OrderedDict
 
     from .kernels import pmtiles as P
@@ -2372,8 +2456,8 @@ def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
                 if sf is None:
                     if len(handles) >= 64:
                         handles.popitem(last=False)[1].close()
-                    sf = handles[pid] = open(os.path.join(
-                        shard_dir, f"shard_{pid:05d}.bin"), "rb")
+                    sf = handles[pid] = open(_shard_path(shard_dir, pid),
+                                             "rb")
                 else:
                     handles.move_to_end(pid)
                 sf.seek(local_off)
@@ -2392,9 +2476,10 @@ def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
 def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
                              shard_dir: str, bounds: tuple,
                              config: TilerConfig, codec: int):
-    """Driver-side sharded-archive finalize over one collected entry frame
-    — byte-identical to the distributed finalize (same winner rule:
-    min-tile_id first occurrence per (content_hash, raw_len); same data
+    """Driver-side sharded-archive finalize over one entry frame (the
+    shards' entry files, read by ``_finalize_shards``) — byte-identical
+    to the distributed finalize (same winner rule: min-tile_id first
+    occurrence per (content_hash, raw_len); same data
     order: winners concatenated in winner-tile order; same directory
     bytes: one DirectoryBuilder.add over the run-coalesced arrays, which
     equals the chunked adds by test). All set-up work is vectorized numpy;
@@ -2451,12 +2536,65 @@ def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
             features_per_zoom=features_per_zoom)
 
 
-def _finalize_sharded_distributed(entries_df: DataFrame,
+def _sink_stats(hdr, tiles: int, features: int, bounds: tuple) -> dict:
+    return {
+        "tiles": tiles,
+        "features": features,
+        "min_zoom": hdr.min_zoom,
+        "max_zoom": hdr.max_zoom,
+        "unique_blobs": hdr.tile_contents_count,
+        "bounds": bounds,
+    }
+
+
+def _finalize_shards(summaries: DataFrame, output_path: str, shard_dir: str,
+                     bounds: tuple | None, metrics: PipelineMetrics,
+                     config: TilerConfig, codec: int) -> dict:
+    """The sharded sink's one Spark action and its archive finalize.
+
+    ``summaries`` is the fused reduce (one ``SHARD_SUMMARY_SCHEMA`` row per
+    shard written); collecting it runs the fan-out, the shuffle and every
+    shard writer. The bounds then come from ``metrics`` unless the caller
+    gave them, and the entry files of exactly the summarized pids are
+    finalized: up to ``DRIVER_FINALIZE_MAX_ENTRIES`` entries read with
+    pyarrow into ``_finalize_entries_driver`` (no further Spark job),
+    above it through ``spark.read.parquet`` into
+    ``_finalize_sharded_distributed``. Files a previous run left in a
+    reused ``shard_dir`` under other pids are never read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = summaries.collect()
+    if bounds is None:
+        bounds = metrics.feature_bounds()
+    paths = [_entries_path(shard_dir, int(r["pid"])) for r in rows]
+    n_addressed = sum(int(r["entries"]) for r in rows)
+    if n_addressed > DRIVER_FINALIZE_MAX_ENTRIES:
+        entries = (summaries.sparkSession.read.schema(SHARD_ENTRIES_SCHEMA)
+                   .parquet(*paths))
+        return _finalize_sharded_distributed(
+            entries, output_path, shard_dir, bounds, config, codec)
+    # small (or empty) archive: the distributed assembly's value is bounded
+    # driver memory at 10^8+ tiles, but it costs ~8 Spark jobs (winner
+    # groupBy, prefix-sum collect, directory range shuffle + sampling,
+    # chunk persist + stats + toLocalIterator streams); reading the entry
+    # files here and assembling with numpy gives the same bytes
+    schema = _entries_arrow_schema()
+    table = (pa.concat_tables([pq.read_table(p, schema=schema) for p in paths])
+             if paths else schema.empty_table())
+    hdr = _finalize_entries_driver(table.to_pandas(), output_path, shard_dir,
+                                   bounds, config, codec)
+    return _sink_stats(hdr, n_addressed,
+                       sum(int(r["features"]) for r in rows), bounds)
+
+
+def _finalize_sharded_distributed(entries: DataFrame,
                                   output_path: str, shard_dir: str,
                                   bounds: tuple, config: TilerConfig,
                                   codec: int) -> dict:
-    """Distributed archive finalize: cross-shard blob dedup, final data
-    offsets, and directory run-coalescing all run ON EXECUTORS; the driver
+    """Distributed archive finalize over ``SHARD_ENTRIES_SCHEMA`` rows:
+    cross-shard blob dedup, final data offsets, and directory
+    run-coalescing all run ON EXECUTORS; the driver
     streams one partition's coalesced entry arrays at a time into a
     DirectoryBuilder, so its directory state is O(one partition + one
     leaf + #leaves): past ROOT_MAX_ENTRIES the builder spills compressed
@@ -2466,163 +2604,137 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
     round-4 review's remaining O(tiles) driver obligation. Winner blobs
     stream via toLocalIterator for the sequential file concat.
 
-    Up to ``DRIVER_FINALIZE_MAX_ENTRIES`` addressed entries the archive is
-    assembled driver-side instead (``_finalize_entries_driver``); the two
-    paths are each other's differential oracle.
+    ``convert_sharded`` takes this path above
+    ``DRIVER_FINALIZE_MAX_ENTRIES`` entries, reading ``entries`` from the
+    shards' entry files; below it ``_finalize_entries_driver`` assembles
+    the same bytes, and the two paths are each other's differential
+    oracle. ``entries`` is read once per job here (no persist: the entry
+    files are already on disk); the entry and feature totals come from
+    the per-zoom feature sums.
 
     Byte-identical to the single-writer archive: the winner of a duplicated
     blob is its first occurrence in tile order ((pid, local_off) order —
     pids ascend with the range partitioning), data bytes concatenate in
     that order, and the directory bytes equal encode_directory over the
-    global coalesced entry list (tested). Every frame persisted here is
-    released on every exit path."""
+    global coalesced entry list (tested). The winner table persisted here
+    is released on every exit path."""
     import tempfile
 
     import pyarrow as pa
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    spark = entries_df.sparkSession
-    entries = entries_df.persist(StorageLevel.DISK_ONLY)
+    spark = entries.sparkSession
+    per_zoom = entries.groupBy("z").agg(
+        F.sum("n_features"), F.count("*")).collect()
+    features_per_zoom = {int(r[0]): int(r[1]) for r in per_zoom}
+    n_addressed = sum(int(r[2]) for r in per_zoom)
     winners = None
     try:
-        agg = entries.agg(
-            F.count("*").alias("n"), F.sum("n_features")
-        ).collect()[0]
-        n_addressed = int(agg[0] or 0)
-        total_features = int(agg[1] or 0)
-        if n_addressed <= DRIVER_FINALIZE_MAX_ENTRIES:
-            # small (or empty) archive: the distributed assembly's value is
-            # bounded driver memory at 10^8+ tiles, but it costs ~8 extra
-            # Spark jobs (winner groupBy, prefix-sum collect, directory
-            # range shuffle + sampling, chunk persist + stats +
-            # toLocalIterator streams). ONE Arrow collect plus vectorized
-            # numpy assembly produces byte-identical output with none of
-            # that choreography (guide §1.2: remove passes outright).
-            hdr = _finalize_entries_driver(
-                entries.toPandas(), output_path, shard_dir, bounds, config,
-                codec)
-        else:
-            features_per_zoom = {
-                int(r[0]): int(r[1])
-                for r in entries.groupBy("z").agg(F.sum("n_features")).collect()
-            }
-            # winner blob per (content_hash, raw_len): first occurrence in
-            # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
-            # single-writer semantics; tile_ids are unique per entry, so no
-            # tie-break is needed). Partitioning of the heavy shuffle is
-            # hash, so (pid, local_off) carries no global order — tile_id
-            # does.
-            winners = (
-                entries.groupBy("content_hash", "raw_len")
-                .agg(
-                    F.min("tile_id").alias("win_tile"),
-                    F.min_by(F.struct("pid", "local_off", "blob_len"),
-                             F.col("tile_id")).alias("w"),
-                )
-                .select("content_hash", "raw_len", "win_tile",
-                        F.col("w.pid").alias("pid"),
-                        F.col("w.local_off").alias("local_off"),
-                        F.col("w.blob_len").alias("blob_len"))
-                .repartitionByRange(max(config.shuffle_partitions or 8, 8),
-                                    "win_tile")
-                .sortWithinPartitions("win_tile")
-                .withColumn("wpid", F.spark_partition_id())
-                .persist(StorageLevel.MEMORY_AND_DISK)
+        # winner blob per (content_hash, raw_len): first occurrence in
+        # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
+        # single-writer semantics; tile_ids are unique per entry, so no
+        # tie-break is needed). Partitioning of the heavy shuffle is
+        # hash, so (pid, local_off) carries no global order — tile_id
+        # does.
+        winners = (
+            entries.groupBy("content_hash", "raw_len")
+            .agg(
+                F.min("tile_id").alias("win_tile"),
+                F.min_by(F.struct("pid", "local_off", "blob_len"),
+                         F.col("tile_id")).alias("w"),
             )
-            # two-phase prefix sum over win_tile order: per-range-partition
-            # totals to the driver (O(partitions)), cumulative bases back in
-            per_part = winners.groupBy("wpid").agg(
-                F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
-            ).orderBy("wpid").collect()
-            sizes = np.array([int(r["bytes"]) for r in per_part],
-                             dtype=np.int64)
-            data_len = int(sizes.sum())
-            n_blobs = sum(int(r["cnt"]) for r in per_part)
-            # built from Arrow: a LocalRelation, not an RDD of pickled rows
-            base_df = spark.createDataFrame(pa.table({
-                "wpid": pa.array([int(r["wpid"]) for r in per_part],
-                                 pa.int32()),
-                "base": pa.array(np.cumsum(sizes) - sizes, pa.int64()),
-            }))
-            wpref = (
-                Window.partitionBy("wpid").orderBy("win_tile")
-                .rowsBetween(Window.unboundedPreceding, -1)
+            .select("content_hash", "raw_len", "win_tile",
+                    F.col("w.pid").alias("pid"),
+                    F.col("w.local_off").alias("local_off"),
+                    F.col("w.blob_len").alias("blob_len"))
+            .repartitionByRange(max(config.shuffle_partitions or 8, 8),
+                                "win_tile")
+            .sortWithinPartitions("win_tile")
+            .withColumn("wpid", F.spark_partition_id())
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # two-phase prefix sum over win_tile order: per-range-partition
+        # totals to the driver (O(partitions)), cumulative bases back in
+        per_part = winners.groupBy("wpid").agg(
+            F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
+        ).orderBy("wpid").collect()
+        sizes = np.array([int(r["bytes"]) for r in per_part],
+                         dtype=np.int64)
+        data_len = int(sizes.sum())
+        n_blobs = sum(int(r["cnt"]) for r in per_part)
+        # built from Arrow: a LocalRelation, not an RDD of pickled rows
+        base_df = spark.createDataFrame(pa.table({
+            "wpid": pa.array([int(r["wpid"]) for r in per_part],
+                             pa.int32()),
+            "base": pa.array(np.cumsum(sizes) - sizes, pa.int64()),
+        }))
+        wpref = (
+            Window.partitionBy("wpid").orderBy("win_tile")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        woffs = (
+            winners
+            .withColumn("prefix",
+                        F.coalesce(F.sum("blob_len").over(wpref),
+                                   F.lit(0)))
+            .join(F.broadcast(base_df), "wpid")
+            .select(
+                "content_hash", "raw_len",
+                (F.col("base") + F.col("prefix")).alias("final_off"),
+                F.col("blob_len").alias("final_len"),
             )
-            woffs = (
-                winners
-                .withColumn("prefix",
-                            F.coalesce(F.sum("blob_len").over(wpref),
-                                       F.lit(0)))
-                .join(F.broadcast(base_df), "wpid")
-                .select(
-                    "content_hash", "raw_len",
-                    (F.col("base") + F.col("prefix")).alias("final_off"),
-                    F.col("blob_len").alias("final_len"),
-                )
-            )
-            # final directory entries: one range shuffle of 24-byte rows,
-            # then per-partition coalesce + varint encode on the executors
-            ent = (
-                entries.select("tile_id", "content_hash", "raw_len")
-                .join(woffs, ["content_hash", "raw_len"])
-                .select("tile_id", F.col("final_off").alias("off"),
-                        F.col("final_len").alias("len"))
-            )
-            ent = _tile_exchange(ent, config.shuffle_partitions, True,
-                                 "tile_id").sortWithinPartitions("tile_id")
-            with tempfile.TemporaryFile() as leaf_tmp:
-                root_raw, n_coalesced, _ = _assemble_directory_stream(
-                    ent, leaf_tmp, config.leaf_max_entries)
-                # stream the winner list in win_tile order (== final data
-                # offset order) for the copy loop — O(1) driver memory;
-                # blobs are read from their shard files by (pid, local_off)
-                # seeks. NO orderBy: `winners` is already range-partitioned
-                # AND sorted within partitions by win_tile (persisted that
-                # way above), and toLocalIterator yields partitions in
-                # index order — an orderBy here would re-run a full sort
-                # exchange once PER PARTITION JOB that toLocalIterator
-                # launches.
-                hdr = _write_sharded_archive(
-                    output_path, shard_dir,
-                    winners.select("pid", "local_off", "blob_len")
-                    .toLocalIterator(prefetchPartitions=True),
-                    (root_raw, leaf_tmp, n_coalesced), config, codec,
-                    bounds, addressed=n_addressed, n_blobs=n_blobs,
-                    data_len=data_len, features_per_zoom=features_per_zoom)
+        )
+        # final directory entries: one range shuffle of 24-byte rows,
+        # then per-partition coalesce + varint encode on the executors
+        ent = (
+            entries.select("tile_id", "content_hash", "raw_len")
+            .join(woffs, ["content_hash", "raw_len"])
+            .select("tile_id", F.col("final_off").alias("off"),
+                    F.col("final_len").alias("len"))
+        )
+        ent = _tile_exchange(ent, config.shuffle_partitions, True,
+                             "tile_id").sortWithinPartitions("tile_id")
+        with tempfile.TemporaryFile() as leaf_tmp:
+            root_raw, n_coalesced, _ = _assemble_directory_stream(
+                ent, leaf_tmp, config.leaf_max_entries)
+            # stream the winner list in win_tile order (== final data
+            # offset order) for the copy loop — O(1) driver memory;
+            # blobs are read from their shard files by (pid, local_off)
+            # seeks. NO orderBy: `winners` is already range-partitioned
+            # AND sorted within partitions by win_tile (persisted that
+            # way above), and toLocalIterator yields partitions in
+            # index order — an orderBy here would re-run a full sort
+            # exchange once PER PARTITION JOB that toLocalIterator
+            # launches.
+            hdr = _write_sharded_archive(
+                output_path, shard_dir,
+                winners.select("pid", "local_off", "blob_len")
+                .toLocalIterator(prefetchPartitions=True),
+                (root_raw, leaf_tmp, n_coalesced), config, codec,
+                bounds, addressed=n_addressed, n_blobs=n_blobs,
+                data_len=data_len, features_per_zoom=features_per_zoom)
     finally:
         if winners is not None:
             winners.unpersist()
-        entries.unpersist()
-    return {
-        "tiles": n_addressed,
-        "features": total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": hdr.tile_contents_count,
-        "bounds": bounds,
-    }
+    return _sink_stats(hdr, n_addressed, sum(features_per_zoom.values()),
+                       bounds)
 
 
-WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
+def _tile_stage(features: DataFrame, config: TilerConfig, salted: bool,
+                by_range: bool, metrics: PipelineMetrics | None = None):
+    """The one layout dispatcher behind both sinks -> (tile-sorted reduce
+    input, reduce-side encoder, persisted map-side frame or None).
 
-
-def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
-                salted: bool, by_range: bool,
-                metrics: PipelineMetrics | None = None,
-                emit: Callable[..., None] | None = None):
-    """The one layout dispatcher behind both sinks -> (bounds, tile-sorted
-    reduce input, reduce-side encoder, persisted map-side frame or None).
-
-    Rejects the option combinations no encoder serves, settles ``bounds``
-    (one scan when None) and picks the layout: premerge, premerge+props
-    with ``config.write_properties``, or the salted two-phase encode when
-    ``salted`` and ``_hot_tile_ranges`` finds a hot tile (without one,
-    salting would only re-wrap every tile, so premerge runs); every layout
-    starts from the same ``_premerge_records``. Archive bytes are
-    identical on every layout. ``emit(phase, kind, **info)``, when given,
-    receives the 'bounds' start/complete events, which bracket the bounds
-    scan alone (not the option checks or hot-tile detection).
+    Rejects the option combinations no encoder serves and picks the
+    layout: premerge, premerge+props with ``config.write_properties``, or
+    the salted two-phase encode when ``salted`` and ``_hot_tile_ranges``
+    finds a hot tile (without one, salting would only re-wrap every tile,
+    so premerge runs); every layout starts from the same
+    ``_premerge_records``. Archive bytes are identical on every layout.
+    The archive bounds are not settled here: the fan-out fills
+    ``metrics.bounds`` as it reads the features, and each sink reads it
+    after its main job.
 
     ``by_range`` asks for a range exchange on tile_id (globally
     tile-ordered partitions, as the single-writer stream needs). Range
@@ -2649,14 +2761,6 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
             "(array<struct<key string, val binary>>) — build it with "
             "encode_props_column(df, cols)"
         )
-    if emit is not None:
-        emit("bounds", "start")
-    if bounds is None:
-        row = features.agg(F.min("lng_min"), F.min("lat_min"),
-                           F.max("lng_max"), F.max("lat_max")).collect()[0]
-        bounds = WORLD_BOUNDS if row[0] is None else tuple(row)
-    if emit is not None:
-        emit("bounds", "complete", bounds=bounds)
 
     hot = _hot_tile_ranges(features, config) if salted else []
     records = _premerge_records(features, config, metrics)
@@ -2681,7 +2785,7 @@ def _tile_stage(features: DataFrame, config: TilerConfig, bounds,
         if cached is not None:
             cached.unpersist()
         raise
-    return (bounds, *stage, cached)
+    return (*stage, cached)
 
 
 def convert_sharded(features: DataFrame, output_path: str,
@@ -2699,19 +2803,34 @@ def convert_sharded(features: DataFrame, output_path: str,
     crossing one NIC. The layout (premerge, premerge+props or, with
     ``salted`` and a hot tile, the salted merge) comes from the dispatcher
     ``convert`` shares. The exchange is a hash shuffle on tile_id with no
-    persist, so
-    the fan-out runs exactly once; global tile order is restored later on
-    the 40-byte entry rows. The reduce stage is ONE Python pass per task:
-    the layout's encoder feeds ``_make_shard_writer`` inside the same
-    mapInPandas, so encoded tiles go straight from the encoder to the
-    compressor and the shard file without a second JVM round trip; each
-    task writes the shard named by its ``TaskContext.partitionId()``.
-    Cross-shard blob dedup, final data offsets and directory encoding then
-    run on executors (_finalize_sharded_distributed; driver-side up to
-    ``DRIVER_FINALIZE_MAX_ENTRIES``) — driver state is
+    persist, so the fan-out runs exactly once; global tile order is
+    restored later on the 40-byte entry rows. The reduce stage is ONE
+    Python pass per task: the layout's encoder feeds ``_make_shard_writer``
+    inside the same mapInPandas, so encoded tiles go straight from the
+    encoder to the compressor and the shard file without a second JVM
+    round trip; each task writes ``shard_{pid}.bin`` and its entry rows to
+    ``entries_{pid}.parquet`` in ``shard_dir`` (pid = its
+    ``TaskContext.partitionId()``) and returns one summary row (pid,
+    entries, features).
+
+    The conversion is ONE Spark action, the collect of those summaries
+    (its jobs are the spread, the fan-out map stage and the reduce). The
+    archive bounds are the feature bbox extremes the fan-out adds to
+    ``metrics.bounds`` as it reads each batch (no scan of their own; NaN
+    is skipped like null, an input with no bbox gets ``WORLD_BOUNDS``),
+    unless ``bounds`` is given. Up to ``DRIVER_FINALIZE_MAX_ENTRIES``
+    entries the driver then reads the summarized pids' entry files with
+    pyarrow and assembles the archive with numpy, with no further Spark
+    job; above it, cross-shard blob dedup, final data offsets and
+    directory encoding run on executors over ``spark.read.parquet`` of
+    those files (``_finalize_sharded_distributed``) — driver state is
     O(shards+partitions) and the winner-blob copy list streams via
     toLocalIterator, so 10^8+ tile archives never materialize an entry
-    list on the driver.
+    list on the driver. Only the summarized pids' files are read, so
+    files another run left in a reused ``shard_dir`` do not matter.
+
+    Returns the archive stats plus ``metrics``, the accumulator-backed
+    row counters ``convert`` returns.
 
     Cross-shard duplicate blobs: a blob first seen in shard A and again in
     shard B is compressed and written into BOTH shard files (in-shard dedup
@@ -2740,8 +2859,9 @@ def convert_sharded(features: DataFrame, output_path: str,
             f"which executors cannot reach under master={master!r}. Pass "
             "shard_dir= on shared storage (visible to executors and driver)."
         )
-    bounds, sorted_in, encoder, _ = _tile_stage(
-        features, config, bounds, salted, by_range=False)
+    metrics = PipelineMetrics.create(features.sparkSession)
+    sorted_in, encoder, _ = _tile_stage(features, config, salted,
+                                        by_range=False, metrics=metrics)
     codec = P.CODEC_BY_NAME[config.tile_compression]
     expected_backend = _expected_codec_backend(features, codec)
     own_dir = shard_dir is None
@@ -2751,14 +2871,15 @@ def convert_sharded(features: DataFrame, output_path: str,
     def encode_and_write(batches):
         return writer(encoder(batches))
 
-    entries_df = sorted_in.mapInPandas(encode_and_write,
-                                       schema=SHARD_ENTRIES_SCHEMA)
+    summaries = sorted_in.mapInPandas(encode_and_write,
+                                      schema=SHARD_SUMMARY_SCHEMA)
     try:
-        return _finalize_sharded_distributed(
-            entries_df, output_path, shard_dir, bounds, config, codec)
+        stats = _finalize_shards(summaries, output_path, shard_dir, bounds,
+                                 metrics, config, codec)
     finally:
         if own_dir:
             shutil.rmtree(shard_dir, ignore_errors=True)
+    return {**stats, "metrics": metrics.as_dict()}
 
 
 def convert(features: DataFrame, output_path: str, config: TilerConfig | None = None,
@@ -2769,7 +2890,11 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     """End-to-end: features DataFrame -> single .pmtiles at output_path.
 
     Returns summary stats (incl. accumulator-backed per-stage row counts).
-    The layout (premerge, premerge+props or, with ``salted`` and a hot
+    The header bounds are ``bounds`` when given, else the feature bbox
+    extremes the fan-out accumulates as it runs (``metrics.bounds``; NaN
+    skipped like null, ``WORLD_BOUNDS`` for an input with no bbox), so no
+    separate scan runs. The 'bounds' progress event therefore starts
+    before the tile stream and completes after it. The layout (premerge, premerge+props or, with ``salted`` and a hot
     tile, the salted merge) comes from the dispatcher ``convert_sharded``
     shares. The exchange is by range on tile_id, with the map-side output
     persisted DISK_ONLY so the range sampling does not re-run the fan-out.
@@ -2795,12 +2920,14 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
 
     config = (config or TilerConfig()).validate()
     metrics = PipelineMetrics.create(features.sparkSession)
-    bounds, sorted_in, encoder, cached = _tile_stage(
-        features, config, bounds, salted, by_range=True,
-        metrics=metrics, emit=emit)
+    sorted_in, encoder, cached = _tile_stage(
+        features, config, salted, by_range=True, metrics=metrics)
     stop_poll = threading.Event()
     poller = None
     try:
+        # the bounds fill in as the fan-out reads the features, which
+        # happens while the tile stream below drains
+        emit("bounds", "start")
         tiles = sorted_in.mapInPandas(encoder, schema=TILES_SCHEMA)
         asm = P.PMTilesAssembler(
             tile_compression=P.CODEC_BY_NAME[config.tile_compression],
@@ -2847,6 +2974,9 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     if poller is not None:
         emit("fanout", "complete", **metrics.as_dict())
     emit("tiles", "complete", tiles=n_tiles, **metrics.as_dict())
+    if bounds is None:
+        bounds = metrics.feature_bounds()
+    emit("bounds", "complete", bounds=bounds)
     asm.bounds = [bounds[0], bounds[1], bounds[2], bounds[3]]
     emit("archive", "start")
     hdr = asm.finalize(output_path)

@@ -47,6 +47,7 @@ for _mod in (
     "numpy",
     "pandas",
     "pyarrow",
+    "pyarrow.parquet",
     "pyspark.serializers",
     "pyspark.sql.pandas.serializers",
     "gpq_tiles_spark.kernels.tile_math",

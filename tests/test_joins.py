@@ -507,3 +507,17 @@ def test_knn_join_empty_probes(spark):
     out = knn_join(pts, probes, k=3, zoom=4)
     assert out.collect() == []
     assert str(out.schema) == KNN_SCHEMA.format("LongType()")
+
+
+def test_knn_join_rejects_duplicate_probe_ids(spark):
+    """Probes sharing an id would share one window of k rows: rejected
+    before any round runs, naming the id."""
+    pts = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 9.0, 9.0)], schema="point_id long, lng double, lat double")
+    probes = spark.createDataFrame(
+        [(7, 1.0, 1.0), (1, 0.0, 0.0), (1, 9.0, 9.0)],
+        schema="probe_id long, lng double, lat double")
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match=r"probe_id 1 .*unique"):
+        knn_join(pts, probes, k=2, zoom=4)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

@@ -103,8 +103,8 @@ def test_convert_salted_reports_metrics(spark, docs_table, tmp_path):
 
 
 def test_convert_sharded_commits_and_cleans_tmp(spark, docs_table, tmp_path):
-    """Shard files must be committed under their final names with no
-    .tmp attempt files left behind."""
+    """Shard files and their entry files must be committed under their
+    final names, in pairs, with no .tmp attempt files left behind."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.pipeline import convert_sharded
@@ -120,7 +120,12 @@ def test_convert_sharded_commits_and_cleans_tmp(spark, docs_table, tmp_path):
     assert stats["tiles"] > 0
     names = os.listdir(shard_dir)
     assert not [n for n in names if n.endswith(".tmp")]
-    assert all(n.startswith("shard_") and n.endswith(".bin") for n in names)
+    shards = {n[6:-4] for n in names
+              if n.startswith("shard_") and n.endswith(".bin")}
+    entries = {n[8:-8] for n in names
+               if n.startswith("entries_") and n.endswith(".parquet")}
+    assert shards and shards == entries
+    assert len(names) == 2 * len(shards)
 
 
 def test_rect_feature_msgs_byte_parity():

@@ -101,15 +101,16 @@ def test_sharded_layout_byte_identical_on_under_split_input(
 def test_sharded_plan_has_one_python_map_after_tile_exchange(
         two_part_features, tmp_path, monkeypatch, layout):
     """Encoder and shard writer share one Python map node: nothing between
-    the last tile_id exchange and the entry rows crosses back to the JVM."""
+    the last tile_id exchange and the shard summaries crosses back to the
+    JVM."""
     captured = {}
 
-    def capture(entries_df, *args, **kwargs):
-        captured["plan"] = (entries_df._jdf.queryExecution()
+    def capture(summaries, *args, **kwargs):
+        captured["plan"] = (summaries._jdf.queryExecution()
                             .executedPlan().toString())
         return {}
 
-    monkeypatch.setattr(P, "_finalize_sharded_distributed", capture)
+    monkeypatch.setattr(P, "_finalize_shards", capture)
     props, salted = LAYOUTS[layout]
     P.convert_sharded(two_part_features, str(tmp_path / "x.pmtiles"),
                       _config(props), salted=salted)
