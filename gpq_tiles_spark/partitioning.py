@@ -32,10 +32,10 @@ def spread_small_input(df: DataFrame) -> DataFrame:
 
     The partition count probe converts the plan to an RDD. That runs no
     Spark job (every call site here sits before the first exchange), but
-    it is not free: it plans the query and, on a file source, lists the
-    files. Warm calls took 43-170 ms of driver time each on a local[4]
-    session over the benchmark's Parquet and extracted inputs (4 CPUs;
-    the first call in a session 0.4-1.2 s). The explicit
+    it is not free: it plans the query and computes the RDD's partitions
+    on the driver. Warm calls took 43-170 ms of driver time each on a
+    local[4] session over the benchmark's Parquet and extracted inputs
+    (4 CPUs; the first call in a session 0.4-1.2 s). The explicit
     partition count keeps AQE from re-coalescing the small frame back to
     one partition (AQE honors user-specified repartition counts)."""
     try:
