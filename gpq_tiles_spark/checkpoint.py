@@ -123,6 +123,23 @@ class CheckpointedRun:
         self._save()
 
 
+def _scan_bounds(feats: DataFrame) -> tuple[float, float, float, float]:
+    """Header bounds of ``feats`` by one scan, on the rule the sinks'
+    fan-out accumulator follows: null and NaN bbox values are skipped
+    (Spark's own min/max would rank NaN largest), and ``WORLD_BOUNDS``
+    stands in when no feature has a bbox. A resumed checkpointed run
+    skips the fan-out, so it cannot read the accumulator."""
+    from .pipeline import WORLD_BOUNDS
+
+    def known(c):
+        return F.when(~F.isnan(c), F.col(c))
+
+    row = feats.agg(F.min(known("lng_min")), F.min(known("lat_min")),
+                    F.max(known("lng_max")), F.max(known("lat_max"))
+                    ).collect()[0]
+    return WORLD_BOUNDS if row[0] is None else tuple(row)
+
+
 def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: str,
                              work_dir: str, config=None) -> dict:
     """Checkpointed end-to-end conversion: extract -> message records ->
@@ -159,16 +176,9 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
             min_zoom=config.min_zoom, max_zoom=config.max_zoom,
             leaf_max_entries=config.leaf_max_entries,
         )
-        # header bounds come from the extracted features (same as
-        # pipeline.convert); without this the sentinel [180,90,-180,-90]
-        # would be written, giving viewers an inverted/empty extent
-        brow = feats.agg(
-            F.min("lng_min"), F.min("lat_min"), F.max("lng_max"), F.max("lat_max")
-        ).collect()[0]
-        if brow[0] is not None:
-            asm.bounds = [brow[0], brow[1], brow[2], brow[3]]
-        else:
-            asm.bounds = [-180.0, -85.0511287798066, 180.0, 85.0511287798066]
+        # without this the sentinel [180,90,-180,-90] would be written,
+        # giving viewers an inverted/empty extent
+        asm.bounds = list(_scan_bounds(feats))
         t0 = time.perf_counter()
         n = 0
         for row in tiles.orderBy("tile_id").toLocalIterator(prefetchPartitions=True):

@@ -2304,6 +2304,27 @@ def _entries_arrow_schema():
     return to_arrow_schema(SHARD_ENTRIES_SCHEMA)
 
 
+def _entry_files_frame(spark, paths: list[str]) -> DataFrame:
+    """The entry files at ``paths`` as one ``SHARD_ENTRIES_SCHEMA`` frame,
+    one file per partition, read on the executors with pyarrow.
+
+    That is the POSIX I/O the shard writers used to write them, so the
+    ``shard_dir`` path never goes through Hadoop: a Hadoop read would
+    resolve a path without a scheme against ``fs.defaultFS`` (``hdfs://``
+    on a YARN cluster) and expand ``[]{}*?`` in it as a glob."""
+    schema = _entries_arrow_schema()
+
+    def read(batches):
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                yield from pq.read_table(paths[i], schema=schema).to_batches()
+
+    return spark.range(len(paths), numPartitions=max(len(paths), 1)) \
+        .mapInArrow(read, SHARD_ENTRIES_SCHEMA)
+
+
 # one row per reduce task that wrote a shard: its partition id, entry
 # rows and summed feature count
 SHARD_SUMMARY_SCHEMA = StructType(
@@ -2558,7 +2579,7 @@ def _finalize_shards(summaries: DataFrame, output_path: str, shard_dir: str,
     gave them, and the entry files of exactly the summarized pids are
     finalized: up to ``DRIVER_FINALIZE_MAX_ENTRIES`` entries read with
     pyarrow into ``_finalize_entries_driver`` (no further Spark job),
-    above it through ``spark.read.parquet`` into
+    above it read on the executors (``_entry_files_frame``) into
     ``_finalize_sharded_distributed``. Files a previous run left in a
     reused ``shard_dir`` under other pids are never read."""
     import pyarrow as pa
@@ -2570,10 +2591,9 @@ def _finalize_shards(summaries: DataFrame, output_path: str, shard_dir: str,
     paths = [_entries_path(shard_dir, int(r["pid"])) for r in rows]
     n_addressed = sum(int(r["entries"]) for r in rows)
     if n_addressed > DRIVER_FINALIZE_MAX_ENTRIES:
-        entries = (summaries.sparkSession.read.schema(SHARD_ENTRIES_SCHEMA)
-                   .parquet(*paths))
         return _finalize_sharded_distributed(
-            entries, output_path, shard_dir, bounds, config, codec)
+            _entry_files_frame(summaries.sparkSession, paths), output_path,
+            shard_dir, bounds, config, codec)
     # small (or empty) archive: the distributed assembly's value is bounded
     # driver memory at 10^8+ tiles, but it costs ~8 Spark jobs (winner
     # groupBy, prefix-sum collect, directory range shuffle + sampling,
@@ -2608,9 +2628,12 @@ def _finalize_sharded_distributed(entries: DataFrame,
     ``DRIVER_FINALIZE_MAX_ENTRIES`` entries, reading ``entries`` from the
     shards' entry files; below it ``_finalize_entries_driver`` assembles
     the same bytes, and the two paths are each other's differential
-    oracle. ``entries`` is read once per job here (no persist: the entry
-    files are already on disk); the entry and feature totals come from
-    the per-zoom feature sums.
+    oracle. ``entries`` is not persisted: each of the three jobs that
+    scan it (per-zoom sums, winner groupBy, directory join) reads the
+    entry files again, which over 10^6 entries in 8 files took no longer
+    than a DISK_ONLY persist (4 interleaved runs each, 4-CPU host: median
+    6.7 s unpersisted, 7.1 s persisted). The entry and feature totals
+    come from the per-zoom feature sums.
 
     Byte-identical to the single-writer archive: the winner of a duplicated
     blob is its first occurrence in tile order ((pid, local_off) order —
@@ -2822,9 +2845,10 @@ def convert_sharded(features: DataFrame, output_path: str,
     entries the driver then reads the summarized pids' entry files with
     pyarrow and assembles the archive with numpy, with no further Spark
     job; above it, cross-shard blob dedup, final data offsets and
-    directory encoding run on executors over ``spark.read.parquet`` of
-    those files (``_finalize_sharded_distributed``) — driver state is
-    O(shards+partitions) and the winner-blob copy list streams via
+    directory encoding run on executors over those files, read there
+    with pyarrow by the paths the shard writers used
+    (``_entry_files_frame``; ``_finalize_sharded_distributed``) — driver
+    state is O(shards+partitions) and the winner-blob copy list streams via
     toLocalIterator, so 10^8+ tile archives never materialize an entry
     list on the driver. Only the summarized pids' files are read, so
     files another run left in a reused ``shard_dir`` do not matter.

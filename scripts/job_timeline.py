@@ -4,14 +4,17 @@
     PYTHONPATH=. python scripts/job_timeline.py [--workload adm4_sharded] \
         [--seed 2] [--warm 1] [--cores N] [--json]
 
-Builds the benchmark's seeded input for ``--workload`` (``adm4_sharded``:
-``convert_sharded`` z0-14 over the ADM4-like polygons;
-``docs_props_stream``: extract + two property tags, materialized, then
-``convert`` z0-12), starts a ``get_spark`` session with
+Builds the benchmark's seeded input for ``--workload`` and runs its
+conversion through ``perfbench``'s own workload class
+(``workloads.WORKLOADS``: ``adm4_sharded`` is ``convert_sharded``
+z0-14 over the ADM4-like polygons; ``docs_props_stream`` is extract +
+two property tags, materialized, then ``convert`` z0-12). It starts a
+``get_spark`` session with
 ``SPARK_GRAFT_EVENTLOG`` pointing at a temp dir, runs ``--warm``
 untimed conversions and then one more under its own job group. After
 the session stops, it reads the event log and prints one line per Spark
-job of that conversion:
+job of that conversion (jobs, stages and task times from
+``tracing.parse_eventlog``):
 
 * ``offset_s``: job submission, seconds after the conversion started;
 * ``dur_s``: job wall time;
@@ -44,60 +47,50 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "perfbench"))
 TIMED_GROUP = "job-timeline"
 
 
-def _convert(spark, workload: str, work: str, seed: int, partitions: int):
-    """-> a function running one conversion of ``workload``."""
-    import inputs
-    import workloads
+def _conversion(spark, workload: str, work: str, seed: int,
+                partitions: int):
+    """-> a function running one conversion of the benchmark workload
+    ``workload`` (its own input, config and call)."""
+    import workloads as W
 
-    from gpq_tiles_spark import pipeline as P
-    from gpq_tiles_spark.config import TilerConfig
-
-    sz = workloads.SIZES["full"]
+    wl = W.WORKLOADS[workload](W.Ctx(work=work, seed=seed,
+                                     sizes=W.SIZES["full"],
+                                     partitions=partitions, spark=spark))
+    wl.prepare()
     out = os.path.join(work, "out.pmtiles")
-    if workload == "adm4_sharded":
-        src = os.path.join(work, "adm4.parquet")
-        inputs.write(inputs.adm4_polygons(sz["adm4_polygons"], seed), src, 256)
-        cfg = TilerConfig(min_zoom=0, max_zoom=sz["adm4_max_zoom"],
-                          tile_compression="gzip",
-                          shuffle_partitions=partitions)
 
-        def run():
-            shard = tempfile.mkdtemp(dir=work)
-            try:
-                return P.convert_sharded(spark.read.parquet(src), out, cfg,
-                                         shard_dir=shard)
-            finally:
-                shutil.rmtree(shard, ignore_errors=True)
-        return run
-    if workload == "docs_props_stream":
-        src = os.path.join(work, "docs.parquet")
-        inputs.write(inputs.documents(sz["docs"], seed), src, 1000)
-        cfg = TilerConfig(min_zoom=0, max_zoom=sz["docs_max_zoom"],
-                          tile_compression="gzip", write_properties=True,
-                          shuffle_partitions=partitions)
-
-        def run():
-            feats = workloads._docs_features(spark, src).persist()
-            feats.count()
-            try:
-                return P.convert(feats, out, cfg)
-            finally:
-                feats.unpersist()
-        return run
-    raise SystemExit(f"unknown workload {workload!r}")
+    def run():
+        shard = tempfile.mkdtemp(dir=work)
+        try:
+            return wl.convert(0, out, shard)
+        finally:
+            shutil.rmtree(shard, ignore_errors=True)
+    return run
 
 
-def _read_log(ev_dir: str) -> list[dict]:
-    events = []
-    # a rolling log is a directory of events_<n>_* files; parsing below
-    # does not depend on their order
+def _scopes_and_sites(ev_dir: str) -> tuple[dict[int, list[str]],
+                                            dict[int, str]]:
+    """What ``tracing.parse_eventlog`` does not keep: the operator scope
+    names of each completed stage, and each job's driver call site (the
+    name of its last stage)."""
+    scopes: dict[int, list[str]] = {}
+    sites: dict[int, str] = {}
     for path in glob.glob(os.path.join(ev_dir, "**", "*"), recursive=True):
-        if not os.path.isfile(path) or os.path.basename(path).startswith(
-                "appstatus_"):
+        if not os.path.isfile(path) or not os.path.basename(path).startswith(
+                ("events_", "local-", "app-")):
             continue
         with open(path) as f:
-            events.extend(json.loads(line) for line in f)
-    return events
+            for line in f:
+                e = json.loads(line)
+                kind = e.get("Event")
+                if kind == "SparkListenerJobStart":
+                    infos = e.get("Stage Infos") or [{}]
+                    sites[e["Job ID"]] = infos[-1].get("Stage Name", "")
+                elif kind == "SparkListenerStageCompleted":
+                    si = e["Stage Info"]
+                    names = [_scope_name(r) for r in si.get("RDD Info", [])]
+                    scopes[si["Stage ID"]] = [n for n in names if n]
+    return scopes, sites
 
 
 def _scope_name(rdd_info: dict) -> str | None:
@@ -105,56 +98,37 @@ def _scope_name(rdd_info: dict) -> str | None:
     if not scope:
         return None
     try:
-        return json.loads(scope).get("name")
+        return json.loads(scope).get("name", "").strip() or None
     except ValueError:
         return None
 
 
-def timeline(events: list[dict], group: str, t0: float) -> list[dict]:
+def timeline(ev_dir: str, group: str, t0: float) -> list[dict]:
     """One row per job of ``group``, in submission order."""
-    jobs: dict[int, dict] = {}
-    stage_scopes: dict[int, list[str]] = {}
-    ran: set[int] = set()
-    tasks: dict[int, list[float]] = {}
-    for e in events:
-        kind = e.get("Event")
-        if kind == "SparkListenerJobStart":
-            props = e.get("Properties") or {}
-            if props.get("spark.jobGroup.id") == group:
-                jobs[e["Job ID"]] = {
-                    "start": e["Submission Time"] / 1e3,
-                    "stage_ids": list(e.get("Stage IDs", [])),
-                    "site": (e.get("Stage Infos") or [{}])[-1].get(
-                        "Stage Name", ""),
-                }
-        elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
-            jobs[e["Job ID"]]["end"] = e["Completion Time"] / 1e3
-        elif kind == "SparkListenerStageCompleted":
-            si = e["Stage Info"]
-            ran.add(si["Stage ID"])
-            names = [_scope_name(r) for r in si.get("RDD Info", [])]
-            stage_scopes[si["Stage ID"]] = [n for n in names if n]
-        elif kind == "SparkListenerTaskEnd":
-            run_ms = (e.get("Task Metrics") or {}).get("Executor Run Time", 0)
-            tasks.setdefault(e["Stage ID"], []).append(run_ms / 1e3)
+    import tracing
+
+    jobs, stages = tracing.parse_eventlog(ev_dir)
+    stage_scopes, sites = _scopes_and_sites(ev_dir)
     rows = []
-    for jid in sorted(jobs, key=lambda j: jobs[j]["start"]):
-        j = jobs[jid]
-        done = [s for s in j["stage_ids"] if s in ran]
-        runs = [r for s in done for r in tasks.get(s, [])]
+    for j in sorted((j for j in jobs.values() if j.group == group),
+                    key=lambda j: j.start):
+        done = [s for s in j.stage_ids if s in stages]
+        runs = [t["run_s"] for s in done for t in stages[s].tasks]
         scopes: list[str] = []
         for s in sorted(done):
-            scopes += [n for n in stage_scopes[s] if n not in scopes]
+            for n in stage_scopes.get(s, []):
+                if n not in scopes:
+                    scopes.append(n)
         rows.append({
-            "job": jid,
-            "offset_s": round(j["start"] - t0, 3),
-            "dur_s": round(j.get("end", j["start"]) - j["start"], 3),
+            "job": j.jid,
+            "offset_s": round(j.start - t0, 3),
+            "dur_s": round(j.end - j.start, 3),
             "stages": len(done),
-            "skipped": len(j["stage_ids"]) - len(done),
+            "skipped": len(j.stage_ids) - len(done),
             "tasks": len(runs),
             "task_sum_s": round(sum(runs), 3),
             "task_max_s": round(max(runs, default=0.0), 3),
-            "site": j["site"].split("/")[-1],
+            "site": sites.get(j.jid, "").split("/")[-1],
             "scopes": scopes,
         })
     return rows
@@ -180,7 +154,8 @@ def main() -> None:
                       shuffle_partitions=partitions)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        run = _convert(spark, args.workload, work, args.seed, partitions)
+        run = _conversion(spark, args.workload, work, args.seed,
+                          partitions)
         for _ in range(args.warm):
             run()
         sc = spark.sparkContext
@@ -189,7 +164,7 @@ def main() -> None:
         run()
         wall = time.time() - t0
         spark.stop()  # flushes the event log
-        rows = timeline(_read_log(ev_dir), TIMED_GROUP, t0)
+        rows = timeline(ev_dir, TIMED_GROUP, t0)
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

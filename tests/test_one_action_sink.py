@@ -107,6 +107,21 @@ def test_nan_bbox_is_skipped_like_null(spark, feats, tmp_path, sink):
     assert nan_bytes == null_bytes
 
 
+@pytest.mark.parametrize("value", [None, np.nan])
+def test_checkpoint_bounds_scan_follows_the_sinks(spark, feats, tmp_path,
+                                                  value):
+    """``convert_with_checkpoints`` scans for its bounds (a resumed run
+    skips the fan-out) on the sinks' rule: NaN skipped like null, and
+    ``WORLD_BOUNDS`` for an input with no bbox."""
+    from gpq_tiles_spark.checkpoint import _scan_bounds
+
+    df = _with_bad_bbox(spark, feats, value)
+    stats, _ = _run("convert", df, tmp_path / "x.pmtiles")
+    assert _scan_bounds(df) == stats["bounds"]
+    empty = spark.createDataFrame([], schema=FEATURES_SCHEMA)
+    assert _scan_bounds(empty) == P.WORLD_BOUNDS
+
+
 @pytest.mark.parametrize("sink", SINKS)
 def test_empty_input_gives_world_bounds(spark, tmp_path, sink):
     empty = spark.createDataFrame([], schema=FEATURES_SCHEMA)
@@ -232,3 +247,20 @@ def test_stale_entry_files_do_not_change_archive(spark, feats, tmp_path):
                       shard_dir=str(shard_dir))
         assert got == expected
     assert (shard_dir / "entries_00097.parquet").exists()
+
+
+def test_distributed_finalize_reads_entry_files_by_posix_path(
+        spark, feats, tmp_path, monkeypatch):
+    """Above the driver cap the executors read the entry files by the
+    paths the shard writers used, not through Hadoop: a ``shard_dir``
+    whose name Hadoop would expand as a glob (``[x]`` matches ``x``)
+    still gives the single-writer bytes."""
+    shard_dir = tmp_path / "run[x]"
+    shard_dir.mkdir()
+    (tmp_path / "runx").mkdir()  # what the glob would resolve to
+    _, expected = _run("convert", feats, tmp_path / "single.pmtiles")
+    monkeypatch.setattr(P, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
+    stats, got = _run("convert_sharded", feats, tmp_path / "sharded.pmtiles",
+                      shard_dir=str(shard_dir))
+    assert stats["tiles"] > 0
+    assert got == expected
