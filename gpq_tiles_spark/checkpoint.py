@@ -145,19 +145,24 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
     """Checkpointed end-to-end conversion: extract -> message records ->
     tiles -> archive, resumable after any completed stage. The records
     are the premerge map side (framed messages per (tile, feature)) and
-    the tiles its wrap stage, the layout ``pipeline.convert`` runs."""
+    the tiles its wrap stage, the layout ``pipeline.convert`` runs.
+
+    ``config`` is validated as ``convert`` validates it, and
+    ``config.layer_fields`` goes into the archive metadata. The extracted
+    documents have no ``props`` column, so ``write_properties=True``
+    raises ``convert``'s ``ValueError`` before any stage runs."""
     from .config import TilerConfig
     from .extract import extract_features
-    from .pipeline import (PipelineMetrics, _encode, _premerge_records,
-                           _premerge_stage)
+    from .pipeline import (PipelineMetrics, _check_props_input, _encode,
+                           _premerge_records, _premerge_stage)
 
-    config = config or TilerConfig()
+    config = (config or TilerConfig()).validate()
+    extracted = extract_features(spark.read.parquet(docs_path))
+    _check_props_input(extracted, config, salted=False)
     run = CheckpointedRun(spark, work_dir, snapshot_fingerprint(spark, docs_path))
     metrics = PipelineMetrics.create(spark)
 
-    feats = run.run_stage(
-        "extract", lambda: extract_features(spark.read.parquet(docs_path))
-    )
+    feats = run.run_stage("extract", lambda: extracted)
     records = run.run_stage(
         "records", lambda: _premerge_records(feats, config, metrics))
     tiles = run.run_stage("tiles", lambda: _encode(
@@ -174,6 +179,7 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
         asm = P.PMTilesAssembler(
             tile_compression=codec, layer_name=config.layer_name,
             min_zoom=config.min_zoom, max_zoom=config.max_zoom,
+            fields=config.layer_fields,
             leaf_max_entries=config.leaf_max_entries,
         )
         # without this the sentinel [180,90,-180,-90] would be written,

@@ -365,7 +365,7 @@ class PMTilesAssembler:
     Streaming equivalent of the reference's StreamingPmtilesWriter finalize
     (pmtiles_writer.rs:1028-1143): blobs append to the data section as they
     arrive; only 24-byte-equivalent entries stay in memory; duplicate blobs
-    (same content hash) reuse the first offset (X1 dedup,
+    (same content hash and raw length) reuse the first offset (X1 dedup,
     pmtiles_writer.rs:528-560).
     """
 
@@ -386,7 +386,7 @@ class PMTilesAssembler:
         # reference's StreamingPmtilesWriter (pmtiles_writer.rs:1000-1019).
         self._tmp = tempfile.TemporaryFile()
         self._n_blobs = 0
-        self._by_hash: dict[int, tuple[int, int]] = {}
+        self._by_hash: dict[tuple[int, int], tuple[int, int]] = {}
         self._data_len = 0
         self.addressed = 0
         self.total_features = 0
@@ -407,22 +407,19 @@ class PMTilesAssembler:
             self.bounds[1] = min(self.bounds[1], tile_bounds[1])
             self.bounds[2] = max(self.bounds[2], tile_bounds[2])
             self.bounds[3] = max(self.bounds[3], tile_bounds[3])
-        hit = self._by_hash.get(content_hash)
-        # raw-length comparison guards the 63-bit hash against silent
-        # collisions (cheap partial content check; same trust model as the
-        # reference's XXH3 dedup but with a second independent signal)
-        if hit is not None and hit[2] != len(raw_mvt):
-            hit = None
+        # keyed on (hash, raw length), as the shard writer and the sharded
+        # finalize are: the length guards the 63-bit hash against silent
+        # collisions (same trust model as the reference's XXH3 dedup but
+        # with a second independent signal)
+        key = (content_hash, len(raw_mvt))
+        hit = self._by_hash.get(key)
         if hit is None:
             blob = compress(raw_mvt, self.tile_compression)
-            off = self._data_len
+            hit = self._by_hash[key] = (self._data_len, len(blob))
             self._tmp.write(blob)
             self._n_blobs += 1
             self._data_len += len(blob)
-            self._by_hash[content_hash] = (off, len(blob), len(raw_mvt))
-            ln = len(blob)
-        else:
-            off, ln, _ = hit
+        off, ln = hit
         # run-coalesce ON ARRIVAL (tiles come in ascending tile_id order,
         # so coalescing is a local check against the last entry): entry
         # memory is O(coalesced runs), not O(tiles) — at 10^8 ocean-heavy
@@ -467,7 +464,7 @@ def write_archive(path: str, root_raw: bytes, leaves, n_entries: int,
                   fields: dict[str, str] | None,
                   features_per_zoom: dict[int, int], bounds) -> Header:
     """The one archive finalize (pmtiles_writer.rs:1028-1143), shared by
-    the single-writer assembler and both sharded finalizes: gzip the root
+    the single-writer assembler and the sharded sink: gzip the root
     directory and the metadata JSON (tilestats per zoom), build the header,
     then write header, root, metadata, the leaf-directory section and —
     through ``write_data(f)`` — the ``data_len`` bytes of tile data.
@@ -762,9 +759,9 @@ def plan_leaf_size(n_entries: int, leaf_max_entries: int | None = None
                    ) -> int:
     """Entries per leaf for a directory of ``n_entries`` coalesced tile
     entries; 0 means root-only. Deterministic in its INPUTS alone, so the
-    single-writer and distributed finalize paths (which read the same
-    TilerConfig) split identically and stay byte-identical. Leaf count
-    (= root pointers) never exceeds ROOT_LEAF_POINTERS_MAX.
+    single-writer assembler and the sharded sink's finalize (which read
+    the same TilerConfig) split identically and stay byte-identical. Leaf
+    count (= root pointers) never exceeds ROOT_LEAF_POINTERS_MAX.
 
     ``leaf_max_entries`` (TilerConfig escape hatch) replaces the built-in
     LEAF_MIN_ENTRIES target so operators can pick finer leaves for CDN
@@ -958,7 +955,7 @@ def build_directories(entries: list[DirEntry],
 
 
 # ---------------------------------------------------------------------------
-# Distributed directory assembly (round-3: driver O(shards), not O(tiles))
+# Vectorized directory columns (the streaming DirectoryBuilder's kernels)
 # ---------------------------------------------------------------------------
 
 def varint_array_u64(vals) -> bytes:

@@ -2091,165 +2091,6 @@ SHARD_ENTRIES_SCHEMA = StructType(
     ]
 )
 
-# one row per range partition: the partition's run-coalesced entries as
-# raw int64-LE arrays, plus boundary scalars so the driver can compute the
-# EXACT global coalesced count (and thus the deterministic leaf split)
-# from an O(partitions) collect before streaming any array bytes
-DIR_CHUNK_SCHEMA = StructType(
-    [
-        StructField("cpid", IntegerType(), False),
-        StructField("n", LongType(), False),
-        StructField("first_tid", LongType(), False),
-        StructField("first_off", LongType(), False),
-        StructField("first_len", LongType(), False),
-        StructField("first_run", LongType(), False),
-        StructField("last_tid", LongType(), False),
-        StructField("last_off", LongType(), False),
-        StructField("last_len", LongType(), False),
-        StructField("last_run", LongType(), False),
-        StructField("tid_b", BinaryType(), False),
-        StructField("off_b", BinaryType(), False),
-        StructField("len_b", BinaryType(), False),
-        StructField("run_b", BinaryType(), False),
-    ]
-)
-
-_DIR_CHUNK_STATS_COLS = [
-    "cpid", "n", "first_tid", "first_off", "first_len", "first_run",
-    "last_tid", "last_off", "last_len", "last_run",
-]
-
-
-def _make_dir_chunk_encoder():
-    """Per-partition directory chunk encoder: run-coalesce the partition's
-    (tile_id-sorted) entries on the executor and ship them as packed int64
-    arrays. Only the boundary pair of neighboring partitions can still
-    merge — the driver handles that while STREAMING chunks one partition
-    at a time into a DirectoryBuilder, so driver memory is O(one
-    partition + one leaf), never O(tiles)."""
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernels.pmtiles import coalesce_runs_arrays
-
-        tids: list[np.ndarray] = []
-        offs: list[np.ndarray] = []
-        lens: list[np.ndarray] = []
-        cpid = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if cpid is None:
-                cpid = int(pdf["cpid"].iloc[0])
-            tids.append(pdf["tile_id"].to_numpy(dtype=np.int64))
-            offs.append(pdf["off"].to_numpy(dtype=np.int64))
-            lens.append(pdf["len"].to_numpy(dtype=np.int64))
-        if cpid is None:
-            return
-        ct, co, cl, cr = coalesce_runs_arrays(
-            np.concatenate(tids), np.concatenate(offs), np.concatenate(lens)
-        )
-        n = len(ct)
-        yield pd.DataFrame({
-            "cpid": [cpid], "n": [n],
-            "first_tid": [int(ct[0])], "first_off": [int(co[0])],
-            "first_len": [int(cl[0])], "first_run": [int(cr[0])],
-            "last_tid": [int(ct[-1])], "last_off": [int(co[-1])],
-            "last_len": [int(cl[-1])], "last_run": [int(cr[-1])],
-            "tid_b": [ct.tobytes()], "off_b": [co.tobytes()],
-            "len_b": [cl.tobytes()], "run_b": [cr.tobytes()],
-        })
-
-    return enc
-
-
-def _assemble_directory_stream(ent: DataFrame, spill,
-                               leaf_max_entries: int | None = None,
-                               ) -> tuple[bytes, int, int]:
-    """Driver-side directory assembly over range-partitioned, sorted
-    (tile_id, off, len) entry rows: executors run-coalesce per partition
-    (_make_dir_chunk_encoder); the driver collects O(partitions) boundary
-    scalars to fix the exact coalesced count (and thus the deterministic
-    root-vs-leaf split), then STREAMS each partition's packed arrays into
-    a DirectoryBuilder one at a time. Compressed leaves spill to ``spill``
-    as they fill — peak driver memory is one partition + one leaf +
-    O(#leaves) root entries, never O(tiles).
-
-    Returns (root bytes uncompressed, coalesced tile entry count, leaf
-    section byte length). Root-only directories are byte-identical to
-    encode_directory over the global coalesced entry list."""
-    from pyspark import StorageLevel
-
-    from .kernels import pmtiles as P
-
-    chunks = ent.withColumn(
-        "cpid", F.spark_partition_id()
-    ).mapInPandas(_make_dir_chunk_encoder(), schema=DIR_CHUNK_SCHEMA
-                  ).persist(StorageLevel.DISK_ONLY)
-    try:
-        stats = sorted(chunks.select(*_DIR_CHUNK_STATS_COLS).collect(),
-                       key=lambda r: r["cpid"])
-        n_declared = _fold_coalesced_count(stats)
-        builder = P.DirectoryBuilder(n_declared, P.COMPRESSION_GZIP,
-                                     spill=spill,
-                                     leaf_max_entries=leaf_max_entries)
-        prev_cpid = -1
-        for r in chunks.select("cpid", "tid_b", "off_b", "len_b", "run_b"
-                               ).toLocalIterator(prefetchPartitions=True):
-            cpid = int(r["cpid"])
-            if cpid <= prev_cpid:
-                # a mis-ordered stream would write a mis-sorted directory
-                # that readers silently resolve wrong — fail loudly (a bare
-                # assert would vanish under python -O)
-                raise RuntimeError(
-                    f"directory chunks out of range order ({cpid} after "
-                    f"{prev_cpid})")
-            prev_cpid = cpid
-            builder.add(
-                np.frombuffer(bytes(r["tid_b"]), dtype=np.int64),
-                np.frombuffer(bytes(r["off_b"]), dtype=np.int64),
-                np.frombuffer(bytes(r["len_b"]), dtype=np.int64),
-                np.frombuffer(bytes(r["run_b"]), dtype=np.int64),
-            )
-        root_raw, _, n_coalesced = builder.finish()
-        leaf_len = builder.leaf_length
-    finally:
-        # unpersist even when the stream or count-declare raises — leaked
-        # DISK_ONLY chunk blocks would otherwise pin storage for the session
-        chunks.unpersist()
-    return root_raw, n_coalesced, leaf_len
-
-
-def _fold_coalesced_count(stats) -> int:
-    """EXACT global coalesced entry count from per-partition boundary
-    stats (cpid-sorted rows of n/first_*/last_*): sum of per-partition
-    counts minus one per cross-partition run merge — mirrors
-    DirectoryBuilder's held-entry merge rule, including merge chains
-    through single-entry partitions."""
-    total = 0
-    held = None  # (tid, off, len, run) of the would-be last emitted entry
-    for r in stats:
-        n = int(r["n"])
-        if n == 0:
-            continue
-        merged = (
-            held is not None
-            and int(r["first_off"]) == held[1]
-            and int(r["first_len"]) == held[2]
-            and int(r["first_tid"]) == held[0] + held[3]
-        )
-        total += n - (1 if merged else 0)
-        if n == 1:
-            if merged:
-                held = (held[0], held[1], held[2],
-                        held[3] + int(r["first_run"]))
-            else:
-                held = (int(r["first_tid"]), int(r["first_off"]),
-                        int(r["first_len"]), int(r["first_run"]))
-        else:
-            held = (int(r["last_tid"]), int(r["last_off"]),
-                    int(r["last_len"]), int(r["last_run"]))
-    return total
-
 
 def _planned_codec_backend(codec: int) -> str | None:
     """The driver's codec fingerprint for the shard writer's executor-side
@@ -2302,27 +2143,6 @@ def _entries_arrow_schema():
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(SHARD_ENTRIES_SCHEMA)
-
-
-def _entry_files_frame(spark, paths: list[str]) -> DataFrame:
-    """The entry files at ``paths`` as one ``SHARD_ENTRIES_SCHEMA`` frame,
-    one file per partition, read on the executors with pyarrow.
-
-    That is the POSIX I/O the shard writers used to write them, so the
-    ``shard_dir`` path never goes through Hadoop: a Hadoop read would
-    resolve a path without a scheme against ``fs.defaultFS`` (``hdfs://``
-    on a YARN cluster) and expand ``[]{}*?`` in it as a glob."""
-    schema = _entries_arrow_schema()
-
-    def read(batches):
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for i in b.column("id").to_pylist():
-                yield from pq.read_table(paths[i], schema=schema).to_batches()
-
-    return spark.range(len(paths), numPartitions=max(len(paths), 1)) \
-        .mapInArrow(read, SHARD_ENTRIES_SCHEMA)
 
 
 # one row per reduce task that wrote a shard: its partition id, entry
@@ -2445,14 +2265,6 @@ def _make_shard_writer(shard_dir: str, codec: int,
     return write
 
 
-# Addressed-entry count up to which the sharded sink assembles the archive
-# driver-side (a pyarrow read of the shards' entry files + numpy) instead
-# of running the distributed directory/winner choreography. 40-byte entry
-# rows: 2M is ~130 MB of driver arrays — far under any sane driver heap —
-# while 10^8-tile archives still take the distributed path.
-DRIVER_FINALIZE_MAX_ENTRIES = 2_000_000
-
-
 def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
                            directory: tuple, config: TilerConfig,
                            codec: int, bounds: tuple, **counts):
@@ -2494,67 +2306,217 @@ def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
         **counts)
 
 
-def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
-                             shard_dir: str, bounds: tuple,
-                             config: TilerConfig, codec: int):
-    """Driver-side sharded-archive finalize over one entry frame (the
-    shards' entry files, read by ``_finalize_shards``) — byte-identical
-    to the distributed finalize (same winner rule: min-tile_id first
-    occurrence per (content_hash, raw_len); same data
-    order: winners concatenated in winner-tile order; same directory
-    bytes: one DirectoryBuilder.add over the run-coalesced arrays, which
-    equals the chunked adds by test). All set-up work is vectorized numpy;
-    no per-entry Python objects beyond the final blob-copy loop."""
+# rows per pyarrow read of an entry file: the finalize's merge holds at
+# most one such batch per file
+ENTRY_READ_ROWS = 1 << 16
+
+
+def _entry_batches(path: str, columns: list[str]):
+    """The entry file at ``path`` as numpy arrays of ``columns``, one
+    pyarrow read batch at a time, in file (= tile_id) order."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path) as pf:
+        for b in pf.iter_batches(batch_size=ENTRY_READ_ROWS, columns=columns):
+            if b.num_rows:
+                yield [b.column(c).to_numpy() for c in columns]
+
+
+def _plan_blobs(paths: list[str], pids: list[int]):
+    """Pass 1 over the entry files, then the blob plan.
+
+    Pass 1 keeps each shard's first write of every blob. The shard writer
+    appends each new (content_hash, raw_len) at the end of its shard and a
+    blob is never empty, so a row whose ``local_off`` is above every
+    earlier ``local_off`` in its file is that first write. It also sums
+    ``n_features`` per zoom (tile_id order is zoom order, so ``z`` only
+    grows within a file) and checks that every file is in tile_id order.
+
+    The winner of each (content_hash, raw_len) is its first occurrence in
+    tile order, the single writer's dedup rule; that occurrence is always
+    some shard's first write. Winners in tile order are the data order,
+    and a blob's final offset is the sum of the winners' lengths before
+    it.
+
+    Returns ``(tables, plan, data_len, n_tiles, features_per_zoom)``:
+    ``tables[i]`` maps file ``i``'s first-write ``local_off`` (ascending)
+    to the final ``(off, len)`` of its blob, and ``plan`` is the winners'
+    ``(pid, local_off, blob_len)`` arrays in data order."""
+    cols = ["tile_id", "content_hash", "raw_len", "local_off", "blob_len"]
+    kept: list[list[np.ndarray]] = [[] for _ in cols]
+    file_starts = [0]
+    zsum = np.zeros(32, dtype=np.int64)
+    zseen = np.zeros(32, dtype=bool)
+    n_tiles = 0
+    for path in paths:
+        top = last_tid = -1
+        for batch in _entry_batches(path, [*cols, "z", "n_features"]):
+            tid, loff, z, nfeat = batch[0], batch[3], batch[5], batch[6]
+            if tid[0] <= last_tid or (tid[1:] <= tid[:-1]).any():
+                raise RuntimeError(
+                    f"entry rows out of tile_id order in {path}")
+            last_tid = int(tid[-1])
+            seen_max = np.maximum.accumulate(np.concatenate(([top], loff)))
+            first = loff > seen_max[:-1]
+            top = int(seen_max[-1])
+            for out, col in zip(kept, batch):
+                out.append(col[first])
+            starts = np.flatnonzero(np.diff(z, prepend=-1))
+            np.add.at(zsum, z[starts], np.add.reduceat(nfeat, starts))
+            zseen[z[starts]] = True
+            n_tiles += len(tid)
+        file_starts.append(sum(len(a) for a in kept[0]))
+    features_per_zoom = {int(z): int(zsum[z]) for z in np.flatnonzero(zseen)}
+    cat = []
+    for out in kept:  # one column at a time, freeing its pieces
+        cat.append(np.concatenate([np.empty(0, np.int64), *out]))
+        out.clear()
+    tid, h, raw_len, loff, blen = cat
+    del cat
+
+    order = np.lexsort((tid, raw_len, h))
+    first = np.zeros(len(order), dtype=bool)
+    first[:1] = True
+    for key in (h, raw_len):
+        ks = key[order]
+        first[1:] |= ks[1:] != ks[:-1]
+    del h, raw_len, key, ks
+    win = order[first]  # each blob's winning row, in key order
+    data = np.argsort(tid[win])  # blobs in winner-tile (= data) order
+    del tid
+    win_len = blen[win]
+    del blen
+    sizes = win_len[data]
+    blob_off = np.empty(len(win), dtype=np.int64)
+    blob_off[data] = np.cumsum(sizes) - sizes
+    wrow = win[data]
+    del win, data
+    fidx = np.searchsorted(np.asarray(file_starts), wrow, side="right") - 1
+    plan = (np.asarray(pids, dtype=np.int64)[fidx], loff[wrow], sizes)
+    del fidx, wrow
+    blob = np.cumsum(first) - 1  # each key-ordered row's blob
+    del first
+    off = np.empty(len(order), dtype=np.int64)
+    off[order] = blob_off[blob]
+    del blob_off
+    length = np.empty(len(order), dtype=np.int64)
+    length[order] = win_len[blob]
+    del order, blob, win_len
+    tables = [(loff[a:b], off[a:b], length[a:b])
+              for a, b in zip(file_starts, file_starts[1:])]
+    return tables, plan, int(sizes.sum()), n_tiles, features_per_zoom
+
+
+def _merged_entries(paths: list[str], tables: list):
+    """Windowed k-way merge of the entry files in tile_id order, each row
+    mapped to its blob's final ``(off, len)`` through its file's table.
+    A window ends at the smallest last tile_id among the buffered batches,
+    so every row up to it is buffered. Yields each window run-coalesced,
+    as ``(tid, off, len, run)`` arrays; a run can continue across
+    windows."""
+    from .kernels.pmtiles import coalesce_runs_arrays
+
+    readers = [_entry_batches(p, ["tile_id", "local_off"]) for p in paths]
+    bufs: dict[int, tuple] = {}
+
+    def refill(i: int) -> None:
+        batch = next(readers[i], None)
+        if batch is None:
+            bufs.pop(i, None)
+            return
+        tid, loff = batch
+        t_loff, t_off, t_len = tables[i]
+        j = np.searchsorted(t_loff, loff)
+        bufs[i] = (tid, t_off[j], t_len[j])
+
+    for i in range(len(paths)):
+        refill(i)
+    while bufs:
+        bound = min(b[0][-1] for b in bufs.values())
+        parts = []
+        for i, (tid, off, length) in list(bufs.items()):
+            cut = int(np.searchsorted(tid, bound, side="right"))
+            parts.append((tid[:cut], off[:cut], length[:cut]))
+            if cut == len(tid):
+                refill(i)
+            else:
+                bufs[i] = (tid[cut:], off[cut:], length[cut:])
+        tid, off, length = (np.concatenate([p[c] for p in parts])
+                            for c in range(3))
+        order = np.argsort(tid, kind="stable")
+        yield coalesce_runs_arrays(tid[order], off[order], length[order])
+
+
+def _coalesced_count(windows) -> int:
+    """The exact coalesced entry count of ``_merged_entries``' windows:
+    their lengths, minus one per window whose first entry continues the
+    previous window's last run (``DirectoryBuilder``'s merge rule)."""
+    n = 0
+    cont = None  # (tile_id, off, len) that would continue the last run
+    for tid, off, length, run in windows:
+        n += len(tid) - (cont == (int(tid[0]), int(off[0]), int(length[0])))
+        cont = (int(tid[-1] + run[-1]), int(off[-1]), int(length[-1]))
+    return n
+
+
+def _copy_rows(pid, local_off, blob_len, step: int = 1 << 16):
+    """The copy plan's arrays as (pid, local_off, blob_len) int tuples,
+    converted ``step`` rows at a time."""
+    for s in range(0, len(pid), step):
+        yield from zip(pid[s:s + step].tolist(),
+                       local_off[s:s + step].tolist(),
+                       blob_len[s:s + step].tolist())
+
+
+def _finalize_entry_files(shard_dir: str, pids: list[int], output_path: str,
+                          bounds: tuple, config: TilerConfig,
+                          codec: int) -> dict:
+    """The sharded archive's finalize, on the driver, streamed from the
+    entry files of shards ``pids`` in ``shard_dir``. No Spark job runs.
+
+    Pass 1 plans the blobs (``_plan_blobs``: cross-shard dedup, data
+    order, final offsets, copy plan). Then a windowed k-way merge of the
+    files in tile_id order (``_merged_entries``) runs twice: the first
+    time only counts the coalesced entries, because ``DirectoryBuilder``
+    needs the exact count up front to fix the root/leaf split; the second
+    feeds the builder window by window. The data section is then copied
+    from the shard files. Byte-identical to the single-writer archive:
+    same winner rule, same data order, same directory bytes.
+
+    Driver memory is O(shard-unique blobs), never O(entries): the plan
+    holds each shard's first writes (the sum over shards of each shard's
+    unique blobs), the merge holds one read batch (``ENTRY_READ_ROWS``)
+    per file, and the builder one leaf plus one root pointer per leaf.
+    Measured with ``scripts/measure_finalize.py`` (8 entry files): peak
+    growth is about 87 B per shard-unique blob while the plan is built
+    (827 MiB at 10^7 all-unique entries), of which 24 B per shard-unique
+    blob (the tables) and 24 B per winner (the copy plan) stay through
+    the merges; 10^7 entries over 64 blobs grow it by 90 MiB. The
+    entry-frame finalize this replaced held every entry: 3.2 GiB and
+    2.2 GiB at those two points. The reference's single writer keeps
+    24 B per entry."""
     import tempfile
 
     from .kernels import pmtiles as P
-    from .kernels.pmtiles import coalesce_runs_arrays
 
-    order = np.argsort(pdf["tile_id"].to_numpy(), kind="stable")
-    tid = pdf["tile_id"].to_numpy()[order]
-    zs = pdf["z"].to_numpy()[order]
-    nfeat = pdf["n_features"].to_numpy()[order]
-    key = np.empty(len(tid), dtype=[("h", "<i8"), ("l", "<i8")])
-    key["h"] = pdf["content_hash"].to_numpy()[order]
-    key["l"] = pdf["raw_len"].to_numpy()[order]
-    # unique (hash, raw_len) pairs: first_idx = first occurrence in tile
-    # order (== the distributed groupBy's min-tile_id winner); inverse maps
-    # each entry to its pair
-    _, first_idx, inverse = np.unique(key, return_index=True,
-                                      return_inverse=True)
-    n_blobs = len(first_idx)
-    # winners in ascending winner-tile order (== data concat order)
-    perm = np.argsort(first_idx, kind="stable")
-    win_rank = np.empty(n_blobs, dtype=np.int64)
-    win_rank[perm] = np.arange(n_blobs)
-    win_idx = first_idx[perm]
-    win_blen = pdf["blob_len"].to_numpy()[order][win_idx]
-    win_loff = pdf["local_off"].to_numpy()[order][win_idx]
-    win_pid = pdf["pid"].to_numpy()[order][win_idx]
-    win_off = np.concatenate(([0], np.cumsum(win_blen[:-1])))
-
-    rank = win_rank[inverse]
-    ct, co, cl, cr = coalesce_runs_arrays(tid, win_off[rank], win_blen[rank])
-    # per-zoom feature sums over every zoom that has tiles (the distributed
-    # finalize's groupBy("z") keys)
-    zooms_seen, zinv = np.unique(zs, return_inverse=True)
-    zsums = np.zeros(len(zooms_seen), dtype=np.int64)
-    np.add.at(zsums, zinv, nfeat)
-    features_per_zoom = dict(zip(zooms_seen.tolist(), zsums.tolist()))
-
+    pids = sorted(pids)
+    paths = [_entries_path(shard_dir, pid) for pid in pids]
+    tables, plan, data_len, n_tiles, features_per_zoom = _plan_blobs(paths,
+                                                                     pids)
+    n_coalesced = _coalesced_count(_merged_entries(paths, tables))
     with tempfile.TemporaryFile() as leaf_tmp:
-        builder = P.DirectoryBuilder(len(ct), P.COMPRESSION_GZIP,
+        builder = P.DirectoryBuilder(n_coalesced, P.COMPRESSION_GZIP,
                                      spill=leaf_tmp,
                                      leaf_max_entries=config.leaf_max_entries)
-        builder.add(ct, co, cl, cr)
+        for window in _merged_entries(paths, tables):
+            builder.add(*window)
         root_raw, _, n_coalesced = builder.finish()
-        return _write_sharded_archive(
-            output_path, shard_dir,
-            zip(win_pid.tolist(), win_loff.tolist(), win_blen.tolist()),
+        hdr = _write_sharded_archive(
+            output_path, shard_dir, _copy_rows(*plan),
             (root_raw, leaf_tmp, n_coalesced), config, codec, bounds,
-            addressed=len(tid), n_blobs=n_blobs,
-            data_len=int(win_blen.sum()),
+            addressed=n_tiles, n_blobs=len(plan[0]), data_len=data_len,
             features_per_zoom=features_per_zoom)
+    return _sink_stats(hdr, n_tiles, sum(features_per_zoom.values()), bounds)
 
 
 def _sink_stats(hdr, tiles: int, features: int, bounds: tuple) -> dict:
@@ -2576,172 +2538,34 @@ def _finalize_shards(summaries: DataFrame, output_path: str, shard_dir: str,
     ``summaries`` is the fused reduce (one ``SHARD_SUMMARY_SCHEMA`` row per
     shard written); collecting it runs the fan-out, the shuffle and every
     shard writer. The bounds then come from ``metrics`` unless the caller
-    gave them, and the entry files of exactly the summarized pids are
-    finalized: up to ``DRIVER_FINALIZE_MAX_ENTRIES`` entries read with
-    pyarrow into ``_finalize_entries_driver`` (no further Spark job),
-    above it read on the executors (``_entry_files_frame``) into
-    ``_finalize_sharded_distributed``. Files a previous run left in a
-    reused ``shard_dir`` under other pids are never read."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    gave them, and ``_finalize_entry_files`` assembles the archive on the
+    driver from the entry files of exactly the summarized pids, with no
+    further Spark job. Files a previous run left in a reused ``shard_dir``
+    under other pids are never read."""
     rows = summaries.collect()
     if bounds is None:
         bounds = metrics.feature_bounds()
-    paths = [_entries_path(shard_dir, int(r["pid"])) for r in rows]
-    n_addressed = sum(int(r["entries"]) for r in rows)
-    if n_addressed > DRIVER_FINALIZE_MAX_ENTRIES:
-        return _finalize_sharded_distributed(
-            _entry_files_frame(summaries.sparkSession, paths), output_path,
-            shard_dir, bounds, config, codec)
-    # small (or empty) archive: the distributed assembly's value is bounded
-    # driver memory at 10^8+ tiles, but it costs ~8 Spark jobs (winner
-    # groupBy, prefix-sum collect, directory range shuffle + sampling,
-    # chunk persist + stats + toLocalIterator streams); reading the entry
-    # files here and assembling with numpy gives the same bytes
-    schema = _entries_arrow_schema()
-    table = (pa.concat_tables([pq.read_table(p, schema=schema) for p in paths])
-             if paths else schema.empty_table())
-    hdr = _finalize_entries_driver(table.to_pandas(), output_path, shard_dir,
-                                   bounds, config, codec)
-    return _sink_stats(hdr, n_addressed,
-                       sum(int(r["features"]) for r in rows), bounds)
+    return _finalize_entry_files(shard_dir, [int(r["pid"]) for r in rows],
+                                 output_path, bounds, config, codec)
 
 
-def _finalize_sharded_distributed(entries: DataFrame,
-                                  output_path: str, shard_dir: str,
-                                  bounds: tuple, config: TilerConfig,
-                                  codec: int) -> dict:
-    """Distributed archive finalize over ``SHARD_ENTRIES_SCHEMA`` rows:
-    cross-shard blob dedup, final data offsets, and directory
-    run-coalescing all run ON EXECUTORS; the driver
-    streams one partition's coalesced entry arrays at a time into a
-    DirectoryBuilder, so its directory state is O(one partition + one
-    leaf + #leaves): past ROOT_MAX_ENTRIES the builder spills compressed
-    leaf directories to a temp file as they fill and the root keeps one
-    pointer per leaf (run_length==0, spec two-level layout). The driver
-    never materializes the entry list OR the full directory bytes — the
-    round-4 review's remaining O(tiles) driver obligation. Winner blobs
-    stream via toLocalIterator for the sequential file concat.
-
-    ``convert_sharded`` takes this path above
-    ``DRIVER_FINALIZE_MAX_ENTRIES`` entries, reading ``entries`` from the
-    shards' entry files; below it ``_finalize_entries_driver`` assembles
-    the same bytes, and the two paths are each other's differential
-    oracle. ``entries`` is not persisted: each of the three jobs that
-    scan it (per-zoom sums, winner groupBy, directory join) reads the
-    entry files again, which over 10^6 entries in 8 files took no longer
-    than a DISK_ONLY persist (4 interleaved runs each, 4-CPU host: median
-    6.7 s unpersisted, 7.1 s persisted). The entry and feature totals
-    come from the per-zoom feature sums.
-
-    Byte-identical to the single-writer archive: the winner of a duplicated
-    blob is its first occurrence in tile order ((pid, local_off) order —
-    pids ascend with the range partitioning), data bytes concatenate in
-    that order, and the directory bytes equal encode_directory over the
-    global coalesced entry list (tested). The winner table persisted here
-    is released on every exit path."""
-    import tempfile
-
-    import pyarrow as pa
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    spark = entries.sparkSession
-    per_zoom = entries.groupBy("z").agg(
-        F.sum("n_features"), F.count("*")).collect()
-    features_per_zoom = {int(r[0]): int(r[1]) for r in per_zoom}
-    n_addressed = sum(int(r[2]) for r in per_zoom)
-    winners = None
-    try:
-        # winner blob per (content_hash, raw_len): first occurrence in
-        # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
-        # single-writer semantics; tile_ids are unique per entry, so no
-        # tie-break is needed). Partitioning of the heavy shuffle is
-        # hash, so (pid, local_off) carries no global order — tile_id
-        # does.
-        winners = (
-            entries.groupBy("content_hash", "raw_len")
-            .agg(
-                F.min("tile_id").alias("win_tile"),
-                F.min_by(F.struct("pid", "local_off", "blob_len"),
-                         F.col("tile_id")).alias("w"),
-            )
-            .select("content_hash", "raw_len", "win_tile",
-                    F.col("w.pid").alias("pid"),
-                    F.col("w.local_off").alias("local_off"),
-                    F.col("w.blob_len").alias("blob_len"))
-            .repartitionByRange(max(config.shuffle_partitions or 8, 8),
-                                "win_tile")
-            .sortWithinPartitions("win_tile")
-            .withColumn("wpid", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
+def _check_props_input(features: DataFrame, config: TilerConfig,
+                       salted: bool) -> None:
+    """Reject ``config.write_properties`` where no encoder serves it: with
+    ``salted``, or on features without a ``props`` column."""
+    if not config.write_properties:
+        return
+    if salted:
+        raise ValueError(
+            "write_properties=True uses the tag-interning encoder and "
+            "cannot combine with salted=True"
         )
-        # two-phase prefix sum over win_tile order: per-range-partition
-        # totals to the driver (O(partitions)), cumulative bases back in
-        per_part = winners.groupBy("wpid").agg(
-            F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
-        ).orderBy("wpid").collect()
-        sizes = np.array([int(r["bytes"]) for r in per_part],
-                         dtype=np.int64)
-        data_len = int(sizes.sum())
-        n_blobs = sum(int(r["cnt"]) for r in per_part)
-        # built from Arrow: a LocalRelation, not an RDD of pickled rows
-        base_df = spark.createDataFrame(pa.table({
-            "wpid": pa.array([int(r["wpid"]) for r in per_part],
-                             pa.int32()),
-            "base": pa.array(np.cumsum(sizes) - sizes, pa.int64()),
-        }))
-        wpref = (
-            Window.partitionBy("wpid").orderBy("win_tile")
-            .rowsBetween(Window.unboundedPreceding, -1)
+    if "props" not in features.columns:
+        raise ValueError(
+            "write_properties=True requires a 'props' column "
+            "(array<struct<key string, val binary>>) — build it with "
+            "encode_props_column(df, cols)"
         )
-        woffs = (
-            winners
-            .withColumn("prefix",
-                        F.coalesce(F.sum("blob_len").over(wpref),
-                                   F.lit(0)))
-            .join(F.broadcast(base_df), "wpid")
-            .select(
-                "content_hash", "raw_len",
-                (F.col("base") + F.col("prefix")).alias("final_off"),
-                F.col("blob_len").alias("final_len"),
-            )
-        )
-        # final directory entries: one range shuffle of 24-byte rows,
-        # then per-partition coalesce + varint encode on the executors
-        ent = (
-            entries.select("tile_id", "content_hash", "raw_len")
-            .join(woffs, ["content_hash", "raw_len"])
-            .select("tile_id", F.col("final_off").alias("off"),
-                    F.col("final_len").alias("len"))
-        )
-        ent = _tile_exchange(ent, config.shuffle_partitions, True,
-                             "tile_id").sortWithinPartitions("tile_id")
-        with tempfile.TemporaryFile() as leaf_tmp:
-            root_raw, n_coalesced, _ = _assemble_directory_stream(
-                ent, leaf_tmp, config.leaf_max_entries)
-            # stream the winner list in win_tile order (== final data
-            # offset order) for the copy loop — O(1) driver memory;
-            # blobs are read from their shard files by (pid, local_off)
-            # seeks. NO orderBy: `winners` is already range-partitioned
-            # AND sorted within partitions by win_tile (persisted that
-            # way above), and toLocalIterator yields partitions in
-            # index order — an orderBy here would re-run a full sort
-            # exchange once PER PARTITION JOB that toLocalIterator
-            # launches.
-            hdr = _write_sharded_archive(
-                output_path, shard_dir,
-                winners.select("pid", "local_off", "blob_len")
-                .toLocalIterator(prefetchPartitions=True),
-                (root_raw, leaf_tmp, n_coalesced), config, codec,
-                bounds, addressed=n_addressed, n_blobs=n_blobs,
-                data_len=data_len, features_per_zoom=features_per_zoom)
-    finally:
-        if winners is not None:
-            winners.unpersist()
-    return _sink_stats(hdr, n_addressed, sum(features_per_zoom.values()),
-                       bounds)
 
 
 def _tile_stage(features: DataFrame, config: TilerConfig, salted: bool,
@@ -2772,19 +2596,8 @@ def _tile_stage(features: DataFrame, config: TilerConfig, salted: bool,
     map stage."""
     from pyspark import StorageLevel
 
+    _check_props_input(features, config, salted)
     props = config.write_properties
-    if props and salted:
-        raise ValueError(
-            "write_properties=True uses the tag-interning encoder and "
-            "cannot combine with salted=True"
-        )
-    if props and "props" not in features.columns:
-        raise ValueError(
-            "write_properties=True requires a 'props' column "
-            "(array<struct<key string, val binary>>) — build it with "
-            "encode_props_column(df, cols)"
-        )
-
     hot = _hot_tile_ranges(features, config) if salted else []
     records = _premerge_records(features, config, metrics)
     if hot:
@@ -2841,16 +2654,11 @@ def convert_sharded(features: DataFrame, output_path: str,
     archive bounds are the feature bbox extremes the fan-out adds to
     ``metrics.bounds`` as it reads each batch (no scan of their own; NaN
     is skipped like null, an input with no bbox gets ``WORLD_BOUNDS``),
-    unless ``bounds`` is given. Up to ``DRIVER_FINALIZE_MAX_ENTRIES``
-    entries the driver then reads the summarized pids' entry files with
-    pyarrow and assembles the archive with numpy, with no further Spark
-    job; above it, cross-shard blob dedup, final data offsets and
-    directory encoding run on executors over those files, read there
-    with pyarrow by the paths the shard writers used
-    (``_entry_files_frame``; ``_finalize_sharded_distributed``) — driver
-    state is O(shards+partitions) and the winner-blob copy list streams via
-    toLocalIterator, so 10^8+ tile archives never materialize an entry
-    list on the driver. Only the summarized pids' files are read, so
+    unless ``bounds`` is given. The driver then streams the summarized
+    pids' entry files with pyarrow (``_finalize_entry_files``): cross-shard
+    blob dedup, final data offsets and the directory, with no further
+    Spark job at any size. Its memory is O(shard-unique blobs), never
+    O(entries). Only the summarized pids' files are read, so
     files another run left in a reused ``shard_dir`` do not matter.
 
     Returns the archive stats plus ``metrics``, the accumulator-backed

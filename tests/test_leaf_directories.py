@@ -5,7 +5,7 @@ entry chunks to the PMTiles leaf section (root entries with
 run_length==0 — the spec two-level layout the round-4 READER already
 consumes). These tests pin: spec invariants on our own leaf archive,
 read_tile/PMTilesReader round-trips, byte-identity between the
-single-writer and distributed finalize paths in leaf mode, and bounded
+single-writer and the sharded sink's finalize in leaf mode, and bounded
 driver memory on a 10^6-entry synthetic archive.
 """
 
@@ -249,13 +249,12 @@ def test_leaf_max_entries_knob(tmp_path):
     rdr.close()
 
 
-def test_leaf_max_entries_byte_parity_across_finalize_paths(
-        spark, tmp_path):
-    """Single-writer and distributed finalize must stay byte-identical
+def test_leaf_max_entries_byte_parity_across_finalize_paths(tmp_path):
+    """Single-writer and sharded finalize must stay byte-identical
     when the knob moves the split."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
+    from gpq_tiles_spark.pipeline import _finalize_entry_files
 
     tiles = _make_tiles(N_LEAF)
     single = str(tmp_path / "single.pmtiles")
@@ -266,64 +265,175 @@ def test_leaf_max_entries_byte_parity_across_finalize_paths(
     asm.bounds = [-10.0, -10.0, 10.0, 10.0]
     asm.finalize(single)
     shard_dir = str(tmp_path / "shards")
-    ent = _synthetic_entries(
-        spark, tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
+    pids = _synthetic_entries(
+        tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
     out = str(tmp_path / "dist.pmtiles")
     cfg = TilerConfig(min_zoom=0, max_zoom=8, shuffle_partitions=8,
                       leaf_max_entries=1000)
-    _finalize_sharded_distributed(
-        ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
-        COMPRESSION_GZIP)
+    _finalize_entry_files(shard_dir, pids, out, (-10.0, -10.0, 10.0, 10.0),
+                          cfg, COMPRESSION_GZIP)
     assert open(single, "rb").read() == open(out, "rb").read()
 
 
-def _synthetic_entries(spark, tiles, shard_dir, codec_blobs):
-    """Shard file + SHARD_ENTRIES_SCHEMA DataFrame reproducing what
-    _make_shard_writer would emit for these tiles in one partition."""
-    from gpq_tiles_spark.pipeline import SHARD_ENTRIES_SCHEMA
+def _synthetic_entries(tiles, shard_dir, codec_blobs, pids=None):
+    """Shard and entry files reproducing what _make_shard_writer would
+    write for these tiles (tile ``i`` in shard ``pids[i]``, default all
+    in shard 0): each shard in tile order, deduped on (content_hash,
+    raw_len) within the shard. Returns the shard ids written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gpq_tiles_spark.pipeline import (_entries_arrow_schema,
+                                          _entries_path, _shard_path)
 
     os.makedirs(shard_dir, exist_ok=True)
-    rows = []
-    local_off = 0
-    with open(os.path.join(shard_dir, "shard_00000.bin"), "wb") as f:
-        for tid, z, x, y, mvt, h in tiles:
-            blob = codec_blobs(mvt)
-            f.write(blob)
-            rows.append((tid, z, h, len(mvt), local_off, len(blob), 1, 0))
-            local_off += len(blob)
-    return spark.createDataFrame(rows, SHARD_ENTRIES_SCHEMA)
+    pids = [0] * len(tiles) if pids is None else pids
+    for pid in sorted(set(pids)):
+        rows, seen, local_off = [], {}, 0
+        with open(_shard_path(shard_dir, pid), "wb") as f:
+            for (tid, z, x, y, mvt, h), p in zip(tiles, pids):
+                if p != pid:
+                    continue
+                hit = seen.get((h, len(mvt)))
+                if hit is None:
+                    blob = codec_blobs(mvt)
+                    f.write(blob)
+                    hit = seen[(h, len(mvt))] = (local_off, len(blob))
+                    local_off += len(blob)
+                rows.append((tid, z, h, len(mvt), *hit, 1, pid))
+        cols = list(zip(*rows))
+        schema = _entries_arrow_schema()
+        pq.write_table(pa.table(
+            {f.name: pa.array(c, f.type) for f, c in zip(schema, cols)},
+            schema=schema), _entries_path(shard_dir, pid))
+    return sorted(set(pids))
+
+
+@pytest.mark.parametrize("pids", [[0, 0, 0], [0, 1, 0]])
+def test_assembler_and_sharded_finalize_dedup_on_hash_and_length(
+        tmp_path, pids):
+    """One content hash on two blobs of different raw length: tiles h/A,
+    h/B, h/A are two blobs to the single-writer assembler and to the
+    sharded finalize alike, so both write the same bytes (the assembler
+    once keyed on the hash alone, and wrote A twice)."""
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
+    from gpq_tiles_spark.pipeline import _finalize_entry_files
+
+    head, tail = mvt_fast.layer_head_tail("features", 4096)
+    pts = [mvt_fast._point_feature_bytes(i, 10 * i, 20 * i) for i in (1, 2)]
+    a = mvt_fast.wrap_layer(head, pts[:1], tail)
+    b = mvt_fast.wrap_layer(head, pts, tail)
+    assert len(a) != len(b)
+    h = 12345
+    tiles = [(int(H.tile_id(8, np.array([x]), np.array([0]))[0]), 8, x, 0,
+              mvt, h) for x, mvt in zip((0, 1, 2), (a, b, a))]
+    tiles.sort()
+    single = str(tmp_path / "single.pmtiles")
+    asm = PMTilesAssembler(layer_name="features", min_zoom=0, max_zoom=8)
+    for tid, z, x, y, mvt, hh in tiles:
+        asm.add_tile(tid, z, mvt, hh, 1)
+    asm.bounds = [-10.0, -10.0, 10.0, 10.0]
+    assert asm.finalize(single).tile_contents_count == 2
+    shard_dir = str(tmp_path / "shards")
+    written = _synthetic_entries(
+        tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP), pids)
+    out = str(tmp_path / "sharded.pmtiles")
+    stats = _finalize_entry_files(
+        shard_dir, written, out, (-10.0, -10.0, 10.0, 10.0),
+        TilerConfig(min_zoom=0, max_zoom=8), COMPRESSION_GZIP)
+    assert stats["unique_blobs"] == 2
+    assert open(single, "rb").read() == open(out, "rb").read()
+    for tid, z, x, y, mvt, hh in tiles:
+        assert read_tile(out, z, x, y) == mvt
+
+
+@pytest.mark.parametrize("seed,shards,read_rows,n", [
+    (1, 3, 7, 6000), (2, 5, 64, 6000), (3, 2, 1, 300), (4, 1, 5, 300)])
+def test_sharded_finalize_matches_assembler_across_windows(
+        tmp_path, monkeypatch, seed, shards, read_rows, n):
+    """Entry files read a few rows at a time: runs of one blob cross the
+    merge windows and chain through one-entry windows, and blobs repeat
+    across shards. The coalesced count and the archive still equal the
+    single-writer assembler's, in leaf mode and root-only."""
+    from gpq_tiles_spark import pipeline as P
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
+
+    rng = np.random.default_rng(seed)
+    tids = (4 ** 8 - 1) // 3 + np.cumsum(rng.choice([1, 1, 1, 2], n))
+    blob = np.repeat(rng.integers(0, 30, n), rng.integers(1, 60, n))[:n]
+    tiles = [(int(t), 8, 0, 0, b"blob%03d" % g + b"." * int(g), int(g))
+             for t, g in zip(tids, blob)]
+    single = str(tmp_path / "single.pmtiles")
+    asm = PMTilesAssembler(layer_name="features", min_zoom=0, max_zoom=8)
+    for tid, z, x, y, mvt, h in tiles:
+        asm.add_tile(tid, z, mvt, h, 1)
+    asm.bounds = [-10.0, -10.0, 10.0, 10.0]
+    asm.finalize(single)
+    shard_dir = str(tmp_path / "shards")
+    pids = _synthetic_entries(
+        tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP),
+        rng.integers(0, shards, n).tolist())
+    monkeypatch.setattr(P, "ENTRY_READ_ROWS", read_rows)
+    out = str(tmp_path / "sharded.pmtiles")
+    P._finalize_entry_files(shard_dir, pids, out, (-10.0, -10.0, 10.0, 10.0),
+                            TilerConfig(min_zoom=0, max_zoom=8),
+                            COMPRESSION_GZIP)
+    assert open(single, "rb").read() == open(out, "rb").read()
+
+
+def test_sharded_finalize_rejects_entry_file_out_of_tile_order(tmp_path):
+    """The merge needs each entry file in tile_id order, as the writer's
+    sorted reduce input leaves it; a file out of order fails loudly
+    instead of writing a mis-sorted directory."""
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
+    from gpq_tiles_spark.pipeline import _finalize_entry_files
+
+    tiles = _make_tiles(8)[::-1]
+    shard_dir = str(tmp_path / "shards")
+    pids = _synthetic_entries(
+        tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
+    with pytest.raises(RuntimeError, match="out of tile_id order"):
+        _finalize_entry_files(shard_dir, pids, str(tmp_path / "x.pmtiles"),
+                              (-10.0, -10.0, 10.0, 10.0), TilerConfig(),
+                              COMPRESSION_GZIP)
 
 
 def test_distributed_finalize_matches_single_writer_in_leaf_mode(
-        spark, tmp_path, leaf_archive):
-    """_finalize_sharded_distributed must produce the BYTE-identical
-    archive to PMTilesAssembler at leaf scale (same deterministic split)."""
+        tmp_path, leaf_archive):
+    """_finalize_entry_files must produce the BYTE-identical archive to
+    PMTilesAssembler at leaf scale (same deterministic split)."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
+    from gpq_tiles_spark.pipeline import _finalize_entry_files
 
     single_path, tiles = leaf_archive
     shard_dir = str(tmp_path / "shards")
-    ent = _synthetic_entries(
-        spark, tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
+    pids = _synthetic_entries(
+        tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
     out = str(tmp_path / "dist.pmtiles")
     cfg = TilerConfig(min_zoom=0, max_zoom=8, shuffle_partitions=8)
-    _finalize_sharded_distributed(
-        ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
-        COMPRESSION_GZIP)
+    _finalize_entry_files(shard_dir, pids, out, (-10.0, -10.0, 10.0, 10.0),
+                          cfg, COMPRESSION_GZIP)
     a = open(single_path, "rb").read()
     b = open(out, "rb").read()
     assert a == b, "leaf-mode archives differ between finalize paths"
 
 
-def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path):
-    """10^6 directory entries through _finalize_sharded_distributed: the
-    leaf path engages, the archive round-trips, and driver peak RSS stays
+def test_million_entry_finalize_streams_and_stays_bounded(tmp_path):
+    """10^6 directory entries through _finalize_entry_files: the leaf
+    path engages, the archive round-trips, and driver peak RSS stays
     bounded (entry bytes never accumulate on the driver)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
-    from pyspark.sql import functions as F
+    from gpq_tiles_spark.pipeline import (_entries_arrow_schema,
+                                          _entries_path,
+                                          _finalize_entry_files)
 
     n = 1_000_000
     n_blobs = 64
@@ -335,25 +445,25 @@ def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path):
         for b in blobs:
             f.write(b)
     raw_len = len(b"blob%05d" % 0)
-    off_arr = F.array(*[F.lit(int(o)).cast("long") for o in offs])
-    len_arr = F.array(*[F.lit(len(b)).cast("long") for b in blobs])
-    k = (F.col("id") % n_blobs).cast("int")
-    ent = spark.range(n).select(
-        F.col("id").alias("tile_id"),
-        F.lit(10).cast("int").alias("z"),
-        (F.col("id") % n_blobs).alias("content_hash"),
-        F.lit(raw_len).cast("long").alias("raw_len"),
-        F.element_at(off_arr, k + 1).alias("local_off"),
-        F.element_at(len_arr, k + 1).alias("blob_len"),
-        F.lit(1).cast("long").alias("n_features"),
-        F.lit(0).cast("int").alias("pid"),
-    )
+    tid = np.arange(n, dtype=np.int64)
+    k = tid % n_blobs
+    pq.write_table(pa.table({
+        "tile_id": tid,
+        "z": np.full(n, 10, dtype=np.int32),
+        "content_hash": k,
+        "raw_len": np.full(n, raw_len, dtype=np.int64),
+        "local_off": offs[k].astype(np.int64),
+        "blob_len": np.array([len(b) for b in blobs], dtype=np.int64)[k],
+        "n_features": np.ones(n, dtype=np.int64),
+        "pid": np.zeros(n, dtype=np.int32),
+    }, schema=_entries_arrow_schema()), _entries_path(shard_dir, 0))
+    del tid, k
     out = str(tmp_path / "million.pmtiles")
     cfg = TilerConfig(min_zoom=0, max_zoom=10, shuffle_partitions=32)
     rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024  # MiB
     t0 = time.perf_counter()
-    stats = _finalize_sharded_distributed(
-        ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
+    stats = _finalize_entry_files(
+        shard_dir, [0], out, (-10.0, -10.0, 10.0, 10.0), cfg,
         COMPRESSION_GZIP)
     elapsed = time.perf_counter() - t0
     rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024

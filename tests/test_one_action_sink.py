@@ -5,7 +5,7 @@ The fan-out adds each batch's bbox extremes to a min/max accumulator
 header bounds. ``convert_sharded``'s fused reduce writes each shard's
 entry rows to ``entries_{pid}.parquet`` beside the shard and returns one
 summary row per shard; collecting those summaries is the sink's only
-Spark action on the driver-finalize path.
+Spark action, and the driver finalizes from the entry files.
 """
 
 import os
@@ -149,8 +149,8 @@ def test_no_bounds_job(spark, feats, tmp_path, sink):
 
 
 def test_sharded_small_path_runs_one_action(spark, feats, tmp_path):
-    """On the driver-finalize path the summaries' collect is the sink's
-    only action: no bounds agg, no finalize agg, no toPandas."""
+    """The summaries' collect is the sink's only action: no bounds agg,
+    no finalize agg, no toPandas."""
     _, jobs = _in_group(spark.sparkContext, lambda: _run(
         "convert_sharded", feats, tmp_path / "x.pmtiles"))
     sites = _python_call_sites(jobs)
@@ -250,16 +250,15 @@ def test_stale_entry_files_do_not_change_archive(spark, feats, tmp_path):
 
 
 def test_distributed_finalize_reads_entry_files_by_posix_path(
-        spark, feats, tmp_path, monkeypatch):
-    """Above the driver cap the executors read the entry files by the
-    paths the shard writers used, not through Hadoop: a ``shard_dir``
-    whose name Hadoop would expand as a glob (``[x]`` matches ``x``)
-    still gives the single-writer bytes."""
+        spark, feats, tmp_path):
+    """The finalize reads the entry files by the paths the shard writers
+    used, not through Hadoop: a ``shard_dir`` whose name Hadoop would
+    expand as a glob (``[x]`` matches ``x``) still gives the
+    single-writer bytes."""
     shard_dir = tmp_path / "run[x]"
     shard_dir.mkdir()
     (tmp_path / "runx").mkdir()  # what the glob would resolve to
     _, expected = _run("convert", feats, tmp_path / "single.pmtiles")
-    monkeypatch.setattr(P, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
     stats, got = _run("convert_sharded", feats, tmp_path / "sharded.pmtiles",
                       shard_dir=str(shard_dir))
     assert stats["tiles"] > 0

@@ -472,7 +472,7 @@ def test_encode_record_msgs_matches_sorted_runs_slices():
 def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
     """A vertex-dense corpus (400-700-vertex rings) must produce identical
     bytes through convert (range-partitioned premerge + persist),
-    convert_sharded (hash premerge + distributed finalize), and the
+    convert_sharded (hash premerge + driver finalize), and the
     driver-side WKB encode."""
     import numpy as np
     import pandas as pd

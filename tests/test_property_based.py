@@ -285,63 +285,6 @@ def test_directory_builder_chunking_invariance_and_decode(data):
 
 @settings(max_examples=120, deadline=None)
 @given(st.data())
-def test_fold_coalesced_count_matches_builder(data):
-    """_fold_coalesced_count (pass-1 boundary fold) must equal the count
-    the builder actually emits for the same partitioning — including
-    cross-partition run-merge CHAINS through single-entry partitions."""
-    import io
-
-    import numpy as np
-
-    from gpq_tiles_spark.kernels.pmtiles import (
-        DirectoryBuilder,
-        coalesce_runs_arrays,
-    )
-    from gpq_tiles_spark.pipeline import _fold_coalesced_count
-
-    # raw entries designed to produce long same-blob runs that random
-    # partition cuts slice into merge chains
-    n_raw = data.draw(st.integers(min_value=1, max_value=300))
-    tids = np.arange(n_raw, dtype=np.int64) + 5
-    blob = np.zeros(n_raw, dtype=np.int64)
-    pos = 0
-    while pos < n_raw:
-        ln = data.draw(st.integers(min_value=1, max_value=40))
-        blob[pos:pos + ln] = data.draw(st.integers(min_value=0, max_value=3))
-        pos += ln
-    off = blob * 64
-    length = np.full(n_raw, 64, dtype=np.int64)
-
-    cuts = sorted(set(data.draw(
-        st.lists(st.integers(min_value=1, max_value=max(n_raw - 1, 1)),
-                 max_size=12))))
-    bounds = [0] + [c for c in cuts if c < n_raw] + [n_raw]
-
-    stats = []
-    parts = []
-    for cpid, (s, e) in enumerate(zip(bounds, bounds[1:])):
-        if s == e:
-            continue
-        ct, co, cl, cr = coalesce_runs_arrays(tids[s:e], off[s:e],
-                                              length[s:e])
-        parts.append((ct, co, cl, cr))
-        stats.append({
-            "cpid": cpid, "n": len(ct),
-            "first_tid": int(ct[0]), "first_off": int(co[0]),
-            "first_len": int(cl[0]), "first_run": int(cr[0]),
-            "last_tid": int(ct[-1]), "last_off": int(co[-1]),
-            "last_len": int(cl[-1]), "last_run": int(cr[-1]),
-        })
-    folded = _fold_coalesced_count(stats)
-    b = DirectoryBuilder(folded, spill=io.BytesIO())
-    for ct, co, cl, cr in parts:
-        b.add(ct, co, cl, cr)
-    _root, _leaf, emitted = b.finish()  # raises if folded != emitted
-    assert emitted == folded
-
-
-@settings(max_examples=120, deadline=None)
-@given(st.data())
 def test_encode_props_tile_invariants(data):
     """Round 5: the shared property tile encoder must (a) decode back to
     exactly the live features' filtered props in order, (b) emit a

@@ -278,82 +278,8 @@ print('ZIP-GATES-OK')
     assert "ZIP-GATES-OK" in r.stdout, r.stdout + r.stderr
 
 
-def test_distributed_directory_assembly_parity(spark):
-    """Executor-chunked directory encode + streamed driver assembly must
-    agree with encode_directory/build_directories over the global entry
-    list — including runs that cross chunk (partition) boundaries and the
-    leaf split past ROOT_MAX_ENTRIES."""
-    import gzip
-
-    from gpq_tiles_spark.kernels.pmtiles import (
-        ROOT_MAX_ENTRIES, DirEntry, build_directories, coalesce_run_lengths,
-        decode_directory, encode_directory)
-    from gpq_tiles_spark.pipeline import _assemble_directory_stream
-
-    rng = np.random.default_rng(23)
-
-    def run_case(tids, offs, lens, parts):
-        df = spark.createDataFrame(
-            list(zip(map(int, tids), map(int, offs), map(int, lens))),
-            "tile_id long, off long, len long",
-        )
-        ent = df.repartitionByRange(parts, "tile_id").sortWithinPartitions(
-            "tile_id")
-        import io
-
-        spill = io.BytesIO()
-        got_root, n, leaf_len = _assemble_directory_stream(ent, spill)
-        order = np.argsort(tids)
-        want_entries = coalesce_run_lengths([
-            DirEntry(int(tids[i]), int(offs[i]), int(lens[i]), 1)
-            for i in order
-        ])
-        assert n == len(want_entries)
-        want_root, want_leaf, want_n = build_directories(want_entries)
-        assert want_n == n
-        assert got_root == want_root
-        assert spill.getvalue() == want_leaf
-        assert leaf_len == len(want_leaf)
-        if n <= ROOT_MAX_ENTRIES:
-            # root-only mode: exact legacy bytes, no leaf section
-            assert got_root == encode_directory(want_entries)
-            assert leaf_len == 0
-        else:
-            # leaf mode: root holds run_length==0 pointers; expanding the
-            # leaves reproduces the exact global coalesced entry list
-            root_entries = decode_directory(got_root)
-            assert all(e.run_length == 0 for e in root_entries)
-            expanded = []
-            leaf_bytes = spill.getvalue()
-            for e in root_entries:
-                expanded.extend(decode_directory(gzip.decompress(
-                    leaf_bytes[e.offset:e.offset + e.length])))
-            assert [
-                (e.tile_id, e.offset, e.length, e.run_length)
-                for e in expanded
-            ] == [
-                (e.tile_id, e.offset, e.length, e.run_length)
-                for e in want_entries
-            ]
-
-    # 1: one giant run spanning every partition (all-same blob, consecutive)
-    n = 5000
-    run_case(np.arange(n), np.zeros(n), np.full(n, 77), parts=8)
-    # 2: random blobs, some repeats, scattered tile ids -> LEAF mode
-    tids = np.sort(rng.choice(200_000, 30_000, replace=False))
-    blob = rng.integers(0, 400, 30_000)
-    run_case(tids, blob * 1000, np.full(30_000, 1000), parts=12)
-    # 3: contiguous ids with blocky repeated blobs -> many boundary merges
-    tids = np.arange(20_000)
-    blob = tids // 37
-    run_case(tids, blob * 64, np.full(20_000, 64), parts=16)
-    # 4: tiny partitions (n <= 3 per chunk paths), root-only
-    tids = np.arange(40)
-    run_case(tids, tids * 10, np.full(40, 10), parts=20)
-
-
 def test_convert_sharded_salted_byte_identical(spark, docs_table, tmp_path):
-    """salted + hash-partitioned + distributed-directory sharded sink must
+    """salted + hash-partitioned sharded sink (driver finalize) must
     still produce the exact single-writer archive bytes."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features

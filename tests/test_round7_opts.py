@@ -3,8 +3,9 @@
 Every optimization this round must leave results bit-identical; these
 tests pin the risky ones differentially:
 
-* the driver-side sharded finalize (small archives) vs the distributed
-  assembly — byte-identical archives, with and without leaf directories;
+* the sharded sink's driver finalize vs the single-writer ``convert`` —
+  byte-identical archives, with and without leaf directories (the test
+  names are older than the one sharded finalize);
 * the vectorized raster grid fast path vs the per-tile loop;
 * spread_small_input's no-op guarantee on well-partitioned input.
 """
@@ -18,8 +19,7 @@ import pytest
 from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.fixtures import write_fixture
 from gpq_tiles_spark.extract import extract_features
-from gpq_tiles_spark import pipeline
-from gpq_tiles_spark.pipeline import convert_sharded
+from gpq_tiles_spark.pipeline import convert, convert_sharded
 
 
 @pytest.fixture(scope="module")
@@ -29,37 +29,29 @@ def fixture_features(spark, tmp_path_factory):
     return extract_features(spark.read.parquet(path))
 
 
-def _convert_both(feats, tmp_path, cfg, tag, monkeypatch):
-    out_drv = str(tmp_path / f"drv_{tag}.pmtiles")
-    out_dist = str(tmp_path / f"dist_{tag}.pmtiles")
-    assert pipeline.DRIVER_FINALIZE_MAX_ENTRIES > 0
-    convert_sharded(feats, out_drv, cfg)
-    with monkeypatch.context() as m:
-        # force the distributed finalize
-        m.setattr(pipeline, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
-        convert_sharded(feats, out_dist, cfg)
-    with open(out_drv, "rb") as a, open(out_dist, "rb") as b:
+def _convert_both(feats, tmp_path, cfg, tag):
+    out_single = str(tmp_path / f"single_{tag}.pmtiles")
+    out_sharded = str(tmp_path / f"sharded_{tag}.pmtiles")
+    convert_sharded(feats, out_sharded, cfg)
+    convert(feats, out_single, cfg)
+    with open(out_sharded, "rb") as a, open(out_single, "rb") as b:
         return a.read(), b.read()
 
 
-def test_driver_finalize_matches_distributed(fixture_features, tmp_path,
-                                             monkeypatch):
+def test_driver_finalize_matches_distributed(fixture_features, tmp_path):
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4)
-    a, b = _convert_both(fixture_features, tmp_path, cfg, "plain",
-                         monkeypatch)
+    a, b = _convert_both(fixture_features, tmp_path, cfg, "plain")
     assert a == b
 
 
 def test_driver_finalize_matches_distributed_with_leaves(fixture_features,
-                                                         tmp_path,
-                                                         monkeypatch):
+                                                         tmp_path):
     # leaf_max_entries small enough to force a two-level directory, so the
-    # driver finalize's single DirectoryBuilder.add covers the leaf-spill
-    # path too
+    # sharded finalize's window-by-window DirectoryBuilder.add covers the
+    # leaf-spill path too
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
                       leaf_max_entries=16)
-    a, b = _convert_both(fixture_features, tmp_path, cfg, "leaves",
-                         monkeypatch)
+    a, b = _convert_both(fixture_features, tmp_path, cfg, "leaves")
     assert a == b
 
 

@@ -126,19 +126,13 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-@pytest.mark.parametrize("finalize", ["driver", "distributed"])
 def test_sharded_finalize_releases_persisted_frames_on_error(
-        spark, two_part_features, tmp_path, monkeypatch, finalize):
-    """A failing finalize must unpersist the entry rows (and the winner
-    table of the distributed path) on its way out."""
+        spark, two_part_features, tmp_path, monkeypatch):
+    """A failing finalize must leave no persisted frame behind."""
     def boom(*args, **kwargs):
         raise RuntimeError("injected finalize failure")
 
-    if finalize == "driver":
-        monkeypatch.setattr(P, "_finalize_entries_driver", boom)
-    else:
-        monkeypatch.setattr(P, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
-        monkeypatch.setattr(P, "_assemble_directory_stream", boom)
+    monkeypatch.setattr(P, "_finalize_entry_files", boom)
     before = _persistent_rdds(spark)
     with pytest.raises(RuntimeError, match="injected"):
         P.convert_sharded(two_part_features, str(tmp_path / "x.pmtiles"),

@@ -227,6 +227,44 @@ def test_checkpointed_equals_plain_convert(spark, docs_table, tmp_path):
         assert f1.read() == f2.read()
 
 
+def test_checkpointed_archive_carries_layer_fields(spark, docs_table,
+                                                  tmp_path):
+    """``config.layer_fields`` reaches the checkpointed archive's metadata
+    as it reaches ``convert``'s, so the two archives are byte-identical."""
+    from gpq_tiles_spark.checkpoint import convert_with_checkpoints
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.extract import extract_features
+    from gpq_tiles_spark.pipeline import convert
+
+    cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
+                      layer_fields={"name": "String", "pop": "Number"})
+    p1 = str(tmp_path / "plain.pmtiles")
+    p2 = str(tmp_path / "ckpt.pmtiles")
+    convert(extract_features(spark.read.parquet(docs_table)), p1, cfg)
+    convert_with_checkpoints(spark, docs_table, p2, str(tmp_path / "wd"), cfg)
+    with open(p1, "rb") as f1, open(p2, "rb") as f2:
+        assert f1.read() == f2.read()
+
+
+@pytest.mark.parametrize("bad, match", [
+    ({"write_properties": True}, "props"),
+    ({"min_zoom": 5, "max_zoom": 2}, "zoom range"),
+], ids=["write_properties", "zoom_range"])
+def test_checkpointed_rejects_what_convert_rejects(spark, docs_table,
+                                                   tmp_path, bad, match):
+    """An invalid config, and ``write_properties`` on documents that have
+    no ``props`` column, raise before any stage runs."""
+    from gpq_tiles_spark.checkpoint import convert_with_checkpoints
+    from gpq_tiles_spark.config import TilerConfig
+
+    wd = tmp_path / "wd"
+    with pytest.raises(ValueError, match=match):
+        convert_with_checkpoints(spark, docs_table,
+                                 str(tmp_path / "x.pmtiles"), str(wd),
+                                 TilerConfig(**bad))
+    assert not wd.exists()
+
+
 def test_iceberg_option_wiring_with_fake_reader(spark):
     """S10 (runtime jars absent in-container): pin the reader contract —
     format, snapshot-id / start/end-snapshot-id option names, table, and
