@@ -653,10 +653,15 @@ def _clip_pair(cache: dict, z: int, max_zoom: int, extent: int,
 FANOUT_COLS = ("feature_id", "wkb", "geom_type", "lng_min", "lat_min",
                "lng_max", "lat_max")
 
-# Fan-out output flush thresholds: each yielded frame becomes one Arrow
-# record batch JVM-side, so bound both payload bytes and row count.
-FANOUT_FLUSH_BYTES = 32 << 20
-FANOUT_FLUSH_ROWS = 400_000
+# The map side's working-set budget: pending fan-out records (WKB bytes
+# plus 24 B per row) drain into a frame once they reach it, and the
+# message encoder takes any larger frame in row slices of at most this
+# size. The encode's numpy temporaries run ~5x its input, so the budget
+# sets most of a task's peak; it is a target, not a cap: the fan-out
+# drains only between grid ranges and zooms, so one grid feature's range
+# or one zoom of a large batch can exceed it (the encoder still slices
+# that frame). 4 MiB from the sweep in BENCH.md.
+FANOUT_BUDGET_BYTES = 4 << 20
 
 
 def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
@@ -672,6 +677,12 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
       tiles emit nothing, only the O(perimeter) boundary tiles clip. This is
       the reference's geometry-centric ADR-001 economics taken one level
       further (its ≥1000-tile nested-parallel case, pipeline.rs:871-875).
+
+    Output frames are (tile_id, feature_id, wkb) in no particular order.
+    Pending records drain into a frame once they pass
+    ``FANOUT_BUDGET_BYTES``, checked after each grid feature's range and
+    after each zoom, so a frame exceeds the budget by at most one such
+    emission.
     """
     min_zoom, max_zoom = config.min_zoom, config.max_zoom
     extent, buffer_px = config.extent, config.buffer_pixels
@@ -707,10 +718,9 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
             out_fid: list[np.ndarray] = []
             out_wkb: list[list] = []
             pend_bytes = 0
-            pend_rows = 0
 
             def emit(z: int, xs_e, ys_e, fids_e, wkbs_e) -> None:
-                nonlocal pend_bytes, pend_rows
+                nonlocal pend_bytes
                 if len(xs_e) == 0:
                     return
                 xs_a = np.asarray(xs_e, dtype=np.int64)
@@ -719,11 +729,10 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
                 out_fid.append(np.asarray(fids_e, dtype=np.int64))
                 wl = list(wkbs_e)
                 out_wkb.append(wl)
-                pend_rows += len(wl)
                 pend_bytes += sum(len(w) for w in wl) + 24 * len(wl)
 
             def drain() -> pd.DataFrame:
-                nonlocal pend_bytes, pend_rows
+                nonlocal pend_bytes
                 tid_all = np.concatenate(out_tid)
                 if acc_out is not None:
                     acc_out.add(len(tid_all))
@@ -736,7 +745,6 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
                 out_fid.clear()
                 out_wkb.clear()
                 pend_bytes = 0
-                pend_rows = 0
                 return frame
 
             # batch prep: every non-point feature appears at min_zoom, so
@@ -839,8 +847,7 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
                             k_y.extend((gyy0 + iy).tolist())
                             k_w.extend([b""] * len(ix))
                         emit(z, k_x, k_y, [fid[r]] * len(k_x), k_w)
-                        if (pend_bytes >= FANOUT_FLUSH_BYTES
-                                or pend_rows >= FANOUT_FLUSH_ROWS):
+                        if pend_bytes >= FANOUT_BUDGET_BYTES:
                             yield drain()
 
                 # ---------- small regime: vectorized explode ----------
@@ -991,14 +998,12 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
                     ki = np.array(keep_pos, dtype=np.int64)
                     emit(z, xs[ki], ys[ki], fid[ridx[ki]], keep_wkb)
 
-                # bounded output batches: a vertex-heavy input batch fanned
-                # out across 15 zooms would otherwise build one multi-hundred-
-                # MB frame, and each yielded frame becomes ONE Arrow record
-                # batch on the JVM side — 32 concurrent tasks x ~800 MB blows
-                # the direct-memory pool. Flush between zoom levels once the
-                # pending payload passes the cap; tile_id order within the
-                # partition is irrelevant (the range shuffle re-sorts).
-                if pend_bytes >= FANOUT_FLUSH_BYTES or pend_rows >= FANOUT_FLUSH_ROWS:
+                # drain at the working-set budget: a vertex-dense batch
+                # fanned out over 15 zooms would otherwise hold every zoom's
+                # records, then their message encode, at once in each task.
+                # Frame boundaries do not reach the archive: the reduce side
+                # sorts each shuffle partition on (tile_id, feature_id).
+                if pend_bytes >= FANOUT_BUDGET_BYTES:
                     yield drain()
 
             if out_tid:
@@ -1068,21 +1073,42 @@ def make_msg_encoder(config: TilerConfig):
     feature), so encoding before the shuffle gives the bytes the reference
     encodes per tile after its sort. The ``msg`` column is the Arrow
     binary array ``mvt_fast.encode_record_msgs`` builds over its one
-    message buffer."""
+    message buffer.
+
+    A frame larger than ``FANOUT_BUDGET_BYTES`` (WKB bytes plus 24 B per
+    row, as the fan-out counts) is encoded in consecutive row slices of at
+    most that size, one output frame per slice; a single row larger than
+    the budget is a slice of its own."""
     extent, buffer_px = config.extent, config.buffer_pixels
 
     def encode_msgs(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for frame in frames:
             tid = frame["tile_id"].to_numpy(dtype=np.int64)
             fid = frame["feature_id"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "tile_id": tid,
-                "feature_id": fid,
-                "msg": mvt_fast.encode_record_msgs(
-                    tid, fid, frame["wkb"].to_numpy(), extent, buffer_px),
-            })
+            wkbs = frame["wkb"].to_numpy()
+            for a, b in _budget_slices(wkbs, FANOUT_BUDGET_BYTES):
+                yield pd.DataFrame({
+                    "tile_id": tid[a:b],
+                    "feature_id": fid[a:b],
+                    "msg": mvt_fast.encode_record_msgs(
+                        tid[a:b], fid[a:b], wkbs[a:b], extent, buffer_px),
+                })
 
     return encode_msgs
+
+
+def _budget_slices(wkbs: np.ndarray, budget: int) -> list[tuple[int, int]]:
+    """Consecutive [a, b) row ranges of ``wkbs`` that each hold at most
+    ``budget`` bytes (WKB length plus 24 B per row) or a single row."""
+    n = len(wkbs)
+    ends = np.cumsum(np.fromiter(map(len, wkbs), dtype=np.int64, count=n) + 24)
+    cuts = [0]
+    while cuts[-1] < n:
+        a = cuts[-1]
+        base = int(ends[a - 1]) if a else 0
+        cuts.append(max(a + 1, int(np.searchsorted(ends, base + budget,
+                                                   side="right"))))
+    return list(zip(cuts[:-1], cuts[1:]))
 
 
 def make_fanout_encoded(config: TilerConfig,

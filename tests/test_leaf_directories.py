@@ -11,16 +11,17 @@ driver memory on a 10^6-entry synthetic archive.
 
 import gzip
 import os
-import resource
 import time
 
 import numpy as np
 import pytest
 
+from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.kernels import hilbert as H
 from gpq_tiles_spark.kernels import mvt_fast
 from gpq_tiles_spark.kernels.hashes import content_hash64
 from gpq_tiles_spark.kernels.pmtiles import (
+    COMPRESSION_GZIP,
     HEADER_SIZE,
     ROOT_MAX_ENTRIES,
     Header,
@@ -30,6 +31,8 @@ from gpq_tiles_spark.kernels.pmtiles import (
     decompress,
     read_tile,
 )
+from gpq_tiles_spark.pipeline import _finalize_entry_files
+from tests.child_memory import run_measured
 
 
 def _make_tiles(n: int, z: int = 8):
@@ -422,18 +425,29 @@ def test_distributed_finalize_matches_single_writer_in_leaf_mode(
     assert a == b, "leaf-mode archives differ between finalize paths"
 
 
+def _finalize_million(shard_dir: str, out: str):
+    """The 10^6-entry finalize below, run in a child process: (the stats
+    the test checks, wall seconds). Its imports are module-level, so the
+    child makes them before its first RSS reading."""
+    cfg = TilerConfig(min_zoom=0, max_zoom=10, shuffle_partitions=32)
+    t0 = time.perf_counter()
+    stats = _finalize_entry_files(
+        shard_dir, [0], out, (-10.0, -10.0, 10.0, 10.0), cfg,
+        COMPRESSION_GZIP)
+    elapsed = time.perf_counter() - t0
+    return ({"tiles": int(stats["tiles"]),
+             "unique_blobs": int(stats["unique_blobs"])}, elapsed)
+
+
 def test_million_entry_finalize_streams_and_stays_bounded(tmp_path):
     """10^6 directory entries through _finalize_entry_files: the leaf
     path engages, the archive round-trips, and driver peak RSS stays
-    bounded (entry bytes never accumulate on the driver)."""
+    bounded (entry bytes never accumulate on the driver). The finalize
+    runs in a fresh process, whose VmHWM growth is the finalize's own."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP
-    from gpq_tiles_spark.pipeline import (_entries_arrow_schema,
-                                          _entries_path,
-                                          _finalize_entry_files)
+    from gpq_tiles_spark.pipeline import _entries_arrow_schema, _entries_path
 
     n = 1_000_000
     n_blobs = 64
@@ -459,14 +473,8 @@ def test_million_entry_finalize_streams_and_stays_bounded(tmp_path):
     }, schema=_entries_arrow_schema()), _entries_path(shard_dir, 0))
     del tid, k
     out = str(tmp_path / "million.pmtiles")
-    cfg = TilerConfig(min_zoom=0, max_zoom=10, shuffle_partitions=32)
-    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024  # MiB
-    t0 = time.perf_counter()
-    stats = _finalize_entry_files(
-        shard_dir, [0], out, (-10.0, -10.0, 10.0, 10.0), cfg,
-        COMPRESSION_GZIP)
-    elapsed = time.perf_counter() - t0
-    rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+    (stats, elapsed), growth_mib = run_measured(
+        "tests.test_leaf_directories:_finalize_million", shard_dir, out)
     assert stats["tiles"] == n
     assert stats["unique_blobs"] == n_blobs
     hdr = Header.from_bytes(open(out, "rb").read(HEADER_SIZE))
@@ -483,7 +491,7 @@ def test_million_entry_finalize_streams_and_stays_bounded(tmp_path):
     # the stream must not hold the expanded entry/Row forms (which cost
     # >10x that) all at once. The bound is deliberately loose — it exists
     # to catch a reintroduced collect(), not to measure.
-    assert rss1 - rss0 < 1200, f"driver RSS grew {rss1 - rss0} MiB"
+    assert growth_mib < 1200, f"driver RSS grew {growth_mib} MiB"
     assert elapsed < 60, f"finalize took {elapsed:.1f}s"
 
 
