@@ -94,9 +94,12 @@ class CheckpointedRun:
     def stage_path(self, name: str) -> str:
         return os.path.join(self.work_dir, f"stage_{name}.parquet")
 
-    def run_stage(self, name: str, producer, record_lineage: bool = True) -> DataFrame:
+    def run_stage(self, name: str, producer, record_lineage: bool = True,
+                  info=None) -> DataFrame:
         """Run (or resume) a stage: producer() -> DataFrame, materialized to
-        parquet; on resume the staged parquet is read back instead."""
+        parquet; on resume the staged parquet is read back instead.
+        ``info()``, called once the stage is written, adds entries to its
+        manifest record."""
         path = self.stage_path(name)
         if self.stage_done(name):
             return self.spark.read.parquet(path)
@@ -113,6 +116,7 @@ class CheckpointedRun:
             "rows": n,
             "seconds": round(dt, 3),
             "rows_per_sec": round(n / dt, 1) if dt > 0 else None,
+            **(info() if info else {}),
         }
         self.manifest["metrics"][name] = self.manifest["stages"][name]
         self._save()
@@ -123,29 +127,19 @@ class CheckpointedRun:
         self._save()
 
 
-def _scan_bounds(feats: DataFrame) -> tuple[float, float, float, float]:
-    """Header bounds of ``feats`` by one scan, on the rule the sinks'
-    fan-out accumulator follows: null and NaN bbox values are skipped
-    (Spark's own min/max would rank NaN largest), and ``WORLD_BOUNDS``
-    stands in when no feature has a bbox. A resumed checkpointed run
-    skips the fan-out, so it cannot read the accumulator."""
-    from .pipeline import WORLD_BOUNDS
-
-    def known(c):
-        return F.when(~F.isnan(c), F.col(c))
-
-    row = feats.agg(F.min(known("lng_min")), F.min(known("lat_min")),
-                    F.max(known("lng_max")), F.max(known("lat_max"))
-                    ).collect()[0]
-    return WORLD_BOUNDS if row[0] is None else tuple(row)
-
-
 def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: str,
                              work_dir: str, config=None) -> dict:
     """Checkpointed end-to-end conversion: extract -> message records ->
-    tiles -> archive, resumable after any completed stage. The records
-    are the premerge map side (framed messages per (tile, feature)) and
-    the tiles its wrap stage, the layout ``pipeline.convert`` runs.
+    shards -> archive, resumable after any completed stage. The records
+    are the premerge map side (framed messages per (tile, feature)); the
+    shards stage is ``pipeline.convert``'s reduce over them, writing shard
+    and entry files to ``work_dir/shards``; the archive stage is its
+    driver-side finalize, which starts no Spark job.
+
+    The records stage keeps the archive bounds the fan-out accumulated in
+    its manifest entry, and the shards stage keeps one (pid, entries,
+    features) lineage row per shard it wrote, so a run resumed after
+    either reads neither the features nor the records again.
 
     ``config`` is validated as ``convert`` validates it, and
     ``config.layer_fields`` goes into the archive metadata. The extracted
@@ -153,45 +147,48 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
     raises ``convert``'s ``ValueError`` before any stage runs."""
     from .config import TilerConfig
     from .extract import extract_features
-    from .pipeline import (PipelineMetrics, _check_props_input, _encode,
-                           _premerge_records, _premerge_stage)
+    from .kernels import pmtiles as P
+    from .pipeline import (PipelineMetrics, _check_props_input,
+                           _expected_codec_backend, _finalize_entry_files,
+                           _premerge_records, _premerge_stage,
+                           _shard_summaries)
 
     config = (config or TilerConfig()).validate()
     extracted = extract_features(spark.read.parquet(docs_path))
     _check_props_input(extracted, config, salted=False)
     run = CheckpointedRun(spark, work_dir, snapshot_fingerprint(spark, docs_path))
     metrics = PipelineMetrics.create(spark)
+    codec = P.CODEC_BY_NAME[config.tile_compression]
+    shard_dir = os.path.join(work_dir, "shards")
 
-    feats = run.run_stage("extract", lambda: extracted)
-    records = run.run_stage(
-        "records", lambda: _premerge_records(feats, config, metrics))
-    tiles = run.run_stage("tiles", lambda: _encode(
-        _premerge_stage(records, config, metrics=metrics)))
-    acc = metrics.as_dict()
-    if any(acc.values()):  # only meaningful when the stages actually ran
-        run.manifest["metrics"]["accumulators"] = acc
-        run._save()
+    if not run.stage_done("shards"):
+        if "bounds" not in run.manifest["stages"].get("records", {"bounds": 0}):
+            # a records stage staged before it kept the bounds: redo it
+            del run.manifest["stages"]["records"]
+        feats = run.run_stage("extract", lambda: extracted)
+        records = run.run_stage(
+            "records", lambda: _premerge_records(feats, config, metrics),
+            info=lambda: {"bounds": list(metrics.feature_bounds())})
+        t0 = time.perf_counter()
+        os.makedirs(shard_dir, exist_ok=True)
+        sorted_in, encoder = _premerge_stage(records, config, metrics=metrics)
+        shards = _shard_summaries(
+            sorted_in, encoder, shard_dir, codec,
+            _expected_codec_backend(records, codec), stream=False).collect()
+        run.manifest["lineage"] = [
+            r for r in run.manifest["lineage"] if r["stage"] != "shards"] + [
+            {"stage": "shards", **r.asDict()} for r in shards]
+        run.manifest["metrics"]["accumulators"] = metrics.as_dict()
+        run.mark("shards", shards=len(shards),
+                 seconds=round(time.perf_counter() - t0, 3))
 
     if not run.stage_done("archive"):
-        from .kernels import pmtiles as P
-
-        codec = P.CODEC_BY_NAME[config.tile_compression]
-        asm = P.PMTilesAssembler(
-            tile_compression=codec, layer_name=config.layer_name,
-            min_zoom=config.min_zoom, max_zoom=config.max_zoom,
-            fields=config.layer_fields,
-            leaf_max_entries=config.leaf_max_entries,
-        )
-        # without this the sentinel [180,90,-180,-90] would be written,
-        # giving viewers an inverted/empty extent
-        asm.bounds = list(_scan_bounds(feats))
         t0 = time.perf_counter()
-        n = 0
-        for row in tiles.orderBy("tile_id").toLocalIterator(prefetchPartitions=True):
-            asm.add_tile(row.tile_id, row.z, bytes(row.mvt), row.content_hash,
-                         row.n_features)
-            n += 1
-        asm.finalize(output_path)
-        run.mark("archive", tiles=n, seconds=round(time.perf_counter() - t0, 3),
-                 output=output_path)
+        stats = _finalize_entry_files(
+            shard_dir,
+            [r["pid"] for r in run.manifest["lineage"] if r["stage"] == "shards"],
+            output_path, tuple(run.manifest["stages"]["records"]["bounds"]),
+            config, codec)
+        run.mark("archive", tiles=stats["tiles"],
+                 seconds=round(time.perf_counter() - t0, 3), output=output_path)
     return run.manifest

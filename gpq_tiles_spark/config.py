@@ -55,8 +55,9 @@ class TilerConfig:
     # CDN range-request patterns (each tile lookup fetches one leaf). The
     # root pointer count stays capped regardless (plan_leaf_size clamps),
     # and the root-only threshold is unaffected — small archives keep the
-    # exact bytes of previous rounds. Both sinks read this same value, so
-    # single-writer/sharded byte parity holds at any setting.
+    # exact bytes of previous rounds. The archive writer and the
+    # kernel-level PMTilesAssembler read this same value, so they split
+    # the directory identically at any setting.
     leaf_max_entries: int | None = None
     shuffle_partitions: int | None = None  # None -> leave session conf alone
     # salted=True splits a tile with more than hot_tile_threshold feature

@@ -144,7 +144,7 @@ def tile_budget_keep_mask(fids: np.ndarray, framed_lens: np.ndarray,
     spent. Properties of the rule:
 
     * order-independent: the mask depends only on the (fid, framed_len) SET
-      of the tile, so the premerge wrap (both sinks), the salted phase-B
+      of the tile, so the premerge wrap, the salted phase-B
       bucket merge and the driver-side ``mvt_fast.encode_sorted_runs`` all
       compute the SAME mask -> archives stay byte-identical;
     * deterministic: no RNG, stable across runs/partitionings (hash ties

@@ -398,7 +398,3 @@ def centroid(g: Geom) -> tuple[float, float] | None:
             return (x0 + x1) / 2.0, (y0 + y1) / 2.0
         return float(wsum[0] / total), float(wsum[1] / total)
     return None
-
-
-def geom_kind(g: Geom) -> int:
-    return g[0]

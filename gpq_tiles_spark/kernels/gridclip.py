@@ -30,24 +30,6 @@ from . import tile_math as T
 GRID_THRESHOLD = 32  # candidate tiles above which grid classification pays
 
 
-def canonical_rect_rings(bx0: np.ndarray, by0: np.ndarray, bx1: np.ndarray,
-                         by1: np.ndarray) -> np.ndarray:
-    """(n,) bounds -> (n, 5, 2) CCW rect rings starting at SW corner."""
-    n = len(bx0)
-    out = np.empty((n, 5, 2), dtype=np.float64)
-    out[:, 0, 0] = bx0
-    out[:, 0, 1] = by0
-    out[:, 1, 0] = bx1
-    out[:, 1, 1] = by0
-    out[:, 2, 0] = bx1
-    out[:, 2, 1] = by1
-    out[:, 3, 0] = bx0
-    out[:, 3, 1] = by1
-    out[:, 4, 0] = bx0
-    out[:, 4, 1] = by0
-    return out
-
-
 _RECT_WKB_HEAD = (
     b"\x01" + (3).to_bytes(4, "little") + (1).to_bytes(4, "little")
     + (5).to_bytes(4, "little")

@@ -93,10 +93,11 @@ def compress(data: bytes, codec: int) -> bytes:
 def codec_backend(codec: int) -> str:
     """Identity string of the stack THIS process would use to compress
     ``codec``. Compressed bytes are only guaranteed identical for the same
-    backend + version, so the sharded sink captures the driver's fingerprint
-    and each executor task asserts it matches before writing shard bytes —
-    a heterogeneous cluster image fails fast instead of silently breaking
-    the single-writer-vs-distributed byte-identity contract.
+    backend + version, so the archive writer captures the driver's
+    fingerprint and each executor task asserts it matches before writing
+    shard bytes — a heterogeneous cluster image fails fast instead of
+    silently writing an archive whose bytes depend on which executor
+    compressed which tile.
 
     The fingerprint ends with a digest of an ACTUAL probe compression, so
     it covers the entire producer stack — e.g. two nodes with identical
@@ -367,6 +368,10 @@ class PMTilesAssembler:
     arrive; only 24-byte-equivalent entries stay in memory; duplicate blobs
     (same content hash and raw length) reuse the first offset (X1 dedup,
     pmtiles_writer.rs:528-560).
+
+    A kernel and a test oracle: no library write path uses it (the
+    pipeline's archives come from its shard finalize, byte-identical to
+    this assembler's).
     """
 
     def __init__(self, tile_compression: int = COMPRESSION_GZIP,
@@ -464,9 +469,9 @@ def write_archive(path: str, root_raw: bytes, leaves, n_entries: int,
                   fields: dict[str, str] | None,
                   features_per_zoom: dict[int, int], bounds) -> Header:
     """The one archive finalize (pmtiles_writer.rs:1028-1143), shared by
-    the single-writer assembler and the sharded sink: gzip the root
-    directory and the metadata JSON (tilestats per zoom), build the header,
-    then write header, root, metadata, the leaf-directory section and —
+    the kernel-level assembler and the pipeline's shard finalize: gzip the
+    root directory and the metadata JSON (tilestats per zoom), build the
+    header, then write header, root, metadata, the leaf-directory section and —
     through ``write_data(f)`` — the ``data_len`` bytes of tile data.
 
     ``leaves`` is the leaf section as bytes or as a seekable file (a
@@ -759,8 +764,8 @@ def plan_leaf_size(n_entries: int, leaf_max_entries: int | None = None
                    ) -> int:
     """Entries per leaf for a directory of ``n_entries`` coalesced tile
     entries; 0 means root-only. Deterministic in its INPUTS alone, so the
-    single-writer assembler and the sharded sink's finalize (which read
-    the same TilerConfig) split identically and stay byte-identical. Leaf
+    kernel-level assembler and the pipeline's shard finalize (given the
+    same TilerConfig) split identically and stay byte-identical. Leaf
     count (= root pointers) never exceeds ROOT_LEAF_POINTERS_MAX.
 
     ``leaf_max_entries`` (TilerConfig escape hatch) replaces the built-in

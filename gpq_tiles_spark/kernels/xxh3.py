@@ -17,9 +17,9 @@ other in tests/test_xxh3.py over exhaustive length sweeps:
   used when no libxxhash is installed.
 
 The hash is INTERNAL-ONLY (dedup grouping key; never serialized into an
-archive), but driver and executors must agree on it for the
-single-writer-vs-sharded byte-identity contract — which both backends
-guarantee by producing identical values.
+archive), but driver and executors must agree on it for the archive
+bytes to be deterministic — which both backends guarantee by producing
+identical values.
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ the PUBLIC stable libzstd ABI needed for one-shot tile blobs:
 
 Loading is lazy and per-process (each Spark Python worker binds its own
 handle on first use); ``available()`` is the gate. Compression is
-deterministic for a fixed libzstd version — the sharded sink's
+deterministic for a fixed libzstd version — the archive writer's
 byte-identity contract holds within one cluster image, same as gzip.
 """
 
@@ -76,7 +76,7 @@ def available() -> bool:
 
 def version_number() -> int:
     """libzstd's ZSTD_versionNumber() (e.g. 10506 for 1.5.6) — part of the
-    codec fingerprint the sharded sink uses to assert driver and executor
+    codec fingerprint the archive writer uses to assert driver and executor
     processes would produce identical compressed bytes."""
     lib = _load()
     if lib is None:

@@ -68,16 +68,6 @@ def duplicate_assignments(df: DataFrame, text_col: str = "text",
     )
 
 
-def _stable_hash64(s: str) -> int:
-    """FNV-1a 64-bit — process-stable (unlike builtin hash). Kept for
-    API/back-compat and tiny inputs; the batch paths below never call it."""
-    h = 0xCBF29CE484222325
-    for b in s.encode("utf-8"):
-        h ^= b
-        h = (h * 0x100000001B3) & 0xFFFF_FFFF_FFFF_FFFF
-    return h
-
-
 def _inv_u64(b: int) -> int:
     """Multiplicative inverse of odd b mod 2^64 (Newton iteration)."""
     x = b

@@ -71,7 +71,7 @@ def rasterize_points(records: DataFrame, zoom: int, grid_size: int = 64) -> Data
     # each tile contiguous WITHIN a partition, not global tile order, and
     # dropping repartitionByRange removes its range-boundary SAMPLING JOB —
     # which executed the entire upstream fan-out a second time (guide §2.4,
-    # same reasoning as the sharded sink's hash exchange). The partition count
+    # same reasoning as the archive writer's hash exchange). The partition count
     # is pinned to the session's shuffle parallelism: AQE would otherwise
     # coalesce by the SHUFFLED bytes, but this stage's output (gs^2 cells
     # per tile) is ~30x its input, so input-sized coalescing serializes

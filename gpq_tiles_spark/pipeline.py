@@ -19,8 +19,10 @@ Spark-first formulation of the reference's 3-phase engine
       |   and wrap the layer (no second shuffle: each tile_id lives in
       |   exactly one partition)
       v
-    sink: the single-writer stream (range exchange, toLocalIterator ->
-      PMTilesAssembler) or executor-written shards (convert_sharded)
+    shards: in the same mapInPandas, each reduce task compresses its
+      tiles into shard_{pid}.bin with its entry rows beside it; the driver
+      streams the entry files into the archive (_finalize_entry_files) —
+      the one archive writer of convert and convert_sharded
 
 Scale notes (10^12 docs):
 * exactly ONE wide shuffle (tile_id) of the small message rows; everything
@@ -38,6 +40,8 @@ Scale notes (10^12 docs):
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager, nullcontext
 from typing import Iterator
 
 import numpy as np
@@ -653,14 +657,15 @@ def _clip_pair(cache: dict, z: int, max_zoom: int, extent: int,
 FANOUT_COLS = ("feature_id", "wkb", "geom_type", "lng_min", "lat_min",
                "lng_max", "lat_max")
 
-# The map side's working-set budget: pending fan-out records (WKB bytes
-# plus 24 B per row) drain into a frame once they reach it, and the
+# The map side's working-set budget (WKB bytes plus 24 B per row): the
+# fan-out reads each input batch in row slices of at most this size,
+# pending fan-out records drain into a frame once they reach it, and the
 # message encoder takes any larger frame in row slices of at most this
 # size. The encode's numpy temporaries run ~5x its input, so the budget
 # sets most of a task's peak; it is a target, not a cap: the fan-out
 # drains only between grid ranges and zooms, so one grid feature's range
-# or one zoom of a large batch can exceed it (the encoder still slices
-# that frame). 4 MiB from the sweep in BENCH.md.
+# or one zoom of a slice can exceed it (the encoder still slices that
+# frame). 4 MiB from the sweep in BENCH.md.
 FANOUT_BUDGET_BYTES = 4 << 20
 
 
@@ -679,10 +684,12 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
       further (its ≥1000-tile nested-parallel case, pipeline.rs:871-875).
 
     Output frames are (tile_id, feature_id, wkb) in no particular order.
-    Pending records drain into a frame once they pass
-    ``FANOUT_BUDGET_BYTES``, checked after each grid feature's range and
-    after each zoom, so a frame exceeds the budget by at most one such
-    emission.
+    Each input batch is walked in row slices of at most
+    ``FANOUT_BUDGET_BYTES`` (``_budget_row_slices``), so the per-feature
+    caches and per-zoom clip arrays cover one slice, not a whole batch.
+    Pending records drain into a frame once they pass the budget, checked
+    after each grid feature's range and after each zoom, so a frame
+    exceeds the budget by at most one such emission.
     """
     min_zoom, max_zoom = config.min_zoom, config.max_zoom
     extent, buffer_px = config.extent, config.buffer_pixels
@@ -692,10 +699,8 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
     acc_bounds = metrics.bounds if metrics else None
 
     def fanout(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _budget_row_slices(batches):
             n = len(pdf)
-            if n == 0:
-                continue
             if acc_in is not None:
                 acc_in.add(n)
             fid = pdf["feature_id"].to_numpy(dtype=np.int64)
@@ -1097,6 +1102,17 @@ def make_msg_encoder(config: TilerConfig):
     return encode_msgs
 
 
+def _budget_row_slices(batches: Iterator[pd.DataFrame]
+                       ) -> Iterator[pd.DataFrame]:
+    """Each non-empty fan-out input batch in consecutive row slices of at
+    most ``FANOUT_BUDGET_BYTES`` (``_budget_slices``)."""
+    for pdf in batches:
+        if len(pdf):
+            for a, b in _budget_slices(pdf["wkb"].to_numpy(),
+                                       FANOUT_BUDGET_BYTES):
+                yield pdf.iloc[a:b]
+
+
 def _budget_slices(wkbs: np.ndarray, budget: int) -> list[tuple[int, int]]:
     """Consecutive [a, b) row ranges of ``wkbs`` that each hold at most
     ``budget`` bytes (WKB length plus 24 B per row) or a single row."""
@@ -1203,14 +1219,11 @@ def make_wrap_encoder(config: TilerConfig,
     })
 
 
-def _tile_exchange(df: DataFrame, parts: int | None, by_range: bool,
-                   *cols: str) -> DataFrame:
-    """Co-locate every tile on ``cols``: a range exchange when the consumer
-    needs globally tile-ordered partitions, else a hash exchange (no
-    sampling job re-running the fan-out)."""
-    if by_range:
-        return (df.repartitionByRange(parts, *cols) if parts
-                else df.repartitionByRange(*cols))
+def _tile_exchange(df: DataFrame, parts: int | None, *cols: str) -> DataFrame:
+    """Co-locate every tile on ``cols`` with a hash exchange. No consumer
+    needs globally tile-ordered partitions (the archive writer restores
+    tile order from the shards' entry rows), so no range-sampling job
+    re-runs the fan-out."""
     return df.repartition(parts, *cols) if parts else df.repartition(*cols)
 
 
@@ -1230,29 +1243,27 @@ def _premerge_records(features: DataFrame, config: TilerConfig,
 
 
 def _premerge_stage(msgs: DataFrame, config: TilerConfig,
-                    num_partitions: int | None = None, by_range: bool = False,
+                    num_partitions: int | None = None,
                     metrics: PipelineMetrics | None = None):
     """Premerge reduce stage over ``_premerge_records`` output:
     (tile-sorted framed messages, wrap encoder)."""
     parts = num_partitions or config.shuffle_partitions
-    shuffled = _tile_exchange(msgs, parts, by_range, "tile_id")
+    shuffled = _tile_exchange(msgs, parts, "tile_id")
     return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
             make_wrap_encoder(config, metrics))
 
 
 def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
                           num_partitions: int | None = None,
-                          by_range: bool = False,
                           metrics: PipelineMetrics | None = None) -> DataFrame:
     """features -> per-tile MVT rows on the premerge layout: map-side
-    fan-out + per-record message encode, ONE shuffle of the small framed
-    messages on tile_id (hash by default; ``by_range=True`` when the
-    consumer needs globally tile-ordered partitions), reduce-side wrap.
+    fan-out + per-record message encode, ONE hash shuffle of the small
+    framed messages on tile_id, reduce-side wrap.
     The single shared constructor for every premerge plan in the repo —
-    bench, contract queries, and the sharded sink all build on
+    bench, contract queries, and the archive writer all build on
     ``_premerge_stage``."""
     return _encode(_premerge_stage(_premerge_records(features, config, metrics),
-                                   config, num_partitions, by_range, metrics))
+                                   config, num_partitions, metrics))
 
 
 BUCKETS_SCHEMA = StructType(
@@ -1392,7 +1403,7 @@ def _bucket_rows(msgs: DataFrame, config: TilerConfig,
     bucket's feature_id-sorted messages."""
     parts = num_partitions or config.shuffle_partitions
     return (
-        _tile_exchange(_salt_records(msgs, config, ranges), parts, False,
+        _tile_exchange(_salt_records(msgs, config, ranges), parts,
                        "tile_id", "salt")
         .sortWithinPartitions("tile_id", "salt", "feature_id")
         .mapInPandas(make_bucket_encoder(), schema=BUCKETS_SCHEMA)
@@ -1401,31 +1412,29 @@ def _bucket_rows(msgs: DataFrame, config: TilerConfig,
 
 def _bucket_merge_stage(buckets: DataFrame, config: TilerConfig,
                         num_partitions: int | None = None,
-                        by_range: bool = False,
                         metrics: PipelineMetrics | None = None):
     """Salted phase B over ``_bucket_rows``: (tile-sorted bucket rows,
-    merge encoder); the exchange on tile_id follows ``by_range``."""
+    merge encoder) after a hash exchange on tile_id."""
     parts = num_partitions or config.shuffle_partitions
-    merged_in = _tile_exchange(buckets, parts, by_range, "tile_id")
+    merged_in = _tile_exchange(buckets, parts, "tile_id")
     return (merged_in.sortWithinPartitions("tile_id", "salt"),
             make_bucket_merge_encoder(config, metrics))
 
 
 def _salted_stage(msgs: DataFrame, config: TilerConfig,
                   ranges: list[tuple[int, int, int]],
-                  num_partitions: int | None = None, by_range: bool = False,
+                  num_partitions: int | None = None,
                   metrics: PipelineMetrics | None = None):
     """Salted reduce stage over ``_premerge_records`` output: phase A
     (``_bucket_rows``) feeding phase B (``_bucket_merge_stage``)."""
     return _bucket_merge_stage(
         _bucket_rows(msgs, config, ranges, num_partitions), config,
-        num_partitions, by_range, metrics)
+        num_partitions, metrics)
 
 
 def encode_tiles_salted(features: DataFrame, config: TilerConfig,
                         num_partitions: int | None = None,
-                        metrics: PipelineMetrics | None = None,
-                        by_range: bool = True) -> DataFrame:
+                        metrics: PipelineMetrics | None = None) -> DataFrame:
     """Skew-safe two-phase encode [north-star: explicit salted repartitioning
     on hot tiles]. ``_hot_tile_ranges`` finds the hot tiles; the premerge
     message records of each are split across ``salt_buckets`` feature_id
@@ -1435,7 +1444,7 @@ def encode_tiles_salted(features: DataFrame, config: TilerConfig,
     hot) carry salt 0, one bucket each."""
     return _encode(_salted_stage(
         _premerge_records(features, config, metrics), config,
-        _hot_tile_ranges(features, config), num_partitions, by_range, metrics))
+        _hot_tile_ranges(features, config), num_partitions, metrics))
 
 
 def fanout_records(features: DataFrame, config: TilerConfig,
@@ -2012,7 +2021,6 @@ def make_wrap_props_encoder(config: TilerConfig,
 def _premerge_props_stage(msgs: DataFrame, props: DataFrame,
                           config: TilerConfig,
                           num_partitions: int | None = None,
-                          by_range: bool = False,
                           metrics: PipelineMetrics | None = None):
     """Premerge+props reduce stage over message records: (tile-sorted
     framed messages joined to their props entries, interning wrap
@@ -2034,14 +2042,13 @@ def _premerge_props_stage(msgs: DataFrame, props: DataFrame,
         .groupBy("feature_id").agg(F.min("props").alias("props")),
         "feature_id", "left",
     )
-    shuffled = _tile_exchange(joined, parts, by_range, "tile_id")
+    shuffled = _tile_exchange(joined, parts, "tile_id")
     return (shuffled.sortWithinPartitions("tile_id", "feature_id"),
             make_wrap_props_encoder(config, metrics))
 
 
 def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
                                 num_partitions: int | None = None,
-                                by_range: bool = False,
                                 metrics: PipelineMetrics | None = None
                                 ) -> DataFrame:
     """features (with a ``props`` column) -> per-tile MVT rows with tags:
@@ -2050,21 +2057,26 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
     interning + splice."""
     return _encode(_premerge_props_stage(
         _premerge_records(features, config, metrics), features, config,
-        num_partitions, by_range, metrics))
+        num_partitions, metrics))
 
 
 def encode_tiles_with_props(records: DataFrame, props: DataFrame,
                             config: TilerConfig,
                             num_partitions: int | None = None,
                             metrics: PipelineMetrics | None = None,
-                            by_range: bool = True) -> DataFrame:
+                            by_range: bool = False) -> DataFrame:
     """Fan-out records (tile_id, feature_id, wkb) + (feature_id, props) ->
     per-tile MVT rows WITH tags: message-encode the records, then the
-    premerge+props stage (props join, tile shuffle, interning wrap)."""
+    premerge+props stage (props join, tile hash shuffle, interning wrap).
+    ``by_range`` stays for callers that pass ``by_range=False``; a range
+    exchange is no longer built, so ``True`` raises."""
+    if by_range:
+        raise ValueError("encode_tiles_with_props: by_range=True is not "
+                         "supported; the tile exchange is a hash exchange")
     msgs = records.mapInPandas(make_msg_encoder(config),
                                schema=MSG_RECORDS_SCHEMA)
     return _encode(_premerge_props_stage(msgs, props, config, num_partitions,
-                                         by_range, metrics))
+                                         metrics))
 
 
 def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int,
@@ -2121,9 +2133,9 @@ SHARD_ENTRIES_SCHEMA = StructType(
 def _planned_codec_backend(codec: int) -> str | None:
     """The driver's codec fingerprint for the shard writer's executor-side
     assertion — or None when the DRIVER can't compress this codec at all
-    (legal in sharded mode: the driver only gzips root/meta, tile bytes
-    are compressed on executors; an executor that also lacks the codec
-    fails in compress() with its own clear error)."""
+    (legal: the driver only gzips root/meta, tile bytes are compressed on
+    executors; an executor that also lacks the codec fails in compress()
+    with its own clear error)."""
     from .kernels import pmtiles as P
 
     fp = P.codec_backend(codec)
@@ -2133,7 +2145,7 @@ def _planned_codec_backend(codec: int) -> str | None:
 def _expected_codec_backend(features: DataFrame, codec: int) -> str | None:
     """Backend fingerprint the shard writers must all match. Normally the
     driver's own (``_planned_codec_backend``); when the driver lacks the
-    codec entirely (legal in sharded mode — tiles compress on executors),
+    codec entirely (legal — tiles compress on executors),
     probe ONE executor for its fingerprint so the cross-executor agreement
     assertion stays armed instead of silently disabling (ADVICE r6). If no
     executor has the codec either, the writer's compress() fails with its
@@ -2185,17 +2197,15 @@ SHARD_SUMMARY_SCHEMA = StructType(
 def _make_shard_writer(shard_dir: str, codec: int,
                        expected_backend: str | None = None):
     """Per-partition shard writer: compresses tile blobs ON THE EXECUTORS
-    (the single-writer convert() compresses every blob on the driver) and
-    appends them to shard_{pid}.bin with in-shard dedup; streams the
+    and appends them to shard_{pid}.bin with in-shard dedup; streams the
     partition's 40-byte entry rows (``SHARD_ENTRIES_SCHEMA``) to
     entries_{pid}.parquet beside it (``pq.ParquetWriter``, one row group
     per batch) and returns one ``SHARD_SUMMARY_SCHEMA`` row, so neither
-    tile bytes nor entry rows travel back through Spark. This is the
-    scale-out form of the sink: at 10^8+ tiles all blob bytes no longer
-    cross the driver NIC.
+    tile bytes nor entry rows travel back through Spark unless the driver
+    cannot read the executors' files (``_stream_shards``).
 
     The writer consumes TILES_SCHEMA frames straight from a reduce-side
-    encoder in the same Python worker (``convert_sharded`` runs
+    encoder in the same Python worker (``_shard_summaries`` runs
     ``writer(encoder(batches))`` in one mapInPandas), so tile bytes never
     make a second JVM round trip. ``pid`` is the task's
     ``TaskContext.partitionId()`` (0 outside a Spark task). A partition
@@ -2506,8 +2516,9 @@ def _finalize_entry_files(shard_dir: str, pids: list[int], output_path: str,
     time only counts the coalesced entries, because ``DirectoryBuilder``
     needs the exact count up front to fix the root/leaf split; the second
     feeds the builder window by window. The data section is then copied
-    from the shard files. Byte-identical to the single-writer archive:
-    same winner rule, same data order, same directory bytes.
+    from the shard files. Byte-identical to the reference's single
+    writer (and ``PMTilesAssembler``): same winner rule, same data order,
+    same directory bytes.
 
     Driver memory is O(shard-unique blobs), never O(entries): the plan
     holds each shard's first writes (the sum over shards of each shard's
@@ -2556,23 +2567,172 @@ def _sink_stats(hdr, tiles: int, features: int, bounds: tuple) -> dict:
     }
 
 
+def _driver_reads_executor_files(spark) -> bool:
+    """Whether the driver can read files the executors write into a driver
+    temp dir: true under a local master."""
+    return spark.conf.get("spark.master", "").startswith("local")
+
+
+# one row per chunk of a shard's committed files, shipped to the driver:
+# the shard's summary, which file (0 = shard_{pid}.bin, 1 =
+# entries_{pid}.parquet) and up to SHIP_CHUNK_BYTES of its bytes
+SHIP_SCHEMA = StructType(SHARD_SUMMARY_SCHEMA.fields + [
+    StructField("file", IntegerType(), False),
+    StructField("data", BinaryType(), False),
+])
+SHIP_CHUNK_BYTES = 1 << 20
+
+
+def _ship(shard_dir: str, summaries: Iterator[pd.DataFrame]
+          ) -> Iterator[pd.DataFrame]:
+    """The two committed files of every shard in ``summaries`` (the shard
+    writer's output), as ``SHIP_SCHEMA`` rows in file order."""
+    for summary in summaries:
+        pid = int(summary["pid"].iloc[0])
+        for k, path in enumerate((_shard_path(shard_dir, pid),
+                                  _entries_path(shard_dir, pid))):
+            with open(path, "rb") as f:
+                while chunk := f.read(SHIP_CHUNK_BYTES):
+                    yield summary.assign(file=k, data=[chunk])
+
+
+def _stream_shards(encoder, codec: int, expected_backend: str | None):
+    """The reduce for a driver that cannot read the executors' files:
+    ``ship(writer(encoder(batches)))`` in a task-local temp dir under the
+    executor's Spark local dir, removed on every exit path."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import shutil
+        import tempfile
+
+        local = tempfile.mkdtemp(prefix="gpq_shard_", dir=(
+            os.environ.get("SPARK_LOCAL_DIRS") or "").split(",")[0] or None)
+        try:
+            write = _make_shard_writer(local, codec, expected_backend)
+            yield from _ship(local, write(encoder(batches)))
+        finally:
+            shutil.rmtree(local, ignore_errors=True)
+
+    return run
+
+
+def _shard_summaries(sorted_in: DataFrame, encoder, shard_dir: str,
+                     codec: int, expected_backend: str | None,
+                     stream: bool) -> DataFrame:
+    """The fused reduce: the layout's encoder feeds ``_make_shard_writer``
+    in one mapInPandas, so tiles go from the encoder to the compressor and
+    the shard file without a second JVM round trip. One
+    ``SHARD_SUMMARY_SCHEMA`` row per shard written to ``shard_dir``, or
+    with ``stream`` the shards' files as ``SHIP_SCHEMA`` rows."""
+    if stream:
+        return sorted_in.mapInPandas(
+            _stream_shards(encoder, codec, expected_backend),
+            schema=SHIP_SCHEMA)
+    writer = _make_shard_writer(shard_dir, codec, expected_backend)
+
+    def encode_and_write(batches):
+        return writer(encoder(batches))
+
+    return sorted_in.mapInPandas(encode_and_write, schema=SHARD_SUMMARY_SCHEMA)
+
+
+def _receive_shards(rows, shard_dir: str) -> list[tuple[int, int, int]]:
+    """Write shipped ``SHIP_SCHEMA`` rows (each shard's chunks in file
+    order) into ``shard_dir``; returns each shard's (pid, entries,
+    features)."""
+    shards: dict[int, tuple[int, int, int]] = {}
+    out = cur = None
+    try:
+        for r in rows:
+            if (r.pid, r.file) != cur:
+                if out is not None:
+                    out.close()
+                cur = (r.pid, r.file)
+                out = open((_shard_path, _entries_path)[r.file](shard_dir,
+                                                                r.pid), "wb")
+                shards[r.pid] = (r.pid, r.entries, r.features)
+            out.write(r.data)
+    finally:
+        if out is not None:
+            out.close()
+    return list(shards.values())
+
+
+@contextmanager
+def _progress_poller(metrics: PipelineMetrics, emit: Callable,
+                     poll_sec: float):
+    """A driver thread that emits 'fanout' progress whenever
+    ``features_in`` advances and 'tiles' progress whenever ``tiles_out``
+    advances, every ``poll_sec``, while the block runs; it is stopped and
+    joined on every exit path."""
+    stop = threading.Event()
+
+    def poll() -> None:
+        last = {}
+        while not stop.wait(poll_sec):
+            cur = metrics.as_dict()
+            if cur["features_in"] != last.get("features_in"):
+                emit("fanout", "progress", **cur)
+            if cur["tiles_out"] != last.get("tiles_out"):
+                emit("tiles", "progress", tiles=cur["tiles_out"], **cur)
+            last = cur
+
+    thread = threading.Thread(target=poll, name="gpq-progress-poller",
+                              daemon=True)
+    thread.start()
+    try:
+        yield
+    finally:
+        stop.set()
+        thread.join()
+
+
 def _finalize_shards(summaries: DataFrame, output_path: str, shard_dir: str,
                      bounds: tuple | None, metrics: PipelineMetrics,
-                     config: TilerConfig, codec: int) -> dict:
-    """The sharded sink's one Spark action and its archive finalize.
+                     config: TilerConfig, codec: int, stream: bool = False,
+                     progress: Callable[[ProgressEvent], None] | None = None,
+                     progress_poll_sec: float = 1.0) -> dict:
+    """The archive writer's one Spark action and its finalize.
 
-    ``summaries`` is the fused reduce (one ``SHARD_SUMMARY_SCHEMA`` row per
-    shard written); collecting it runs the fan-out, the shuffle and every
-    shard writer. The bounds then come from ``metrics`` unless the caller
-    gave them, and ``_finalize_entry_files`` assembles the archive on the
-    driver from the entry files of exactly the summarized pids, with no
-    further Spark job. Files a previous run left in a reused ``shard_dir``
-    under other pids are never read."""
-    rows = summaries.collect()
+    Collecting ``summaries`` runs the fan-out, the shuffle and every shard
+    writer; with ``stream``, the shipped rows reach the driver one
+    partition at a time (``toLocalIterator``), so it holds one partition's
+    compressed shard, not the archive. The bounds then come from ``metrics``
+    unless the caller gave them, and ``_finalize_entry_files`` writes the
+    archive on the driver from the entry files of exactly the collected
+    pids, with no further Spark job. Files a previous run left in a
+    reused ``shard_dir`` under other pids are never read.
+
+    ``progress`` receives the phase events in order: 'bounds', 'fanout'
+    and 'tiles' start before the action; the poller emits 'fanout' and
+    'tiles' progress during it; 'fanout', 'tiles' and 'bounds' complete
+    after it; 'archive' brackets the finalize."""
+
+    def emit(phase: str, kind: str, **info) -> None:
+        if progress is not None:
+            progress(ProgressEvent(phase, kind, info))
+
+    # the bounds fill in as the fan-out reads the features in the action
+    emit("bounds", "start")
+    emit("fanout", "start")
+    emit("tiles", "start")
+    with (_progress_poller(metrics, emit, progress_poll_sec)
+          if progress is not None else nullcontext()):
+        shards = (_receive_shards(summaries.toLocalIterator(), shard_dir)
+                  if stream else
+                  [(r.pid, r.entries, r.features) for r in summaries.collect()])
+    emit("fanout", "complete", **metrics.as_dict())
+    emit("tiles", "complete", tiles=sum(s[1] for s in shards),
+         **metrics.as_dict())
     if bounds is None:
         bounds = metrics.feature_bounds()
-    return _finalize_entry_files(shard_dir, [int(r["pid"]) for r in rows],
-                                 output_path, bounds, config, codec)
+    emit("bounds", "complete", bounds=bounds)
+    emit("archive", "start")
+    stats = _finalize_entry_files(shard_dir, [s[0] for s in shards],
+                                  output_path, bounds, config, codec)
+    emit("archive", "complete", path=output_path,
+         unique_blobs=stats["unique_blobs"])
+    return stats
 
 
 def _check_props_input(features: DataFrame, config: TilerConfig,
@@ -2595,59 +2755,61 @@ def _check_props_input(features: DataFrame, config: TilerConfig,
 
 
 def _tile_stage(features: DataFrame, config: TilerConfig, salted: bool,
-                by_range: bool, metrics: PipelineMetrics | None = None):
-    """The one layout dispatcher behind both sinks -> (tile-sorted reduce
-    input, reduce-side encoder, persisted map-side frame or None).
+                metrics: PipelineMetrics | None = None):
+    """The one layout dispatcher -> (tile-sorted reduce input, reduce-side
+    encoder).
 
     Rejects the option combinations no encoder serves and picks the
     layout: premerge, premerge+props with ``config.write_properties``, or
     the salted two-phase encode when ``salted`` and ``_hot_tile_ranges``
     finds a hot tile (without one, salting would only re-wrap every tile,
     so premerge runs); every layout starts from the same
-    ``_premerge_records``. Archive bytes are identical on every layout.
-    The archive bounds are not settled here: the fan-out fills
-    ``metrics.bounds`` as it reads the features, and each sink reads it
-    after its main job.
-
-    ``by_range`` asks for a range exchange on tile_id (globally
-    tile-ordered partitions, as the single-writer stream needs). Range
-    partitioning samples its input, so the frame feeding that exchange
-    is then persisted DISK_ONLY to keep the fan-out (and, salted, the
-    phase-A bucket encoder) from running twice; that caches the small
-    framed messages or bucket rows, the Spark analog of the reference
-    writing phase-1 runs to disk before its phase-2 external sort
-    (external_sort.rs:99-189). The caller must
-    unpersist the returned frame. A hash exchange (``by_range=False``)
-    needs neither: the fan-out then runs exactly once, as the shuffle's
-    map stage."""
-    from pyspark import StorageLevel
-
+    ``_premerge_records`` and ends in a hash exchange on tile_id, so the
+    fan-out runs exactly once, as the shuffle's map stage. Archive bytes
+    are identical on every layout. The archive bounds are not settled
+    here: the fan-out fills ``metrics.bounds`` as it reads the features."""
     _check_props_input(features, config, salted)
-    props = config.write_properties
     hot = _hot_tile_ranges(features, config) if salted else []
     records = _premerge_records(features, config, metrics)
     if hot:
-        records = _bucket_rows(records, config, hot)
-    cached = None
-    if by_range:
-        # the frame the range exchange samples: the message records, or
-        # on the salted path the bucket rows (phase A would run twice)
-        records = cached = records.persist(StorageLevel.DISK_ONLY)
+        return _salted_stage(records, config, hot, metrics=metrics)
+    if config.write_properties:
+        return _premerge_props_stage(records, features, config,
+                                     metrics=metrics)
+    return _premerge_stage(records, config, metrics=metrics)
+
+
+def _convert(features: DataFrame, output_path: str, config: TilerConfig,
+             bounds: tuple | None, salted: bool, shard_dir: str | None,
+             progress: Callable[[ProgressEvent], None] | None = None,
+             progress_poll_sec: float = 1.0) -> dict:
+    """The one archive writer behind ``convert`` and ``convert_sharded``.
+    Without a ``shard_dir`` the shards go to a driver temp dir, removed on
+    every exit path: the executors write there when the driver can read
+    their files, else they ship the files through the driver."""
+    import shutil
+    import tempfile
+
+    from .kernels import pmtiles as P
+
+    metrics = PipelineMetrics.create(features.sparkSession)
+    sorted_in, encoder = _tile_stage(features, config, salted, metrics)
+    codec = P.CODEC_BY_NAME[config.tile_compression]
+    expected_backend = _expected_codec_backend(features, codec)
+    own_dir = shard_dir is None
+    stream = own_dir and not _driver_reads_executor_files(
+        features.sparkSession)
+    shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
     try:
-        if hot:
-            stage = _bucket_merge_stage(records, config, by_range=by_range,
-                                        metrics=metrics)
-        elif props:
-            stage = _premerge_props_stage(records, features, config,
-                                          by_range=by_range, metrics=metrics)
-        else:
-            stage = _premerge_stage(records, config, by_range=by_range,
-                                    metrics=metrics)
-    except BaseException:
-        if cached is not None:
-            cached.unpersist()
-        raise
-    return (*stage, cached)
+        summaries = _shard_summaries(sorted_in, encoder, shard_dir, codec,
+                                     expected_backend, stream)
+        stats = _finalize_shards(summaries, output_path, shard_dir, bounds,
+                                 metrics, config, codec, stream, progress,
+                                 progress_poll_sec)
+    finally:
+        if own_dir:
+            shutil.rmtree(shard_dir, ignore_errors=True)
+    return {**stats, "metrics": metrics.as_dict()}
 
 
 def convert_sharded(features: DataFrame, output_path: str,
@@ -2655,89 +2817,28 @@ def convert_sharded(features: DataFrame, output_path: str,
                     bounds: tuple[float, float, float, float] | None = None,
                     shard_dir: str | None = None,
                     salted: bool = False) -> dict:
-    """Scale-out sink: executors write per-range shard files (compressed
-    blobs, in-shard dedup), the driver concatenates live byte ranges and
-    writes the directory — output byte-identical to ``convert``'s
-    single-writer archive.
-
-    This removes the two driver bottlenecks of the streaming sink named in
-    the round-1 review: per-blob gzip on the driver, and all tile bytes
-    crossing one NIC. The layout (premerge, premerge+props or, with
-    ``salted`` and a hot tile, the salted merge) comes from the dispatcher
-    ``convert`` shares. The exchange is a hash shuffle on tile_id with no
-    persist, so the fan-out runs exactly once; global tile order is
-    restored later on the 40-byte entry rows. The reduce stage is ONE
-    Python pass per task: the layout's encoder feeds ``_make_shard_writer``
-    inside the same mapInPandas, so encoded tiles go straight from the
-    encoder to the compressor and the shard file without a second JVM
-    round trip; each task writes ``shard_{pid}.bin`` and its entry rows to
-    ``entries_{pid}.parquet`` in ``shard_dir`` (pid = its
-    ``TaskContext.partitionId()``) and returns one summary row (pid,
-    entries, features).
-
-    The conversion is ONE Spark action, the collect of those summaries
-    (its jobs are the spread, the fan-out map stage and the reduce). The
-    archive bounds are the feature bbox extremes the fan-out adds to
-    ``metrics.bounds`` as it reads each batch (no scan of their own; NaN
-    is skipped like null, an input with no bbox gets ``WORLD_BOUNDS``),
-    unless ``bounds`` is given. The driver then streams the summarized
-    pids' entry files with pyarrow (``_finalize_entry_files``): cross-shard
-    blob dedup, final data offsets and the directory, with no further
-    Spark job at any size. Its memory is O(shard-unique blobs), never
-    O(entries). Only the summarized pids' files are read, so
-    files another run left in a reused ``shard_dir`` do not matter.
-
-    Returns the archive stats plus ``metrics``, the accumulator-backed
-    row counters ``convert`` returns.
-
-    Cross-shard duplicate blobs: a blob first seen in shard A and again in
-    shard B is compressed and written into BOTH shard files (in-shard dedup
-    only), but only the first occurrence's range is concatenated into the
-    archive. This is a deliberate trade: total compression work equals the
-    reference's single writer, and avoiding it would need an extra global
-    pre-pass over uncompressed tile bytes that costs more than the dead
-    shard bytes it saves (temp shards are deleted after assembly).
+    """``convert``'s archive writer with the shard and entry files in
+    ``shard_dir``: the same bytes. Only the collected pids' files are
+    read, so files another run left in a reused ``shard_dir`` do not
+    matter; an explicit ``shard_dir`` is not removed afterwards.
 
     ``shard_dir`` must be storage visible to BOTH executors and the driver
-    (NFS/fuse mount on a real cluster). The default driver-local tempdir is
-    only valid under a local[*] master, and that is enforced: a non-local
-    master without an explicit shard_dir raises rather than producing an
-    archive that silently misses every remote executor's shards.
+    (NFS/fuse mount on a real cluster). Without it the shards go to a
+    driver-local temp dir, which is only valid under a local master, and
+    that is enforced: a non-local master without an explicit shard_dir
+    raises rather than producing an archive that silently misses every
+    remote executor's shards (``convert`` ships them through the driver).
     """
-    import shutil
-    import tempfile
-
-    from .kernels import pmtiles as P
-
     config = (config or TilerConfig()).validate()
-    master = features.sparkSession.conf.get("spark.master", "")
-    if shard_dir is None and not master.startswith("local"):
+    if shard_dir is None and not _driver_reads_executor_files(
+            features.sparkSession):
+        master = features.sparkSession.conf.get("spark.master", "")
         raise ValueError(
             "convert_sharded: shard_dir defaults to a driver-local tempdir, "
             f"which executors cannot reach under master={master!r}. Pass "
             "shard_dir= on shared storage (visible to executors and driver)."
         )
-    metrics = PipelineMetrics.create(features.sparkSession)
-    sorted_in, encoder, _ = _tile_stage(features, config, salted,
-                                        by_range=False, metrics=metrics)
-    codec = P.CODEC_BY_NAME[config.tile_compression]
-    expected_backend = _expected_codec_backend(features, codec)
-    own_dir = shard_dir is None
-    shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
-    writer = _make_shard_writer(shard_dir, codec, expected_backend)
-
-    def encode_and_write(batches):
-        return writer(encoder(batches))
-
-    summaries = sorted_in.mapInPandas(encode_and_write,
-                                      schema=SHARD_SUMMARY_SCHEMA)
-    try:
-        stats = _finalize_shards(summaries, output_path, shard_dir, bounds,
-                                 metrics, config, codec)
-    finally:
-        if own_dir:
-            shutil.rmtree(shard_dir, ignore_errors=True)
-    return {**stats, "metrics": metrics.as_dict()}
+    return _convert(features, output_path, config, bounds, salted, shard_dir)
 
 
 def convert(features: DataFrame, output_path: str, config: TilerConfig | None = None,
@@ -2747,105 +2848,31 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
              progress_poll_sec: float = 1.0) -> dict:
     """End-to-end: features DataFrame -> single .pmtiles at output_path.
 
-    Returns summary stats (incl. accumulator-backed per-stage row counts).
-    The header bounds are ``bounds`` when given, else the feature bbox
-    extremes the fan-out accumulates as it runs (``metrics.bounds``; NaN
-    skipped like null, ``WORLD_BOUNDS`` for an input with no bbox), so no
-    separate scan runs. The 'bounds' progress event therefore starts
-    before the tile stream and completes after it. The layout (premerge, premerge+props or, with ``salted`` and a hot
-    tile, the salted merge) comes from the dispatcher ``convert_sharded``
-    shares. The exchange is by range on tile_id, with the map-side output
-    persisted DISK_ONLY so the range sampling does not re-run the fan-out.
-    An under-partitioned input is first spread over every task slot, as
-    on every other premerge plan. Tiles stream
-    to the driver in tile_id order via toLocalIterator (O(1) driver
-    memory, like the reference's temp-file writer,
-    pmtiles_writer.rs:1000-1019). ``progress`` receives ordered
-    ProgressEvents (phase start/progress/complete, pipeline.rs:41-77 analog)
-    — tile-stream progress fires every 8192 tiles with live accumulator
-    row counts, and a driver-side poller thread additionally emits
-    'fanout' progress events (Phase1Progress analog, pipeline.rs:41-77)
-    every ``progress_poll_sec`` while the accumulators move, so the longest
-    phase is visible before the first tile reaches the driver.
+    The map side fans each feature out to its tiles and encodes each
+    record's feature message; ONE hash exchange on tile_id co-locates
+    every tile; each reduce task wraps its tiles (premerge, premerge+props
+    or, with ``salted`` and a hot tile, the salted merge: the same bytes),
+    compresses them into a shard file with in-shard dedup and writes its
+    entry rows beside it (``_make_shard_writer``); the driver streams the
+    entry files into the archive with the reference single writer's dedup
+    rule, data order and directory (``_finalize_entry_files``). The
+    conversion is one Spark action. The shards go to a driver temp dir
+    under a local master; elsewhere each task ships its shard's files to
+    the driver, one partition at a time, so no shared storage is needed.
+
+    Cross-shard duplicate blobs are compressed and written into every
+    shard that holds them (in-shard dedup only); only the first
+    occurrence's range is copied into the archive, so total compression
+    work equals the reference's single writer without a global pre-pass.
+
+    Returns summary stats, including ``metrics``: accumulator-backed
+    per-stage row counts. The header bounds are ``bounds`` when given,
+    else the feature bbox extremes the fan-out accumulates as it runs
+    (``metrics.bounds``; NaN skipped like null, ``WORLD_BOUNDS`` for an
+    input with no bbox), so no separate scan runs. ``progress`` receives
+    ordered ProgressEvents (``_finalize_shards``, pipeline.rs:41-77
+    analog); a driver thread emits 'fanout' and 'tiles' progress every
+    ``progress_poll_sec`` in which the accumulators moved.
     """
-    import threading
-
-    from .kernels import pmtiles as P
-
-    def emit(phase: str, kind: str, **info) -> None:
-        if progress is not None:
-            progress(ProgressEvent(phase, kind, info))
-
-    config = (config or TilerConfig()).validate()
-    metrics = PipelineMetrics.create(features.sparkSession)
-    sorted_in, encoder, cached = _tile_stage(
-        features, config, salted, by_range=True, metrics=metrics)
-    stop_poll = threading.Event()
-    poller = None
-    try:
-        # the bounds fill in as the fan-out reads the features, which
-        # happens while the tile stream below drains
-        emit("bounds", "start")
-        tiles = sorted_in.mapInPandas(encoder, schema=TILES_SCHEMA)
-        asm = P.PMTilesAssembler(
-            tile_compression=P.CODEC_BY_NAME[config.tile_compression],
-            layer_name=config.layer_name,
-            min_zoom=config.min_zoom,
-            max_zoom=config.max_zoom,
-            fields=config.layer_fields,
-            leaf_max_entries=config.leaf_max_entries,
-        )
-        # fan-out phase progress: the fan-out executes lazily while the
-        # tile stream below drains, so poll the accumulators from a driver
-        # thread and emit a 'fanout' progress event whenever features_in
-        # advances
-        if progress is not None:
-            emit("fanout", "start")
-
-            def _poll() -> None:
-                last = -1
-                while not stop_poll.wait(progress_poll_sec):
-                    cur = int(metrics.features_in.value)
-                    if cur != last:
-                        last = cur
-                        emit("fanout", "progress", **metrics.as_dict())
-
-            poller = threading.Thread(target=_poll, daemon=True)
-            poller.start()
-
-        emit("tiles", "start")
-        n_tiles = 0
-        for row in tiles.toLocalIterator(prefetchPartitions=True):
-            asm.add_tile(row.tile_id, row.z, bytes(row.mvt), row.content_hash, row.n_features)
-            n_tiles += 1
-            if progress is not None and n_tiles % 8192 == 0:
-                emit("tiles", "progress", tiles=n_tiles, **metrics.as_dict())
-    finally:
-        # an exception anywhere after the persist must not leave the daemon
-        # poller polling a dead accumulator or the fan-out cache pinned for
-        # the session (ADVICE r3)
-        if poller is not None:
-            stop_poll.set()
-            poller.join()
-        if cached is not None:
-            cached.unpersist()
-    if poller is not None:
-        emit("fanout", "complete", **metrics.as_dict())
-    emit("tiles", "complete", tiles=n_tiles, **metrics.as_dict())
-    if bounds is None:
-        bounds = metrics.feature_bounds()
-    emit("bounds", "complete", bounds=bounds)
-    asm.bounds = [bounds[0], bounds[1], bounds[2], bounds[3]]
-    emit("archive", "start")
-    hdr = asm.finalize(output_path)
-    emit("archive", "complete", path=output_path,
-         unique_blobs=hdr.tile_contents_count)
-    return {
-        "tiles": n_tiles,
-        "features": asm.total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": hdr.tile_contents_count,
-        "bounds": bounds,
-        "metrics": metrics.as_dict(),
-    }
+    return _convert(features, output_path, (config or TilerConfig()).validate(),
+                    bounds, salted, None, progress, progress_poll_sec)

@@ -73,8 +73,8 @@ def get_spark(app: str = "gpq-tiles-spark", cores: int | None = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.parquet.filterPushdown", "true")
-        # DISK_ONLY persists + RDD spills are uncompressed by default;
-        # lz4 halves the on-disk footprint of coordinate-heavy WKB records
+        # serialized RDD blocks + spills are uncompressed by default; lz4
+        # halves the on-disk footprint of coordinate-heavy WKB records
         .config("spark.rdd.compress", "true")
         .config("spark.ui.enabled", "false")
     )

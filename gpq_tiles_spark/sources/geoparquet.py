@@ -176,20 +176,6 @@ def read_geoparquet(spark: SparkSession, path: str,
     return raw.mapInPandas(to_features, schema=schema)
 
 
-def write_geoparquet(features: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """features -> parquet with a 'geometry' WKB column + bbox columns
-    (bbox columns give downstream readers rowgroup min/max pruning)."""
-    (
-        features.select(
-            F.col("feature_id"),
-            F.col("wkb").alias("geometry"),
-            "lng_min", "lat_min", "lng_max", "lat_max",
-        )
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def dataset_bbox(features: DataFrame) -> tuple[float, float, float, float]:
     row = features.agg(
         F.min("lng_min"), F.min("lat_min"), F.max("lng_max"), F.max("lat_max")

@@ -36,8 +36,12 @@ def main() -> None:
                         "installed (import-gated)")
     p.add_argument("--salted", action="store_true")
     p.add_argument("--sharded", action="store_true",
-                   help="executor-written shard files + driver concat "
-                        "(byte-identical archive; parallel compression)")
+                   help="convert_sharded: the same archive writer (same "
+                        "bytes) with its shard files in a driver temp dir; "
+                        "fails on a non-local master, where that dir is "
+                        "not shared storage (the library's convert_sharded "
+                        "takes a shard_dir on storage executors and driver "
+                        "share)")
     p.add_argument("--geoparquet", action="store_true")
     p.add_argument("--work-dir", default=None, help="enable checkpoint/resume")
     p.add_argument("--feature-id-mode", default="hash", choices=["hash", "rownum"])

@@ -1,6 +1,6 @@
 """Driver-side reference encode for archive byte-parity tests.
 
-Every tiling sink runs the premerge layout (messages encoded map-side,
+The archive writer runs the premerge layout (messages encoded map-side,
 wrapped per tile after the shuffle), or with ``salted=True`` and a hot
 tile the salted two-phase concat of those same messages. The reference
 here shares neither: it collects ``fanout_records``, sorts the
@@ -8,8 +8,10 @@ records on (tile_id, feature_id) and encodes all tiles in one call of the
 kernel-level encoders — ``mvt_fast.encode_sorted_runs`` (WKB straight to
 tile bytes) or, with ``write_properties``, ``encode_record_msgs`` +
 ``_props_tiles_frame`` over the ordering-minimum props of each
-feature_id. ``reference_archive`` writes those tiles the way ``convert``
-does, so its bytes must equal every sink's archive.
+feature_id. ``reference_archive`` writes those tiles with
+``PMTilesAssembler`` (the kernel-level single writer, which no library
+write path uses), so its bytes must equal the archive writer's on every
+layout.
 """
 
 import numpy as np
@@ -26,6 +28,8 @@ def reference_tiles(features, config) -> pd.DataFrame:
     recs = P.fanout_records(features, config).toPandas()
     recs = recs.sort_values(["tile_id", "feature_id"], kind="stable",
                             ignore_index=True)
+    if recs.empty:
+        return pd.DataFrame(columns=P.TILES_SCHEMA.fieldNames())
     tid = recs["tile_id"].to_numpy(dtype=np.int64)
     fid = recs["feature_id"].to_numpy(dtype=np.int64)
     wkbs = recs["wkb"].to_numpy()
@@ -47,7 +51,8 @@ def reference_tiles(features, config) -> pd.DataFrame:
 
 def reference_archive(features, config, path: str) -> bytes:
     """Write ``reference_tiles`` as a .pmtiles archive with ``convert``'s
-    header bounds and metadata; returns the archive bytes."""
+    header bounds and metadata; returns the archive bytes. An input with
+    no records gives an archive with no tiles."""
     tiles = reference_tiles(features, config)
     row = features.agg(F.min("lng_min"), F.min("lat_min"),
                        F.max("lng_max"), F.max("lat_max")).collect()[0]

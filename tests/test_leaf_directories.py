@@ -498,10 +498,11 @@ def test_million_entry_finalize_streams_and_stays_bounded(tmp_path):
 def test_full_pipeline_leaf_scale_byte_identical(spark, tmp_path):
     """Capstone: the REAL pipeline (extract-less point corpus -> fan-out ->
     shuffle -> encode -> sink) at a tile count past ROOT_MAX_ENTRIES must
-    produce byte-identical single-writer and sharded archives, both in
-    leaf mode, both readable."""
+    produce, through ``convert`` and ``convert_sharded``, the driver-side
+    reference archive's bytes in leaf mode, readable."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert, convert_sharded
+    from tests.reference_tiles import reference_archive
 
     n = 6000
     rng = np.random.default_rng(11)
@@ -528,6 +529,7 @@ def test_full_pipeline_leaf_scale_byte_identical(spark, tmp_path):
     assert s1["tiles"] == s2["tiles"] > ROOT_MAX_ENTRIES
     a = open(p1, "rb").read()
     assert a == open(p2, "rb").read()
+    assert a == reference_archive(feats, cfg, str(tmp_path / "ref.pmtiles"))
     hdr = Header.from_bytes(a[:HEADER_SIZE])
     assert hdr.leaf_dirs_length > 0
     r = PMTilesReader(p1)

@@ -1,11 +1,12 @@
-"""Archive bounds from the fan-out, and the sharded sink's single action.
+"""Archive bounds from the fan-out, and the archive writer's single action.
 
 The fan-out adds each batch's bbox extremes to a min/max accumulator
-(``PipelineMetrics.bounds``), so neither sink scans the features for the
-header bounds. ``convert_sharded``'s fused reduce writes each shard's
-entry rows to ``entries_{pid}.parquet`` beside the shard and returns one
-summary row per shard; collecting those summaries is the sink's only
-Spark action, and the driver finalizes from the entry files.
+(``PipelineMetrics.bounds``), so neither ``convert`` nor
+``convert_sharded`` scans the features for the header bounds. The fused
+reduce writes each shard's entry rows to ``entries_{pid}.parquet`` beside
+the shard and returns one summary row per shard; collecting those
+summaries is the writer's only Spark action, and the driver finalizes
+from the entry files.
 """
 
 import os
@@ -107,21 +108,6 @@ def test_nan_bbox_is_skipped_like_null(spark, feats, tmp_path, sink):
     assert nan_bytes == null_bytes
 
 
-@pytest.mark.parametrize("value", [None, np.nan])
-def test_checkpoint_bounds_scan_follows_the_sinks(spark, feats, tmp_path,
-                                                  value):
-    """``convert_with_checkpoints`` scans for its bounds (a resumed run
-    skips the fan-out) on the sinks' rule: NaN skipped like null, and
-    ``WORLD_BOUNDS`` for an input with no bbox."""
-    from gpq_tiles_spark.checkpoint import _scan_bounds
-
-    df = _with_bad_bbox(spark, feats, value)
-    stats, _ = _run("convert", df, tmp_path / "x.pmtiles")
-    assert _scan_bounds(df) == stats["bounds"]
-    empty = spark.createDataFrame([], schema=FEATURES_SCHEMA)
-    assert _scan_bounds(empty) == P.WORLD_BOUNDS
-
-
 @pytest.mark.parametrize("sink", SINKS)
 def test_empty_input_gives_world_bounds(spark, tmp_path, sink):
     empty = spark.createDataFrame([], schema=FEATURES_SCHEMA)
@@ -149,13 +135,14 @@ def test_no_bounds_job(spark, feats, tmp_path, sink):
 
 
 def test_sharded_small_path_runs_one_action(spark, feats, tmp_path):
-    """The summaries' collect is the sink's only action: no bounds agg,
-    no finalize agg, no toPandas."""
-    _, jobs = _in_group(spark.sparkContext, lambda: _run(
-        "convert_sharded", feats, tmp_path / "x.pmtiles"))
-    sites = _python_call_sites(jobs)
-    assert len(sites) == 1, sites
-    assert next(iter(sites)).startswith("collect at "), sites
+    """On a local master the summaries' collect is each sink's only
+    action: no bounds agg, no finalize agg, no toPandas, no tile stream."""
+    for sink in SINKS:
+        _, jobs = _in_group(spark.sparkContext, lambda: _run(
+            sink, feats, tmp_path / f"{sink}.pmtiles"))
+        sites = _python_call_sites(jobs)
+        assert len(sites) == 1, (sink, sites)
+        assert next(iter(sites)).startswith("collect at "), (sink, sites)
 
 
 def test_convert_bounds_event_brackets_tile_stream(feats, tmp_path):

@@ -237,22 +237,26 @@ def test_zstd_brotli_gated(tmp_path):
 
 
 def test_convert_sharded_byte_identical(spark, docs_table, tmp_path):
-    """The scale-out sink (executor-written shard files + driver concat)
-    must produce the EXACT same archive bytes as the single-writer
-    convert() — same dedup decisions, offsets, directory, and header."""
+    """The archive writer (executor-written shard files + driver
+    finalize) must produce the EXACT same archive bytes as the driver-side
+    reference encode — same dedup decisions, offsets, directory, and
+    header."""
     from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.pipeline import convert, convert_sharded
+    from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
+    from gpq_tiles_spark.pipeline import convert_sharded
+    from tests.reference_tiles import reference_archive
 
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=7, shuffle_partitions=4)
-    p1 = str(tmp_path / "single.pmtiles")
+    p1 = str(tmp_path / "reference.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
-    s1 = convert(feats, p1, cfg)
+    expected = reference_archive(feats, cfg, p1)
     s2 = convert_sharded(feats, p2, cfg)
-    assert s1["tiles"] == s2["tiles"]
-    assert s1["unique_blobs"] == s2["unique_blobs"]
-    with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
+    hdr = PMTilesReader(p1).header
+    assert s2["tiles"] == hdr.addressed_tiles_count
+    assert s2["unique_blobs"] == hdr.tile_contents_count
+    with open(p2, "rb") as f2:
+        assert f2.read() == expected
 
 
 def test_encode_single_tile_matches_pipeline(spark, docs_table, small_config):
@@ -275,7 +279,8 @@ def test_convert_sharded_empty_input(spark, tmp_path):
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import FEATURES_SCHEMA
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
-    from gpq_tiles_spark.pipeline import convert, convert_sharded
+    from gpq_tiles_spark.pipeline import convert_sharded
+    from tests.reference_tiles import reference_archive
 
     feats = spark.createDataFrame([], schema=FEATURES_SCHEMA)
     cfg = TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=2)
@@ -284,10 +289,10 @@ def test_convert_sharded_empty_input(spark, tmp_path):
     assert stats["tiles"] == 0
     rd = PMTilesReader(out)
     assert rd.header.addressed_tiles_count == 0
-    single = str(tmp_path / "empty_single.pmtiles")
-    convert(feats, single, cfg)
-    with open(out, "rb") as a, open(single, "rb") as b:
-        assert a.read() == b.read()
+    expected = reference_archive(feats, cfg,
+                                 str(tmp_path / "empty_reference.pmtiles"))
+    with open(out, "rb") as a:
+        assert a.read() == expected
 
 
 def test_grid_regime_holed_multipolygon_matches_oracle(spark):
@@ -471,9 +476,8 @@ def test_encode_record_msgs_matches_sorted_runs_slices():
 
 def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
     """A vertex-dense corpus (400-700-vertex rings) must produce identical
-    bytes through convert (range-partitioned premerge + persist),
-    convert_sharded (hash premerge + driver finalize), and the
-    driver-side WKB encode."""
+    bytes through convert, convert_sharded (one archive writer: hash
+    premerge + driver finalize) and the driver-side WKB encode."""
     import numpy as np
     import pandas as pd
 
@@ -505,8 +509,8 @@ def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
 
     p1 = str(tmp_path / "single.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
-    s1 = convert(feats, p1, cfg)                      # premerge + range
-    s2 = convert_sharded(feats, p2, cfg)              # premerge + hash
+    s1 = convert(feats, p1, cfg)
+    s2 = convert_sharded(feats, p2, cfg)
     assert s1["tiles"] == s2["tiles"] > 0
     with open(p1, "rb") as f1, open(p2, "rb") as f2:
         b1 = f1.read()

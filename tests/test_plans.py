@@ -55,12 +55,13 @@ def test_pipeline_has_single_wide_shuffle(spark, docs_table):
 
     cfg = TilerConfig(min_zoom=0, max_zoom=4, shuffle_partitions=4)
     tiles = encode_tiles_premerge(
-        extract_features(spark.read.parquet(docs_table)), cfg, by_range=True)
+        extract_features(spark.read.parquet(docs_table)), cfg)
     plan = _plan(tiles)
-    # exactly one keyed exchange: the range partition by tile_id (the
+    # exactly one keyed exchange: the hash partition by tile_id (the
     # under-partitioned input may add a round-robin spread before the map)
-    assert plan.count("Exchange rangepartitioning") == 1
-    assert plan.count("Exchange hashpartitioning") == 0
+    assert plan.count("Exchange hashpartitioning(tile_id") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("Exchange rangepartitioning") == 0
     # the in-partition sort for (tile_id, feature_id)
     assert "Sort [tile_id" in plan and "feature_id" in plan
 

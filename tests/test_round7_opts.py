@@ -3,9 +3,10 @@
 Every optimization this round must leave results bit-identical; these
 tests pin the risky ones differentially:
 
-* the sharded sink's driver finalize vs the single-writer ``convert`` —
-  byte-identical archives, with and without leaf directories (the test
-  names are older than the one sharded finalize);
+* the archive writer's driver finalize vs the driver-side reference
+  encode (``tests/reference_tiles.py``) — byte-identical archives, with
+  and without leaf directories (the test names are older than the one
+  archive writer);
 * the vectorized raster grid fast path vs the per-tile loop;
 * spread_small_input's no-op guarantee on well-partitioned input.
 """
@@ -19,7 +20,9 @@ import pytest
 from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.fixtures import write_fixture
 from gpq_tiles_spark.extract import extract_features
-from gpq_tiles_spark.pipeline import convert, convert_sharded
+from gpq_tiles_spark.pipeline import convert_sharded
+
+from tests.reference_tiles import reference_archive
 
 
 @pytest.fixture(scope="module")
@@ -30,12 +33,12 @@ def fixture_features(spark, tmp_path_factory):
 
 
 def _convert_both(feats, tmp_path, cfg, tag):
-    out_single = str(tmp_path / f"single_{tag}.pmtiles")
+    """(``convert_sharded``'s archive, the reference archive) bytes."""
     out_sharded = str(tmp_path / f"sharded_{tag}.pmtiles")
     convert_sharded(feats, out_sharded, cfg)
-    convert(feats, out_single, cfg)
-    with open(out_sharded, "rb") as a, open(out_single, "rb") as b:
-        return a.read(), b.read()
+    with open(out_sharded, "rb") as a:
+        return a.read(), reference_archive(
+            feats, cfg, str(tmp_path / f"reference_{tag}.pmtiles"))
 
 
 def test_driver_finalize_matches_distributed(fixture_features, tmp_path):

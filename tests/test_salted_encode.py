@@ -166,13 +166,11 @@ def _tile_exchanges(df) -> list[tuple[str, list[str]]]:
     return found
 
 
-@pytest.mark.parametrize("by_range", [False, True])
-def test_salted_exchanges_carry_no_wkb(spark, docs_table, by_range):
+def test_salted_exchanges_carry_no_wkb(spark, docs_table):
     """Both exchanges of the salted plan move message bytes: the records'
     framed messages, then the bucket bodies — never WKB."""
     feats = extract_features(spark.read.parquet(docs_table))
-    exchanges = _tile_exchanges(
-        encode_tiles_salted(feats, _salted_config(), by_range=by_range))
+    exchanges = _tile_exchanges(encode_tiles_salted(feats, _salted_config()))
     assert len(exchanges) == 2, exchanges
     cols = sorted(tuple(sorted(c)) for _, c in exchanges)
     assert cols == sorted([

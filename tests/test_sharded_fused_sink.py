@@ -1,15 +1,20 @@
 """The sharded sink's fused reduce stage, the shared layout dispatcher and
 the input-spread guard.
 
-``convert_sharded`` runs each layout's reduce-side encoder and the shard
-writer in ONE mapInPandas (``writer(encoder(batches))``), with the shard
-named by the task's partition id. These tests pin the archive bytes of
-every layout on both sinks against one single-writer ``convert``
-reference and against the driver-side WKB encode, on input that arrives
+The archive writer behind ``convert`` and ``convert_sharded`` runs each
+layout's reduce-side encoder and the shard writer in ONE mapInPandas
+(``writer(encoder(batches))``), with the shard named by the task's
+partition id. These tests pin the archive bytes of every layout through
+both entry points against one ``convert`` archive and against the
+driver-side WKB encode, on input that arrives
 with fewer partitions than task slots; the single Python map node after
-the tile exchange, the release of every persisted frame when a sink
-fails, and the slot-count rule of ``spread_small_input``.
+the tile exchange, the release of every persisted frame, temp dir and
+poller thread when a conversion fails, the shards shipped through the
+driver when it cannot read the executors' files, and the slot-count rule
+of ``spread_small_input``.
 """
+
+import os
 
 import pytest
 
@@ -142,36 +147,110 @@ def test_sharded_finalize_releases_persisted_frames_on_error(
 
 @pytest.mark.parametrize("fail_in", ["progress", "add_tile"])
 def test_convert_releases_map_side_cache_on_error(
-        two_part_features, tmp_path, monkeypatch, fail_in):
-    """Every frame ``convert`` persists is unpersisted when the run fails,
-    before the tile stream starts (a progress callback raising on the
-    first 'fanout' event) or during it."""
-    from gpq_tiles_spark.kernels.pmtiles import PMTilesAssembler
+        spark, two_part_features, tmp_path, monkeypatch, fail_in):
+    """A run that fails before the action (a progress callback raising on
+    the first 'fanout' event) or after it (in the archive finalize; the
+    ``add_tile`` id is older than the one writer) leaves no persisted
+    frame, no temp shard dir and no progress poller behind."""
+    import tempfile
+    import threading
 
     def boom(*args, **kwargs):
         raise RuntimeError("injected failure")
 
     def progress(ev):
-        if ev.phase == "fanout":
+        if fail_in == "progress" and ev.phase == "fanout":
             boom()
 
-    persisted = []
-    frame_cls = type(two_part_features)
-    persist = frame_cls.persist
+    made = []
+    mkdtemp = tempfile.mkdtemp
 
-    def recording_persist(self, *args, **kwargs):
-        persisted.append(persist(self, *args, **kwargs))
-        return persisted[-1]
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
 
-    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
     if fail_in == "add_tile":
-        monkeypatch.setattr(PMTilesAssembler, "add_tile", boom)
+        monkeypatch.setattr(P, "_finalize_entry_files", boom)
+    before = _persistent_rdds(spark)
     with pytest.raises(RuntimeError, match="injected"):
         P.convert(two_part_features, str(tmp_path / "x.pmtiles"),
-                  _config(False),
-                  progress=progress if fail_in == "progress" else None)
-    assert persisted
-    assert not any(df.is_cached for df in persisted)
+                  _config(False), progress=progress, progress_poll_sec=0.01)
+    assert _persistent_rdds(spark) == before
+    assert made and not any(os.path.exists(d) for d in made)
+    assert not any(t.name == "gpq-progress-poller"
+                   for t in threading.enumerate())
+
+
+def _executor_local_dirs(spark) -> list[str]:
+    """The block manager's local dirs: SPARK_LOCAL_DIRS of the Python
+    workers, under which a streaming reduce task makes its temp dir."""
+    dm = spark.sparkContext._jsc.sc().env().blockManager().diskBlockManager()
+    return [f.getPath() for f in dm.localDirs()]
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_convert_streams_shards_through_driver(
+        spark, two_part_features, wkb_reference_archives, tmp_path,
+        monkeypatch, layout):
+    """Where the driver cannot read the executors' files (forced here on
+    the local master through the private predicate), ``convert`` ships
+    each shard's files through the driver and writes the driver-side
+    reference's bytes, on every layout (salted with hot tiles); the
+    executors' temp shard dirs are gone afterwards."""
+    props, salted = LAYOUTS[layout]
+    if salted:
+        assert P.detect_hot_tiles(two_part_features, _config(props))
+    received = []
+    receive = P._receive_shards
+
+    def recording_receive(rows, shard_dir):
+        received.extend(receive(rows, shard_dir))
+        return received
+
+    monkeypatch.setattr(P, "_driver_reads_executor_files", lambda spark: False)
+    monkeypatch.setattr(P, "_receive_shards", recording_receive)
+    path = str(tmp_path / f"{layout}.pmtiles")
+    stats = P.convert(two_part_features, path, _config(props), salted=salted)
+    assert len(received) > 1
+    assert stats["tiles"] == sum(entries for _, entries, _ in received)
+    with open(path, "rb") as f:
+        assert f.read() == wkb_reference_archives[props], layout
+    for d in _executor_local_dirs(spark):
+        assert not [n for n in os.listdir(d) if n.startswith("gpq_shard_")]
+    with pytest.raises(ValueError, match="shard_dir"):
+        P.convert_sharded(two_part_features, path, _config(props))
+
+
+def test_ship_round_trips_shard_files(tmp_path, monkeypatch):
+    """Spark-free: a shard's two committed files shipped in small chunks
+    are rewritten byte for byte on the receiving side, with the writer's
+    summary."""
+    import numpy as np
+    import pandas as pd
+
+    from gpq_tiles_spark.kernels import pmtiles as PM
+
+    n = 50
+    tiles = pd.DataFrame({
+        "tile_id": np.arange(n, dtype=np.int64),
+        "z": np.full(n, 5, dtype=np.int32),
+        "n_features": np.ones(n, dtype=np.int64),
+        "mvt": [b"\x1a\x03t%02d" % (i % 7) for i in range(n)],
+        "content_hash": np.arange(n, dtype=np.int64) % 7,
+    })
+    src, dst = tmp_path / "executor", tmp_path / "driver"
+    src.mkdir()
+    dst.mkdir()
+    monkeypatch.setattr(P, "SHIP_CHUNK_BYTES", 64)
+    write = P._make_shard_writer(str(src), PM.COMPRESSION_GZIP)
+    rows = pd.concat(list(P._ship(str(src), write(iter([tiles])))),
+                     ignore_index=True)
+    assert len(rows) > 2
+    assert P._receive_shards(rows.itertuples(index=False), str(dst)) == [
+        (0, n, n)]
+    for name in ("shard_00000.bin", "entries_00000.parquet"):
+        assert (dst / name).read_bytes() == (src / name).read_bytes()
 
 
 def test_spread_small_input_fires_below_slot_count(spark):

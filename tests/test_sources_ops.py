@@ -246,6 +246,66 @@ def test_checkpointed_archive_carries_layer_fields(spark, docs_table,
         assert f1.read() == f2.read()
 
 
+def _group_jobs(sc, fn) -> list[list[str]]:
+    """Run ``fn`` under a fresh job group -> its jobs' stage names."""
+    import uuid
+
+    group = f"ckpt-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tr = sc.statusTracker()
+    return [[tr.getStageInfo(s).name for s in tr.getJobInfo(j).stageIds
+             if tr.getStageInfo(s) is not None]
+            for j in sorted(tr.getJobIdsForGroup(group))]
+
+
+def test_checkpoint_resumed_after_shards_runs_no_spark_work(
+        spark, docs_table, tmp_path):
+    """The shards stage records one (pid, entries, features) lineage row
+    per shard it wrote and the records stage the archive bounds, so a run
+    resumed after the shards starts no job that runs the fan-out or the
+    shard writer: its only jobs are the ones reading the input's schema."""
+    import json
+
+    from gpq_tiles_spark.checkpoint import convert_with_checkpoints
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.extract import extract_features
+
+    wd = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out.pmtiles")
+    cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4)
+    m1 = convert_with_checkpoints(spark, docs_table, out, wd, cfg)
+    shards = [r for r in m1["lineage"] if r["stage"] == "shards"]
+    assert len(shards) > 1
+    assert all(set(r) == {"stage", "pid", "entries", "features"}
+               for r in shards)
+    assert sorted(os.listdir(os.path.join(wd, "shards"))) == sorted(
+        f"{name}_{r['pid']:05d}.{ext}" for r in shards
+        for name, ext in (("shard", "bin"), ("entries", "parquet")))
+    assert sum(r["entries"] for r in shards) == m1["stages"]["archive"]["tiles"]
+    assert len(m1["stages"]["records"]["bounds"]) == 4
+    with open(out, "rb") as f:
+        expected = f.read()
+
+    os.remove(out)
+    del m1["stages"]["archive"]
+    with open(os.path.join(wd, "manifest.json"), "w") as f:
+        json.dump(m1, f)
+    sc = spark.sparkContext
+    resumed = _group_jobs(sc, lambda: convert_with_checkpoints(
+        spark, docs_table, out, wd, cfg))
+    schema_only = _group_jobs(sc, lambda: extract_features(
+        spark.read.parquet(docs_table)).columns)
+    assert not any(".py:" in name for job in resumed for name in job), resumed
+    assert resumed == schema_only
+    with open(out, "rb") as f:
+        assert f.read() == expected
+
+
 @pytest.mark.parametrize("bad, match", [
     ({"write_properties": True}, "props"),
     ({"min_zoom": 5, "max_zoom": 2}, "zoom range"),

@@ -83,12 +83,14 @@ def test_streaming_decode_of_unknown_content_size_frame():
 
 def test_zstd_archive_end_to_end(spark, docs_table, tmp_path):
     """Full convert with tile_compression='zstd' (the reference default):
-    single-writer and sharded sinks stay byte-identical, the header
-    records codec 4, and every tile decodes back through both readers."""
+    ``convert`` and ``convert_sharded`` write the driver-side reference
+    archive's bytes, the header records codec 4, and every tile decodes
+    back through both readers."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.kernels.pmtiles import read_tile
     from gpq_tiles_spark.pipeline import convert, convert_sharded
+    from tests.reference_tiles import reference_archive
 
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=6, shuffle_partitions=4,
@@ -98,8 +100,9 @@ def test_zstd_archive_end_to_end(spark, docs_table, tmp_path):
     s1 = convert(feats, p1, cfg)
     s2 = convert_sharded(feats, p2, cfg)
     assert s1["tiles"] == s2["tiles"] > 0
+    expected = reference_archive(feats, cfg, str(tmp_path / "ref.pmtiles"))
     with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
+        assert f1.read() == f2.read() == expected
     hdr = P.Header.from_bytes(open(p1, "rb").read(P.HEADER_SIZE))
     assert hdr.tile_compression == P.COMPRESSION_ZSTD
     # the stored blobs really are zstd frames (first clustered tile sits
