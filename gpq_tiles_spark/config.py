@@ -13,11 +13,6 @@ class TilerConfig:
     extent: int = 4096
     buffer_pixels: int = 8  # this project pins 8, not tippecanoe's 5 (clip.rs:23-25)
     layer_name: str = "features"
-    # density drop exists as a standalone operator; NOT applied in the
-    # production tiling path (SURVEY.md §2.4 subtlety, pipeline.rs:918-927)
-    enable_density_drop: bool = False
-    density_cell_size: int = 16
-    density_max_per_cell: int = 1
     tile_compression: str = "gzip"  # gzip | none | zstd | brotli. zstd
     # (the reference default, cli/main.rs:69) works via the `zstandard`
     # package OR the ctypes binding to a system libzstd

@@ -495,90 +495,25 @@ def polygon_column_tiles_clip(strip_parts: list, gtype: int,
     return results
 
 
-def polygon_tiles_clip_batch(g: Geom, bx0s: np.ndarray, by0s: np.ndarray,
-                             bx1s: np.ndarray, by1s: np.ndarray,
-                             max_batch_pts: int = 4_000_000) -> list:
-    """Clip a POLYGON/MULTIPOLYGON against MANY (buffered) tile windows at
-    once — per-tile results byte-identical to ``clip_geometry`` (the
-    small-feature regime's per-pair loop, batched). Four segmented edge
-    passes (L, R, B, T) + segmented re-close over the rings replicated per
-    tile; the per-part bbox fast paths of ``_clip_polygon`` are subsumed:
-    an outside part emits an empty exterior (-> dropped), a fully-inside
-    ring emits its vertices unchanged."""
-    t, d = g
-    parts = [d] if t == POLYGON else d
-    rings = []
-    ring_in_part = []
-    for p in parts:
-        for ri, ring in enumerate(p):
-            rings.append(np.asarray(ring, dtype=np.float64))
-            ring_in_part.append(ri)
-    n_rings = len(rings)
-    n_tiles = len(bx0s)
-    if n_rings == 0:
-        return [None] * n_tiles
-    base = np.concatenate([r.reshape(-1, 2) for r in rings], axis=0)
-    base_sizes = np.array([len(r) for r in rings], dtype=np.int64)
-    base_len = int(base_sizes.sum())
-    chunk = max(1, max_batch_pts // max(base_len, 1))
-    results: list = []
-    for c0 in range(0, n_tiles, chunk):
-        c1 = min(c0 + chunk, n_tiles)
-        cn = c1 - c0
-        pts = np.tile(base, (cn, 1))
-        sizes_all = np.tile(base_sizes, cn)
-        offs = np.zeros(cn * n_rings + 1, dtype=np.int64)
-        np.cumsum(sizes_all, out=offs[1:])
-
-        def rep(arr):
-            return np.repeat(np.asarray(arr[c0:c1], dtype=np.float64), n_rings)
-
-        p_, o_ = clip_edge_segmented(pts, offs, 0, rep(bx0s), True)
-        p_, o_ = clip_edge_segmented(p_, o_, 0, rep(bx1s), False)
-        p_, o_ = clip_edge_segmented(p_, o_, 1, rep(by0s), True)
-        p_, o_ = clip_edge_segmented(p_, o_, 1, rep(by1s), False)
-        p_, o_ = close_rings_segmented(p_, o_)
-        sizes_out = np.diff(o_)
-        for ti in range(cn):
-            out_polys = []
-            cur: list | None = None
-            ok_ext = False
-            for k in range(n_rings):
-                gi = ti * n_rings + k
-                n = sizes_out[gi]
-                if ring_in_part[k] == 0:
-                    if ok_ext and cur:
-                        out_polys.append(cur)
-                    ok_ext = n >= 3
-                    cur = [p_[o_[gi]:o_[gi + 1]]] if ok_ext else None
-                elif ok_ext and n >= 3:
-                    cur.append(p_[o_[gi]:o_[gi + 1]])
-            if ok_ext and cur:
-                out_polys.append(cur)
-            if not out_polys:
-                results.append(None)
-            elif t == POLYGON:
-                results.append((POLYGON, out_polys[0]))
-            else:
-                results.append((MULTIPOLYGON, out_polys))
-    return results
-
-
 def polygons_tiles_clip_multi(geoms: list, feat_of_tile: np.ndarray,
                               bx0s: np.ndarray, by0s: np.ndarray,
                               bx1s: np.ndarray, by1s: np.ndarray,
                               max_batch_pts: int = 4_000_000) -> list:
     """Clip MANY polygon/multipolygon geometries, each against ITS OWN set
     of (buffered) tile windows, in shared segmented edge passes — the
-    cross-feature generalization of ``polygon_tiles_clip_batch`` (whose
-    per-(feature, zoom) calls dominate the small-regime fan-out cost on
-    vertex-dense corpora: the segmented kernel is agnostic to ring
-    ownership, so one L/R/B/T pass can serve every feature at a zoom).
+    small-feature regime's per-(feature, window) ``clip_geometry`` calls,
+    batched (they dominate the fan-out cost on vertex-dense corpora: the
+    segmented kernel is agnostic to ring ownership, so one L/R/B/T pass
+    can serve every feature at a zoom). The rings are replicated per
+    window; an outside part emits an empty exterior (-> dropped) and a
+    fully-inside ring emits its vertices unchanged, which subsumes the
+    per-part bbox fast paths of ``_clip_polygon``.
 
     ``geoms[k]`` is clipped against window ``j`` for every j with
     ``feat_of_tile[j] == k``. Returns per-window Geom|None, aligned with
-    the windows — byte-identical to per-feature ``polygon_tiles_clip_batch``
-    (same kernels, same per-instance order).
+    the windows, byte-identical to ``clip_geometry`` on each pair
+    (``tests/test_pipeline_e2e.py::test_fanout_matches_scalar_oracle``
+    checks it through the fan-out).
     """
     n_tiles = len(bx0s)
     results: list = [None] * n_tiles

@@ -29,34 +29,13 @@ from ..partitioning import spread_small_input
 _MERSENNE = (1 << 61) - 1
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup by content hash: (hash, n_copies, keeper, duplicate_ids).
-
-    Map-side partial aggregation makes this one cheap shuffle of
-    (hash, id) pairs.
-    """
-    h = F.md5(F.col(text_col)).alias("content_hash")
-    return (
-        df.select(h, F.col(id_col).alias("doc_id"))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.min("doc_id").alias("keeper"),
-            F.sort_array(F.collect_list("doc_id")).alias("all_ids"),
-        )
-        .where(F.col("n_copies") > 1)
-    )
-
-
 def duplicate_assignments(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id") -> DataFrame:
     """Per-doc dedup verdict WITHOUT any list aggregation: (doc_id,
     content_hash, keeper, is_duplicate). The keeper is the min doc_id of the
     content group (a window min — map-side combinable, no collect_list
     buffering), so this is the primitive a 10^12-doc pipeline actually
-    applies: ``.where(~is_duplicate)``. ``exact_duplicates`` (group report
-    with id lists) remains for small-scale inspection."""
+    applies: ``.where(~is_duplicate)``."""
     w = Window.partitionBy("content_hash")
     return (
         df.select(
@@ -90,9 +69,7 @@ def _batch_word_hashes(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     from merging across docs), finds word boundaries with boolean masks, and
     derives each word's polynomial hash h = sum_j byte[j] * B^(len-1-j)
     (mod 2^64) from ONE global prefix array: h(s, e) = B^(e-1) * (P_e - P_s)
-    where P_k = sum_{j<k} byte[j] * B^-j — the same cumprod/cumsum derivation
-    as textops._roll_hashes (per the round-1 review, the pattern MinHash
-    should copy).
+    where P_k = sum_{j<k} byte[j] * B^-j, from one cumprod/cumsum pass.
 
     Returns (word_hashes uint64 in doc order, doc_off int64 len n_docs+1).
     """

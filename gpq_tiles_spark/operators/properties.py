@@ -34,10 +34,11 @@ def apply_property_filter(df: DataFrame, include: list[str] | None = None,
 def filter_field_metadata(fields: dict[str, str], include: list[str] | None = None,
                           exclude: list[str] | None = None,
                           exclude_all: bool = False) -> dict[str, str]:
+    """``fields`` with the filter applied by the same rule as the tags
+    (``pipeline._apply_property_filter``): a field survives when it is in
+    ``include`` (if given) and not in ``exclude``."""
     if exclude_all:
         return {}
-    if include is not None:
-        return {k: v for k, v in fields.items() if k in include}
-    if exclude:
-        return {k: v for k, v in fields.items() if k not in exclude}
-    return dict(fields)
+    exc = set(exclude or ())
+    return {k: v for k, v in fields.items()
+            if (include is None or k in include) and k not in exc}

@@ -1,13 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-[north-star training-data ops]. Two paths:
+[north-star training-data ops]. Three paths:
 * brute-force cosine top-k — Catalyst-only baseline using F.aggregate /
   F.zip_with (JVM codegen, no Python), correct at any scale where the probe
   side is broadcastable;
-* LSH-bucketed ANN — random-hyperplane signatures computed in one Arrow
-  batch UDF; candidates generated by multi-table equi-join on bucket keys,
-  exact cosine re-rank on candidates only. The shuffle carries
-  (bucket, vec_id) pairs, never raw vectors.
+* IVF ANN top-k — probes search their ``nprobe`` nearest centroid cells,
+  exact cosine re-rank on candidates only;
+* LSH-bucketed near-duplicate pairs — random-hyperplane signatures computed
+  in one Arrow batch UDF; candidates generated by multi-table equi-join on
+  bucket keys, exact cosine verify on candidates only.
+The candidate joins carry (cell or bucket, vec_id) pairs, never raw vectors.
 """
 
 from __future__ import annotations
@@ -124,7 +126,7 @@ def cosine_topk_ivf(vectors: DataFrame, probes: DataFrame, k: int,
                     centroids: np.ndarray, nprobe: int = 4,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
-    """IVF ANN [north-star scale path alongside LSH]: candidates = vectors
+    """IVF ANN [north-star scale path]: candidates = vectors
     whose IVF cell is among the probe's ``nprobe`` nearest cells; exact
     cosine re-rank on candidates only. The candidate join moves (cell, id)
     pairs — embeddings never shuffle."""
@@ -171,7 +173,8 @@ def embedding_near_duplicates(vectors: DataFrame, threshold: float,
     aggregate codegen). LSH path (``use_lsh=True``): random-hyperplane
     bucket candidates (any shared (table, bucket)) + exact cosine verify —
     the 10^9-vector scale path; the candidate join moves only (bucket, id)
-    pairs and hot buckets are capped like ``cosine_topk_lsh``.
+    pairs and a bucket holding more than ``max_bucket`` vectors is
+    dropped from that table before the candidate join.
 
     Guard: the exact path launches an O(n^2) self-join, so above
     ``EXACT_PAIRS_MAX_ROWS`` rows it raises with instructions (pass
@@ -262,44 +265,3 @@ def hyperplane_signatures(vectors: DataFrame, dim: int, n_planes: int = 16,
 
     return vectors.select(id_col, vec_col).mapInPandas(sign, schema=schema)
 
-
-def cosine_topk_lsh(vectors: DataFrame, probes: DataFrame, k: int, dim: int,
-                    n_planes: int = 12, n_tables: int = 8, seed: int = 42,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    max_bucket: int = 10000) -> DataFrame:
-    """Approximate top-k: LSH candidate generation + exact cosine re-rank.
-
-    Recall grows with n_tables; the candidate join never moves embeddings.
-    ``max_bucket`` caps the vectors-side bucket size before the candidate
-    join: a hot bucket (near-duplicate-heavy corpora, low-entropy regions of
-    the embedding space) with D vectors would emit D candidates PER PROBE
-    hashing there. Over-cap buckets are dropped from that table only; a
-    vector in a hot bucket of one table usually lands in a colder bucket of
-    another (multiprobe-style recall retention).
-    """
-    sigs_v = hyperplane_signatures(vectors, dim, n_planes, n_tables, seed, id_col, vec_col)
-    sigs_p = hyperplane_signatures(probes, dim, n_planes, n_tables, seed, id_col, vec_col)
-    hot = (
-        sigs_v.groupBy("table", "bucket").count()
-        .where(F.col("count") > max_bucket)
-        .select("table", "bucket")
-    )
-    sigs_v = sigs_v.join(F.broadcast(hot), ["table", "bucket"], "left_anti")
-    cand = (
-        sigs_p.select(F.col("vec_id").alias("probe_id"), "table", "bucket")
-        .join(sigs_v, ["table", "bucket"])
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id")
-        .distinct()
-    )
-    v = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
-    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec"))
-    joined = cand.join(v, "vec_id").join(F.broadcast(p), "probe_id")
-    sim = _cosine_col(F.col("vec"), F.col("probe_vec"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("probe_id", "rnk", "vec_id", "cosine")
-    )

@@ -75,6 +75,7 @@ from .kernels import tile_math as T
 from .kernels import validate as VK
 from .kernels import hashes as HK
 from .kernels.hashes import content_hash64, siphash13_coords
+from .operators.properties import filter_field_metadata
 from .partitioning import spread_small_input
 
 # fan-out rows (``fanout_records``): (z, x, y) are derivable from tile_id
@@ -200,25 +201,14 @@ def _count_tiles(metrics: PipelineMetrics | None, n_tiles: int,
 # Phase 1: fan-out
 # ---------------------------------------------------------------------------
 
-def _prep_feature_nohash(wkb: bytes, max_zoom: int, extent: int,
-                         simplification: str = "dp"):
-    """Per-feature once-only work MINUS the geometry hashes: decode,
-    pre-simplify at max_zoom tolerance (pipeline.rs:860-863), validate,
-    re-encode, drop-rule precomputations.
-
-    Returns (cache, hash_requests) where each hash request is a
-    (cache_key, part_index_or_None, word_array) triple to be filled by the
-    lockstep-batched SipHash pass (hashes.siphash13_words_many) — hashing
-    is state-sequential per message, so the only way to vectorize it is
-    across features.
-    """
-    g = G.from_wkb(wkb)
-    simplified = SK.simplify_for_zoom(g, max_zoom, extent, simplification)
-    return _prep_from_simplified(simplified)
-
-
 def _prep_from_simplified(simplified):
-    """Cache construction from an already max-zoom-simplified geometry."""
+    """Cache construction from an already max-zoom-simplified geometry:
+    validate, re-encode, drop-rule precomputations.
+
+    Returns (cache, hash_requests); each request is a (cache_key,
+    part_index_or_None, word_array) triple that ``_prep_batch`` fills in
+    one lockstep SipHash pass across the batch's features.
+    """
     validated = VK.filter_valid_geometry(simplified)
     cache = {"geom": simplified, "valid": validated}
     reqs: list[tuple[str, int | None, np.ndarray]] = []
@@ -247,21 +237,6 @@ def _prep_from_simplified(simplified):
              for p in validated[1]]
         )
     return cache, reqs
-
-
-def _prep_feature(wkb: bytes, max_zoom: int, extent: int,
-                  simplification: str = "dp"):
-    """Single-feature prep (batch path + batched hashes fused) — kept as
-    the scalar entry point for tests and one-off callers."""
-    cache, reqs = _prep_feature_nohash(wkb, max_zoom, extent, simplification)
-    if reqs:
-        hs = HK.siphash13_words_many([w for _, _, w in reqs])
-        for (key, pi, _), h in zip(reqs, hs):
-            if pi is None:
-                cache[key] = int(h)
-            else:
-                cache[key][pi] = h
-    return cache
 
 
 def _prep_batch(wkbs, rows: np.ndarray, caches: list, max_zoom: int,
@@ -713,7 +688,7 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
             if acc_bounds is not None:
                 acc_bounds.add(_batch_bounds(gx0, gy0, gx1, gy1))
 
-            caches: list[dict | None] = [None] * n  # lazy per-feature prep
+            caches: list[dict | None] = [None] * n  # _prep_batch fills non-points
             is_point = gtype == G.POINT
             grid_capable = np.isin(
                 gtype, (G.LINESTRING, G.POLYGON, G.MULTILINESTRING, G.MULTIPOLYGON)
@@ -758,13 +733,6 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
             _prep_batch(wkbs, np.nonzero(~is_point)[0], caches,
                         max_zoom, extent, simplification)
 
-            def get_cache(r: int) -> dict:
-                c = caches[r]
-                if c is None:
-                    c = caches[r] = _prep_feature(wkbs[r], max_zoom, extent,
-                                                  simplification)
-                return c
-
             for z in range(min_zoom, max_zoom + 1):
                 x0a, x1a, x0b, x1b, y0, y1 = T.tile_ranges_for_bbox(gx0, gy0, gx1, gy1, z)
                 span_a = np.maximum(x1a - x0a + 1, 0)
@@ -774,7 +742,7 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
 
                 # ---------- grid regime (large features) ----------
                 for r in np.nonzero(use_grid)[0]:
-                    c = get_cache(int(r))
+                    c = caches[r]
                     ranges_x = [(int(x0a[r]), int(x1a[r]))]
                     if x0b[r] <= x1b[r]:
                         ranges_x.append((int(x0b[r]), int(x1b[r])))
@@ -917,7 +885,7 @@ def make_fanout(config: TilerConfig, metrics: PipelineMetrics | None = None):
                 line_batch: dict[int, list[int]] = {}
                 for pos, fin in zip(gsel, fully_inside):
                     r = int(ridx[pos])
-                    c = get_cache(r)
+                    c = caches[r]
                     tb = (
                         float(t_lng0[pos]), float(t_lat0[pos]),
                         float(t_lng1[pos]), float(t_lat1[pos]),
@@ -2335,11 +2303,15 @@ def _write_sharded_archive(output_path: str, shard_dir: str, copy_plan,
             for sf in handles.values():
                 sf.close()
 
+    # the -y/-x/-X filter applies to the field metadata as to the tags
+    # (pipeline.rs:483-490)
+    fields = filter_field_metadata(
+        config.layer_fields or {}, config.include_properties,
+        config.exclude_properties, config.exclude_all_properties)
     return P.write_archive(
         output_path, *directory, copy_blobs, tile_compression=codec,
         layer_name=config.layer_name, min_zoom=config.min_zoom,
-        max_zoom=config.max_zoom, fields=config.layer_fields, bounds=bounds,
-        **counts)
+        max_zoom=config.max_zoom, fields=fields, bounds=bounds, **counts)
 
 
 # rows per pyarrow read of an entry file: the finalize's merge holds at

@@ -4,7 +4,7 @@
 "resume from Iceberg snapshot checkpoints"]. When the session has the
 Iceberg catalog configured (spark.sql.catalog.* + iceberg-spark-runtime on
 the classpath), these helpers read the documents table — optionally AS OF a
-snapshot — and enumerate snapshots for the checkpoint manifest. Without the
+snapshot, or only what was appended between two snapshots. Without the
 runtime they raise a clear error; the rest of the engine runs on plain
 parquet paths via the same DataFrame contract.
 """
@@ -57,16 +57,3 @@ def read_appended_documents(spark: SparkSession, table: str,
         reader = reader.option("end-snapshot-id", str(to_snapshot))
     return reader.load(table).select("doc_id", "spans")
 
-
-def snapshots(spark: SparkSession, table: str) -> list[dict]:
-    """Snapshot history for checkpoint keying (newest first)."""
-    if not iceberg_available(spark):  # pragma: no cover
-        raise RuntimeError("Iceberg runtime not on the classpath")
-    rows = spark.sql(
-        f"SELECT snapshot_id, committed_at, operation FROM {table}.snapshots "
-        "ORDER BY committed_at DESC"
-    ).collect()
-    return [
-        {"snapshot_id": r[0], "committed_at": str(r[1]), "operation": r[2]}
-        for r in rows
-    ]

@@ -2,22 +2,17 @@
 
 The reference has NO unbounded-streaming semantics — its "streaming" is
 bounded-memory batch (SURVEY.md §2.8, reference ADR-001). The engine
-therefore offers two incremental idioms:
-
-* ``incremental_extract`` — Structured Streaming over a document directory
-  with ``Trigger.AvailableNow``: each run drains exactly the files not yet
-  seen (checkpointed by the stream itself), extracts features, and appends
-  to a staging parquet. Combined with ``checkpoint.convert_with_checkpoints``
-  this gives snapshot-to-snapshot incremental tiling.
-* ``windowed_event_counts`` — a genuine Structured Streaming aggregation
-  (event-time window + watermark) over an events stream, demonstrating the
-  engine's late-data handling for live telemetry use.
+therefore offers one incremental idiom: ``incremental_extract``, Structured
+Streaming over a document directory with ``Trigger.AvailableNow``. Each run
+drains exactly the files not yet seen (checkpointed by the stream itself),
+extracts features, and appends to a staging parquet. Combined with
+``checkpoint.convert_with_checkpoints`` this gives snapshot-to-snapshot
+incremental tiling.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from .extract import FEATURES_SCHEMA, _extract_batches
 
@@ -46,69 +41,3 @@ def incremental_extract(spark: SparkSession, docs_dir: str, staging_dir: str,
     )
     q.awaitTermination()
 
-
-def streaming_first_seen(docs_stream: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Custom STATEFUL streaming operator [north-star:
-    applyInPandasWithState]: cross-microbatch exact dedup.
-
-    Keyed by content hash; per-key state is a seen flag persisted in the
-    streaming state store, so a document whose text already appeared in ANY
-    previous microbatch (e.g. a previous incremental drain with the same
-    checkpoint) is suppressed. Output rows: (content_hash, doc_id,
-    n_dups_in_batch) — one per FIRST global occurrence.
-
-    At 10^12-doc scale the state store shards by the hash key across
-    executors; only (hash -> flag) pairs persist, never text.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = docs_stream.select(
-        F.md5(F.col(text_col)).alias("content_hash"),
-        F.col(id_col).alias("doc_id"),
-    ).groupBy("content_hash")
-
-    def first_seen(key, pdfs, state):
-        n = 0
-        first = None
-        for pdf in pdfs:
-            n += len(pdf)
-            if first is None and len(pdf):
-                first = str(pdf["doc_id"].iloc[0])
-        if state.exists or first is None:
-            yield pd.DataFrame(
-                {"content_hash": [], "doc_id": [], "n_dups_in_batch": []}
-            ).astype({"content_hash": str, "doc_id": str, "n_dups_in_batch": "int64"})
-        else:
-            state.update((True,))
-            yield pd.DataFrame({
-                "content_hash": [key[0]],
-                "doc_id": [first],
-                "n_dups_in_batch": [n - 1],
-            })
-
-    return keyed.applyInPandasWithState(
-        first_seen,
-        outputStructType="content_hash string, doc_id string, n_dups_in_batch long",
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "10 minutes",
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Event-time windowed counts with late-data watermark (works on a
-    streaming OR batch events DataFrame with (ts, event_type))."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )

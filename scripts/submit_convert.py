@@ -4,7 +4,8 @@
     spark-submit --py-files dist/gpq_tiles_spark.zip \
         scripts/submit_convert.py INPUT OUTPUT.pmtiles \
         [--min-zoom 0] [--max-zoom 14] [--layer-name features] \
-        [--compression gzip|none] [--salted] [--work-dir DIR (checkpointed)]
+        [--compression gzip|none] [--salted] [--progress] \
+        [--work-dir DIR (checkpointed)]
 
 INPUT is a parquet path of interleaved documents (doc_id, spans) or — with
 --geoparquet — a GeoParquet file with a WKB geometry column.
@@ -36,12 +37,9 @@ def main() -> None:
                         "installed (import-gated)")
     p.add_argument("--salted", action="store_true")
     p.add_argument("--sharded", action="store_true",
-                   help="convert_sharded: the same archive writer (same "
-                        "bytes) with its shard files in a driver temp dir; "
-                        "fails on a non-local master, where that dir is "
-                        "not shared storage (the library's convert_sharded "
-                        "takes a shard_dir on storage executors and driver "
-                        "share)")
+                   help="accepted for compatibility; the default run "
+                        "already writes shards and streams them into one "
+                        "archive (same call, same bytes)")
     p.add_argument("--geoparquet", action="store_true")
     p.add_argument("--work-dir", default=None, help="enable checkpoint/resume")
     p.add_argument("--feature-id-mode", default="hash", choices=["hash", "rownum"])
@@ -105,20 +103,15 @@ def main() -> None:
                 "build props via gpq_tiles_spark.pipeline.encode_props_column"
             )
 
-    if args.sharded:
-        from gpq_tiles_spark.pipeline import convert_sharded
+    from gpq_tiles_spark.pipeline import convert
 
-        stats = convert_sharded(feats, args.output, cfg)
-    else:
-        from gpq_tiles_spark.pipeline import convert
+    progress = None
+    if args.progress:
+        def progress(ev):  # noqa: ANN001 - ProgressEvent
+            print(f"[{ev.phase}] {ev.kind} {ev.info}")
 
-        progress = None
-        if args.progress:
-            def progress(ev):  # noqa: ANN001 - ProgressEvent
-                print(f"[{ev.phase}] {ev.kind} {ev.info}")
-
-        stats = convert(feats, args.output, cfg, salted=args.salted,
-                        progress=progress)
+    stats = convert(feats, args.output, cfg, salted=args.salted,
+                    progress=progress)
     print(stats)
 
 

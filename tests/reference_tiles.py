@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from gpq_tiles_spark import pipeline as P
 from gpq_tiles_spark.kernels import mvt_fast
 from gpq_tiles_spark.kernels import pmtiles as PM
+from gpq_tiles_spark.operators.properties import filter_field_metadata
 
 
 def reference_tiles(features, config) -> pd.DataFrame:
@@ -61,7 +62,9 @@ def reference_archive(features, config, path: str) -> bytes:
         layer_name=config.layer_name,
         min_zoom=config.min_zoom,
         max_zoom=config.max_zoom,
-        fields=config.layer_fields,
+        fields=filter_field_metadata(
+            config.layer_fields or {}, config.include_properties,
+            config.exclude_properties, config.exclude_all_properties),
         leaf_max_entries=config.leaf_max_entries,
     )
     for t in tiles.itertuples(index=False):

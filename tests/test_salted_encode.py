@@ -65,6 +65,37 @@ def test_salted_without_hot_tiles_matches_unsalted(spark, docs_table,
     assert cold == _tile_bytes(encode_tiles_premerge(feats, cfg).collect())
 
 
+@pytest.mark.parametrize("max_tile_bytes", [None, 20_000])
+def test_megatile_input_salts_every_tile(spark, tmp_path, max_tile_bytes):
+    """The low-zoom mega-tile input that salting is kept for
+    (``scripts/measure_megatile.py``, BENCH.md "Skew handling"), scaled
+    down: every z0-6 tile is hot, and the salted archive has the unsalted
+    bytes, with and without a tile budget that thins the mega tiles."""
+    import importlib.util
+    import os
+
+    script = os.path.join(os.path.dirname(__file__), "..", "scripts",
+                          "measure_megatile.py")
+    spec = importlib.util.spec_from_file_location("measure_megatile", script)
+    mega = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mega)
+
+    feats = spark.read.parquet(mega.write_points(str(tmp_path), 20_000, 4, 1))
+    cfg = TilerConfig(min_zoom=0, max_zoom=mega.ZOOM, shuffle_partitions=4,
+                      hot_tile_threshold=1_000, salt_buckets=4,
+                      max_tile_bytes=max_tile_bytes)
+    assert len(detect_hot_tiles(feats, cfg)) == mega.ZOOM + 1
+
+    p_plain = str(tmp_path / "plain.pmtiles")
+    p_salted = str(tmp_path / "salted.pmtiles")
+    stats = convert(feats, p_plain, cfg)
+    convert(feats, p_salted, cfg, salted=True)
+    assert stats["tiles"] == mega.ZOOM + 1
+    if max_tile_bytes is not None:
+        assert stats["metrics"]["tiles_capped"] > 0
+    with open(p_plain, "rb") as a, open(p_salted, "rb") as b:
+        assert a.read() == b.read()
+
 def test_detect_hot_tiles_explicit_zero_threshold(spark, docs_table):
     """``threshold=0`` flags every tile holding a feature center; it is not
     replaced by the config default."""

@@ -1,5 +1,5 @@
-"""GeoParquet source, quality assessment, multimodal plumbing, raster ops,
-property filter, checkpoint/resume."""
+"""GeoParquet source, quality assessment, raster ops, property filter,
+checkpoint/resume."""
 
 import os
 
@@ -102,42 +102,6 @@ def test_assess_quality_tiny_rowgroups(tmp_path):
     assert any("row group" in w for w in q.warnings)
     # input is genuinely hilbert-sorted -> sample check should say so
     assert q.hilbert_sorted_sample is True
-
-
-def test_multimodal_plumbing(spark):
-    from gpq_tiles_spark.operators.multimodal import (
-        frame_sample_plan,
-        image_features,
-        media_metadata,
-    )
-    from tests.test_multimodal_codecs import make_png
-
-    rows = []
-    for i in range(20):
-        px = np.fromfunction(
-            lambda y, x: (x * 16 + y + i) % 256, (12, 16)
-        ).astype(np.uint8)[:, :, None]
-        rows.append((f"media/{i:04d}.png", "image",
-                     make_png(16, 12, px, ctype=0)))
-    df = spark.createDataFrame(rows, schema="media_ref string, media_kind string, payload binary")
-    meta = media_metadata(df).collect()
-    assert len(meta) == 20
-    assert len({m.content_hash for m in meta}) == 20
-
-    # REAL PNG decode (stdlib codec) through the Arrow-batched extractor
-    feats = image_features(df).collect()
-    assert len(feats) == 20
-    assert all(len(f.features) == 16 for f in feats)
-    assert all(f.width == 16 and f.height == 12 for f in feats)
-
-    vids = spark.createDataFrame(
-        [("v0", 10.0), ("v1", 1.0)], schema="media_ref string, duration_sec double"
-    )
-    plan = frame_sample_plan(vids, fps=0.5).collect()
-    per = {}
-    for r in plan:
-        per.setdefault(r.media_ref, []).append(r.frame_ts)
-    assert len(per["v0"]) == 5 and len(per["v1"]) == 1
 
 
 def test_raster_roundtrip(spark):
@@ -245,6 +209,39 @@ def test_checkpointed_archive_carries_layer_fields(spark, docs_table,
     with open(p1, "rb") as f1, open(p2, "rb") as f2:
         assert f1.read() == f2.read()
 
+
+def test_property_filter_applies_to_metadata_fields(spark, docs_table,
+                                                   tmp_path):
+    """-y/-x/-X filter the archive's ``vector_layers[].fields`` as they
+    filter the tags (pipeline.rs:483-490), on ``convert`` and on the
+    checkpointed run."""
+    from gpq_tiles_spark.checkpoint import convert_with_checkpoints
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.extract import extract_features
+    from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
+    from gpq_tiles_spark.pipeline import convert
+
+    fields = {"name": "String", "height": "Number"}
+    feats = extract_features(spark.read.parquet(docs_table))
+    for i, (flt, want) in enumerate([
+        ({"include_properties": ["name"]}, {"name": "String"}),
+        ({"exclude_properties": ["name"]}, {"height": "Number"}),
+        ({"exclude_all_properties": True}, {}),
+    ]):
+        cfg = TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=4,
+                          layer_fields=fields, **flt)
+        out = str(tmp_path / f"filtered{i}.pmtiles")
+        convert(feats, out, cfg)
+        got = PMTilesReader(out).metadata["vector_layers"][0]["fields"]
+        assert got == want, flt
+    ckpt = str(tmp_path / "ckpt.pmtiles")
+    convert_with_checkpoints(
+        spark, docs_table, ckpt, str(tmp_path / "wd"),
+        TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=4,
+                    layer_fields=fields, include_properties=["name"]))
+    got = PMTilesReader(ckpt).metadata["vector_layers"][0]["fields"]
+    assert got == {"name": "String"}
+    assert fields == {"name": "String", "height": "Number"}  # not mutated
 
 def _group_jobs(sc, fn) -> list[list[str]]:
     """Run ``fn`` under a fresh job group -> its jobs' stage names."""

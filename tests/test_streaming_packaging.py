@@ -39,16 +39,6 @@ def test_incremental_extract_drains_only_new_files(spark, tmp_path):
     assert n2 - n1 == expected_new
 
 
-def test_windowed_event_counts_batch(spark):
-    from gpq_tiles_spark.streaming import windowed_event_counts
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = windowed_event_counts(ev, window="1 hour")
-    rows = out.collect()
-    assert len(rows) > 0
-    assert sum(r.n_events for r in rows) == ev.count()
-
-
 def test_package_pyfiles_zip(tmp_path):
     out = str(tmp_path / "pkg.zip")
     res = subprocess.run(
@@ -64,51 +54,3 @@ def test_package_pyfiles_zip(tmp_path):
     assert "gpq_tiles_spark/pipeline.py" in names
     assert "gpq_tiles_spark/kernels/hilbert.py" in names
     assert not any("__pycache__" in n for n in names)
-
-
-def test_streaming_first_seen_stateful_dedup(spark, tmp_path):
-    """applyInPandasWithState: dedup state survives ACROSS microbatches —
-    a text first seen in drain 1 is suppressed when it reappears in drain 2
-    (same stream checkpoint)."""
-    import pandas as pd
-
-    from gpq_tiles_spark.streaming import streaming_first_seen
-
-    docs_dir = str(tmp_path / "docs")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    import os
-    os.makedirs(docs_dir, exist_ok=True)
-
-    def drain():
-        stream = (
-            spark.readStream.schema("doc_id string, text string").parquet(docs_dir)
-        )
-        q = (
-            streaming_first_seen(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).collect()
-
-    pd.DataFrame({
-        "doc_id": ["a", "b", "b2"],
-        "text": ["alpha text", "beta text", "beta text"],  # in-batch dup
-    }).to_parquet(docs_dir + "/batch1.parquet")
-    rows1 = drain()
-    assert len(rows1) == 2  # alpha + beta (first occurrences)
-    beta = [r for r in rows1 if r.doc_id in ("b", "b2")][0]
-    assert beta.n_dups_in_batch == 1
-
-    pd.DataFrame({
-        "doc_id": ["c", "a2"],
-        "text": ["gamma text", "alpha text"],  # cross-batch dup of 'alpha'
-    }).to_parquet(docs_dir + "/batch2.parquet")
-    rows2 = drain()
-    new = {r.doc_id for r in rows2} - {r.doc_id for r in rows1}
-    assert new == {"c"}  # 'alpha text' suppressed by the persisted state

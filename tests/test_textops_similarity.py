@@ -1,20 +1,15 @@
-"""Text analysis, dedup, and similarity operator tests."""
+"""Dedup and similarity operator tests."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gpq_tiles_spark.operators import textops as TX
 from gpq_tiles_spark.operators.dedup import (
-    exact_duplicates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
 )
-from gpq_tiles_spark.operators.similarity import (
-    cosine_topk_bruteforce,
-    cosine_topk_lsh,
-)
+from gpq_tiles_spark.operators.similarity import cosine_topk_bruteforce
 
 
 @pytest.fixture(scope="module")
@@ -29,13 +24,6 @@ def text_df(spark):
         ("d5", "le renard brun et rapide saute et les chiens dorment"),
     ]
     return spark.createDataFrame(rows, schema="doc_id string, text string")
-
-
-def test_exact_duplicates(spark, text_df):
-    dups = exact_duplicates(text_df).collect()
-    assert len(dups) == 1
-    assert dups[0].n_copies == 2 and dups[0].keeper == "d0"
-    assert dups[0].all_ids == ["d0", "d1"]
 
 
 def test_minhash_near_duplicates(spark, text_df):
@@ -66,64 +54,6 @@ def test_ngram_jaccard(spark, text_df):
     assert ("d0", "d4") not in got
 
 
-def test_language_scores(spark, text_df):
-    out = {r.doc_id: r.predicted_lang for r in TX.language_scores(text_df).collect()}
-    assert out["d0"] == "en"
-    assert out["d3"] == "de"
-    assert out["d5"] == "fr"
-
-
-def test_token_counts(spark, text_df):
-    df = text_df.select(
-        "doc_id",
-        TX.whitespace_token_count(F.col("text")).alias("ws"),
-        TX.bpe_ish_token_count(F.col("text")).alias("bpe"),
-    )
-    rows = {r.doc_id: (r.ws, r.bpe) for r in df.collect()}
-    assert rows["d0"][0] == 14  # whitespace tokens
-    assert rows["d0"][1] >= 14  # regex tokenization never merges words
-
-
-def test_quality_features(spark, text_df):
-    out = {r.doc_id: r.quality_score for r in TX.quality_features(text_df).collect()}
-    assert out["d0"] > out["d4"]  # stopword-rich beats stopword-free
-
-
-def test_rolling_fingerprints_vectorized_correct(spark):
-    # verify the vectorized Rabin-Karp against a scalar reference
-    text = "abcdefghijklmnopqrstuvwxyz" * 8
-    window = 16
-    df = spark.createDataFrame([("x", text)], schema="doc_id string, text string")
-    got = {r.fingerprint for r in TX.rolling_fingerprints(
-        df, window=window, keep_mod=4).collect()}
-
-    data = text.encode()
-    B = 257
-    M = 1 << 64
-    expect = set()
-    for i in range(len(data) - window + 1):
-        h = 0
-        for j in range(window):
-            h = (h * B + data[i + j]) % M
-        if h % 4 == 0:
-            expect.add(h - M if h >= (1 << 63) else h)
-    assert got == expect and len(expect) > 0
-
-
-def test_fingerprints_shared_window_overlap(spark):
-    a = "PREFIX common shared central segment of text SUFFIX-A tail tail"
-    b = "OTHERSTART common shared central segment of text DIFFERENT end"
-    df = spark.createDataFrame(
-        [("a", a), ("b", b)], schema="doc_id string, text string"
-    )
-    fps = TX.rolling_fingerprints(df, window=24, keep_mod=2)
-    overlap = (
-        fps.groupBy("fingerprint").agg(F.countDistinct("doc_id").alias("n"))
-        .where(F.col("n") > 1).count()
-    )
-    assert overlap > 0  # shared substring -> shared fingerprints
-
-
 @pytest.fixture(scope="module")
 def vec_df(spark):
     rng = np.random.default_rng(42)
@@ -149,14 +79,6 @@ def test_cosine_bruteforce_matches_numpy(spark, vec_df):
         assert sorted(got[pid]) == [(i + 1, int(order[i])) for i in range(5)]
     # nearest neighbor of 0 is its perturbed copy
     assert got[0][0] == (1, 1) or sorted(got[0])[0] == (1, 1)
-
-
-def test_cosine_lsh_finds_near_duplicate(spark, vec_df):
-    df, vecs = vec_df
-    probes = df.where(F.col("vec_id") == 0)
-    out = cosine_topk_lsh(df, probes, k=5, dim=16, n_planes=8, n_tables=12).collect()
-    ranked = sorted((r.rnk, r.vec_id) for r in out)
-    assert ranked and ranked[0][1] == 1  # the perturbed twin is found
 
 
 def test_minhash_signatures_vectorized_stable(spark, text_df):
@@ -215,16 +137,6 @@ def test_simhash_hot_bucket_cap_completes(spark):
     assert capped == []
     uncapped = simhash_near_duplicates(df, max_hamming=3, max_bucket=1000).collect()
     assert len(uncapped) == 12 * 11 // 2
-
-
-def test_lsh_hot_bucket_cap(spark, vec_df):
-    """cosine_topk_lsh with a tiny bucket cap still completes and returns a
-    bounded candidate set; with the default cap it finds the twin."""
-    df, _ = vec_df
-    probes = df.where(F.col("vec_id") == 0)
-    out = cosine_topk_lsh(df, probes, k=5, dim=16, n_planes=2, n_tables=4,
-                          max_bucket=3).collect()
-    assert len(out) <= 5 * 4  # bounded by k per probe regardless of hot buckets
 
 
 def test_embedding_near_duplicates_lsh_matches_bruteforce(spark, vec_df):
