@@ -4,21 +4,26 @@
 joins, kNN via cell-ring expansion"]. Both are cell-index prefilter +
 exact-refine patterns, with no Python loop per key or per row:
 
-* PIP: polygons are covered with grid cells (one row per (cell, zone), one
-  vectorized cover call over every zone bbox), points carry their cell as a
-  Catalyst expression column; the equi-join on the int64 cell column prunes
-  the candidate space, then each Arrow batch is grouped by zone once
-  (factorize + stable argsort) and a vectorized ray-casting kernel refines
-  each zone's contiguous slice. Small polygon sides are broadcast — no
-  shuffle of the point table beyond the cell join.
-* kNN (``knn_join``): probes expand grid disks r=2,4,... over the cached,
+* PIP: polygons are covered with grid cells (one vectorized cover call over
+  every zone bbox). With the zones on the driver (the default), the cover
+  is two cell-sorted numpy arrays (cell, zone index) in the refine's
+  closure, and the join is ONE ``mapInPandas`` pass over the points: each
+  Arrow batch computes its points' cells, finds their cover rows by
+  ``searchsorted``, and runs a vectorized ray-casting kernel per zone over
+  those rows (grouped once by a stable argsort). No cover DataFrame, no
+  join, no exchange beyond spreading an under-partitioned point input.
+  Zones too many to hold, or a cover above ``PIP_DRIVER_MAX_COVER_CELLS``,
+  take the distributed path: a cell equi-join against a cover DataFrame,
+  the zone WKB joined back per candidate, and the same grouped refine.
+* kNN (``knn_join``): probes expand grid disks r=2,4,... over the
   cell-indexed points until the kth neighbor distance is provably within
   the ring bound. A round is one narrow Arrow pass: the cell-sorted
   (probe, cell) disk pairs ride in the ``mapInPandas`` closure, each point
-  batch finds its probes by ``searchsorted`` on its cell, computes the
-  squared distances and keeps, per probe, the rows within its batch-local
-  kth distance (ties included); a window top-k over those few rows orders
-  (d, point_id) exactly, and its n_probes x k rows come back over Arrow.
+  batch finds its probes by ``searchsorted`` on its cell and computes the
+  squared distances, and each task keeps, per probe, a running top-k
+  across its batches (ties at the kth distance included). Those rows come
+  back over Arrow, at most tasks x probes x k of them plus ties, and the
+  driver ranks them exactly on (probe_id, d, point_id).
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -43,18 +49,38 @@ from ..kernels import tile_math as T
 from ..partitioning import spread_small_input
 from . import cells as C
 
+# The broadcast PIP path holds the whole zone cover in numpy on the driver
+# and in every refine task's closure (12 bytes a cover cell): above this
+# many cells it takes the distributed cover join instead.
+PIP_DRIVER_MAX_COVER_CELLS = 1 << 20
 
-def _cover_rows(zone_ids, bboxes, zoom: int) -> tuple[np.ndarray, np.ndarray]:
-    """(zone_id, cell) cover rows of zones with bboxes (x0, y0, x1, y1):
+
+def _cover_index(bboxes, zoom: int) -> tuple[np.ndarray, np.ndarray]:
+    """(zone index, cell) cover rows of zones with bboxes (x0, y0, x1, y1):
     one vectorized ``cover_bbox_cells`` call, stably ordered by zone, so the
     rows come out zone by zone exactly as one call per zone gives them."""
-    ids = np.asarray(zone_ids, dtype=object)
-    if len(ids) == 0:
-        return ids, np.empty(0, dtype=np.int64)
     b = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
+    if len(b) == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     ridx, cells = C.cover_bbox_cells(b[:, 0], b[:, 1], b[:, 2], b[:, 3], zoom)
     order = np.argsort(ridx, kind="stable")
-    return ids[ridx[order]], cells[order]
+    return ridx[order], cells[order]
+
+
+def _cover_rows(zone_ids, bboxes, zoom: int) -> tuple[np.ndarray, np.ndarray]:
+    """(zone_id, cell) cover rows: ``_cover_index`` with the zone ids."""
+    ids = np.asarray(zone_ids, dtype=object)
+    idx, cells = _cover_index(bboxes, zoom)
+    return ids[idx], cells
+
+
+def _cover_size(bboxes, zoom: int) -> int:
+    """The number of rows ``_cover_index`` would give, without making them."""
+    b = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
+    x0a, x1a, x0b, x1b, y0, y1 = T.tile_ranges_for_bbox(
+        b[:, 0], b[:, 1], b[:, 2], b[:, 3], zoom)
+    nx = np.maximum(x1a - x0a + 1, 0) + np.maximum(x1b - x0b + 1, 0)
+    return int((nx * np.maximum(y1 - y0 + 1, 0)).sum())
 
 
 def polygon_cell_cover(zones: DataFrame, wkb_col: str = "zone_wkb",
@@ -78,7 +104,8 @@ def polygon_cell_cover(zones: DataFrame, wkb_col: str = "zone_wkb",
 
 def auto_cover_zoom(zones: DataFrame, zone_wkb: str = "zone_wkb",
                     sample: int = 512) -> int:
-    """Pick the cell-cover zoom from the zones' sizes: cell width ~ the
+    """Pick the cell-cover zoom from the zones' sizes: ``_cover_zoom`` over
+    the first ``sample`` zone rows (one Spark job). Cell width ~ the
     median zone bbox width, so a zone covers O(1) cells AND a cell holds
     O(1) zones. A fixed zoom silently degrades into an all-pairs join when
     zones are much smaller than the cells (measured: 200 city polygons at
@@ -99,28 +126,93 @@ def _cover_zoom(bboxes) -> int:
 
 _PIP_COLS = ["point_id", "lng", "lat", "zone_id"]
 
+_PIP_SCHEMA = StructType([
+    StructField("point_id", LongType()),
+    StructField("lng", DoubleType()),
+    StructField("lat", DoubleType()),
+    StructField("zone_id", StringType()),
+])
+
+
+def _sorted_matches(sorted_keys: np.ndarray,
+                    keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(i, j) for every ``keys[i] == sorted_keys[j]``, i ascending, j in
+    ``sorted_keys`` order within each i: two ``searchsorted`` calls and a
+    flat expansion of the matched ranges."""
+    lo = np.searchsorted(sorted_keys, keys, "left")
+    cnt = np.searchsorted(sorted_keys, keys, "right") - lo
+    i = np.repeat(np.arange(len(keys)), cnt)
+    j = (np.arange(len(i)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+         + np.repeat(lo, cnt))
+    return i, j
+
+
+def _group_hits(px: np.ndarray, py: np.ndarray, codes: np.ndarray,
+                geom_at: Callable[[int, int], tuple]) -> np.ndarray:
+    """Ray-cast hit mask of the candidate rows (px, py) against their zone
+    ``codes`` (ints >= 0): the rows are grouped by code once (stable
+    argsort) and the kernel runs on each code's contiguous slice.
+    ``geom_at(code, row)`` gives the zone's geometry, ``row`` being the
+    position of the code's first candidate."""
+    order = np.argsort(codes, kind="stable")
+    sc = codes[order]
+    starts = np.flatnonzero(np.diff(sc, prepend=-1))
+    ends = np.append(starts[1:], len(order))
+    sx, sy = px[order], py[order]
+    hit = np.empty(len(order), dtype=bool)
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        hit[s:e] = PIPK.points_in_geom(sx[s:e], sy[s:e],
+                                       geom_at(sc[s], int(order[s])))
+    keep = np.empty(len(order), dtype=bool)
+    keep[order] = hit
+    return keep
+
 
 def _refine_by_zone(pdf: pd.DataFrame,
                     geom_at: Callable[[object, int], tuple]) -> pd.DataFrame:
-    """The exact PIP refine of one candidate batch: group the rows by
-    ``zone_id`` once (factorize + stable argsort), run the ray-casting
-    kernel on each zone's contiguous slice, keep the hits in batch order.
-    ``geom_at(zone_id, row)`` gives the zone's geometry, ``row`` being the
-    position of the zone's first candidate in the batch."""
+    """The exact PIP refine of one candidate batch of the cover join:
+    ``_group_hits`` over the batch's ``zone_id`` codes (one factorize),
+    hits kept in batch order. ``geom_at(zone_id, row)`` gives the zone's
+    geometry, ``row`` being the position of the zone's first candidate in
+    the batch."""
     codes, uniq = pd.factorize(pdf["zone_id"], use_na_sentinel=False)
-    order = np.argsort(codes, kind="stable")
-    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
-    ends = np.append(starts[1:], len(order))
-    px = pdf["lng"].to_numpy(dtype=np.float64)[order]
-    py = pdf["lat"].to_numpy(dtype=np.float64)[order]
-    hit = np.empty(len(order), dtype=bool)
-    for s, e in zip(starts.tolist(), ends.tolist()):
-        first = int(order[s])
-        hit[s:e] = PIPK.points_in_geom(
-            px[s:e], py[s:e], geom_at(uniq[codes[first]], first))
-    keep = np.empty(len(order), dtype=bool)
-    keep[order] = hit
+    keep = _group_hits(pdf["lng"].to_numpy(dtype=np.float64),
+                       pdf["lat"].to_numpy(dtype=np.float64), codes,
+                       lambda c, row: geom_at(uniq[c], row))
     return pdf[keep][_PIP_COLS]
+
+
+def _refine_local_cover(names: list, geoms: list, bboxes: list, zoom: int):
+    """mapInPandas body of the broadcast PIP join over (point_id, lng,
+    lat) batches -> (point_id, lng, lat, zone_id) hits. The zones' cover
+    rides in the closure as two cell-sorted arrays (cell, zone index);
+    each batch computes its points' cells (``cells.latlng_to_cell``, the
+    numpy twin of ``cell_sql``), finds their cover rows by
+    ``searchsorted`` and refines them with ``_group_hits``. Points with a
+    null, NaN or infinite coordinate are dropped before the lookup: they
+    match no zone on the cell-join path either."""
+    zone, cells = _cover_index(bboxes, zoom)
+    order = np.argsort(cells, kind="stable")
+    cov_cell, cov_zone = cells[order], zone[order]
+    names = np.asarray(names, dtype=object)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            px = pdf["lng"].to_numpy(dtype=np.float64)
+            py = pdf["lat"].to_numpy(dtype=np.float64)
+            ok = np.flatnonzero(np.isfinite(px) & np.isfinite(py))
+            i, j = _sorted_matches(
+                cov_cell, C.latlng_to_cell(px[ok], py[ok], zoom))
+            row, z = ok[i], cov_zone[j]
+            hit = _group_hits(px[row], py[row], z,
+                              lambda c, _row: geoms[c])
+            row, z = row[hit], z[hit]
+            yield pd.DataFrame({
+                "point_id": pdf["point_id"].to_numpy()[row],
+                "lng": px[row], "lat": py[row], "zone_id": names[z],
+            })
+
+    return run
 
 
 def point_in_polygon_join(points: DataFrame, zones: DataFrame,
@@ -130,71 +222,57 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           zoom: int | str = "auto",
                           broadcast_zones: bool = True) -> DataFrame:
     """Exact PIP join -> (point_id, lng, lat, zone_id). ``zoom='auto'``
-    (default) sizes the cell grid to the zones (see auto_cover_zoom).
+    (default) sizes the cell grid to the zones: ``_cover_zoom`` over the
+    first 512 zone rows, on either path (see auto_cover_zoom). Points with
+    a null or NaN coordinate match no zone.
 
-    Not fully lazy: with ``broadcast_zones`` (the default) the call
-    collects the zone table (one Spark job) to build the cell cover and the
-    refine's geometries; with ``broadcast_zones=False`` and
-    ``zoom='auto'`` it collects a sample of the zones to pick the zoom.
-    The point side stays lazy until the returned frame runs."""
-    geoms = None
+    Not fully lazy. With ``broadcast_zones`` (the default) the call
+    collects the zone table (one Spark job) and builds the cell cover on
+    the driver; a zone_id that appears in several rows keeps the geometry
+    of its last collected row. The returned frame is one ``mapInPandas``
+    over the points (spread to the task slots if under-partitioned): no
+    join, no broadcast exchange. When that cover would exceed
+    ``PIP_DRIVER_MAX_COVER_CELLS`` cells, the call goes on as with
+    ``broadcast_zones=False``: a cover DataFrame joined to the points on
+    the cell column, the zone WKB joined back per candidate. On that path
+    ``zoom='auto'`` collects the first 512 zone rows (one Spark job). The
+    point side stays lazy until the returned frame runs."""
+    pts = spread_small_input(points.select(
+        F.col(point_id).cast("long").alias("point_id"),
+        F.col(lng).cast("double").alias("lng"),
+        F.col(lat).cast("double").alias("lat")))
     if broadcast_zones:
-        # the broadcastable-zones path collects the zone table anyway (the
-        # refine kernel needs every polygon on every executor) — so build
-        # the cell cover driver-side from that ONE collect instead of
-        # paying a mapInPandas job for it plus a second collect (round 7;
-        # guide §1.2). The cover rows are identical to polygon_cell_cover.
-        zrows = zones.select(zone_id, zone_wkb).collect()
-        geoms = {r[0]: G.from_wkb(bytes(r[1])) for r in zrows}
-        bboxes = [G.bbox(g) for g in geoms.values()]
+        zrows = zones.select(F.col(zone_id).cast("string"), zone_wkb).collect()
+        ids = [r[0] for r in zrows]
+        parsed = [G.from_wkb(bytes(r[1])) for r in zrows]
+        bboxes = [G.bbox(g) for g in parsed]
         if zoom == "auto":
             zoom = _cover_zoom(bboxes[:512])
-        ids, cells = _cover_rows(list(geoms), bboxes, zoom)
-        cover = F.broadcast(points.sparkSession.createDataFrame(
-            pd.DataFrame({"zone_id": pd.Series(ids, dtype=object),
-                          "cell": pd.Series(cells, dtype=np.int64)}),
-            schema="zone_id string, cell long"))
-    else:
-        if zoom == "auto":
-            zoom = auto_cover_zoom(zones, zone_wkb)
-        cover = polygon_cell_cover(zones, zone_wkb, zone_id, zoom)
-    # under-partitioned point input (one unsplittable file) would serialize
-    # the candidate join AND the ray-cast refine on one core (guide §2.5)
-    pts = C.with_cell_column(
-        spread_small_input(points.select(point_id, lng, lat)), lng, lat, zoom)
-    cand = pts.join(cover, "cell").select(point_id, lng, lat, "zone_id")
+        # a repeated zone_id keeps its last row (dict: first-seen order)
+        last = list(dict(zip(ids, range(len(ids)))).values())
+        bboxes = [bboxes[i] for i in last]
+        if _cover_size(bboxes, zoom) <= PIP_DRIVER_MAX_COVER_CELLS:
+            return pts.mapInPandas(
+                _refine_local_cover([ids[i] for i in last],
+                                    [parsed[i] for i in last], bboxes, zoom),
+                schema=_PIP_SCHEMA)
+    elif zoom == "auto":
+        zoom = auto_cover_zoom(zones, zone_wkb)
 
-    schema = StructType(
-        [
-            StructField("point_id", LongType()),
-            StructField("lng", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("zone_id", StringType()),
-        ]
-    )
+    # the distributed path: join the cover on the cell column, then the wkb
+    # back per candidate (zones too large to hold), and refine per zone
+    # group within partitions
+    cover = polygon_cell_cover(zones, zone_wkb, zone_id, zoom)
+    cand = (C.with_cell_column(pts, "lng", "lat", zoom)
+            .join(cover, "cell")
+            .join(zones.select(F.col(zone_id).alias("zone_id"),
+                               F.col(zone_wkb).alias("zone_wkb")), "zone_id")
+            .select(*_PIP_COLS, "zone_wkb"))
 
-    if geoms is not None:
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _refine_by_zone(pdf, lambda zid, _row: geoms[zid])
-
-        cand = cand.select(
-            F.col(point_id).alias("point_id").cast("long"),
-            F.col(lng).alias("lng"),
-            F.col(lat).alias("lat"),
-            "zone_id",
-        )
-        return cand.mapInPandas(refine, schema=schema)
-
-    # non-broadcast path: join the wkb back per candidate (zones too large to
-    # broadcast), refine per (zone) group within partitions
-    cand2 = cand.join(zones.select(zone_id, zone_wkb), "zone_id")
-
-    def refine2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict = {}
         for pdf in batches:
-            wkbs = pdf[zone_wkb]
+            wkbs = pdf["zone_wkb"]
 
             def geom_at(zid, row):
                 g = cache.get(zid)
@@ -204,11 +282,7 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
 
             yield _refine_by_zone(pdf, geom_at)
 
-    cand2 = cand2.select(
-        F.col(point_id).alias("point_id").cast("long"),
-        F.col(lng).alias("lng"), F.col(lat).alias("lat"), "zone_id", zone_wkb,
-    )
-    return cand2.mapInPandas(refine2, schema=schema)
+    return cand.mapInPandas(refine, schema=_PIP_SCHEMA)
 
 
 # knn_join collect()s the probe side: refuse above this count and point at
@@ -229,6 +303,21 @@ def _disk_pairs(p_cell: np.ndarray, r: int,
     return idx[keep], cells[keep]
 
 
+def _keep_topk_ties(probe: np.ndarray, ids: np.ndarray, d: np.ndarray,
+                    k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The rows whose ``d`` is not above their probe's kth smallest ``d``
+    (ties at the kth distance included; a NaN ``d`` sorts last and is kept
+    while the probe has fewer than k numbers)."""
+    order = np.lexsort((d, probe))
+    grp = probe[order]
+    starts = np.flatnonzero(np.diff(grp, prepend=-1))
+    sizes = np.diff(np.append(starts, len(grp)))
+    kth = d[order][starts + np.minimum(sizes, k) - 1]
+    # "not above" rather than "<=": a NaN distance stays a candidate
+    sel = order[~(d[order] > np.repeat(kth, sizes))]
+    return probe[sel], ids[sel], d[sel]
+
+
 def _ring_candidates(pair_probe: np.ndarray, pair_cell: np.ndarray,
                      p_ids: np.ndarray, p_lng: np.ndarray, p_lat: np.ndarray,
                      k: int):
@@ -236,40 +325,60 @@ def _ring_candidates(pair_probe: np.ndarray, pair_cell: np.ndarray,
     batches -> (probe_id, point_id, d) rows. Each point meets the probes
     whose disk holds its cell (``searchsorted`` over the cell-sorted
     pairs); ``d`` is ``dx*dx + dy*dy``, the same IEEE operations as the
-    Catalyst expression it replaces. Per probe, a batch keeps the rows
-    with ``d`` up to its own kth smallest ``d`` (ties included), a
-    superset of that batch's share of the global (d, point_id) top-k, so
-    the exact tie-break on point_id stays with Spark for any id type."""
+    Catalyst expression of ``knn_join_distributed``. The task carries a
+    running top-k per probe across its batches (``_keep_topk_ties``) and
+    yields it once, after its last batch: a superset of the task's share
+    of the global (d, point_id) top-k, so the driver's ranking of every
+    task's rows is exact for any id type."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        probe = np.empty(0, dtype=np.int64)
+        d = np.empty(0, dtype=np.float64)
+        ids = None
         for pdf in batches:
-            cell = pdf["cell"].to_numpy(dtype=np.int64)
-            lo = np.searchsorted(pair_cell, cell, "left")
-            cnt = np.searchsorted(pair_cell, cell, "right") - lo
-            total = int(cnt.sum())
-            if total == 0:
+            row, pair = _sorted_matches(
+                pair_cell, pdf["cell"].to_numpy(dtype=np.int64))
+            if len(row) == 0:
                 continue
-            row = np.repeat(np.arange(len(cell)), cnt)
-            pair = (np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                    + np.repeat(lo, cnt))
-            probe = pair_probe[pair]
-            dx = pdf["lng"].to_numpy(dtype=np.float64)[row] - p_lng[probe]
-            dy = pdf["lat"].to_numpy(dtype=np.float64)[row] - p_lat[probe]
-            d = dx * dx + dy * dy
-            order = np.lexsort((d, probe))
-            grp = probe[order]
-            starts = np.flatnonzero(np.diff(grp, prepend=-1))
-            sizes = np.diff(np.append(starts, total))
-            kth = d[order][starts + np.minimum(sizes, k) - 1]
-            # "not above" rather than "<=": a NaN distance stays a candidate
-            sel = order[~(d[order] > np.repeat(kth, sizes))]
-            yield pd.DataFrame({
-                "probe_id": p_ids[probe[sel]],
-                "point_id": pdf["point_id"].to_numpy()[row[sel]],
-                "d": d[sel],
-            })
+            bp = pair_probe[pair]
+            dx = pdf["lng"].to_numpy(dtype=np.float64)[row] - p_lng[bp]
+            dy = pdf["lat"].to_numpy(dtype=np.float64)[row] - p_lat[bp]
+            bid = pdf["point_id"].to_numpy()[row]
+            probe, ids, d = _keep_topk_ties(
+                np.concatenate([probe, bp]),
+                bid if ids is None else np.concatenate([ids, bid]),
+                np.concatenate([d, dx * dx + dy * dy]), k)
+        if ids is not None:
+            yield pd.DataFrame({"probe_id": p_ids[probe], "point_id": ids,
+                                "d": d})
 
     return run
+
+
+def _rank_topk(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The first k (probe_id, point_id, d) rows per probe in Spark's
+    ``ORDER BY d, point_id`` (NaN distances last, null ids first; a float
+    id's NaN counts as null) -> (probe_id, rnk, point_id, dist), rnk
+    1..k: one lexsort, then each probe's leading rows."""
+    pid = cand["point_id"].to_numpy()
+    null = cand["point_id"].isna().to_numpy()
+    key = pid
+    if null.any():  # a stand-in of the ids' own type keeps them comparable
+        key = pid.copy()
+        key[null] = pid[~null][0] if not null.all() else 0
+    probe = cand["probe_id"].to_numpy()
+    d = cand["d"].to_numpy()
+    order = np.lexsort((key, ~null, d, probe))
+    n = len(order)
+    first = np.ones(n, dtype=bool)
+    first[1:] = probe[order[1:]] != probe[order[:-1]]
+    starts = np.flatnonzero(first)
+    rnk = np.arange(n) - np.repeat(starts, np.diff(np.append(starts, n))) + 1
+    top = rnk <= k
+    keep = order[top]
+    return pd.DataFrame({"probe_id": probe[keep],
+                         "rnk": rnk[top].astype(np.int32),
+                         "point_id": pid[keep], "dist": d[keep]})
 
 
 def knn_join(points: DataFrame, probes: DataFrame, k: int,
@@ -280,13 +389,18 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     points: (point_id, lng, lat); probes: (probe_id, lng, lat), probe
     ids unique (a duplicated id raises ``ValueError`` before any round).
     Returns (probe_id, rnk, point_id, dist). Distance is squared-degree
-    euclidean (matching the brute-force oracle).
+    euclidean (matching the brute-force oracle); ties at equal distance
+    are ranked by point_id in Spark's order.
 
     Not lazy: the call collects the probes (at most
-    ``KNN_DRIVER_MAX_PROBES``) and runs every round as Spark jobs before
-    it returns — a pass over the cached, cell-indexed points, a window
-    top-k and an Arrow collect of its n_probes x k rows; the result is a
-    local frame over the last round's rows.
+    ``KNN_DRIVER_MAX_PROBES``) and runs every round before it returns.
+    A round is one ``mapInPandas`` pass over the cell-indexed points and
+    one Arrow ``toPandas`` of its candidate rows: at most tasks x probes x
+    k of them, plus the rows tied at a task's kth distance. The driver
+    ranks them (``_rank_topk``); no Window, no shuffle beyond spreading an
+    under-partitioned point input. The points are cached only once a
+    second round is needed, and released before the call returns or
+    raises. The result is a local frame over the last round's rows.
 
     Correctness bound: a point whose cell is outside the Chebyshev disk of
     radius r differs from the probe by > (r-1) full cell widths in lng or by
@@ -313,8 +427,8 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     uniq, counts = np.unique(p_ids, return_counts=True)
     dup = np.flatnonzero(counts > 1)
     if len(dup):
-        # the round's window ranks per probe_id: probes sharing an id
-        # would share one set of k rows
+        # the driver ranks per probe_id: probes sharing an id would share
+        # one set of k rows
         raise ValueError(
             f"knn_join: probe_id {int(uniq[dup[0]])} appears "
             f"{int(counts[dup[0]])} times; probe ids must be unique")
@@ -334,13 +448,19 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         spread_small_input(
             points.select(F.col(point_id).alias("point_id"), "lng", "lat")),
         "lng", "lat", zoom,
-    ).where(F.col("cell").isNotNull()).cache()
+    ).where(F.col("cell").isNotNull())
+    id_type = pts.schema["point_id"].dataType
     cand_schema = StructType([
         StructField("probe_id", LongType()),
-        StructField("point_id", pts.schema["point_id"].dataType),
+        StructField("point_id", id_type),
         StructField("d", DoubleType()),
     ])
-    w = Window.partitionBy("probe_id").orderBy(F.asc("d"), F.asc("point_id"))
+    out_schema = StructType([
+        StructField("probe_id", LongType()),
+        StructField("rnk", IntegerType(), False),
+        StructField("point_id", id_type),
+        StructField("dist", DoubleType()),
+    ])
     # r starts at 2, not 1 (round 7): the done-bound at radius r is
     # ((r-1)*min_cell_h)^2, which is 0.0 at r=1 — that round can only
     # resolve when the kth distance is exactly 0, and in that case the
@@ -349,21 +469,17 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     # Spark round from every call; max_radius=1 still searches radius 1
     # only, and no round searches past max_radius.
     r = min(2, max_radius)
+    cached = False
     try:
         while True:
             pair_probe, pair_cell = _disk_pairs(p_cell, r, zoom)
-            topk = (
+            # ONE Arrow collect per round: the candidates are the bounded
+            # driver payload this variant accepts; the top-k and the
+            # resolve stats (count, kth distance) fold out of them
+            rows = _rank_topk(
                 pts.mapInPandas(_ring_candidates(pair_probe, pair_cell, p_ids,
                                                  p_lng, p_lat, k),
-                                schema=cand_schema)
-                .withColumn("rnk", F.row_number().over(w))
-                .where(F.col("rnk") <= k)
-                .select("probe_id", "rnk", "point_id", F.col("d").alias("dist"))
-            )
-            # ONE Arrow collect per round: the top-k rows themselves are the
-            # (n_probes x k)-bounded driver payload this variant accepts, and
-            # the resolve stats (count, kth distance) fold out of them
-            rows = topk.toPandas()
+                                schema=cand_schema).toPandas(), k)
             bound = ((r - 1) * min_cell_h) ** 2
             stats = rows.groupby("probe_id")["dist"].agg(["size", "max"])
             stats = stats.reindex(p_ids)
@@ -371,10 +487,14 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
             if done or r >= max_radius:
                 # built from pandas over Arrow: a LocalRelation, not an RDD
                 # of pickled rows
-                return spark.createDataFrame(rows, schema=topk.schema)
+                return spark.createDataFrame(rows, schema=out_schema)
+            if not cached:
+                # the next round reads the points again: keep them
+                pts, cached = pts.cache(), True
             r = min(2 * r, max_radius)
     finally:
-        pts.unpersist()
+        if cached:
+            pts.unpersist()
 
 
 def knn_join_distributed(points: DataFrame, probes: DataFrame, k: int,

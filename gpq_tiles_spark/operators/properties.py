@@ -2,10 +2,15 @@
 
 Mirrors /root/reference/crates/core/src/property_filter.rs:19-72: Include
 keeps only the listed properties, Exclude drops the listed ones, ExcludeAll
-drops everything; the geometry/feature-id columns are always kept. Applied
-both to the DataFrame projection (pure Catalyst -> column pruning reaches
-the parquet scan) and to the PMTiles JSON metadata fields
-(pipeline.rs:483-490).
+drops everything; the geometry/feature-id columns are always kept.
+
+The tiling pipeline applies the filter to each feature's tags
+(``pipeline._apply_property_filter``) and to the PMTiles JSON metadata
+fields (``filter_field_metadata``, as pipeline.rs:483-490 does); the
+input columns are still read in full. ``apply_property_filter`` is the
+same rule as a DataFrame projection, so Catalyst column pruning would
+reach the parquet scan, but no pipeline path calls it: a caller has to
+apply it to its own input.
 """
 
 from __future__ import annotations

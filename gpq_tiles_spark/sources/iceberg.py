@@ -42,11 +42,11 @@ def read_documents(spark: SparkSession, table: str,
 def read_appended_documents(spark: SparkSession, table: str,
                             from_snapshot: int,
                             to_snapshot: int | None = None) -> DataFrame:
-    """Incremental append scan between two snapshots — the snapshot-to-
-    snapshot resume primitive: a checkpointed run that completed at
-    ``from_snapshot`` tiles ONLY the documents appended since, and the
-    incremental tile records merge into the existing archive through the
-    same range shuffle (tile_id order is stable across runs)."""
+    """Incremental append scan between two snapshots: the (doc_id, spans)
+    rows appended after ``from_snapshot`` (up to ``to_snapshot``, or the
+    latest). Nothing in the engine merges their tiles into an existing
+    archive: a checkpointed run (``checkpoint.convert_with_checkpoints``)
+    always writes a whole new one."""
     if not iceberg_available(spark):  # pragma: no cover - env-dependent
         raise RuntimeError("Iceberg runtime not on the classpath")
     reader = (

@@ -1,22 +1,24 @@
 #!/usr/bin/env python
-"""Spark job timeline of one warm conversion, read from its event log.
+"""Spark job timeline of one warm benchmark operation, from its event log.
 
     PYTHONPATH=. python scripts/job_timeline.py [--workload adm4_sharded] \
         [--seed 2] [--warm 1] [--cores N] [--json]
 
 Builds the benchmark's seeded input for ``--workload`` and runs its
-conversion through ``perfbench``'s own workload class
+operation through ``perfbench``'s own workload class
 (``workloads.WORKLOADS``: ``adm4_sharded`` is ``convert_sharded``
 z0-14 over the ADM4-like polygons; ``docs_props_stream`` is extract +
-two property tags, materialized, then ``convert`` z0-12). It starts a
-``get_spark`` session with
+two property tags, materialized, then ``convert`` z0-12;
+``spatial_joins`` is ``point_in_polygon_join(...).count()`` then
+``knn_join(...).collect()``, both checked against the workload's
+brute-force answers). It starts a ``get_spark`` session with
 ``SPARK_GRAFT_EVENTLOG`` pointing at a temp dir, runs ``--warm``
-untimed conversions and then one more under its own job group. After
+untimed operations and then one more under its own job group. After
 the session stops, it reads the event log and prints one line per Spark
-job of that conversion (jobs, stages and task times from
+job of that operation (jobs, stages and task times from
 ``tracing.parse_eventlog``):
 
-* ``offset_s``: job submission, seconds after the conversion started;
+* ``offset_s``: job submission, seconds after the operation started;
 * ``dur_s``: job wall time;
 * ``stages``: stages that ran, and (after ``+``) stages skipped because
   their shuffle output already existed;
@@ -47,16 +49,25 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "perfbench"))
 TIMED_GROUP = "job-timeline"
 
 
-def _conversion(spark, workload: str, work: str, seed: int,
-                partitions: int):
-    """-> a function running one conversion of the benchmark workload
-    ``workload`` (its own input, config and call)."""
+def _operation(spark, workload: str, work: str, seed: int,
+               partitions: int):
+    """-> a function running one operation of the benchmark workload
+    ``workload`` (its own input, config and call); a wrong join result
+    raises."""
     import workloads as W
 
     wl = W.WORKLOADS[workload](W.Ctx(work=work, seed=seed,
                                      sizes=W.SIZES["full"],
                                      partitions=partitions, spark=spark))
     wl.prepare()
+    if workload == "spatial_joins":
+        wl.oracle()
+
+        def join():
+            errors = wl.op(0, False).errors
+            if errors:
+                raise RuntimeError("; ".join(errors))
+        return join
     out = os.path.join(work, "out.pmtiles")
 
     def run():
@@ -137,7 +148,8 @@ def timeline(ev_dir: str, group: str, t0: float) -> list[dict]:
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--workload", default="adm4_sharded",
-                   choices=("adm4_sharded", "docs_props_stream"))
+                   choices=("adm4_sharded", "docs_props_stream",
+                            "spatial_joins"))
     p.add_argument("--seed", type=int, default=2)
     p.add_argument("--warm", type=int, default=1)
     p.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
@@ -154,7 +166,7 @@ def main() -> None:
                       shuffle_partitions=partitions)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        run = _conversion(spark, args.workload, work, args.seed,
+        run = _operation(spark, args.workload, work, args.seed,
                           partitions)
         for _ in range(args.warm):
             run()
@@ -173,7 +185,7 @@ def main() -> None:
                           "wall_s": round(wall, 3), "jobs": rows}))
         return
     print(f"{args.workload} seed {args.seed}: {len(rows)} jobs, "
-          f"conversion wall {wall:.3f} s")
+          f"operation wall {wall:.3f} s")
     print(f"{'job':>4} {'offset_s':>8} {'dur_s':>6} {'stages':>7} "
           f"{'tasks':>5} {'task_sum_s':>10} {'task_max_s':>10}  scopes")
     for r in rows:

@@ -6,10 +6,15 @@
 Builds the benchmark's seeded inputs (``perfbench/inputs.py``, full sizes)
 and times, each as the median of ``--reps`` runs:
 
-* ``refine``: the PIP refine over the ``spatial_joins`` candidates (the
-  cell join done in numpy, cut into Arrow-sized batches of 65,536 rows),
+* ``local_refine``: the broadcast PIP join's one pass over the
+  ``spatial_joins`` points, cut into Arrow-sized batches of 65,536 rows
+  (``joins._refine_local_cover``: each batch's cells, the cover lookup by
+  ``searchsorted`` and the refine grouped by zone), with its hit count.
+* ``refine``: the distributed PIP path's refine over the same candidates
+  (the cell join done in numpy, cut into batches of 65,536 rows),
   grouped once per batch (``joins._refine_by_zone``), next to the
-  per-zone loop over the whole batch it replaced; both hit counts print.
+  per-zone loop over the whole batch it replaced; all three hit counts
+  print and must agree.
 * ``cover``: the cell cover of the 300 zones, one vectorized call
   (``joins._cover_rows``) next to one ``cover_bbox_cells`` call per zone.
 * ``rect_tails``: the interior-rect message tails of the
@@ -68,9 +73,13 @@ def _join_inputs(seed: int, sz: dict):
                            "cell": C.latlng_to_cell(lng, lat, zoom)})
     cand = points.merge(pd.DataFrame({"zone_id": ids, "cell": cells}), on="cell")
     cand = cand[["point_id", "lng", "lat", "zone_id"]]
-    batches = [cand.iloc[s:s + BATCH_ROWS].reset_index(drop=True)
-               for s in range(0, len(cand), BATCH_ROWS)]
-    return geoms, bboxes, zoom, batches
+    return (geoms, bboxes, zoom, _batches(points[["point_id", "lng", "lat"]]),
+            _batches(cand))
+
+
+def _batches(df: pd.DataFrame) -> list[pd.DataFrame]:
+    return [df.iloc[s:s + BATCH_ROWS].reset_index(drop=True)
+            for s in range(0, len(df), BATCH_ROWS)]
 
 
 def _per_zone_loop_hits(batches, geoms) -> int:
@@ -142,7 +151,11 @@ def main() -> None:
 
     sz = SIZES["full"]
     out: dict = {"seed": args.seed}
-    geoms, bboxes, zoom, batches = _join_inputs(args.seed, sz)
+    geoms, bboxes, zoom, point_batches, batches = _join_inputs(args.seed, sz)
+    local = J._refine_local_cover(list(geoms), list(geoms.values()), bboxes,
+                                  zoom)
+    out["local_refine_s"], out["local_refine_hits"] = _median_s(
+        lambda: sum(len(f) for f in local(iter(point_batches))), args.reps)
     out["candidates"] = sum(len(b) for b in batches)
     out["batches"] = len(batches)
     out["zones"] = len(geoms)

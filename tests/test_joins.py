@@ -521,3 +521,205 @@ def test_knn_join_rejects_duplicate_probe_ids(spark):
     with pytest.raises(ValueError, match=r"probe_id 1 .*unique"):
         knn_join(pts, probes, k=2, zoom=4)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+# ---------------------------------------------------------------------------
+# one Python pass per round: the broadcast PIP refine looks its cover up
+# itself, kNN ranks its top-k on the driver
+# ---------------------------------------------------------------------------
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_broadcast_path_plan_has_no_join(spark, spatial_dfs):
+    """The broadcast path is one mapInPandas over the points: no join and
+    no broadcast exchange in the plan of the frame the call returns."""
+    pts, zones, _, _ = spatial_dfs
+    plan = _executed_plan(point_in_polygon_join(pts, zones))
+    assert "MapInPandas" in plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+
+
+def test_pip_cover_cap_takes_the_distributed_path(spark, spatial_dfs,
+                                                  monkeypatch):
+    """Above PIP_DRIVER_MAX_COVER_CELLS the broadcast call joins a cover
+    DataFrame instead, with the same hits."""
+    from gpq_tiles_spark.operators import joins as J
+
+    pts, zones, _, _ = spatial_dfs
+    want = {(r.point_id, r.zone_id)
+            for r in point_in_polygon_join(pts, zones, zoom=9).collect()}
+    monkeypatch.setattr(J, "PIP_DRIVER_MAX_COVER_CELLS", 10)
+    capped = point_in_polygon_join(pts, zones, zoom=9)
+    assert "Join" in _executed_plan(capped)
+    assert {(r.point_id, r.zone_id) for r in capped.collect()} == want
+    assert len(want) > 0
+
+
+def test_pip_broadcast_drops_null_and_nan_points(spark):
+    """Points with a null or NaN coordinate match no zone on the broadcast
+    path, as the cell join of the distributed path drops them."""
+    ring = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]])
+    zones = spark.createDataFrame(
+        [("a", G.to_wkb((G.POLYGON, [ring])))],
+        schema="zone_id string, zone_wkb binary")
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [(1, 1.0, 1.0), (2, None, 1.0), (3, 1.0, None), (4, nan, 1.0),
+         (5, 1.0, nan), (6, None, None), (7, 3.0, 2.0), (8, 0.0, nan),
+         (9, float("inf"), 1.0)],
+        schema="point_id long, lng double, lat double")
+    got = {}
+    for bc in (True, False):
+        got[bc] = sorted((r.point_id, r.zone_id) for r in point_in_polygon_join(
+            pts, zones, zoom=3, broadcast_zones=bc).collect())
+    assert got[True] == got[False] == [(1, "a"), (7, "a")]
+
+
+def test_pip_repeated_zone_id_keeps_last_geometry(spark):
+    """A zone_id in several rows keeps the geometry of its last row."""
+    def square(x0):
+        ring = np.array([[x0, 0.0], [x0 + 1, 0.0], [x0 + 1, 1.0], [x0, 1.0],
+                         [x0, 0.0]])
+        return G.to_wkb((G.POLYGON, [ring]))
+
+    zones = spark.createDataFrame(
+        [("a", square(0.0)), ("b", square(5.0)), ("a", square(10.0))],
+        schema="zone_id string, zone_wkb binary").coalesce(1)
+    pts = spark.createDataFrame(
+        [(1, 0.5, 0.5), (2, 5.5, 0.5), (3, 10.5, 0.5)],
+        schema="point_id long, lng double, lat double")
+    got = sorted((r.point_id, r.zone_id)
+                 for r in point_in_polygon_join(pts, zones).collect())
+    assert got == [(2, "b"), (3, "a")]
+
+
+@pytest.mark.parametrize("zoom", [0, 4, 9, 14, 18])
+def test_numpy_cell_matches_catalyst_cell_sql(spark, zoom):
+    """``latlng_to_cell`` (numpy, the broadcast PIP refine and the kNN
+    probes) equals the ``cell_sql`` column (Catalyst, the cell joins and
+    the kNN points) on seeded points and on edge values."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(100 + zoom)
+    edge_lng = [180.0, -180.0, 0.0, 0.0, 0.0, 0.0, 179.9999999, -179.9999999,
+                0.0, 0.0, 180.0, -180.0]
+    edge_lat = [0.0, 0.0, 85.0511, -85.0511, 90.0, -90.0, 85.0511287798,
+                -85.0511287798, 85.06, -85.06, 90.0, -90.0]
+    lng = np.concatenate([rng.uniform(-180, 180, 5000), edge_lng])
+    lat = np.concatenate([rng.uniform(-85.06, 85.06, 5000), edge_lat])
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(lng)), "lng": lng, "lat": lat}))
+    got = (df.withColumn("cell", F.expr(C.cell_sql("lng", "lat", zoom)))
+           .toPandas().sort_values("i")["cell"].to_numpy())
+    np.testing.assert_array_equal(got, C.latlng_to_cell(lng, lat, zoom))
+
+
+def _knn_parquet_case(spark, tmp_path, lng, lat, p_lng, p_lat):
+    """Points and probes each in one parquet file (one input partition,
+    as the benchmark reads them)."""
+    import pandas as pd
+
+    pd.DataFrame({"point_id": np.arange(len(lng), dtype=np.int64),
+                  "lng": lng, "lat": lat}).to_parquet(
+        tmp_path / "points.parquet", index=False)
+    pd.DataFrame({"probe_id": np.arange(len(p_lng), dtype=np.int64),
+                  "lng": p_lng, "lat": p_lat}).to_parquet(
+        tmp_path / "probes.parquet", index=False)
+    return (spark.read.parquet(str(tmp_path / "points.parquet")),
+            spark.read.parquet(str(tmp_path / "probes.parquet")))
+
+
+def _assert_knn_exact(out, lng, lat, p_lng, p_lat, k):
+    got = {}
+    for r in out.collect():
+        got.setdefault(r.probe_id, []).append((r.rnk, r.point_id, r.dist))
+    want = _knn_oracle(list(range(len(lng))), lng, lat, p_lng, p_lat, k)
+    for pid in range(len(p_lng)):
+        assert sorted(got[pid]) == want[pid], pid
+
+
+def test_knn_one_round_runs_three_jobs_and_no_window(spark, tmp_path,
+                                                     monkeypatch):
+    """A one-round search is the probes' take, the points' spread and one
+    mapInPandas collect: at most 3 Spark jobs, and no Window anywhere."""
+    from gpq_tiles_spark.operators import joins as J
+
+    rng = np.random.default_rng(8)
+    p_lng, p_lat = np.array([2.0, -70.0, 120.0]), np.array([45.0, -30.0, 10.0])
+    lng = np.concatenate([x + rng.uniform(-0.5, 0.5, 200) for x in p_lng]
+                         + [rng.uniform(-180, 180, 400)])
+    lat = np.concatenate([y + rng.uniform(-0.5, 0.5, 200) for y in p_lat]
+                         + [rng.uniform(-80, 80, 400)])
+    pts, probes = _knn_parquet_case(spark, tmp_path, lng, lat, p_lng, p_lat)
+    radii = []
+    real_disk = C.grid_disk
+
+    def recording_disk(cells, r, z):
+        radii.append(r)
+        return real_disk(cells, r, z)
+
+    monkeypatch.setattr(C, "grid_disk", recording_disk)
+    monkeypatch.setattr(J, "Window", None)  # any Window use raises
+    sc = spark.sparkContext
+    group = "knn-one-round-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = J.knn_join(pts, probes, k=5, zoom=7)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert radii == [2]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    _assert_knn_exact(out, lng, lat, p_lng, p_lat, 5)
+
+
+@pytest.mark.parametrize("fail_round", [None, 3])
+def test_knn_caches_points_from_round_two_only(spark, tmp_path, monkeypatch,
+                                               fail_round):
+    """A search past r=2 caches the points from its second round on (round
+    1 reads them uncached) and leaves no persisted RDD behind, also when a
+    round raises."""
+    rng = np.random.default_rng(9)
+    p_lng, p_lat = np.array([0.0]), np.array([0.0])
+    # nothing within 15 degrees: r=2 and r=4 find too few points, r=8 ends
+    ang = rng.uniform(0, 2 * np.pi, 300)
+    rad = rng.uniform(15.0, 60.0, 300)
+    lng, lat = np.cos(ang) * rad, np.sin(ang) * rad
+    pts, probes = _knn_parquet_case(spark, tmp_path, lng, lat, p_lng, p_lat)
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    seen = []
+    real_disk = C.grid_disk
+
+    def recording_disk(cells, r, z):
+        seen.append((r, sc._jsc.getPersistentRDDs().size() - before))
+        if len(seen) == fail_round:
+            raise RuntimeError("round failed")
+        return real_disk(cells, r, z)
+
+    monkeypatch.setattr(C, "grid_disk", recording_disk)
+    if fail_round is None:
+        _assert_knn_exact(knn_join(pts, probes, k=4, zoom=7),
+                          lng, lat, p_lng, p_lat, 4)
+    else:
+        with pytest.raises(RuntimeError, match="round failed"):
+            knn_join(pts, probes, k=4, zoom=7)
+    # round 1 persisted nothing; round 2 built the points' cache
+    assert seen == [(2, 0), (4, 0), (8, 1)]
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_knn_join_ranks_null_ids_first_on_ties(spark):
+    """The driver's ranking keeps Spark's ORDER BY d, point_id: among
+    points at one distance, null ids come first, then ids in order."""
+    pts = spark.createDataFrame(
+        [(None, 1.0, 1.0), (5, 1.0, 1.0), (3, 1.0, 1.0), (None, 1.0, 1.0),
+         (9, 0.5, 0.5), (7, 3.0, 3.0)],
+        schema="point_id long, lng double, lat double")
+    probes = spark.createDataFrame([(0, 0.5, 0.5)],
+                                   schema="probe_id long, lng double, lat double")
+    got = sorted((r.rnk, r.point_id, r.dist)
+                 for r in knn_join(pts, probes, k=4, zoom=4).collect())
+    assert got == [(1, 9, 0.0), (2, None, 0.5), (3, None, 0.5), (4, 3, 0.5)]
