@@ -315,6 +315,11 @@ def bbox(g: Geom) -> tuple[float, float, float, float]:
     return float(xmin), float(ymin), float(xmax), float(ymax)
 
 
+def vertex_count(g: Geom) -> int:
+    """Coordinates in all of ``g``'s parts and rings."""
+    return sum(len(c) for c in _all_coords(g))
+
+
 def ring_signed_area2(ring: np.ndarray) -> float:
     """Twice the signed shoelace area (positive = CCW)."""
     r = np.asarray(ring, dtype=np.float64)

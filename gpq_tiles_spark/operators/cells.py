@@ -44,6 +44,24 @@ def latlng_to_cell(lng: np.ndarray, lat: np.ndarray, zoom: int) -> np.ndarray:
     return pack_cell(np.clip(x, 0, n_max), np.clip(y, 0, n_max))
 
 
+def latlng_to_sql_cell(lng: np.ndarray, lat: np.ndarray, zoom: int,
+                       lng_null: np.ndarray, lat_null: np.ndarray) -> np.ndarray:
+    """The ``cell_sql`` column's value, in numpy, for every input:
+    ``latlng_to_cell`` where the two agree (NaN and infinite coordinates
+    included), and row or column ``2^zoom - 1`` where ``cell_sql`` meets a
+    null. Its ``least``/``greatest`` clamp skips nulls, so a null
+    coordinate (``lng_null``/``lat_null``: pandas reads it as NaN) and a
+    latitude whose ``ln(tan + sec)`` argument is negative (cosine below
+    zero: beyond +-90 degrees) land on the last column or row."""
+    x, y = unpack_cell(latlng_to_cell(lng, lat, zoom))
+    n_max = (1 << zoom) - 1
+    far = np.flatnonzero(np.abs(lat) > 90.0)
+    with np.errstate(invalid="ignore"):
+        far = far[np.cos(np.deg2rad(lat[far])) < 0.0]
+    y[far] = n_max
+    return pack_cell(np.where(lng_null, n_max, x), np.where(lat_null, n_max, y))
+
+
 def cell_sql(lng_expr: str, lat_expr: str, zoom: int) -> str:
     """Catalyst/DuckDB-shared SQL for latlng_to_cell (codegen path for the
     10^12-point case — no Python)."""

@@ -2,7 +2,8 @@
 
 [north-star extensions — cite: BASELINE.json north_star "point-in-polygon
 joins, kNN via cell-ring expansion"]. Both are cell-index prefilter +
-exact-refine patterns, with no Python loop per key or per row:
+exact-refine patterns, with no Python loop per key or per row, and both
+run their Python pass on the points' own partitions:
 
 * PIP: polygons are covered with grid cells (one vectorized cover call over
   every zone bbox). With the zones on the driver (the default), the cover
@@ -11,19 +12,24 @@ exact-refine patterns, with no Python loop per key or per row:
   Arrow batch computes its points' cells, finds their cover rows by
   ``searchsorted``, and runs a vectorized ray-casting kernel per zone over
   those rows (grouped once by a stable argsort). No cover DataFrame, no
-  join, no exchange beyond spreading an under-partitioned point input.
-  Zones too many to hold, or a cover above ``PIP_DRIVER_MAX_COVER_CELLS``,
-  take the distributed path: a cell equi-join against a cover DataFrame,
-  the zone WKB joined back per candidate, and the same grouped refine.
-* kNN (``knn_join``): probes expand grid disks r=2,4,... over the
-  cell-indexed points until the kth neighbor distance is provably within
-  the ring bound. A round is one narrow Arrow pass: the cell-sorted
-  (probe, cell) disk pairs ride in the ``mapInPandas`` closure, each point
-  batch finds its probes by ``searchsorted`` on its cell and computes the
-  squared distances, and each task keeps, per probe, a running top-k
-  across its batches (ties at the kth distance included). Those rows come
-  back over Arrow, at most tasks x probes x k of them plus ties, and the
-  driver ranks them exactly on (probe_id, d, point_id).
+  join and no exchange, unless the zones are heavy: at a mean of
+  ``PIP_SPREAD_MIN_ZONE_VERTICES`` ring vertices per zone or more, the
+  refine costs more per point than moving the point, and an
+  under-partitioned point input is first spread to the task slots
+  (``partitioning.spread_small_input``). Zones too many to hold, or a
+  cover above ``PIP_DRIVER_MAX_COVER_CELLS``, take the distributed path: a
+  cell equi-join against a cover DataFrame, the zone WKB joined back per
+  candidate, and the same grouped refine.
+* kNN (``knn_join``): probes expand grid disks r=2,4,... over the points
+  until the kth neighbor distance is provably within the ring bound. A
+  round is one narrow Arrow pass: the cell-sorted (probe, cell) disk pairs
+  ride in the ``mapInPandas`` closure, each point batch computes its cells
+  (the numpy twin of the ``cell_sql`` column), finds its probes by
+  ``searchsorted`` and computes the squared distances, and each task
+  keeps, per probe, a running top-k across its batches (ties at the kth
+  distance included). Those rows come back over Arrow, at most tasks x
+  probes x k of them plus ties, and the driver ranks them exactly on
+  (probe_id, d, point_id).
 """
 
 from __future__ import annotations
@@ -53,6 +59,15 @@ from . import cells as C
 # and in every refine task's closure (12 bytes a cover cell): above this
 # many cells it takes the distributed cover join instead.
 PIP_DRIVER_MAX_COVER_CELLS = 1 << 20
+
+# The broadcast PIP pass spreads an under-partitioned point input to the
+# task slots only when the zones average this many ring vertices or more.
+# Its refine cost per point grows with the vertices (without Spark,
+# ``scripts/measure_join_refine.py --zone-vertices``: ~1.2 us at 5, ~2.8
+# us at 65, ~17 us at ~550), while the round-robin exchange costs a job,
+# a shuffle of every point and a Python worker per slot: below the rule
+# the exchange cannot pay for itself.
+PIP_SPREAD_MIN_ZONE_VERTICES = 64
 
 
 def _cover_index(bboxes, zoom: int) -> tuple[np.ndarray, np.ndarray]:
@@ -215,6 +230,14 @@ def _refine_local_cover(names: list, geoms: list, bboxes: list, zoom: int):
     return run
 
 
+def _mean_zone_vertices(geoms: list) -> float:
+    """Mean ring vertex count per zone (all rings of a zone counted): what
+    the ray-cast refine costs per candidate point; 0.0 for no zones."""
+    if not geoms:
+        return 0.0
+    return sum(G.vertex_count(g) for g in geoms) / len(geoms)
+
+
 def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           point_id: str = "point_id", lng: str = "lng",
                           lat: str = "lat", zone_id: str = "zone_id",
@@ -230,17 +253,21 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
     collects the zone table (one Spark job) and builds the cell cover on
     the driver; a zone_id that appears in several rows keeps the geometry
     of its last collected row. The returned frame is one ``mapInPandas``
-    over the points (spread to the task slots if under-partitioned): no
-    join, no broadcast exchange. When that cover would exceed
-    ``PIP_DRIVER_MAX_COVER_CELLS`` cells, the call goes on as with
+    over the points' own partitions: no join, no broadcast exchange. Only
+    when the zones average ``PIP_SPREAD_MIN_ZONE_VERTICES`` ring vertices
+    or more does an under-partitioned point input first get a round-robin
+    spread to the task slots (``spread_small_input``, whose partition
+    count probe plans the point query on the driver). When the cover would
+    exceed ``PIP_DRIVER_MAX_COVER_CELLS`` cells, the call goes on as with
     ``broadcast_zones=False``: a cover DataFrame joined to the points on
-    the cell column, the zone WKB joined back per candidate. On that path
-    ``zoom='auto'`` collects the first 512 zone rows (one Spark job). The
-    point side stays lazy until the returned frame runs."""
-    pts = spread_small_input(points.select(
+    the cell column, the zone WKB joined back per candidate; that join
+    repartitions the points itself. On that path ``zoom='auto'`` collects
+    the first 512 zone rows (one Spark job). The point side stays lazy
+    until the returned frame runs."""
+    pts = points.select(
         F.col(point_id).cast("long").alias("point_id"),
         F.col(lng).cast("double").alias("lng"),
-        F.col(lat).cast("double").alias("lat")))
+        F.col(lat).cast("double").alias("lat"))
     if broadcast_zones:
         zrows = zones.select(F.col(zone_id).cast("string"), zone_wkb).collect()
         ids = [r[0] for r in zrows]
@@ -251,10 +278,13 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
         # a repeated zone_id keeps its last row (dict: first-seen order)
         last = list(dict(zip(ids, range(len(ids)))).values())
         bboxes = [bboxes[i] for i in last]
+        geoms = [parsed[i] for i in last]
         if _cover_size(bboxes, zoom) <= PIP_DRIVER_MAX_COVER_CELLS:
+            if _mean_zone_vertices(geoms) >= PIP_SPREAD_MIN_ZONE_VERTICES:
+                pts = spread_small_input(pts)
             return pts.mapInPandas(
-                _refine_local_cover([ids[i] for i in last],
-                                    [parsed[i] for i in last], bboxes, zoom),
+                _refine_local_cover([ids[i] for i in last], geoms, bboxes,
+                                    zoom),
                 schema=_PIP_SCHEMA)
     elif zoom == "auto":
         zoom = auto_cover_zoom(zones, zone_wkb)
@@ -320,29 +350,35 @@ def _keep_topk_ties(probe: np.ndarray, ids: np.ndarray, d: np.ndarray,
 
 def _ring_candidates(pair_probe: np.ndarray, pair_cell: np.ndarray,
                      p_ids: np.ndarray, p_lng: np.ndarray, p_lat: np.ndarray,
-                     k: int):
-    """mapInPandas body of one kNN round over (point_id, lng, lat, cell)
-    batches -> (probe_id, point_id, d) rows. Each point meets the probes
-    whose disk holds its cell (``searchsorted`` over the cell-sorted
+                     k: int, zoom: int):
+    """mapInPandas body of one kNN round over (point_id, lng, lat,
+    lng_null, lat_null) batches -> (probe_id, point_id, d) rows. Each batch
+    computes its points' cells (``cells.latlng_to_sql_cell``: the
+    ``cell_sql`` values, null coordinates included) and meets the probes
+    whose disk holds the cell (``searchsorted`` over the cell-sorted
     pairs); ``d`` is ``dx*dx + dy*dy``, the same IEEE operations as the
-    Catalyst expression of ``knn_join_distributed``. The task carries a
-    running top-k per probe across its batches (``_keep_topk_ties``) and
-    yields it once, after its last batch: a superset of the task's share
-    of the global (d, point_id) top-k, so the driver's ranking of every
-    task's rows is exact for any id type."""
+    Catalyst expression of ``knn_join_distributed`` (NaN for a null
+    coordinate). The task carries a running top-k per probe across its
+    batches (``_keep_topk_ties``) and yields it once, after its last
+    batch: a superset of the task's share of the global (d, point_id)
+    top-k, so the driver's ranking of every task's rows is exact for any
+    id type."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         probe = np.empty(0, dtype=np.int64)
         d = np.empty(0, dtype=np.float64)
         ids = None
         for pdf in batches:
-            row, pair = _sorted_matches(
-                pair_cell, pdf["cell"].to_numpy(dtype=np.int64))
+            lng = pdf["lng"].to_numpy(dtype=np.float64)
+            lat = pdf["lat"].to_numpy(dtype=np.float64)
+            row, pair = _sorted_matches(pair_cell, C.latlng_to_sql_cell(
+                lng, lat, zoom, pdf["lng_null"].to_numpy(dtype=bool),
+                pdf["lat_null"].to_numpy(dtype=bool)))
             if len(row) == 0:
                 continue
             bp = pair_probe[pair]
-            dx = pdf["lng"].to_numpy(dtype=np.float64)[row] - p_lng[bp]
-            dy = pdf["lat"].to_numpy(dtype=np.float64)[row] - p_lat[bp]
+            dx = lng[row] - p_lng[bp]
+            dy = lat[row] - p_lat[bp]
             bid = pdf["point_id"].to_numpy()[row]
             probe, ids, d = _keep_topk_ties(
                 np.concatenate([probe, bp]),
@@ -394,13 +430,16 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
 
     Not lazy: the call collects the probes (at most
     ``KNN_DRIVER_MAX_PROBES``) and runs every round before it returns.
-    A round is one ``mapInPandas`` pass over the cell-indexed points and
-    one Arrow ``toPandas`` of its candidate rows: at most tasks x probes x
-    k of them, plus the rows tied at a task's kth distance. The driver
-    ranks them (``_rank_topk``); no Window, no shuffle beyond spreading an
-    under-partitioned point input. The points are cached only once a
-    second round is needed, and released before the call returns or
-    raises. The result is a local frame over the last round's rows.
+    A round is one ``mapInPandas`` pass over the points' own partitions,
+    which computes their cells itself, and one Arrow ``toPandas`` of its
+    candidate rows: at most tasks x probes x k of them, plus the rows tied
+    at a task's kth distance. The driver ranks them (``_rank_topk``); no
+    Window, no exchange. The points are cached only once a second round is
+    needed, and released before the call returns or raises. The result is
+    a local frame over the last round's rows. A point with a null
+    coordinate is placed where the ``cell_sql`` column puts it (the last
+    grid column or row) at distance NaN, as in ``knn_join_distributed``'s
+    Catalyst cell join.
 
     Correctness bound: a point whose cell is outside the Chebyshev disk of
     radius r differs from the probe by > (r-1) full cell widths in lng or by
@@ -444,11 +483,10 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         initial=cell_w))
 
     spark = points.sparkSession
-    pts = C.with_cell_column(
-        spread_small_input(
-            points.select(F.col(point_id).alias("point_id"), "lng", "lat")),
-        "lng", "lat", zoom,
-    ).where(F.col("cell").isNotNull())
+    # pandas reads a null coordinate as NaN: the flags keep it apart
+    pts = points.select(F.col(point_id).alias("point_id"), "lng", "lat",
+                        F.col("lng").isNull().alias("lng_null"),
+                        F.col("lat").isNull().alias("lat_null"))
     id_type = pts.schema["point_id"].dataType
     cand_schema = StructType([
         StructField("probe_id", LongType()),
@@ -478,7 +516,7 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
             # resolve stats (count, kth distance) fold out of them
             rows = _rank_topk(
                 pts.mapInPandas(_ring_candidates(pair_probe, pair_cell, p_ids,
-                                                 p_lng, p_lat, k),
+                                                 p_lng, p_lat, k, zoom),
                                 schema=cand_schema).toPandas(), k)
             bound = ((r - 1) * min_cell_h) ** 2
             stats = rows.groupby("probe_id")["dist"].agg(["size", "max"])

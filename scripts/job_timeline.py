@@ -11,9 +11,11 @@ z0-14 over the ADM4-like polygons; ``docs_props_stream`` is extract +
 two property tags, materialized, then ``convert`` z0-12;
 ``spatial_joins`` is ``point_in_polygon_join(...).count()`` then
 ``knn_join(...).collect()``, both checked against the workload's
-brute-force answers). It starts a ``get_spark`` session with
-``SPARK_GRAFT_EVENTLOG`` pointing at a temp dir, runs ``--warm``
-untimed operations and then one more under its own job group. After
+brute-force answers, after the three ``spark.read.parquet`` calls that
+the workload makes before its timer starts). It starts a ``get_spark``
+session with ``SPARK_GRAFT_EVENTLOG`` pointing at a temp dir, runs
+``--warm`` untimed operations and then one more under its own job
+group. After
 the session stops, it reads the event log and prints one line per Spark
 job of that operation (jobs, stages and task times from
 ``tracing.parse_eventlog``):
@@ -27,6 +29,10 @@ job of that operation (jobs, stages and task times from
 * ``scopes``: the operator scopes (RDD scope names, e.g. ``Exchange``,
   ``MapInPandas``, ``Scan parquet``) of the stages that ran, and the
   driver call site of the job.
+
+For ``spatial_joins`` the header also prints the benchmark's own timed
+seconds (``OpResult.seconds``, what ``op_p50_ms`` is made of) and when
+that window opened, and a ``*`` marks each job submitted before it.
 
 Sizes and the Spark set-up follow ``perfbench`` (``local[<cores>]``,
 ``2 x cores`` shuffle partitions). ``--json`` prints the rows as one
@@ -53,7 +59,9 @@ def _operation(spark, workload: str, work: str, seed: int,
                partitions: int):
     """-> a function running one operation of the benchmark workload
     ``workload`` (its own input, config and call); a wrong join result
-    raises."""
+    raises. For ``spatial_joins`` the function returns (epoch seconds at
+    which the operation's timed window opened, ``OpResult.seconds``);
+    otherwise None."""
     import workloads as W
 
     wl = W.WORKLOADS[workload](W.Ctx(work=work, seed=seed,
@@ -62,18 +70,30 @@ def _operation(spark, workload: str, work: str, seed: int,
     wl.prepare()
     if workload == "spatial_joins":
         wl.oracle()
+        opened: list[float] = []
+        span = wl.span
+
+        def marking_span(name, i, group=None):
+            # the operation's span opens right after its timer starts
+            if name == f"op.{wl.name}":
+                opened.append(time.time())
+            return span(name, i, group)
+
+        wl.span = marking_span
 
         def join():
-            errors = wl.op(0, False).errors
-            if errors:
-                raise RuntimeError("; ".join(errors))
+            opened.clear()
+            res = wl.op(0, False)
+            if res.errors:
+                raise RuntimeError("; ".join(res.errors))
+            return opened[0], res.seconds
         return join
     out = os.path.join(work, "out.pmtiles")
 
     def run():
         shard = tempfile.mkdtemp(dir=work)
         try:
-            return wl.convert(0, out, shard)
+            wl.convert(0, out, shard)
         finally:
             shutil.rmtree(shard, ignore_errors=True)
     return run
@@ -114,8 +134,11 @@ def _scope_name(rdd_info: dict) -> str | None:
         return None
 
 
-def timeline(ev_dir: str, group: str, t0: float) -> list[dict]:
-    """One row per job of ``group``, in submission order."""
+def timeline(ev_dir: str, group: str, t0: float,
+             opened: float | None = None) -> list[dict]:
+    """One row per job of ``group``, in submission order; with ``opened``
+    (epoch seconds), ``timed`` says whether the job was submitted at or
+    after it."""
     import tracing
 
     jobs, stages = tracing.parse_eventlog(ev_dir)
@@ -141,6 +164,7 @@ def timeline(ev_dir: str, group: str, t0: float) -> list[dict]:
             "task_max_s": round(max(runs, default=0.0), 3),
             "site": sites.get(j.jid, "").split("/")[-1],
             "scopes": scopes,
+            "timed": opened is None or j.start >= opened,
         })
     return rows
 
@@ -173,24 +197,33 @@ def main() -> None:
         sc = spark.sparkContext
         sc.setJobGroup(TIMED_GROUP, TIMED_GROUP)
         t0 = time.time()
-        run()
+        window = run()
         wall = time.time() - t0
         spark.stop()  # flushes the event log
-        rows = timeline(ev_dir, TIMED_GROUP, t0)
+        opened, timed_s = window or (None, None)
+        rows = timeline(ev_dir, TIMED_GROUP, t0, opened)
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
+    window_s = None if opened is None else {
+        "timed_s": round(timed_s, 3), "timed_from_s": round(opened - t0, 3)}
     if args.json:
         print(json.dumps({"workload": args.workload, "seed": args.seed,
-                          "wall_s": round(wall, 3), "jobs": rows}))
+                          "wall_s": round(wall, 3), **(window_s or {}),
+                          "jobs": rows}))
         return
     print(f"{args.workload} seed {args.seed}: {len(rows)} jobs, "
           f"operation wall {wall:.3f} s")
+    if window_s:
+        print(f"benchmark timed window (OpResult.seconds): "
+              f"{window_s['timed_s']:.3f} s from offset "
+              f"{window_s['timed_from_s']:.3f} s; * = job submitted before it")
     print(f"{'job':>4} {'offset_s':>8} {'dur_s':>6} {'stages':>7} "
           f"{'tasks':>5} {'task_sum_s':>10} {'task_max_s':>10}  scopes")
     for r in rows:
         stages = f"{r['stages']}+{r['skipped']}"
-        print(f"{r['job']:>4} {r['offset_s']:>8.3f} {r['dur_s']:>6.3f} "
+        job = f"{'' if r['timed'] else '*'}{r['job']}"
+        print(f"{job:>4} {r['offset_s']:>8.3f} {r['dur_s']:>6.3f} "
               f"{stages:>7} {r['tasks']:>5} {r['task_sum_s']:>10.3f} "
               f"{r['task_max_s']:>10.3f}  {', '.join(r['scopes'])} "
               f"[{r['site']}]")

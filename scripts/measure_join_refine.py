@@ -2,6 +2,7 @@
 """Spark-free timing of the join refine, the zone cover and the rect tails.
 
     PYTHONPATH=. python scripts/measure_join_refine.py [--seed 2] [--reps 5]
+    PYTHONPATH=. python scripts/measure_join_refine.py --zone-vertices 5,33,65,129,550
 
 Builds the benchmark's seeded inputs (``perfbench/inputs.py``, full sizes)
 and times, each as the median of ``--reps`` runs:
@@ -24,6 +25,16 @@ and times, each as the median of ``--reps`` runs:
   per-record message encode of that fan-out.
 
 Prints one JSON line of seconds and counts.
+
+``--zone-vertices V1,V2,...`` measures the cost behind
+``joins.PIP_SPREAD_MIN_ZONE_VERTICES`` instead: the broadcast PIP pass
+(``local_refine`` above) over the same points against the same 300
+zones, each ring densified to about V vertices (every edge cut into
+``ceil((V-1)/edges)`` equal segments: the same polygons, so the hit
+count must not change), one JSON line per V with the microseconds per
+point; then one line with the microseconds per point of a ``knn_join``
+round's pass (``joins._ring_candidates``: the benchmark's probes, k and
+zoom, radius 2).
 """
 
 from __future__ import annotations
@@ -80,6 +91,59 @@ def _join_inputs(seed: int, sz: dict):
 def _batches(df: pd.DataFrame) -> list[pd.DataFrame]:
     return [df.iloc[s:s + BATCH_ROWS].reset_index(drop=True)
             for s in range(0, len(df), BATCH_ROWS)]
+
+
+def _densified(g, vertices: int):
+    """``g`` with every ring edge cut into ``ceil((vertices-1)/edges)``
+    equal segments."""
+    from gpq_tiles_spark.kernels import geom as G
+
+    def ring(r):
+        m = max(1, -(-(vertices - 1) // (len(r) - 1)))
+        t = np.arange(m)[None, :, None] / m
+        a, b = r[:-1, None, :], r[1:, None, :]
+        return np.vstack([(a + t * (b - a)).reshape(-1, 2), r[-1:]])
+
+    t, parts = g
+    if t == G.POLYGON:
+        return t, [ring(r) for r in parts]
+    return t, [[ring(r) for r in rings] for rings in parts]
+
+
+def _zone_vertex_table(seed: int, sz: dict, vertices: list[int],
+                       reps: int) -> None:
+    import inputs
+
+    from gpq_tiles_spark.operators import cells as C
+    from gpq_tiles_spark.operators import joins as J
+
+    geoms, bboxes, zoom, point_batches, _ = _join_inputs(seed, sz)
+    n = sum(len(b) for b in point_batches)
+    for v in vertices:
+        dense = [_densified(g, v) for g in geoms.values()]
+        refine = J._refine_local_cover(list(geoms), dense, bboxes, zoom)
+        s, hits = _median_s(
+            lambda: sum(len(f) for f in refine(iter(point_batches))), reps)
+        print(json.dumps({
+            "zone_vertices": v,
+            "ring_vertices": J._mean_zone_vertices(dense),
+            "local_refine_us_per_point": round(s / n * 1e6, 3),
+            "hits": hits, "points": n, "zones": len(dense)}))
+    pr = inputs.probes(sz["probes"], seed)
+    p_lng = pr.column("lng").to_numpy()
+    p_lat = pr.column("lat").to_numpy()
+    zoom = sz["knn_zoom"]
+    pair_probe, pair_cell = J._disk_pairs(C.latlng_to_cell(p_lng, p_lat, zoom),
+                                          2, zoom)
+    ring = J._ring_candidates(pair_probe, pair_cell,
+                              pr.column("probe_id").to_numpy(), p_lng, p_lat,
+                              sz["k"], zoom)
+    batches = [b.assign(lng_null=False, lat_null=False) for b in point_batches]
+    s, rows = _median_s(lambda: sum(len(f) for f in ring(iter(batches))), reps)
+    print(json.dumps({"ring_candidates_us_per_point": round(s / n * 1e6, 3),
+                      "candidate_rows": rows, "points": n,
+                      "probes": len(p_lng), "k": sz["k"], "zoom": zoom,
+                      "radius": 2}))
 
 
 def _per_zone_loop_hits(batches, geoms) -> int:
@@ -140,6 +204,9 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--seed", type=int, default=2)
     p.add_argument("--reps", type=int, default=5)
+    p.add_argument("--zone-vertices", default=None,
+                   help="comma-separated ring vertex counts: time the "
+                        "broadcast PIP pass at each instead")
     args = p.parse_args()
 
     from workloads import SIZES
@@ -150,6 +217,11 @@ def main() -> None:
     from gpq_tiles_spark.pipeline import make_msg_encoder
 
     sz = SIZES["full"]
+    if args.zone_vertices:
+        _zone_vertex_table(args.seed, sz,
+                           [int(v) for v in args.zone_vertices.split(",")],
+                           args.reps)
+        return
     out: dict = {"seed": args.seed}
     geoms, bboxes, zoom, point_batches, batches = _join_inputs(args.seed, sz)
     local = J._refine_local_cover(list(geoms), list(geoms.values()), bboxes,

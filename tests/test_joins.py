@@ -723,3 +723,205 @@ def test_knn_join_ranks_null_ids_first_on_ties(spark):
     got = sorted((r.rnk, r.point_id, r.dist)
                  for r in knn_join(pts, probes, k=4, zoom=4).collect())
     assert got == [(1, 9, 0.0), (2, None, 0.5), (3, None, 0.5), (4, 3, 0.5)]
+
+
+# ---------------------------------------------------------------------------
+# the join passes run on the points' own partitions: no round-robin spread
+# for kNN or light-zone PIP; kNN computes its cells inside its pass
+# ---------------------------------------------------------------------------
+
+def _refuse_spread(df):
+    raise AssertionError("spread_small_input called")
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_joins_run_without_the_spread(spark, spatial_dfs, monkeypatch,
+                                      broadcast):
+    """kNN and light-zone PIP (5-vertex rings, both paths) never call the
+    spread, and still give the brute-force answers."""
+    from gpq_tiles_spark.operators import joins as J
+
+    pts, zones, (lng, lat), zt = spatial_dfs
+    monkeypatch.setattr(J, "spread_small_input", _refuse_spread)
+    got = {(r.point_id, r.zone_id) for r in J.point_in_polygon_join(
+        pts, zones, broadcast_zones=broadcast).collect()}
+    want = {(int(i), zid) for zid, w in zip(zt["zone_id"].to_pylist(),
+                                            zt["zone_wkt"].to_pylist())
+            for i in np.flatnonzero(PIPK.points_in_geom(lng, lat,
+                                                        G.from_wkt(w)))}
+    assert got == want and len(want) > 0
+    p_lng, p_lat = np.array([1.52, -122.39, -179.99]), np.array([42.51, 37.81, 0.0])
+    probes = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(p_lng, p_lat))],
+        schema="probe_id long, lng double, lat double")
+    _assert_knn_exact(J.knn_join(pts, probes, k=5, zoom=7), lng, lat,
+                      p_lng, p_lat, 5)
+
+
+def test_knn_one_round_runs_two_jobs(spark, tmp_path):
+    """A one-round search over a one-partition points frame is the probes'
+    take and one mapInPandas collect: at most 2 Spark jobs."""
+    from gpq_tiles_spark.operators import joins as J
+
+    rng = np.random.default_rng(8)
+    p_lng, p_lat = np.array([2.0, -70.0, 120.0]), np.array([45.0, -30.0, 10.0])
+    lng = np.concatenate([x + rng.uniform(-0.5, 0.5, 200) for x in p_lng]
+                         + [rng.uniform(-180, 180, 400)])
+    lat = np.concatenate([y + rng.uniform(-0.5, 0.5, 200) for y in p_lat]
+                         + [rng.uniform(-80, 80, 400)])
+    pts, probes = _knn_parquet_case(spark, tmp_path, lng, lat, p_lng, p_lat)
+    assert pts.rdd.getNumPartitions() == 1
+    sc = spark.sparkContext
+    group = "knn-one-round-two-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = J.knn_join(pts, probes, k=5, zoom=7)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    _assert_knn_exact(out, lng, lat, p_lng, p_lat, 5)
+
+
+def _dense_square_zones(per_side: int, n_side=6, size=0.5, x0=10.0, y0=20.0):
+    """n_side^2 adjacent squares, each ring with ``per_side`` points per
+    side (4 * per_side + 1 vertices): the same polygons at any density."""
+    t = np.arange(per_side) / per_side
+    zones = {}
+    for j in range(n_side):
+        for i in range(n_side):
+            a, b = x0 + i * size, y0 + j * size
+            ring = np.concatenate([
+                np.stack([a + t * size, np.full(per_side, b)], 1),
+                np.stack([np.full(per_side, a + size), b + t * size], 1),
+                np.stack([a + size - t * size, np.full(per_side, b + size)], 1),
+                np.stack([np.full(per_side, a), b + size - t * size], 1),
+                [[a, b]]])
+            zones[f"z-{j * n_side + i:04d}"] = (G.POLYGON, [ring])
+    return zones
+
+
+def _one_partition_points(spark, tmp_path, px, py):
+    import pandas as pd
+
+    path = str(tmp_path / "pip_points.parquet")
+    pd.DataFrame({"point_id": np.arange(len(px), dtype=np.int64),
+                  "lng": px, "lat": py}).to_parquet(path, index=False)
+    return spark.read.parquet(path)
+
+
+def test_pip_broadcast_spread_follows_zone_vertices(spark, tmp_path,
+                                                    monkeypatch):
+    """The broadcast path spreads an under-partitioned point input only at
+    PIP_SPREAD_MIN_ZONE_VERTICES ring vertices per zone or more; the hits
+    are the same either way."""
+    from gpq_tiles_spark.operators import joins as J
+
+    zones = _dense_square_zones(1)
+    px, py = _grid_points(np.random.default_rng(3), n=1500, n_side=6)
+    pts = _one_partition_points(spark, tmp_path, px, py)
+    zdf = spark.createDataFrame([(zid, G.to_wkb(g)) for zid, g in zones.items()],
+                                schema="zone_id string, zone_wkb binary")
+    want = sorted((int(i), zid) for zid, g in zones.items()
+                  for i in np.flatnonzero(PIPK.points_in_geom(px, py, g)))
+    assert len(want) > 500
+    for rule, spreads in ((0, True), (10**9, False)):
+        monkeypatch.setattr(J, "PIP_SPREAD_MIN_ZONE_VERTICES", rule)
+        out = J.point_in_polygon_join(pts, zdf)
+        plan = _executed_plan(out)
+        assert ("RoundRobinPartitioning" in plan) == spreads, rule
+        assert "Join" not in plan
+        assert sorted((r.point_id, r.zone_id) for r in out.collect()) == want
+
+
+@pytest.mark.parametrize("per_side, spreads", [(1, False), (16, True),
+                                               (138, True)])
+def test_pip_broadcast_spreads_heavy_zones_by_default(spark, tmp_path,
+                                                      per_side, spreads):
+    """At the default rule, 5-vertex rings run on the points' own
+    partition; 65- and 553-vertex rings of the same squares are spread.
+    The hits do not depend on the ring density."""
+    from gpq_tiles_spark.operators import joins as J
+
+    zones = _dense_square_zones(per_side)
+    assert J._mean_zone_vertices(list(zones.values())) == 4 * per_side + 1
+    px, py = _grid_points(np.random.default_rng(4), n=800, n_side=6)
+    pts = _one_partition_points(spark, tmp_path, px, py)
+    zdf = spark.createDataFrame([(zid, G.to_wkb(g)) for zid, g in zones.items()],
+                                schema="zone_id string, zone_wkb binary")
+    out = J.point_in_polygon_join(pts, zdf)
+    assert ("RoundRobinPartitioning" in _executed_plan(out)) == spreads
+    want = sorted((int(i), zid) for zid, g in _dense_square_zones(1).items()
+                  for i in np.flatnonzero(PIPK.points_in_geom(px, py, g)))
+    assert sorted((r.point_id, r.zone_id) for r in out.collect()) == want
+
+
+def test_knn_rows_for_null_nan_and_infinite_coordinates(spark):
+    """Points with a null, NaN or infinite coordinate keep the cells the
+    Catalyst ``cell_sql`` column gave them: NaN and -inf lng on column 0,
+    +inf and null lng on the last column, a NaN or infinite lat on row 0, a
+    null lat and a latitude beyond +-90 degrees on the last row. A null
+    coordinate gives a NaN (null) distance, ranked last by point_id. The
+    probe at lng -179.99 (column 0) reaches the last column through the
+    antimeridian; the probe at lng 179.95 reaches the last column only."""
+    nan, inf = float("nan"), float("inf")
+    rows = [(1, -179.985, 10.0), (2, 179.99, 10.0), (3, None, 10.0),
+            (4, nan, 10.0), (5, inf, 10.0), (6, -inf, 10.0),
+            (7, -179.99, None), (8, -179.99, nan), (9, -179.99, inf),
+            (10, -179.99, -inf), (11, None, None), (12, -179.99, -95.0),
+            (13, -179.99, 95.0), (14, -179.98, -85.04), (15, None, -85.05),
+            (16, 100.0, 89.0)]
+    probe_rows = [(0, -179.99, 10.0), (1, -179.99, -85.05), (2, 0.0, 0.0),
+                  (3, 100.0, 85.05), (4, 179.95, 10.0)]
+    pts = spark.createDataFrame(rows, schema="point_id long, lng double, lat double")
+    probes = spark.createDataFrame(probe_rows,
+                                   schema="probe_id long, lng double, lat double")
+    got = [tuple(r) for r in knn_join(pts, probes, k=12, zoom=14,
+                                      max_radius=2).collect()]
+    where = {i: (x, y) for i, x, y in rows}
+
+    def d(probe, point):
+        (px, py), (qx, qy) = probe_rows[probe][1:], where[point]
+        return (qx - px) * (qx - px) + (qy - py) * (qy - py)
+
+    want = [(0, 1, 1, d(0, 1)), (0, 2, 2, d(0, 2)), (0, 3, 5, inf),
+            (0, 4, 6, inf), (0, 5, 3, None), (0, 6, 4, None),
+            (1, 1, 12, d(1, 12)), (1, 2, 13, d(1, 13)), (1, 3, 7, None),
+            (1, 4, 11, None), (1, 5, 15, None),
+            (3, 1, 16, d(3, 16)),
+            (4, 1, 2, d(4, 2)), (4, 2, 5, inf), (4, 3, 3, None)]
+    assert sorted(got) == sorted(want)
+
+
+def test_numpy_cells_match_cell_sql_on_non_finite_inputs(spark):
+    """``latlng_to_cell`` equals the ``cell_sql`` column for NaN and
+    +-inf coordinates; ``latlng_to_sql_cell`` (the kNN pass) equals it
+    also for null coordinates and latitudes beyond +-90 degrees."""
+    from pyspark.sql import functions as F
+
+    nan, inf = float("nan"), float("inf")
+    odd = [nan, inf, -inf]
+    far = [90.0, -90.0, 90.5, 95.0, -95.0, 180.0, -180.0, 269.9, 270.0,
+           270.1, 300.0, -300.0, 1e300, -1e300]
+    rows = ([(a, b) for a in odd + [0.0, 179.99, -179.99] for b in odd + [0.0, 45.0]]
+            + [(a, b) for a in [0.0, 179.99] for b in far]
+            + [(None, b) for b in [0.0, 45.0, -85.0, nan, inf]]
+            + [(a, None) for a in [0.0, 179.99, nan, -inf]] + [(None, None)])
+    df = spark.createDataFrame([(i, a, b) for i, (a, b) in enumerate(rows)],
+                               schema="i long, lng double, lat double")
+    non_null = [i for i, (a, b) in enumerate(rows) if a is not None
+                and b is not None and not (np.isfinite(b) and abs(b) > 90.0)]
+    assert {(np.isnan(a), np.isnan(b), np.isinf(a), np.isinf(b))
+            for a, b in (rows[i] for i in non_null)} >= {
+        (True, False, False, False), (False, True, False, False),
+        (False, False, True, False), (False, False, False, True)}
+    for zoom in (0, 4, 14, 20):
+        got = {r.i: r.cell for r in df.select(
+            "i", F.expr(C.cell_sql("lng", "lat", zoom)).alias("cell")).collect()}
+        lng = np.array([nan if a is None else a for a, _ in rows])
+        lat = np.array([nan if b is None else b for _, b in rows])
+        cells = C.latlng_to_sql_cell(
+            lng, lat, zoom, np.array([a is None for a, _ in rows]),
+            np.array([b is None for _, b in rows]))
+        assert cells.tolist() == [got[i] for i in range(len(rows))], zoom
+        plain = C.latlng_to_cell(lng[non_null], lat[non_null], zoom)
+        assert plain.tolist() == [got[i] for i in non_null], zoom
