@@ -104,10 +104,10 @@ def _densified(g, vertices: int):
         a, b = r[:-1, None, :], r[1:, None, :]
         return np.vstack([(a + t * (b - a)).reshape(-1, 2), r[-1:]])
 
-    t, parts = g
-    if t == G.POLYGON:
-        return t, [ring(r) for r in parts]
-    return t, [[ring(r) for r in rings] for rings in parts]
+    kind, parts = g
+    if kind == G.POLYGON:
+        return kind, [ring(r) for r in parts]
+    return kind, [[ring(r) for r in rings] for rings in parts]
 
 
 def _zone_vertex_table(seed: int, sz: dict, vertices: list[int],
